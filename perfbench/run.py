@@ -23,7 +23,7 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 TARGET = HERE / "target"
-WORKLOADS = ("dashboard", "batch", "ingest_serve")
+WORKLOADS = ("dashboard", "batch")
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 ADD_OPENS = [
@@ -108,11 +108,9 @@ def main():
                     help="workload seed (default 1; 2 is the held-out seed)")
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--mode", choices=("run", "expect", "sustain"),
-                    default="run",
+    ap.add_argument("--mode", choices=("run", "expect"), default="run",
                     help="expect: answer the whole grid and every batch job "
-                         "once and dump the answers (see crosscheck.py); "
-                         "sustain: the ingest stream's rate on its own")
+                         "once and dump the answers (see crosscheck.py)")
     a = ap.parse_args()
     if a.mode == "run" and a.workload not in WORKLOADS:
         fail(f"unknown workload {a.workload!r}; one of {WORKLOADS}")
@@ -128,12 +126,9 @@ def main():
     env = {k: v for k, v in os.environ.items()
            if not k.startswith("SPARK_GRAFT_")}
     env["SPARK_LOCAL_DIRS"] = str(tmp)
-    # A fixed heap (-Xms = -Xmx) keeps the peak RSS from following each
-    # run's heap-growth decisions. C1 only (TieredStopAtLevel=1): a run is
-    # too short for C2's profile-driven compiles to settle, and with them
-    # CPU per request differed by up to 1.8x between otherwise equal runs.
-    cmd = (["java", "-Xms3g", "-Xmx3g", "-Xss4m", "-XX:TieredStopAtLevel=1",
-            "-XX:-UsePerfData",
+    # JVM defaults as the program runs: the tiered JIT, and a heap that
+    # starts at the default size (no -Xms) and may grow to 3 GB.
+    cmd = (["java", "-Xmx3g", "-Xss4m", "-XX:-UsePerfData",
             "-Djava.io.tmpdir=" + str(tmp),
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [x for p in ADD_OPENS for x in ("--add-opens", p + "=ALL-UNNAMED")]

@@ -2,14 +2,19 @@ package perfbench
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.SplittableRandom
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQueryProgress
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 import graft.{PipelineQueries, SparkEntry}
+import graft.pipeline.{Dedup, Manifest}
+import graft.streaming.IngestStream
 
 /** The `batch` workload: one client runs a fixed job list serially,
   * resetting caches and the components memo before each pass (the
@@ -28,7 +33,85 @@ object Batch {
   val IngestJob = "ingest_stream"
   val IngestBatches = 2
   val IngestDocs = 500
+  val CorpusDocs = 1000
+  val ResendShare = 0.3
   val Jobs: Seq[String] = Queries :+ IngestJob
+
+  private def text(r: SplittableRandom): String =
+    Array.fill(12)("w" + r.nextInt(1 << 20)).mkString(" ")
+
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) Files.walk(p).iterator().asScala.toSeq.reverse
+      .foreach(Files.delete)
+
+  /** The ingest job's stream over a seeded store, with its progress log.
+    * The store is seeded with a corpus before the stream starts, and every
+    * re-send copies a corpus document under a new id, so the exact kept
+    * set holds whatever the micro-batch boundaries are: every original is
+    * kept, every re-send is dropped (within-batch duplicates never occur,
+    * since originals are distinct random texts). */
+  final class Stream(spark: SparkSession, root: Path, seed: Long) {
+    private implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      spark.sqlContext
+    import spark.implicits._
+    private val rnd = new SplittableRandom(seed)
+    private val corpus: Vector[String] = Vector.fill(CorpusDocs)(text(rnd))
+    private val outDir: String = root.resolve("out").toString
+    private val storeDir = root.resolve("store").toString
+    deleteTree(root)
+    Manifest.append(spark, storeDir, Dedup.signatureStore(
+      corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text"), "doc_id", "text"), -1L)
+    private val mem = MemoryStream[(Long, String)]
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) progress.add(e.progress)
+    }
+    spark.streams.addListener(listener)
+    val query = IngestStream.startManifest(mem.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", storeDir, outDir, root.resolve("ckpt").toString)
+    private var nextId = 1000000L
+
+    /** Offer `n` documents; returns the ids of the originals among them. */
+    def feed(n: Int): Seq[Long] = {
+      val originals = ArrayBuffer.empty[Long]
+      val docs = (0 until n).map { _ =>
+        nextId += 1
+        if (rnd.nextDouble() < ResendShare)
+          (nextId, corpus(rnd.nextInt(corpus.size)))
+        else { originals += nextId; (nextId, text(rnd)) }
+      }
+      mem.addData(docs)
+      originals.toSeq
+    }
+
+    def stop(): Unit = try query.stop()
+      finally spark.streams.removeListener(listener)
+
+    def keptIds(): Seq[Long] = Manifest.rows(spark, outDir)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+  }
+
+  /** Per-micro-batch means of the stream's progress durations. */
+  def streamMetrics(batches: Seq[StreamingQueryProgress])
+      : Map[String, Double] = {
+    def mean(f: StreamingQueryProgress => Double): Double =
+      if (batches.isEmpty) 0 else batches.map(f).sum / batches.size
+    def ms(key: String)(p: StreamingQueryProgress): Double =
+      p.durationMs.getOrDefault(key, 0L).toDouble
+    Map("stream.trigger_ms" -> mean(ms("triggerExecution")),
+      "stream.add_batch_ms" -> mean(ms("addBatch")),
+      "stream.plan_ms" -> mean(ms("queryPlanning")),
+      "stream.wal_ms" -> mean(ms("walCommit")),
+      "stream.rows_per_batch" -> mean(_.numInputRows.toDouble),
+      "stream.batches" -> batches.size.toDouble)
+  }
 
   def resetPass(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
@@ -75,14 +158,14 @@ object Batch {
     if (name == IngestJob) new Built {
       private val root =
         work.resolve(s"batch-ingest-${ProcessHandle.current.pid}")
-      private val s = new IngestServe.Stream(spark, root, Data.Seed)
+      private val s = new Stream(spark, root, Data.Seed)
       private def feed(): Seq[Long] =
         try (1 to IngestBatches).flatMap { _ =>
-          val f = s.feed(IngestDocs)
+          val originals = s.feed(IngestDocs)
           s.query.processAllAvailable()
-          f.originals
+          originals
         } finally s.stop()
-      def run(): Unit = try feed() finally IngestServe.deleteTree(root)
+      def run(): Unit = try feed() finally deleteTree(root)
       override def progress: Seq[StreamingQueryProgress] =
         s.progress.asScala.toSeq
       // the kept set must be exactly the originals, each once
@@ -91,7 +174,7 @@ object Batch {
         val kept = s.keptIds().sorted
         (if (kept == originals.sorted) Answers.digest(kept.map(_.toString))
           else "wrong", kept.size.toLong)
-      } finally IngestServe.deleteTree(root)
+      } finally deleteTree(root)
     } else new Built {
       private val df = SparkEntry.queries(name)(spark, dir)
       def run(): Unit = df.write.format("noop").mode("overwrite").save()
@@ -99,34 +182,41 @@ object Batch {
     }
 
   /** Untimed checking pass: each job's output digest against the
-    * committed one. Returns the names of jobs that failed or disagreed. */
+    * committed one. Returns the names of jobs that failed or disagreed,
+    * and the output row count of every job that answered. */
   def check(spark: SparkSession, dir: String, work: Path,
-      expected: Map[String, Seq[String]]): Seq[String] = {
+      expected: Map[String, Seq[String]]): (Seq[String], Map[String, Long]) = {
     resetPass(spark)
-    Jobs.filterNot { n =>
-      try expected.get(n).exists(_.contains(
-        build(spark, dir, work, n).output()._1))
-      catch { case _: Exception => false }
+    val outputs = Jobs.map { n =>
+      n -> (try Some(build(spark, dir, work, n).output())
+        catch { case _: Exception => None })
     }
+    (outputs.collect { case (n, o) if !o.exists(x =>
+        expected.get(n).exists(_.contains(x._1))) => n },
+      outputs.collect { case (n, Some((_, rows))) => n -> rows }.toMap)
   }
 
-  /** Timed passes: at least one, then more while `--seconds` is not used
-    * up. Each job's figure is its fastest pass (the program's Bench
-    * method), so a burst of host noise in one pass does not count. */
+  val MinPasses = 2
+
+  /** Timed passes: at least `MinPasses`, then more while `--seconds` is
+    * not used up. Each job's time is its fastest pass (the program's Bench
+    * method), and the CPU figure is the pass that used least, so a burst
+    * of host noise or JIT compilation in one pass does not count. */
   def run(env: Env, args: Args, dir: String,
       expected: Map[String, Seq[String]]): Outcome = {
     val spark = env.spark
     val c0 = System.nanoTime()
-    val wrong = check(spark, dir, args.work, expected)
+    val (wrong, _) = check(spark, dir, args.work, expected)
     val checkS = (System.nanoTime() - c0) / 1e9
     val jobMs = ArrayBuffer.empty[(String, Double)]
     val passS = ArrayBuffer.empty[Double]
+    val passCpuMs = ArrayBuffer.empty[Double]
     var failed = 0L
-    val cpu0 = Host.processCpuMs()
     val t0 = System.nanoTime()
-    while (passS.isEmpty ||
+    while (passS.size < MinPasses ||
         System.nanoTime() - t0 < args.seconds * 1000000000L) {
       resetPass(spark)
+      val cpu0 = Host.processCpuMs()
       val p0 = System.nanoTime()
       Jobs.foreach { n =>
         val j0 = System.nanoTime()
@@ -136,19 +226,21 @@ object Batch {
         } catch { case _: Exception => failed += 1 }
       }
       passS += (System.nanoTime() - p0) / 1e9
+      passCpuMs += Host.processCpuMs() - cpu0
     }
-    val cpu1 = Host.processCpuMs()
+    val heapMb = Host.heapLiveMb()
     val best = Jobs.map(n => n -> jobMs.collect { case (`n`, ms) => ms }
       .minOption.getOrElse(Double.NaN))
     val bestMs = best.map(_._2).sum
     Outcome(Seq(
       ("latency_ms", bestMs / Jobs.size, "ms"),
       ("throughput_per_s", Jobs.size / (bestMs / 1000), "1/s"),
-      ("cpu_ms_per_op", (cpu1 - cpu0) / math.max(1, jobMs.size), "ms"),
-      ("rss_peak_mb", Host.rssPeakMb(), "MB")),
+      ("cpu_ms_per_op", passCpuMs.min / Jobs.size, "ms"),
+      ("heap_live_mb", heapMb, "MB")),
       attempted = jobMs.size + failed + Jobs.size,
       failed = failed + wrong.size,
       notes = Seq("batch_s" -> Answers.num(bestMs / 1000),
+        "rss_peak_mb" -> Answers.num(Host.rssPeakMb()),
         "passes_s" -> passS.map(Answers.num).mkString("[", ",", "]"),
         "warmup_s" -> Answers.num(checkS),
         "wrong_jobs" -> wrong.mkString(" "),

@@ -21,7 +21,7 @@ object Dashboard {
   }
 
   val ClientCount: Int = Main.Cores
-  val MinDecks = 4
+  val MinDecks = 5
 
   /** Warm up until two consecutive decks agree, then measure whole decks,
     * at least `MinDecks` and at least `--seconds`, so every run measures
@@ -30,7 +30,7 @@ object Dashboard {
       : Outcome = {
     val c = new Clients(env.port, expected, args.seed, ClientCount)
     c.start()
-    val (warmS, lastWarm) = Clients.warmUp(c, tolerance = 0.1, maxS = 8)
+    val (warmS, lastWarm) = Clients.warmUp(c, tolerance = 0.1, maxS = 14)
     val cpu0 = Host.processCpuMs()
     val c0 = System.nanoTime()
     val first = lastWarm + 1
@@ -45,6 +45,7 @@ object Dashboard {
     val cpu1 = Host.processCpuMs()
     val c1 = System.nanoTime()
     c.finish()
+    val heapMb = Host.heapLiveMb()
     val measured = c.inDecks(first, last)
     val secs = (end - t0) / 1e9
     val failed = measured.count(!_.ok)
@@ -57,9 +58,10 @@ object Dashboard {
       ("throughput_per_s", ok / secs, "1/s"),
       ("cpu_ms_per_op", (cpu1 - cpu0) / math.max(1, c.completedIn(c0, c1)
         .count(_.ok)), "ms"),
-      ("rss_peak_mb", Host.rssPeakMb(), "MB")),
+      ("heap_live_mb", heapMb, "MB")),
       measured.size, failed,
       Seq("warmup_s" -> Answers.num(warmS),
+        "rss_peak_mb" -> Answers.num(Host.rssPeakMb()),
         "decks" -> s"${last - first + 1} measured after ${lastWarm + 1}",
         "failed_examples" -> bad) ++
         figures.map { case (n, v, _) => n -> Answers.num(v) })

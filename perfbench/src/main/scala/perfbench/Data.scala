@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
 /** The benchmark's fixed data set: the ten tables `Catalog.forDir` loads,
   * with the column layout of the program's sf-style test data and a fixed
   * generator seed, so every checkout measures and checks the same rows.
-  * The workload seed never reaches this data; it only picks requests and
-  * ingest text. Sizes are chosen so one run fits a short time budget:
-  * `events` matches sf0.1 (100k rows), the text and TPC-H-style tables
-  * are smaller. */
+  * The workload seed never reaches this data; it only picks requests.
+  * Sizes are chosen so one run fits a short time budget: `events` matches
+  * sf0.1 (100k rows), the text and TPC-H-style tables are smaller. */
 object Data {
   /** Bump when the generator changes: cached copies and expected
     * digests are tied to it. */

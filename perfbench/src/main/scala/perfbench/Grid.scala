@@ -13,10 +13,9 @@ final case class Req(id: String, kind: String, path: String, body: String,
   def pages: Int = if (kind == "search") 2 else 1
 }
 
-/** The finite request grid of the `dashboard` and `ingest_serve`
-  * workloads, and the seeded request sequence over it. Every entry reads `events`
-  * (or the `metrics` view derived from it) in a window of the fixed
-  * data's 30 days. */
+/** The finite request grid of the `dashboard` workload, and the seeded
+  * request sequence over it. Every entry reads `events` (or the `metrics`
+  * view derived from it) in a window of the fixed data's 30 days. */
 object Grid {
   /** Windows: a start day and a length in days. */
   val Windows: Seq[(Int, Int)] =
@@ -130,28 +129,36 @@ object Grid {
     (for (w <- Windows; f <- SearchFilters.indices) yield search(w, f)) ++
     (for (w <- Windows; s <- PromSteps) yield promql(w, s))).toVector
 
-  /** The fixed dashboard: one tile per template over the same window,
-    * re-sent byte for byte on every refresh. */
+  /** The fixed dashboard: ten tiles over the same window, re-sent byte
+    * for byte on every refresh. Ten is the tile count of the program's own
+    * dashboard fan-out (`graft.Bench.DashboardSet`); every template has at
+    * least one tile. */
   val dashboard: Vector[Req] = {
     val w = DashboardWindow
-    Vector(timeseries(w, 3600L), quantile(w, 0), ratio(w), distinct(w, 50),
-      search(w, 0), promql(w, 3600L))
+    Vector(timeseries(w, 3600L), timeseries(w, 21600L), quantile(w, 0),
+      quantile(w, 2), ratio(w), distinct(w, 50), search(w, 0), search(w, 1),
+      promql(w, 3600L), promql(w, 10800L))
   }
   require(dashboard.forall(all.contains), "dashboard tiles must be grid entries")
 
-  private val byTemplate: Vector[Vector[Req]] =
-    all.groupBy(_.id.takeWhile(_ != '/')).values.toVector.sortBy(_.head.id)
+  /** The grid by template and window length: an ad-hoc draw takes one
+    * entry of each, so that no seed gets more long windows than another. */
+  private val byTemplateAndLength: Vector[Vector[Req]] =
+    all.groupBy(r => r.id.split('/').take(2) match {
+      case Array(t, w) => (t, w.dropWhile(_ != '+'))
+    }).toVector.sortBy(_._1).map(_._2)
 
-  val DeckSize = 24
+  val DeckSize = 22
 
-  /** One shuffled deck of `DeckSize` requests: each fixed-dashboard tile twice
-    * (a refresh re-sends it byte for byte; half the deck) and two ad-hoc
-    * entries of each of the six templates (the other half). Dealing whole
-    * decks keeps the mix identical across seeds; the seed picks the
-    * ad-hoc entries and the order. */
+  /** One shuffled deck of `DeckSize` requests: one refresh of the fixed
+    * dashboard (its ten tiles, re-sent byte for byte) and two ad-hoc
+    * entries of each of the six templates, one over a 1-day window and one
+    * over a 3-day window. The refresh share, 10 of 22, is an assumption
+    * with no measured source. Dealing whole decks keeps the mix identical
+    * across seeds; the seed picks the ad-hoc entries and the order. */
   def deck(r: SplittableRandom): Vector[Req] = {
-    val cards = (dashboard ++ dashboard ++
-      byTemplate.flatMap(xs => Vector.fill(2)(xs(r.nextInt(xs.size)))))
+    val cards = (dashboard ++
+      byTemplateAndLength.map(xs => xs(r.nextInt(xs.size))))
       .toArray
     for (i <- cards.indices.reverse) {
       val j = r.nextInt(i + 1)

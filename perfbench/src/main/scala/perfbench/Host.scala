@@ -34,6 +34,17 @@ object Host {
     .flatMap(_.linesIterator.find(_.startsWith("VmHWM:")))
     .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(-1.0)
 
+  /** Heap still in use after a full collection, in MB: what the program
+    * holds, whatever size the collector let the heap grow to. Spark's
+    * cleaner frees the blocks of broadcasts the first collection found
+    * unreachable, so a second collection follows after it has run. */
+  def heapLiveMb(): Double = {
+    System.gc()
+    Thread.sleep(1000)
+    System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+  }
+
   /** CPU time of the whole process (all threads), in ms. */
   def processCpuMs(): Double =
     ManagementFactory.getOperatingSystemMXBean match {

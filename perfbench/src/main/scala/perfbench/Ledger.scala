@@ -25,7 +25,7 @@ final case class Span(id: Long, name: String, parent: Long, startNs: Long,
   * phases come from a QueryExecutionListener (every action of the
   * session), codegen from Spark's CodeGenerator counters, the rest from
   * the JVM. Everything stays in memory until `write`. */
-final class Ledger(spark: SparkSession, ownJobsOnly: Boolean) {
+final class Ledger(spark: SparkSession) {
   private val GroupPrefix = "perfbench-span-"
   private val ids = new AtomicLong(1)
   private val nanoBase = System.nanoTime()
@@ -67,7 +67,7 @@ final class Ledger(spark: SparkSession, ownJobsOnly: Boolean) {
       // a streaming query's micro-batches run on its own thread, outside
       // any job group; the only stream a ledger meets is the benchmark's
       val streaming = props.exists(_.getProperty("sql.streaming.queryId") != null)
-      if (parent.isDefined || streaming || !ownJobsOnly) {
+      if (parent.isDefined || streaming) {
         val info = JobInfo(ids.getAndIncrement(), parent.getOrElse(0L), e.time)
         jobs.put(e.jobId, info)
         e.stageIds.foreach(stageJob.put(_, info))
@@ -226,6 +226,5 @@ object Ledger {
     "jvm.gc_ms" -> "ms", "jvm.heap_peak_mb" -> "MB",
     "jvm.threads_peak" -> "count",
     "batch_s" -> "s",
-    "fresh_p50_ms" -> "ms", "fresh_p90_ms" -> "ms",
     "trace.overhead_pct" -> "%")
 }

@@ -3,8 +3,6 @@ package perfbench
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.SparkSession
 
 import graft.LocalSession
@@ -29,7 +27,6 @@ final case class Outcome(metrics: Seq[(String, Double, String)],
 
 object Main {
   val Cores: Int = Runtime.getRuntime.availableProcessors()
-  val SetUps = 3
 
   def parse(a: Array[String]): Args = {
     val m = a.grouped(2).collect { case Array(k, v) =>
@@ -72,18 +69,11 @@ object Main {
     val load1Start = Host.load1()
     val jiffies0 = Host.cpuJiffies()
 
-    // Set up several times and keep the last environment: the first
-    // set-up is timed from JVM start, the others from a full tear-down.
-    val setUpS = ArrayBuffer.empty[Double]
-    var env: Env = null
-    for (i <- 0 until SetUps) {
-      val t0 =
-        if (i == 0) Host.jvmStartMillis() * 1e6
-        else { env.close(); System.currentTimeMillis() * 1e6 }
-      val (e, genMs) = setUp(dataDir, dashExpected)
-      env = e
-      setUpS += (System.currentTimeMillis() * 1e6 - t0 - genMs * 1e6) / 1e9
-    }
+    // set-up is timed from JVM start: class loading, static
+    // initialisation and the cold first answer all count
+    val (env, genMs) = setUp(dataDir, dashExpected)
+    val setUpS =
+      (System.currentTimeMillis() - Host.jvmStartMillis() - genMs) / 1e3
 
     val outcome =
       try args.mode match {
@@ -91,7 +81,6 @@ object Main {
           val d = Expect.run(env, args)
           val b = Batch.expect(env, args, dataDir.toString)
           Outcome(Nil, d.attempted + b.attempted, d.failed + b.failed)
-        case "sustain" => IngestServe.sustain(env, args)
         case _ => (args.workload, args.trace) match {
           case ("dashboard", false) => Dashboard.run(env, args, dashExpected)
           case ("dashboard", true) => Traced.dashboard(env, args, dashExpected)
@@ -99,8 +88,6 @@ object Main {
             batchExpected)
           case ("batch", true) => Traced.batch(env, args, dataDir.toString,
             batchExpected)
-          case ("ingest_serve", traced) =>
-            IngestServe.run(env, args, dashExpected, traced)
           case (other, _) => throw new IllegalArgumentException(
             s"unknown workload: $other")
         }
@@ -108,9 +95,8 @@ object Main {
 
     // setup_s is an end-to-end metric: a traced run reports the ledger
     val setupMetric =
-      if (args.trace) Nil else Seq(("setup_s", Host.median(setUpS.toSeq), "s"))
+      if (args.trace) Nil else Seq(("setup_s", setUpS, "s"))
     val notes = outcome.notes ++ Seq(
-      "setups_s" -> setUpS.map(Answers.num).mkString("[", ",", "]"),
       "steal_pct" -> Answers.num(Host.stealPct(jiffies0, Host.cpuJiffies())),
       "load1_start" -> Answers.num(load1Start),
       "load1_end" -> Answers.num(Host.load1()))

@@ -25,7 +25,7 @@ object Traced {
     * half untraced. The untraced halves sit on both sides of pass B, so
     * warm-up drift cancels in the overhead. */
   val DashWarmOps = 20
-  val DashOps = 48
+  val DashOps: Int = 2 * Grid.DeckSize
 
   def metrics(l: Ledger, extra: Map[String, Double])
       : Seq[(String, Double, String)] = {
@@ -112,7 +112,7 @@ object Traced {
     val passA1 = plain(0 until DashOps / 2)
     val aS = (System.nanoTime() - a0) / 1e9
 
-    val l = new Ledger(env.spark, ownJobsOnly = true)
+    val l = new Ledger(env.spark)
     val passB = ArrayBuffer.empty[(Int, Sample)]
     val overhead = ArrayBuffer.empty[Double]
     var replayMs = 0.0
@@ -169,7 +169,7 @@ object Traced {
   def batch(env: Env, args: Args, dir: String,
       expected: Map[String, Seq[String]]): Outcome = {
     val spark = env.spark
-    val wrong = Batch.check(spark, dir, args.work, expected)
+    val (wrong, rows) = Batch.check(spark, dir, args.work, expected)
     def plainPass(): Double = {
       Batch.resetPass(spark)
       val a0 = System.nanoTime()
@@ -179,7 +179,7 @@ object Traced {
     val a1S = plainPass()
 
     Batch.resetPass(spark)
-    val l = new Ledger(spark, ownJobsOnly = true)
+    val l = new Ledger(spark)
     val b0 = System.nanoTime()
     val progress = ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
     val perJob = Batch.Jobs.map { n =>
@@ -211,8 +211,11 @@ object Traced {
       "pipeline.run_ms" -> perJob.map(_._3).sum,
       "exec.busy_frac" -> l.get("exec.run_ms") / (bS * 1000 * Main.Cores),
       "batch_s" -> aS,
+      // kept documents of the ingest job's feed, from the checking pass
+      "stream.kept_frac" -> rows.getOrElse(Batch.IngestJob, 0L).toDouble /
+        (Batch.IngestBatches * Batch.IngestDocs),
       "trace.overhead_pct" -> (bS / aS - 1) * 100) ++
-      IngestServe.streamMetrics(progress.toSeq)
+      Batch.streamMetrics(progress.toSeq)
     Outcome(metrics(l, extra), Batch.Jobs.size * 4, wrong.size,
       Seq("wrong_jobs" -> wrong.mkString(" "),
         "per_job" -> perJob.map { case (n, b, r) =>
