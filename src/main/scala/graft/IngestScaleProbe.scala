@@ -147,7 +147,6 @@ object IngestScaleProbe {
     // store-size-independent.
     import graft.pipeline.Manifest
     val mStore = s"$root/mstore"
-    Manifest.init(spark, mStore, "batch", Manifest.VersionedCommit)
     val sigsAll = spark.read.parquet(s"$storeDir/batch=-1")
     val tSplit = System.nanoTime()
     (0 until 8).foreach { g =>

@@ -10,9 +10,8 @@ import graft.streaming.IngestStream
 
 /** A production month in one probe: the continuous-ingest dedup
   * lifecycle that q195–q205 gate verb-by-verb, COMPOSED as one
-  * continuous deployment over manifest-committed artifacts
-  * ([[graft.pipeline.Manifest.VersionedCommit]] — every commit a
-  * conditional create) and validated against an independent
+  * continuous deployment over manifest-committed artifacts (every
+  * commit a conditional create) and validated against an independent
   * sequential replay:
   *
   *  - 60 streaming micro-batches through
@@ -72,8 +71,6 @@ object LifecycleProbe {
       Seq((0L, "seed corpus document about nothing in particular zero"))
         .toDF("doc_id", "text")
 
-    Manifest.init(spark, storeDir, "batch", Manifest.VersionedCommit)
-    Manifest.init(spark, outDir, "batch", Manifest.VersionedCommit)
     Manifest.append(spark, storeDir,
       Dedup.signatureStore(seedDf, "doc_id", "text"), -1L)
 

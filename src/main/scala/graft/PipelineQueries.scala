@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Classifier, Clustering, Curation, Dedup, Multimodal, Perplexity, Similarity, TextAnalysis}
+import graft.pipeline.{Classifier, Clustering, Curation, Dedup, Manifest, Multimodal, Perplexity, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators exposed through the driver contract:
   * dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard / embedding
@@ -575,10 +575,10 @@ object PipelineQueries {
     val (model, idx1) = Similarity.ivfPqIndex(b1, "vec_id",
       "embedding", nlist = 16, m = 8, ksub = 16)
     Similarity.writeIndexManifest(spark, idxDir, model, idx1)
-    graft.pipeline.Manifest.append(spark, idxDir,
+    Manifest.append(spark, idxDir,
       Similarity.indexBatch(b2, "vec_id", "embedding", model), 0L)
     Similarity.compactIndexManifest(spark, idxDir)
-    graft.pipeline.Manifest.append(spark, idxDir,
+    Manifest.append(spark, idxDir,
       Similarity.indexBatch(b3, "vec_id", "embedding", model), 1L)
     val (model2, idx) = Similarity.readIndexManifest(spark, idxDir)
     Similarity.knnIvfPqOnIndex(probes, idx, corpus, "vec_id",
@@ -1459,68 +1459,11 @@ object PipelineQueries {
   }
 
   /** The q195 ingest lifecycle driven through PERSISTED artifacts with
-    * a COMPACTION between batches
-    * ([[graft.streaming.IngestStream.compactBatchLayout]] — the
-    * guard-free entry point: this gate drives the layout as a
-    * synchronous batch loop, so no partition can be mid-batch):
-    * batch 1 seeds the on-disk store, batch 2's survivors append their
-    * signature rows and kept docs as `batch=N` partitions, both
-    * directories are compacted to a single base generation, and batch
-    * 3 dedups against the COMPACTED store. The oracle is q195's
-    * verbatim — compacted ≡ accumulated: a compaction that dropped
-    * rows lets b3's +2e6 copies of batch-2 survivors through (their
-    * matches lived only in the folded batch=0 append); one that
-    * duplicated rows duplicates output rows. Either fails the gate. */
+    * a COMPACTION between batches — the shared body of q199 and q203
+    * ([[manifestCompactedLifecycle]]). */
   def q199_compacted_lifecycle(spark: SparkSession, dir: String)
-      : DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val d = docsRaw(spark, dir).select("doc_id", "text")
-    def planted(m: Long, off: Long): DataFrame =
-      d.filter(col("doc_id") % 30 === m).select(
-        (col("doc_id") + off).as("doc_id"),
-        concat(col("text"), lit(" zz9")).as("text"))
-    val b1 = d.filter(col("doc_id") % 3 === 0)
-    val b2 = d.filter(col("doc_id") % 3 === 1)
-      .unionByName(planted(0L, 1000000L))
-    val b3 = d.filter(col("doc_id") % 3 === 2)
-      .unionByName(planted(1L, 2000000L))
-      .unionByName(planted(6L, 3000000L))
-    val root = tempLifecycleDir("q199_lifecycle")
-    val storeDir = s"$root/store"
-    val outDir = s"$root/out"
-    // the IngestStream layout, driven as a batch loop: seed, append,
-    // compact, continue — each store read lists the directory fresh
-    Dedup.signatureStore(b1, "doc_id", "text", k = 16, shingleN = 3)
-      .write.parquet(s"$storeDir/batch=-1")
-    def store(): DataFrame =
-      spark.read.option("basePath", storeDir).parquet(storeDir)
-        .drop("batch")
-    val s2 = Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
-        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(b2))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the lifecycle label rides INSIDE the rows (compaction keeps
-      // data columns; only the batch partition label is folded away)
-      s2.select(col("doc_id"), lit(2L).as("lifecycle"))
-        .write.parquet(s"$outDir/batch=0")
-      Dedup.signatureStore(s2, "doc_id", "text", k = 16, shingleN = 3)
-        .write.parquet(s"$storeDir/batch=0")
-    } finally s2.unpersist()
-    graft.streaming.IngestStream.compactBatchLayout(spark, storeDir, outDir)
-    // the s2 ingest validated these same rows; the compaction between
-    // preserves the row set exactly (CompactionSpec) — hot-loop
-    // discipline: skip the per-batch store-wide width re-scan
-    val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
-      k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-      checkWidths = false, broadcastNew = bcastBatch(b3))
-    s3.select(col("doc_id"), lit(3L).as("lifecycle"))
-      .write.parquet(s"$outDir/batch=1")
-    b1.select(col("doc_id"), lit(1L).as("batch"))
-      .unionByName(spark.read.option("basePath", outDir).parquet(outDir)
-        .select(col("doc_id"), col("lifecycle").as("batch")))
-      .orderBy("batch", "doc_id")
-  }
+      : DataFrame =
+    manifestCompactedLifecycle(spark, dir, "q199_lifecycle")
 
   /** Incremental components maintenance gated end-to-end
     * ([[Dedup.incrementalComponents]]): the corpus arrives in two
@@ -1551,11 +1494,11 @@ object PipelineQueries {
   /** The store REBUILD verb (parameter migration) gated end-to-end —
     * the one lifecycle step q195–q199 didn't cover: the q195
     * construction runs its first two batches at k=16, then the
-    * persisted store is rebuilt at k=32 ([[Dedup.rebuildStore]] —
-    * changing k invalidates every stored signature) from the current
-    * kept corpus, and batch 3 ingests against the REBUILT store at
-    * the new parameters (bands=16 keeps r=2, so the LSH miss bound
-    * only tightens: (1−0.8²)¹⁶ ≈ 8e-8 at the corpus' J ≥ 0.8 natural
+    * persisted store is rebuilt at k=32 ([[Manifest.rebuild]] over a
+    * re-hashed [[Dedup.signatureStore]] — changing k invalidates every
+    * stored signature) from the current kept corpus, and batch 3
+    * ingests against the REBUILT store at the new parameters
+    * (bands=16 keeps r=2, so the LSH miss bound only tightens: (1−0.8²)¹⁶ ≈ 8e-8 at the corpus' J ≥ 0.8 natural
     * pairs). The oracle is q195's verbatim — the sequential exact-
     * Jaccard rule is parameter-free, so rebuild-then-ingest must
     * answer exactly what continuing at the old store would have.
@@ -1578,26 +1521,26 @@ object PipelineQueries {
       .unionByName(planted(6L, 3000000L))
     val root = tempLifecycleDir("q201_rebuild")
     val storeDir = s"$root/store"
-    Dedup.signatureStore(b1, "doc_id", "text", k = 16, shingleN = 3)
-      .write.parquet(s"$storeDir/batch=-1")
-    def store(): DataFrame =
-      spark.read.option("basePath", storeDir).parquet(storeDir)
-        .drop("batch")
-    // batch-2 survivors land ON DISK (the q199 discipline): the
-    // rebuild below DELETES the k=16 store files this plan's lineage
-    // reads, so the result this query returns — executed lazily by
-    // its consumer — must not depend on them
+    Manifest.append(spark, storeDir,
+      Dedup.signatureStore(b1, "doc_id", "text", k = 16, shingleN = 3),
+      -1L)
+    def store(): DataFrame = Manifest.rows(spark, storeDir).drop("batch")
+    // batch-2 survivors land ON DISK: the rebuild below garbage-collects
+    // the k=16 store files this plan's lineage reads, so the result
+    // this query returns — executed lazily by its consumer — must not
+    // depend on them
     Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
         k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
         broadcastNew = bcastBatch(b2))
       .write.parquet(s"$root/s2")
     val s2 = spark.read.parquet(s"$root/s2")
-    Dedup.signatureStore(s2, "doc_id", "text", k = 16, shingleN = 3)
-      .write.parquet(s"$storeDir/batch=0")
+    Manifest.append(spark, storeDir,
+      Dedup.signatureStore(s2, "doc_id", "text", k = 16, shingleN = 3),
+      0L)
     // the migration: re-hash the CURRENT kept corpus (b1 + batch-2
-    // survivors) at the new k, swap the base generation in place
-    Dedup.rebuildStore(spark, storeDir, b1.unionByName(s2),
-      "doc_id", "text", k = 32, shingleN = 3)
+    // survivors) at the new k, commit it as the one base generation
+    Manifest.rebuild(spark, storeDir, Dedup.signatureStore(
+      b1.unionByName(s2), "doc_id", "text", k = 32, shingleN = 3))
     val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
       k = 32, bands = 16, shingleN = 3, minJaccard = 0.7,
       broadcastNew = bcastBatch(b3))
@@ -1608,11 +1551,11 @@ object PipelineQueries {
   }
 
   /** The index REBUILD verb (quantizer retrain) gated end-to-end
-    * ([[Similarity.rebuildIndex]]): the persisted index is first
+    * ([[Similarity.rebuildIndexManifest]]): the persisted index is first
     * built WITHOUT the planted copies, then the corpus gains an exact
     * copy of every probe (+1e5) and the index is rebuilt from the
     * current corpus — retrain + full re-encode + swap. The query runs
-    * over the ROUND-TRIPPED artifacts ([[Similarity.readIndex]] —
+    * over the ROUND-TRIPPED artifacts ([[Similarity.readIndexManifest]] —
     * both the new model and the new code rows come back off disk), so
     * a rebuild that didn't swap leaves an index with no copy rows and
     * top-1 falls to a natural neighbor (max natural cosine ~0.60,
@@ -1625,29 +1568,37 @@ object PipelineQueries {
     val idxDir = s"$root/index"
     val (model0, idx0) = Similarity.ivfPqIndex(e, "vec_id",
       "embedding", nlist = 16, m = 8, ksub = 16)
-    Similarity.writeIndex(spark, idxDir, model0, idx0)
+    Similarity.writeIndexManifest(spark, idxDir, model0, idx0)
     val corpus = e.unionByName(probes.select(
       (col("vec_id") + 100000).as("vec_id"), col("embedding")))
-    Similarity.rebuildIndex(spark, idxDir, corpus, "vec_id",
+    Similarity.rebuildIndexManifest(spark, idxDir, corpus, "vec_id",
       "embedding", nlist = 16, m = 8, ksub = 16)
-    val (model, idx) = Similarity.readIndex(spark, idxDir)
+    val (model, idx) = Similarity.readIndexManifest(spark, idxDir)
     Similarity.knnIvfPqOnIndex(probes, idx, corpus, "vec_id",
       "embedding", model, k = 1, nprobe = 4, shortlist = 32)
       .withColumn("cosine", round(col("cosine"), 6))
       .orderBy("probe_id", "neighbor_id")
   }
 
-  /** The q199 compacted lifecycle driven through the MANIFEST layout
-    * ([[Manifest]] — the object-store-safe commit: immutable `gen-`
-    * directories, one atomically-replaced `_MANIFEST` file, no
-    * directory rename anywhere): seed, append batch 2's survivors,
-    * compact BOTH artifacts by manifest swap, ingest batch 3 against
-    * the compacted store. The oracle is q195's verbatim — the layout
-    * must answer exactly what the accumulated (or rename-compacted)
-    * store answers; a manifest losing or duplicating a generation
-    * fails the same planted-copy rows q199 pins. */
+  /** The same compacted lifecycle as q199, registered under its own
+    * name and lifecycle directory. */
   def q203_manifest_lifecycle(spark: SparkSession, dir: String)
-      : DataFrame = {
+      : DataFrame =
+    manifestCompactedLifecycle(spark, dir, "q203_manifest")
+
+  /** The q195 ingest lifecycle through [[Manifest]] artifacts
+    * (immutable `gen-` directories, one conditionally-created manifest
+    * version per commit, no rename anywhere) with a COMPACTION between
+    * batches: batch 1 seeds the on-disk store, batch 2's survivors
+    * append their signature rows and kept docs, BOTH artifacts are
+    * compacted to a single base generation, and batch 3 dedups against
+    * the COMPACTED store. The oracle is q195's verbatim — compacted ≡
+    * accumulated: a compaction that dropped rows lets b3's +2e6 copies
+    * of batch-2 survivors through (their matches lived only in the
+    * folded append); one that duplicated rows duplicates output rows.
+    * Either fails the gate. */
+  private def manifestCompactedLifecycle(spark: SparkSession,
+      dir: String, dirName: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val d = docsRaw(spark, dir).select("doc_id", "text")
     def planted(m: Long, off: Long): DataFrame =
@@ -1660,47 +1611,46 @@ object PipelineQueries {
     val b3 = d.filter(col("doc_id") % 3 === 2)
       .unionByName(planted(1L, 2000000L))
       .unionByName(planted(6L, 3000000L))
-    val root = tempLifecycleDir("q203_manifest")
+    val root = tempLifecycleDir(dirName)
     val storeDir = s"$root/store"
     val outDir = s"$root/out"
-    graft.pipeline.Manifest.append(spark,
+    Manifest.append(spark,
       storeDir, Dedup.signatureStore(b1, "doc_id", "text",
         k = 16, shingleN = 3), -1L)
     def store(): DataFrame =
-      graft.pipeline.Manifest.rows(spark, storeDir).drop("batch")
+      Manifest.rows(spark, storeDir).drop("batch")
     val s2 = Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
         k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
         broadcastNew = bcastBatch(b2))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      graft.pipeline.Manifest.append(spark, outDir,
+      Manifest.append(spark, outDir,
         s2.select(col("doc_id"), lit(2L).as("lifecycle")), 0L)
-      graft.pipeline.Manifest.append(spark, storeDir,
+      Manifest.append(spark, storeDir,
         Dedup.signatureStore(s2, "doc_id", "text", k = 16,
           shingleN = 3), 0L)
     } finally { s2.unpersist(); () }
-    graft.pipeline.Manifest.compact(spark, storeDir)
-    graft.pipeline.Manifest.compact(spark, outDir)
+    Manifest.compact(spark, storeDir)
+    Manifest.compact(spark, outDir)
     // the s2 ingest validated these same rows; the compaction between
     // preserves the row set exactly (CompactionSpec) — hot-loop
     // discipline: skip the per-batch store-wide width re-scan
     val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
       k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
       checkWidths = false, broadcastNew = bcastBatch(b3))
-    graft.pipeline.Manifest.append(spark, outDir,
+    Manifest.append(spark, outDir,
       s3.select(col("doc_id"), lit(3L).as("lifecycle")), 1L)
     b1.select(col("doc_id"), lit(1L).as("batch"))
-      .unionByName(graft.pipeline.Manifest.rows(spark, outDir)
+      .unionByName(Manifest.rows(spark, outDir)
         .select(col("doc_id"), col("lifecycle").as("batch")))
       .orderBy("batch", "doc_id")
   }
 
   /** The takedown lifecycle gated end-to-end through the MANIFEST
-    * layout in VERSIONED commit mode ([[Manifest.VersionedCommit]] —
-    * every manifest swap here is a conditional CREATE, the commit
+    * layout (every manifest swap a conditional CREATE, the commit
     * primitive stores without any rename offer; ManifestSpec proves
-    * the mode under a rename-rejecting FS, this gate proves it at
-    * data scale against the DuckDB oracle): seed, ingest batch 2,
+    * it under a rename-rejecting FS, this gate proves it at data scale
+    * against the DuckDB oracle): seed, ingest batch 2,
     * compact both artifacts, REBUILD the store at k=32 from the full
     * kept corpus (parameter migration), RETRACT the %30==6 seed docs
     * (store-side takedown — their kept docs live with the seed's
@@ -1716,7 +1666,6 @@ object PipelineQueries {
   def q205_retract_lifecycle(spark: SparkSession, dir: String)
       : DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    import graft.pipeline.Manifest
     val d = docsRaw(spark, dir).select("doc_id", "text")
     def planted(m: Long, off: Long): DataFrame =
       d.filter(col("doc_id") % 30 === m).select(
@@ -1731,8 +1680,6 @@ object PipelineQueries {
     val root = tempLifecycleDir("q205_retract")
     val storeDir = s"$root/store"
     val outDir = s"$root/out"
-    Manifest.init(spark, storeDir, "batch", Manifest.VersionedCommit)
-    Manifest.init(spark, outDir, "batch", Manifest.VersionedCommit)
     Manifest.append(spark, storeDir,
       Dedup.signatureStore(b1, "doc_id", "text", k = 16, shingleN = 3),
       -1L)
@@ -4834,11 +4781,11 @@ object PipelineQueries {
     // planted-copy determinism under ANY model — the rebuilt index
     // must answer the q92 rows off its round-tripped artifacts
     "q202_rebuild_index" -> q92_sql,
-    // manifest-committed ≡ rename-compacted ≡ accumulated
+    // the q199 construction under its own name
     "q203_manifest_lifecycle" -> q195_sql,
     // model + rows under one committed manifest answer the q92 rows
     "q204_manifest_index" -> q92_sql,
-    // versioned commits + rebuild + takedown: the retracted sources'
+    // compaction + rebuild + takedown: the retracted sources'
     // planted copies survive, everything else answers the q195 rule
     "q205_retract_lifecycle" -> q205_sql,
     "q185_match_mixture" -> q185_sql,

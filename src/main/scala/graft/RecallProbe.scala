@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Similarity
+import graft.pipeline.{Manifest, Similarity}
 
 /** Recall-decay → rebuild probe: the MEASURED trigger for
-  * [[graft.pipeline.Similarity.rebuildIndex]], whose scaladoc names
+  * [[graft.pipeline.Similarity.rebuildIndexManifest]], whose scaladoc names
   * drift ("recall decays") but — until this probe — no number told an
   * operator WHEN that happens or what the rebuild buys back.
   *
@@ -14,12 +14,13 @@ import graft.pipeline.Similarity
   * `decades` batches of DRIFTED vectors — each decade concentrates
   * around its own novel center direction (the "new topic cluster"
   * regime a frozen quantizer ages under) — via the frozen-model
-  * [[Similarity.indexBatch]] append path. After each decade, measure recall@k of the on-index
-  * search against the exact brute-force scan, with PROBES DRAWN FROM
+  * [[Similarity.indexBatch]] append path ([[Manifest.append]]). After
+  * each decade, measure recall@k of the on-index search against the
+  * exact brute-force scan, with PROBES DRAWN FROM
   * THE DRIFTED DISTRIBUTION (new queries target recent data — the
   * regime that hurts: drifted vectors concentrate in a few stale
   * cells and the PQ codebooks no longer place codewords where the
-  * data lives). Finally [[Similarity.rebuildIndex]] retrains on the
+  * data lives). Finally [[Similarity.rebuildIndexManifest]] retrains on the
   * accumulated corpus and the same last-decade probes re-measure —
   * the recovered recall and the rebuild's cost are the operator's
   * when-to-rebuild numbers.
@@ -116,9 +117,9 @@ object RecallProbe {
     val idxDir = s"$root/index"
     val (model0, idx0) = Similarity.ivfPqIndex(base, "vec_id",
       "embedding", nlist, m, ksub, dim)
-    Similarity.writeIndex(spark, idxDir, model0, idx0)
+    Similarity.writeIndexManifest(spark, idxDir, model0, idx0)
 
-    def index(): DataFrame = Similarity.readIndex(spark, idxDir)._2
+    def index(): DataFrame = Similarity.readIndexManifest(spark, idxDir)._2
 
     var corpus = base
     val probeSrc = base.filter(col("vec_id") % 40 === 7)
@@ -133,8 +134,9 @@ object RecallProbe {
     (1 to decades).foreach { t =>
       val batch = drifted(base, t, t.toLong * 100000L, 0.0)
       // the frozen-model append path — exactly what a pipeline runs
-      Similarity.indexBatch(batch, "vec_id", "embedding", model0, dim)
-        .write.mode("overwrite").parquet(s"$idxDir/batch=$t")
+      Manifest.append(spark, idxDir,
+        Similarity.indexBatch(batch, "vec_id", "embedding", model0, dim),
+        t.toLong)
       corpus = corpus.unionByName(batch)
       lastProbes = drifted(probeSrc, t, 900000L + t * 10000L, 0.02)
       val r = recallAt(lastProbes, index(), corpus, model0)
@@ -151,7 +153,7 @@ object RecallProbe {
     // resolve none of them) and keeps the probed FRACTION constant —
     // the same parameter-migration the store rebuild gate (q201)
     // exercises
-    val model1 = Similarity.rebuildIndex(spark, idxDir, corpus,
+    val model1 = Similarity.rebuildIndexManifest(spark, idxDir, corpus,
       "vec_id", "embedding", nlist * 4, m, ksub * 4, dim)
     val rebuildSec = (System.nanoTime() - t0) / 1e9
     val rAfter = recallAt(lastProbes, index(), corpus, model1,

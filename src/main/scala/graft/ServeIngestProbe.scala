@@ -106,10 +106,11 @@ object ServeIngestProbe {
     // shared session, fed continuously by a background thread
     val root = java.nio.file.Files
       .createTempDirectory("serve_ingest").toString
-    graft.streaming.IngestStream.seed(
-      Seq((0L, "seed corpus document about nothing in particular zero"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", s"$root/store")
+    graft.pipeline.Manifest.append(spark, s"$root/store",
+      graft.pipeline.Dedup.signatureStore(
+        Seq((0L, "seed corpus document about nothing in particular zero"))
+          .toDF("doc_id", "text"), "doc_id", "text"),
+      -1L)
     def docText(i: Long): String =
       (0 until 12).map(w => s"w${i * 12 + w}").mkString(" ")
     val mem = MemoryStream[(Long, String)]
@@ -144,7 +145,7 @@ object ServeIngestProbe {
     // accumulating counts for every later query in the process
     // (round-17 advice)
     val (ingWall, ingJson, batches, processed) = try {
-      val q = graft.streaming.IngestStream.start(
+      val q = graft.streaming.IngestStream.startManifest(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
         s"$root/store", s"$root/out", s"$root/ckpt",
         k = 16, bands = 8, minJaccard = 0.7)

@@ -184,7 +184,7 @@ object StreamLoadProbe {
     //                    round-15 drift curve's scenario)
     //   ingest_compact — the same feed, but the query is stopped at
     //                    the midpoint, both artifacts compacted
-    //                    (IngestStream.compact), and the query
+    //                    (IngestStream.compactManifest), and the query
     //                    restarted from its checkpoint: per-batch wall
     //                    must drop back toward the early-run numbers
     //                    and kept-doc accounting must close identically
@@ -202,20 +202,16 @@ object StreamLoadProbe {
     //                    across the run; the events array records WHY
     //                    each compaction fired.
     def ingestScenario(name: String, ingestBatches: Int, perBatch: Int,
-        compactAt: Option[Int], manifest: Boolean = false,
-        policyCheckEvery: Int = 0): Unit = {
+        compactAt: Option[Int], policyCheckEvery: Int = 0): Unit = {
       val root = java.nio.file.Files
         .createTempDirectory(s"ingest_$name").toString
       import spark.implicits._
       val seedDf =
         Seq((0L, "seed corpus document about nothing in particular zero"))
           .toDF("doc_id", "text")
-      if (manifest)
-        graft.pipeline.Manifest.append(spark, s"$root/store",
-          graft.pipeline.Dedup.signatureStore(seedDf, "doc_id", "text"),
-          -1L)
-      else graft.streaming.IngestStream.seed(seedDf,
-        "doc_id", "text", s"$root/store")
+      graft.pipeline.Manifest.append(spark, s"$root/store",
+        graft.pipeline.Dedup.signatureStore(seedDf, "doc_id", "text"),
+        -1L)
       // fully distinct token windows — a bounded vocab here would
       // manufacture EXACT duplicate docs at wrap distance (measured:
       // a %50000 vocab made docs 12,500 apart identical and the store
@@ -224,11 +220,7 @@ object StreamLoadProbe {
         (0 until 12).map(w => s"w${i * 12 + w}").mkString(" ")
       val mem = MemoryStream[(Long, String)]
       def start(): StreamingQuery =
-        if (manifest) graft.streaming.IngestStream.startManifest(
-          mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          s"$root/store", s"$root/out", s"$root/ckpt",
-          k = 16, bands = 8, minJaccard = 0.7)
-        else graft.streaming.IngestStream.start(
+        graft.streaming.IngestStream.startManifest(
           mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
           s"$root/store", s"$root/out", s"$root/ckpt",
           k = 16, bands = 8, minJaccard = 0.7)
@@ -249,17 +241,14 @@ object StreamLoadProbe {
           // batches via the checkpoint), restart from the offsets
           q.stop()
           val tc = System.nanoTime()
-          if (manifest)
-            graft.streaming.IngestStream.compactManifest(spark,
-              s"$root/store", s"$root/out", s"$root/ckpt")
-          else graft.streaming.IngestStream.compact(spark,
+          graft.streaming.IngestStream.compactManifest(spark,
             s"$root/store", s"$root/out", s"$root/ckpt")
           compactSec = (System.nanoTime() - tc) / 1e9
           q = start()
         }
         if (policyCheckEvery > 0 && b > 0 && b % policyCheckEvery == 0) {
           // the POLICY decides at the stop/restart boundary — the
-          // integrated verb (evaluate + layout-routed compact in one)
+          // integrated verb (evaluate + compact in one)
           q.stop()
           val tc = System.nanoTime()
           val d = graft.streaming.IngestStream.maybeCompact(spark,
@@ -293,11 +282,7 @@ object StreamLoadProbe {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       q.stop()
-      val kept =
-        if (manifest)
-          graft.pipeline.Manifest.rows(spark, s"$root/out").count()
-        else graft.streaming.IngestStream
-          .keptDocs(spark, s"$root/out").count()
+      val kept = graft.pipeline.Manifest.rows(spark, s"$root/out").count()
       val fed = ingestBatches.toLong * perBatch
       val latJson = walls.zipWithIndex.collect {
         case (sec, i) if (i + 1) % sampleEvery == 0 =>
@@ -324,20 +309,6 @@ object StreamLoadProbe {
     if (wanted("ingest_big"))
       ingestScenario("ingest_big", 20,
         math.max(totalRows / 40, 100), None)
-    // the manifest layout's streaming cost, isolated: the ingest_store
-    // feed verbatim, artifacts manifest-committed (one footer-count
-    // job + one manifest swap per append) — compare docs/sec and the
-    // latency curve against ingest_store to price the object-store-
-    // safe commit protocol
-    if (wanted("ingest_manifest"))
-      ingestScenario("ingest_manifest", 40,
-        math.max(totalRows / 20 / 40, 100), None, manifest = true)
-    // the same at the production batch shape: the manifest's fixed
-    // per-append cost (2 commits + 2 footer counts) must amortize
-    if (wanted("ingest_manifest_big"))
-      ingestScenario("ingest_manifest_big", 20,
-        math.max(totalRows / 40, 100), None, manifest = true)
-
     if (wanted("ingest_policy"))
       ingestScenario("ingest_policy", 80,
         math.max(totalRows / 20 / 80, 100), None, policyCheckEvery = 10)

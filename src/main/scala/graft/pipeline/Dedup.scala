@@ -759,7 +759,7 @@ object Dedup {
     // the size prune silently stops pruning those rows and the
     // store's schema is ambiguous under parquet footer sampling (the
     // column can appear or vanish between reads). Fail loudly and
-    // point at [[rebuildStore]] instead.
+    // point at [[Manifest.rebuild]] instead.
     if (checkWidths) {
       val aggs = Seq(min(size(col("sig"))), max(size(col("sig")))) ++
         (if (hasSz)
@@ -776,7 +776,7 @@ object Dedup {
               require(r.getLong(2) == 0L,
                 s"store has ${r.getLong(2)} null `sz` rows — " +
                   "partitions written before the sz column existed " +
-                  "were appended to; run rebuildStore to migrate")
+                  "were appended to; run Manifest.rebuild to migrate")
           }
         }
     }
@@ -869,43 +869,6 @@ object Dedup {
     (survivors, grown)
   }
 
-  /** Compact a PERSISTED batch-partitioned [[signatureStore]]
-    * directory (the layout [[graft.streaming.IngestStream]] accretes —
-    * one `batch=N` parquet directory per micro-batch, forever) into a
-    * single new base generation. Keep/drop against the compacted store
-    * is IDENTICAL to the accumulated one: every consumer
-    * ([[crossCorpusPairsFromStore]]'s band join, the width guard) is a
-    * function of the row SET, and compaction preserves it exactly —
-    * CompactionSpec proves the equivalence on the q195 construction,
-    * and the `ingest_compact` StreamLoadProbe scenario measures the
-    * per-batch wall dropping back after the directory count resets.
-    * Run only while the ingest query is stopped (restart-safe: the
-    * streaming checkpoint holds source offsets only). */
-  def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, numFiles: Int = 0): Unit =
-    Artifacts.compactPartitioned(spark, storeDir, numFiles = numFiles)
-
-  /** Rebuild a persisted [[signatureStore]] directory from the current
-    * kept corpus — the parameter-migration step of the store
-    * lifecycle (append → compact → retract → REBUILD): changing k /
-    * shingleN / the normalization invalidates every stored signature
-    * (the width guard would refuse a mixed store), so re-hash the
-    * corpus once and swap a new base generation in via the shared
-    * discipline ([[Artifacts.swapInto]] — a crashed rebuild resolves
-    * through [[Artifacts.recoverCompaction]]). One corpus text scan;
-    * no ingest query may be running. */
-  def rebuildStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, corpus: DataFrame, idCol: String,
-      textCol: String, k: Int = 16, shingleN: Int = 3,
-      numFiles: Int = 0): Unit = {
-    Artifacts.swapInto(spark, storeDir) { tmp =>
-      val rebuilt = signatureStore(corpus, idCol, textCol, k, shingleN)
-      val n = if (numFiles > 0) numFiles else Sizing.writeWidth(rebuilt)
-      rebuilt.repartition(n)
-        .write.mode("overwrite").parquet(s"$tmp/batch=-1")
-    }
-  }
-
   /** Retract (un-keep) documents from a [[signatureStore]] FRAME:
     * remove the signature rows of `ids` — the late-decontamination /
     * takedown path. The result is row-identical to
@@ -918,16 +881,6 @@ object Dedup {
       : DataFrame =
     store.join(broadcast(ids.select(col(idCol)).distinct()),
       Seq(idCol), "left_anti")
-
-  /** [[retract]] against a PERSISTED store directory: rewrites only
-    * the `batch=N` partitions containing retracted ids (untouched
-    * partitions keep their files byte-identical — at 100 TB a
-    * takedown touches a handful of the thousands of partitions).
-    * Returns the number of signature rows removed. Run only while the
-    * ingest query is stopped. */
-  def retractStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, ids: DataFrame, idCol: String): Long =
-    Artifacts.retractPartitioned(spark, storeDir, ids, idCol)
 
   /** Surviving NEW rows of an incremental batch: anti-join against the
     * batch's verified cross-corpus matches. Within-batch duplicates are a
@@ -970,8 +923,10 @@ object Dedup {
     * neighbors; converges in O(cluster diameter) rounds — near-dup
     * clusters are small by construction, so a handful of bounded
     * iterations (each one join + one aggregation shuffle over the PAIR
-    * set, not the corpus). Output: (id, comp) for every id appearing in a
-    * pair; unpaired docs are trivially their own component. */
+    * set, not the corpus). `maxIter` bounds propagation STEPS; a
+    * component whose diameter needs more fails loudly. Output: (id, comp)
+    * for every id appearing in a pair; unpaired docs are trivially their
+    * own component. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 50): DataFrame = {
     // LAZY checkpoint per round, materialized by the convergence count:
@@ -1085,11 +1040,14 @@ object Dedup {
     checkpointRdd(edges).foreach(_.unpersist(blocking = false))
     // silent non-convergence would split clusters and KEEP duplicates —
     // fail loudly instead (a >maxIter-diameter chain is pathological but
-    // possible in templated corpora)
+    // possible in templated corpora). maxIter bounds propagation STEPS,
+    // and each round runs two, so the loop stops at the first even
+    // count >= maxIter
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations — " +
-          s"a component's diameter exceeds maxIter; raise maxIter")
+        s"connectedComponents did not converge in $i propagation " +
+          s"steps (maxIter = $maxIter) — a component's diameter " +
+          "exceeds maxIter; raise maxIter")
     labels
   }
 

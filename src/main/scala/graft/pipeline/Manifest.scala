@@ -3,29 +3,29 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Manifest-committed artifact layout — the object-store-safe twin of
-  * [[Artifacts]]'s rename-swap discipline. [[Artifacts]]'s correctness
-  * rests on atomic DIRECTORY rename, which real 100-TB deployments
-  * don't have: on an object store a directory "rename" is a
-  * copy+delete over every key, and each documented crash window
-  * becomes a data-loss window. This layout removes the assumption the
-  * way table formats do (Iceberg/Delta's core idea, re-expressed at
-  * the scale of one artifact): data directories are IMMUTABLE and
-  * WRITE-ONCE under fresh unique names, and the single small
-  * `_MANIFEST` file — atomically replaced — is the only thing that
-  * ever changes. The one primitive required is "replace one small
-  * object atomically", which every relevant store offers natively
-  * (object PUT; POSIX/HDFS single-FILE rename — what [[commit]]
-  * uses here). Directory rename is never used: ManifestSpec proves it
-  * by running the whole lifecycle on a rename-auditing FileSystem.
+/** Manifest-committed artifact layout — how the dedup signature store,
+  * the kept-docs output and the IVF-PQ index are written and
+  * maintained. Its correctness does not rest on directory rename,
+  * which real 100-TB deployments don't have: on an object store a
+  * directory "rename" is a copy+delete over every key, and each crash
+  * window would become a data-loss window. The layout works the way
+  * table formats do (Iceberg/Delta's core idea, re-expressed at the
+  * scale of one artifact): data directories are IMMUTABLE and
+  * WRITE-ONCE under fresh unique names, and each commit CREATES one
+  * small, new manifest version file. The one primitive required is
+  * "create one small object if absent", which every relevant store
+  * offers natively (HDFS create, S3/GCS/ABFS conditional PUT /
+  * If-None-Match). Nothing is ever renamed: ManifestSpec runs the
+  * whole lifecycle on a FileSystem that rejects renames, and
+  * NoRenameGuardSpec keeps rename calls out of the main sources.
   *
   * Layout under an artifact root `dir`:
   * {{{
-  *   dir/_MANIFEST            the committed state (see format below)
+  *   dir/_MANIFEST.v<N>       committed state version N (format below)
   *   dir/gen-<value>-<uuid>/  immutable parquet, one dir per committed
   *                            write; `partitionCol` rides INSIDE the
   *                            rows (constant per dir → parquet RLE +
@@ -34,11 +34,12 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Manifest format (TSV — one header, optional `@key	path`
-  * property lines, one line per live generation):
+  * property lines, one line per live generation, the end trailer):
   * {{{
   *   graft-manifest	1	<version>	<partitionCol>
   *   @<key>	<relative path>
   *   <value>	<relative dir name>	<rows>
+  *   #end
   * }}}
   * Properties name auxiliary paths that must swap ATOMICALLY with the
   * row set — the IVF-PQ index's quantizer model is the motivating
@@ -47,78 +48,44 @@ import org.apache.spark.sql.functions._
   * versa); one committed manifest carries both. Property-referenced
   * paths are live for [[gc]] exactly like entry paths.
   *
-  * The commit protocol makes every crash window trivially safe, with
-  * NO restore step (compare [[Artifacts.recoverCompaction]] /
-  * [[Artifacts.recoverRetraction]]'s window-by-window resolution):
-  * data is fully written BEFORE the manifest referencing it commits,
-  * so the manifest never points at incomplete data, and a crash at
-  * any instant leaves the previous manifest — and every directory it
-  * references — untouched. Recovery is pure garbage collection
-  * ([[gc]]): unreferenced `gen-*` directories are uncommitted debris.
+  * The commit protocol makes every crash window safe with NO restore
+  * step: data is fully written BEFORE the manifest referencing it
+  * commits, so the manifest never points at incomplete data, and a
+  * crash at any instant leaves the previous manifest — and every
+  * directory it references — untouched. Recovery is pure garbage
+  * collection ([[gc]]): unreferenced `gen-*` directories and torn or
+  * superseded version files are uncommitted debris.
   *
-  * A second hazard class disappears with it: a half-written partition
-  * is NEVER VISIBLE to readers (it has no manifest entry), so a
-  * crash-replayed ingest batch cannot match its own partial rows —
-  * the window [[graft.streaming.IngestStream.start]]'s own-batchId
-  * exclusion plus [[graft.streaming.IngestStream.compact]]'s
-  * uncommitted-batch guard defend in the `batch=N` layout. (The
-  * exclusion is still needed for a batch that COMMITTED here but not
-  * in the streaming checkpoint — [[append]]'s upsert-by-value makes
-  * that replay idempotent, and the value filter keeps it from
-  * matching its prior attempt's rows.)
+  * A half-written partition is NEVER VISIBLE to readers (it has no
+  * manifest entry), so a crash-replayed ingest batch cannot match its
+  * own partial rows. The own-batchId exclusion in
+  * [[graft.streaming.IngestStream.startManifest]] is still needed for
+  * a batch that COMMITTED here but not in the streaming checkpoint —
+  * [[append]]'s upsert-by-value makes that replay idempotent, and the
+  * value filter keeps it from matching its prior attempt's rows.
   *
-  * Same operational contract as [[Artifacts]]: one maintainer at a
-  * time, no concurrent writer — and since round 18 the contract is a
-  * CHECKED invariant, not a convention: [[commit]] verifies the
-  * on-disk version is exactly the one the new state was derived from
-  * and refuses loudly on mismatch (optimistic concurrency — a second
+  * Operational contract: one maintainer at a time, no concurrent
+  * writer — a CHECKED invariant, not a convention: [[commit]]'s
+  * conditional create refuses loudly when the version it derived from
+  * is no longer the newest (optimistic concurrency — a second
   * maintainer can fail, never corrupt). Readers in OTHER processes
   * that loaded an older manifest keep scanning directories [[gc]] may
   * delete — a deployment with concurrent readers defers deletion by a
   * scan horizon (`minAgeMs`, threaded through every maintenance verb
   * as `gcMinAgeMs`; the entries are already gone from the manifest,
-  * so no new reader sees them); this sandbox runs maintenance with
-  * readers stopped, like the rename layout. */
+  * so no new reader sees them); the callers in this repository run
+  * maintenance with readers stopped. */
 object Manifest {
 
+  /** The prefix of every version file (`_MANIFEST.v<N>`). A bare
+    * `_MANIFEST` file is the retired rename-commit layout, which
+    * [[versionFiles]] refuses. */
   val ManifestFile = "_MANIFEST"
 
-  /** The end-of-manifest witness: the last line of every manifest this
-    * code writes. In [[VersionedCommit]] mode it is REQUIRED on read —
-    * a version file without it is a torn (crashed or in-flight) write
-    * and is skipped, never trusted. [[RenameCommit]] mode tolerates
-    * its absence (the single-file rename is atomic, so a visible
-    * `_MANIFEST` is always complete; older artifacts lack the line). */
+  /** The end-of-manifest witness, REQUIRED as the last line on read: a
+    * version file without it is a torn (crashed or in-flight) write
+    * and is skipped, never trusted. */
   private val Trailer = "#end"
-
-  /** How [[commit]] publishes a new manifest atomically.
-    *
-    *  - [[RenameCommit]] (default): write a temp FILE, move it over
-    *    `_MANIFEST` in one single-object rename-with-overwrite —
-    *    atomic on POSIX and HDFS, and ≡ an object PUT on stores that
-    *    implement single-key rename natively. The layout's original
-    *    mode.
-    *  - [[VersionedCommit]]: no rename at all — each commit CREATES
-    *    `_MANIFEST.v<N>` with overwrite=false (conditional create:
-    *    atomic on every relevant store — HDFS create, S3/GCS/ABFS
-    *    conditional PUT / If-None-Match) and readers resolve the
-    *    highest N whose content ends with the [[Trailer]]. A torn
-    *    newer file (crashed mid-write) is skipped by readers and
-    *    retried or GC'd; the conditional create doubles as the
-    *    optimistic-concurrency gate — two maintainers racing to
-    *    commit version N, exactly one wins. For stores with NO atomic
-    *    single-file rename (S3A renames are COPY+DELETE), this is the
-    *    mode that makes the scaladoc's object-store claim true by
-    *    construction; ManifestSpec proves the whole lifecycle under a
-    *    FileSystem that REJECTS renames outright.
-    *
-    * The mode is a property of the ARTIFACT, chosen at creation
-    * ([[init]], or the first [[append]]/[[replaceAll]] which default
-    * to [[RenameCommit]]) and auto-detected from disk thereafter —
-    * every verb works on either layout unchanged. */
-  sealed trait CommitMode
-  case object RenameCommit extends CommitMode
-  case object VersionedCommit extends CommitMode
 
   /** One live generation: the logical partition value (batch id; base
     * generations use -1), the directory name relative to the artifact
@@ -126,52 +93,42 @@ object Manifest {
     * read the data, the count feeds maintenance reporting). */
   final case class Entry(value: Long, path: String, rows: Long)
 
-  /** The committed state: a monotonically increasing version (debug /
-    * audit trail — correctness needs only atomic replacement), the
-    * live entries, and auxiliary property paths (see the format note
-    * above). */
+  /** The committed state: a monotonically increasing version (it names
+    * the version file, so it is also the optimistic-concurrency
+    * token), the live entries, and auxiliary property paths (see the
+    * format note above). */
   final case class State(version: Long, partitionCol: String,
       entries: Seq[Entry], props: Map[String, String] = Map.empty)
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The `_MANIFEST.v<N>` files present, newest first. */
-  private def versionFiles(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(Long, Path)] = {
+  /** The `_MANIFEST.v<N>` files present, newest first. A directory
+    * that still holds a single-file `_MANIFEST` is refused: read as
+    * "no version files" it would look like a new, empty artifact, and
+    * the next append would silently drop every committed row. */
+  private def versionFiles(f: FileSystem, dir: String)
+      : Seq[(Long, Path)] = {
     val d = new Path(dir)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      val suffix = n.stripPrefix(s"$ManifestFile.v")
-      if (n.startsWith(s"$ManifestFile.v") && suffix.nonEmpty &&
-        suffix.forall(_.isDigit)) Some(suffix.toLong -> s.getPath)
+    if (!f.exists(d)) return Seq.empty
+    val listed = f.listStatus(d).toSeq.map(_.getPath)
+    require(!listed.exists(_.getName == ManifestFile),
+      s"$dir holds a single-file $ManifestFile (the retired " +
+        s"rename-commit layout); only $ManifestFile.v<N> files are " +
+        s"read — rewrite it as $ManifestFile.v<version> ending in a " +
+        s"'$Trailer' line before maintaining")
+    listed.flatMap { p =>
+      val suffix = p.getName.stripPrefix(s"$ManifestFile.v")
+      if (p.getName.startsWith(s"$ManifestFile.v") && suffix.nonEmpty &&
+        suffix.forall(_.isDigit)) Some(suffix.toLong -> p)
       else None
     }.sortBy(-_._1)
   }
 
-  /** The artifact's commit mode as recorded on disk, or `ifNew` for a
-    * directory with no manifest yet. Both layouts present at once is
-    * operator error (a half-finished hand migration) — fail loudly. */
-  private def mode(f: org.apache.hadoop.fs.FileSystem, dir: String,
-      ifNew: CommitMode): CommitMode = {
-    val single = f.exists(new Path(dir, ManifestFile))
-    val versioned = versionFiles(f, dir).nonEmpty
-    require(!(single && versioned),
-      s"$dir has BOTH $ManifestFile and $ManifestFile.v<N> files — " +
-        "mixed commit layouts; delete the stale one before maintaining")
-    if (single) RenameCommit
-    else if (versioned) VersionedCommit
-    else ifNew
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    versionFiles(fs(spark, dir), dir).nonEmpty
 
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val f = fs(spark, dir)
-    f.exists(new Path(dir, ManifestFile)) || versionFiles(f, dir).nonEmpty
-  }
-
-  private def readText(f: org.apache.hadoop.fs.FileSystem, p: Path)
-      : String = {
+  private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try {
       val bos = new java.io.ByteArrayOutputStream()
@@ -180,18 +137,14 @@ object Manifest {
     } finally in.close()
   }
 
-  /** Parse one manifest body. `requireTrailer` is the versioned-mode
-    * torn-write detector: a file not ending in [[Trailer]] parses to
-    * None (skip it — an in-flight or crashed write) instead of
-    * throwing. Rename-mode keeps the loud malformed-file errors: an
-    * atomically-replaced `_MANIFEST` is complete by construction, so
-    * anything unparseable there is genuine corruption. */
-  private def parse(text: String, where: String,
-      requireTrailer: Boolean): Option[State] = {
+  /** Parse one manifest body: None for a file not ending in
+    * [[Trailer]] (skip it — an in-flight or crashed write); a complete
+    * file that is still malformed is genuine corruption and fails
+    * loudly. */
+  private def parse(text: String, where: String): Option[State] = {
     val raw = text.split('\n').filter(_.nonEmpty).toSeq
-    if (requireTrailer && (raw.isEmpty || raw.last != Trailer))
-      return None
-    val lines = if (raw.lastOption.contains(Trailer)) raw.init else raw
+    if (raw.isEmpty || raw.last != Trailer) return None
+    val lines = raw.init
     require(lines.nonEmpty, s"empty manifest at $where")
     val head = lines.head.split('\t')
     require(head.length == 4 && head(0) == "graft-manifest" &&
@@ -212,33 +165,26 @@ object Manifest {
     Some(State(head(2).toLong, head(3), entries, props))
   }
 
-  /** Read the committed state. Fails loudly on a missing manifest —
-    * a caller holding the wrong path should hear about it, not get an
-    * empty artifact. In versioned mode the highest COMPLETE version
-    * wins; torn newer files (a concurrent or crashed commit mid-write)
-    * are skipped, so a reader is never wrong mid-commit. */
+  /** Read the committed state: the highest COMPLETE version wins; torn
+    * newer files (a concurrent or crashed commit mid-write) are
+    * skipped, so a reader is never wrong mid-commit. Fails loudly on a
+    * missing manifest — a caller holding the wrong path should hear
+    * about it, not get an empty artifact. */
   def state(spark: SparkSession, dir: String): State = {
     val f = fs(spark, dir)
-    mode(f, dir, ifNew = RenameCommit) match {
-      case RenameCommit =>
-        val p = new Path(dir, ManifestFile)
-        require(f.exists(p), s"no $ManifestFile under $dir — not a " +
-          "manifest-mode artifact (init/append first, or adopt a " +
-          "batch-partitioned layout)")
-        parse(readText(f, p), p.toString, requireTrailer = false).get
-      case VersionedCommit =>
-        val vs = versionFiles(f, dir)
-        val complete = vs.iterator.flatMap { case (n, p) =>
-          parse(readText(f, p), p.toString, requireTrailer = true)
-            .map(st => { require(st.version == n,
-              s"$p header version ${st.version} != filename v$n"); st })
-        }.take(1).toSeq
-        require(complete.nonEmpty,
-          s"only torn $ManifestFile.v<N> file(s) under $dir — a " +
-            "first commit crashed mid-write; re-run the creating verb " +
-            "(append/init), which replaces the torn version")
-        complete.head
-    }
+    val vs = versionFiles(f, dir)
+    require(vs.nonEmpty, s"no $ManifestFile.v<N> under $dir — not a " +
+      "manifest artifact (append first)")
+    val complete = vs.iterator.flatMap { case (n, p) =>
+      parse(readText(f, p), p.toString)
+        .map(st => { require(st.version == n,
+          s"$p header version ${st.version} != filename v$n"); st })
+    }.take(1).toSeq
+    require(complete.nonEmpty,
+      s"only torn $ManifestFile.v<N> file(s) under $dir — a " +
+        "first commit crashed mid-write; re-run the creating verb " +
+        "(append), which replaces the torn version")
+    complete.head
   }
 
   private def render(st: State): Array[Byte] = (
@@ -248,93 +194,56 @@ object Manifest {
       Seq(Trailer)
     ).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
 
-  /** Create an EMPTY artifact in an explicit commit mode — the one
-    * place the mode is chosen; every later verb detects it from disk.
-    * (Artifacts created implicitly by [[append]]/[[replaceAll]] get
-    * [[RenameCommit]].) */
-  def init(spark: SparkSession, dir: String, partitionCol: String,
-      commitMode: CommitMode): Unit = {
-    require(!exists(spark, dir), s"$dir already has a manifest")
-    commit(spark, dir, State(1L, partitionCol, Nil, Map.empty),
-      ifNew = commitMode)
-  }
-
-  /** Atomically publish a new manifest state, in the artifact's commit
-    * mode (see [[CommitMode]]). `st.version` MUST be exactly one past
-    * the committed version this state was derived from — the
-    * single-maintainer contract as a checked invariant:
-    *
-    *  - [[RenameCommit]]: the current on-disk version is re-read and
-    *    compared before the atomic single-file replace. (Check and
-    *    replace are two steps — the residual race window is the price
-    *    of rename mode; deployments needing a true CAS use
-    *    [[VersionedCommit]].)
-    *  - [[VersionedCommit]]: `_MANIFEST.v<st.version>` is created with
-    *    overwrite=false — the conditional create IS the version check,
-    *    atomic end-to-end. A complete file already at that version is
-    *    a concurrent maintainer's commit → refuse loudly, artifact
-    *    untouched. A TORN file there is this maintainer's own crashed
-    *    attempt (no reader ever resolved it): delete and retry once.
+  /** Atomically publish a new manifest state by CREATING
+    * `_MANIFEST.v<st.version>` with overwrite=false. `st.version` MUST
+    * be exactly one past the committed version this state was derived
+    * from — the single-maintainer contract as a checked invariant. The
+    * conditional create is the check, atomic end-to-end: a complete
+    * file already at that version is a concurrent maintainer's commit
+    * → refuse loudly, artifact untouched. A TORN file there is this
+    * maintainer's own crashed attempt (no reader ever resolved it):
+    * delete and retry once. One listing after the create catches the
+    * rest: a newer live version means this state was derived from a
+    * version gc has since collected.
     *
     * Package-private so ManifestSpec can drive the two-maintainer
     * interleaving directly. */
   private[pipeline] def commit(spark: SparkSession, dir: String,
-      st: State, ifNew: CommitMode = RenameCommit): Unit = {
+      st: State): Unit = {
     val f = fs(spark, dir)
-    val body = render(st)
-    mode(f, dir, ifNew) match {
-      case RenameCommit =>
-        val cur = if (f.exists(new Path(dir, ManifestFile)))
-          Some(state(spark, dir).version) else None
-        if (cur.getOrElse(0L) != st.version - 1)
-          throw new IllegalStateException(
-            s"concurrent maintainer on $dir: committing version " +
-              s"${st.version} but the manifest is at " +
-              s"${cur.map(_.toString).getOrElse("<none>")} (expected " +
-              s"${st.version - 1}) — the artifact allows ONE " +
-              "maintainer at a time; reload and retry")
-        val tmp =
-          new Path(dir, s"$ManifestFile.tmp-${UUID.randomUUID()}")
-        val out = f.create(tmp, true)
-        try out.write(body)
-        finally out.close()
-        val fc = FileContext.getFileContext(f.getUri,
-          spark.sparkContext.hadoopConfiguration)
-        fc.rename(f.makeQualified(tmp),
-          f.makeQualified(new Path(dir, ManifestFile)),
-          Options.Rename.OVERWRITE)
-        // ChecksumFileSystem deployments (local file:) write a
-        // `.<tmp>.crc` sidecar for the temp file; the rename above
-        // moves only the data file, so without this delete every
-        // commit leaks one tiny sidecar into the artifact root
-        // (round-17 advice) — gc also sweeps the pattern for commits
-        // that crashed between rename and here
-        f.delete(new Path(dir, s".${tmp.getName}.crc"), false)
-        ()
-      case VersionedCommit =>
-        val target = new Path(dir, s"$ManifestFile.v${st.version}")
-        def createOnce(retry: Boolean): Unit = {
-          val out =
-            try f.create(target, false)
-            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-                _: java.io.IOException if f.exists(target) =>
-              val complete = parse(readText(f, target),
-                target.toString, requireTrailer = true).isDefined
-              if (complete || !retry)
-                throw new IllegalStateException(
-                  s"concurrent maintainer on $dir: version " +
-                    s"${st.version} already committed at $target — " +
-                    "the artifact allows ONE maintainer at a time; " +
-                    "reload and retry")
-              // torn = our own crashed attempt (single-maintainer
-              // contract; no reader ever trusted it) — replace it
-              f.delete(target, false)
-              return createOnce(retry = false)
-            }
-          try out.write(body)
-          finally out.close()
+    val target = new Path(dir, s"$ManifestFile.v${st.version}")
+    def createOnce(retry: Boolean): Unit = {
+      val out =
+        try f.create(target, false)
+        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+            _: java.io.IOException if f.exists(target) =>
+          val complete =
+            parse(readText(f, target), target.toString).isDefined
+          if (complete || !retry)
+            throw new IllegalStateException(
+              s"concurrent maintainer on $dir: version " +
+                s"${st.version} already committed at $target — " +
+                "the artifact allows ONE maintainer at a time; " +
+                "reload and retry")
+          // torn = our own crashed attempt (single-maintainer
+          // contract; no reader ever trusted it) — replace it
+          f.delete(target, false)
+          return createOnce(retry = false)
         }
-        createOnce(retry = true)
+      try out.write(render(st))
+      finally out.close()
+    }
+    createOnce(retry = true)
+    // a maintainer stale by MORE than one version can create a number
+    // gc already collected; readers resolve the newest version, so that
+    // commit would be silently shadowed — withdraw it and fail instead
+    val newest = versionFiles(f, dir).head._1
+    if (newest > st.version) {
+      f.delete(target, false)
+      throw new IllegalStateException(
+        s"concurrent maintainer on $dir: committed version " +
+          s"${st.version} but version $newest is already live — the " +
+          "artifact allows ONE maintainer at a time; reload and retry")
     }
   }
 
@@ -376,8 +285,7 @@ object Manifest {
     * the seam [[Maintainer]] uses to skip the per-append manifest
     * re-read. Returns the state it committed. */
   private def appendWith(spark: SparkSession, dir: String,
-      df: DataFrame, value: Long, st: State,
-      ifNew: CommitMode = RenameCommit): State = {
+      df: DataFrame, value: Long, st: State): State = {
     require(!df.columns.contains(st.partitionCol),
       s"frame already carries '${st.partitionCol}' — the layout owns it")
     val gen = s"gen-$value-${UUID.randomUUID().toString.take(8)}"
@@ -389,22 +297,21 @@ object Manifest {
     val next = State(st.version + 1, st.partitionCol,
       st.entries.filterNot(_.value == value) :+ Entry(value, gen, n),
       st.props)
-    commit(spark, dir, next, ifNew)
+    commit(spark, dir, next)
     next
   }
 
   /** Fold every live generation into one new base generation
-    * (`value = baseValue`) — [[Artifacts.compactPartitioned]] without
-    * the rename swap: write the full row multiset to a fresh `gen-`
-    * directory (the read side scans the OLD generations — the commit
-    * hasn't happened), commit a one-entry manifest, GC the old
+    * (`value = baseValue`): write the full row multiset to a fresh
+    * `gen-` directory (the read side scans the OLD generations — the
+    * commit hasn't happened), commit a one-entry manifest, GC the old
     * directories. A crash anywhere leaves the prior manifest and all
     * its data untouched; the half-written new base is [[gc]] debris. */
   def compact(spark: SparkSession, dir: String, baseValue: Long = -1L,
       repartitionCols: Seq[String] = Nil, numFiles: Int = 0,
       gcMinAgeMs: Long = 0L): Unit = {
     val st = state(spark, dir)
-    val data = rows(spark, dir).drop(st.partitionCol)
+    val data = rowsOf(spark, dir, st).drop(st.partitionCol)
     // file count sized by artifact bytes unless the caller pinned one
     val n = if (numFiles > 0) numFiles else Sizing.writeWidth(data)
     val shaped =
@@ -475,14 +382,13 @@ object Manifest {
     * byte-identical). All hit generations are rewritten to fresh
     * directories FIRST, then ONE commit swaps every entry at once —
     * so the retraction is also atomic as a whole: readers see either
-    * none of it or all of it, never a half-retracted artifact (the
-    * per-partition rename swap can expose one). Returns rows
-    * removed. */
+    * none of it or all of it, never a half-retracted artifact.
+    * Returns rows removed. */
   def retract(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String, gcMinAgeMs: Long = 0L): Long = {
     val st = state(spark, dir)
     val idsB = broadcast(ids.select(col(idCol)).distinct())
-    val hits = rows(spark, dir)
+    val hits = rowsOf(spark, dir, st)
       .join(idsB, Seq(idCol), "left_semi")
       .groupBy(col(st.partitionCol).cast("long").as("__v"))
       .agg(count(lit(1)).as("n"))
@@ -532,14 +438,14 @@ object Manifest {
       }.sum
   }
 
-  /** Garbage-collect uncommitted debris: `gen-*` directories the
-    * manifest doesn't reference (a crashed compact/retract/rebuild/
-    * append wrote them but never committed), stale `_MANIFEST.tmp-*`
-    * files, and — post-[[adopt]] — leftover `<partitionCol>=N`
-    * directories of the pre-adoption layout. This IS the crash
-    * recovery: no restore arm exists because no committed data is
-    * ever unreferenced. Idempotent; run at ingest start. Returns the
-    * number of paths deleted.
+  /** Garbage-collect uncommitted debris: `gen-*`/`model-*` directories
+    * the manifest doesn't reference (a crashed compact/retract/rebuild/
+    * append wrote them but never committed, or a later commit
+    * superseded them) and every `_MANIFEST.v<K>` except the resolved
+    * current one (superseded versions and torn crashed writes). This
+    * IS the crash recovery: no restore arm exists because no committed
+    * data is ever unreferenced. Idempotent; run at ingest start.
+    * Returns the number of paths deleted.
     *
     * `minAgeMs` is the concurrent-reader horizon: a reader in ANOTHER
     * process that loaded an older manifest may still be scanning
@@ -552,135 +458,26 @@ object Manifest {
     val f = fs(spark, dir)
     val st = state(spark, dir)
     val live = st.entries.map(_.path).toSet ++ st.props.values
-    // versioned mode: every _MANIFEST.v<K> except the resolved current
-    // one is debris — superseded committed versions (kept inside the
-    // reader horizon like any other debris) and torn crashed writes
     val liveVersion = s"$ManifestFile.v${st.version}"
     val cutoff = System.currentTimeMillis() - minAgeMs
     val victims = f.listStatus(new Path(dir)).toSeq.filter { s =>
       val n = s.getPath.getName
       (((n.startsWith("gen-") || n.startsWith("model-")) &&
         !live.contains(n)) ||
-        n.startsWith(s"$ManifestFile.tmp-") ||
-        // ChecksumFileSystem sidecars of crashed rename-mode commits
-        // (the happy path deletes its own; see commit)
-        n.startsWith(s".$ManifestFile.tmp-") ||
         (n.startsWith(s"$ManifestFile.v") && n != liveVersion &&
-          n.stripPrefix(s"$ManifestFile.v").forall(_.isDigit)) ||
-        (n.startsWith(s"${st.partitionCol}=") && !live.contains(n))) &&
+          n.stripPrefix(s"$ManifestFile.v").forall(_.isDigit))) &&
         s.getModificationTime <= cutoff
     }
     victims.foreach(s => f.delete(s.getPath, true))
     victims.size
   }
 
-  /** Adopt an existing `<partitionCol>=N` batch-partitioned artifact
-    * (the [[graft.streaming.IngestStream]] layout) into manifest
-    * mode, in place: every committed partition becomes a manifest
-    * entry POINTING AT ITS EXISTING DIRECTORY — no data is read or
-    * moved, adoption is one directory listing plus footer counts and
-    * one manifest commit. The old directories lack the partition
-    * value as a data column (it lived in the directory name), so
-    * [[rows]] would mis-read them — adoption therefore requires an
-    * immediate [[compact]], which reads THROUGH the recorded values
-    * (see the special-case below) and folds everything into a proper
-    * `gen-` base. Call only at a maintenance boundary (no writer, all
-    * batches committed). */
-  def adopt(spark: SparkSession, dir: String,
-      partitionCol: String = "batch",
-      maxCommittedValue: Long = Long.MaxValue): Unit = {
-    // a STREAMING artifact must be adopted through
-    // [[graft.streaming.IngestStream.adoptArtifacts]], which passes
-    // the checkpoint's newest commit here: folding a partition whose
-    // checkpoint commit is missing into the base would defeat the
-    // crash-replay's own-batchId exclusion exactly as compact's guard
-    // documents (the replay's docs match their own folded rows and
-    // silently vanish). Batch-driven layouts have no mid-batch window
-    // and keep the default.
-    // Crashed MAINTENANCE must be resolved before adopting: a
-    // `.retired-N` / `.old` / `.compacting` sibling holds rows the
-    // rename layout's recovery arms would restore, and adoption would
-    // silently leave them behind (they live outside `dir`, invisible
-    // to both the listing below and gc).
-    val f = fs(spark, dir)
-    val parent = new Path(dir).getParent
-    if (parent != null && f.exists(parent)) {
-      val nm = new Path(dir).getName
-      val stale = f.listStatus(parent).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(s"$nm.retired-") ||
-          n == s"$nm.old" || n == s"$nm.compacting")
-      require(stale.isEmpty,
-        s"crashed maintenance sibling(s) ${stale.mkString(", ")} " +
-          s"next to $dir — run Artifacts.recoverCompaction/" +
-          "recoverRetraction (or restart the ingest query once) " +
-          "before adopting")
-    }
-    // resumable BOTH ways: a crash between the two commits below
-    // leaves a manifest whose entries all point at pre-adoption
-    // directories (re-run skips to the fold); a crash AFTER the fold
-    // commit leaves a completed adoption with stale batch=N debris
-    // (re-run just finishes the gc)
-    if (exists(spark, dir)) {
-      val st = state(spark, dir)
-      require(st.partitionCol == partitionCol && st.entries.nonEmpty,
-        s"$dir already has a manifest")
-      if (st.entries.forall(_.path.startsWith("gen-"))) {
-        gc(spark, dir)
-        return
-      }
-      require(st.entries.forall(_.path.startsWith(s"$partitionCol=")),
-        s"$dir already has a manifest")
-    }
-    val resuming = exists(spark, dir)
-    val entries = if (resuming) state(spark, dir).entries else {
-      val parts = f.listStatus(new Path(dir)).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(s"$partitionCol="))
-        .sortBy(_.stripPrefix(s"$partitionCol=").toLong)
-      require(parts.nonEmpty,
-        s"nothing to adopt under $dir (no $partitionCol=N directories)")
-      val es = parts.map { p =>
-        val v = p.stripPrefix(s"$partitionCol=").toLong
-        Entry(v, p, countParquet(spark, s"$dir/$p"))
-      }
-      val bad = es.map(_.value).filter(_ > maxCommittedValue)
-      require(bad.isEmpty,
-        s"partition value(s) ${bad.mkString(", ")} under $dir have " +
-          "no checkpoint commit — the query crashed mid-batch; " +
-          "restart it to finish the replay, stop cleanly, then adopt")
-      commit(spark, dir, State(1L, partitionCol, es))
-      es
-    }
-    // fold immediately: pre-adoption dirs carry the value in their
-    // NAME, not their rows — read them the partition-discovery way
-    // and write the one proper base generation
-    val gen = s"gen--1-${UUID.randomUUID().toString.take(8)}"
-    val adopted = spark.read.option("basePath", dir)
-      .parquet(entries.map(e => s"$dir/${e.path}"): _*)
-      .withColumn(partitionCol, lit(-1L))
-    adopted.repartition(Sizing.writeWidth(adopted))
-      .write.mode("overwrite").parquet(s"$dir/$gen")
-    val rows = countParquet(spark, s"$dir/$gen")
-    commit(spark, dir, State(state(spark, dir).version + 1,
-      partitionCol, Seq(Entry(-1L, gen, rows))))
-    gc(spark, dir)
-    ()
-  }
-
-  /** The artifact's [[CommitMode]] as recorded on disk (`ifNew` for a
-    * directory with no manifest yet) — lets a caller creating a
-    * SIBLING artifact (e.g. the ingest loop's kept-docs dir next to
-    * its store) match the established layout. */
-  def commitMode(spark: SparkSession, dir: String,
-      ifNew: CommitMode = RenameCommit): CommitMode =
-    mode(fs(spark, dir), dir, ifNew)
-
   /** Single-writer maintainer with CACHED manifest state — the
     * steady-state ingest loop's view of one artifact. The layout
     * contract already grants the maintainer exclusive write ownership,
     * so between its own commits the on-disk state cannot change and
     * re-reading the manifest before every read/append (two
-    * read-modify-replace cycles plus a state read per micro-batch in
+    * read-and-commit cycles plus a state read per micro-batch in
     * [[graft.streaming.IngestStream.startManifest]]'s loop — each a
     * GET on an object store) buys nothing. The cache is built from
     * disk at construction and advanced in memory by each commit;
@@ -691,14 +488,9 @@ object Manifest {
     * [[commit]]'s optimistic version check stays on: if the contract
     * is ever violated (a second writer advanced the manifest), the
     * next append fails loudly instead of silently dropping the other
-    * writer's entries.
-    *
-    * `ifNew` sets the commit mode should the FIRST append create the
-    * artifact (pass the sibling store's mode to keep a store/out pair
-    * on one layout). */
+    * writer's entries. */
   final class Maintainer(spark: SparkSession, dir: String,
-      partitionCol: String = "batch",
-      ifNew: CommitMode = RenameCommit) {
+      partitionCol: String = "batch") {
     private var cached: Option[State] =
       if (Manifest.exists(spark, dir)) Some(Manifest.state(spark, dir))
       else None
@@ -716,7 +508,7 @@ object Manifest {
     def append(df: DataFrame, value: Long): Unit = {
       val st = cached
         .getOrElse(State(0L, partitionCol, Nil, Map.empty))
-      cached = Some(appendWith(spark, dir, df, value, st, ifNew))
+      cached = Some(appendWith(spark, dir, df, value, st))
     }
   }
 }

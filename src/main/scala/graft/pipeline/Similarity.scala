@@ -567,81 +567,6 @@ object Similarity {
       .repartition(shuffleN), model, dim)
   }
 
-  /** Compact a PERSISTED batch-partitioned IVF-PQ index directory (the
-    * layout the [[indexBatch]] append loop accretes — one `batch=N`
-    * parquet directory per appended batch) into a single new base
-    * generation, re-clustered by `cell` — the unit
-    * [[knnIvfPqOnIndex]]'s probed-cell scan reads, so compaction also
-    * restores cell locality the per-batch appends scattered. Query
-    * results are identical: the search is a function of the
-    * (neighbor_id, cell, codes) row set, which compaction preserves
-    * exactly (CompactionSpec). A co-located `_model` frame (the
-    * [[writeIndex]] layout) rides through the swap unchanged. Run
-    * only while no appender is active. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, numFiles: Int = 0): Unit = {
-    val modelPath = new org.apache.hadoop.fs.Path(s"$indexDir/_model")
-    val hasModel = modelPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(modelPath)
-    Artifacts.swapInto(spark, indexDir) { tmp =>
-      val data = spark.read.option("basePath", indexDir)
-        .parquet(indexDir).drop("batch")
-      val n = if (numFiles > 0) numFiles else Sizing.writeWidth(data)
-      data.repartition(n, col("cell"))
-        .write.mode("overwrite").parquet(s"$tmp/batch=-1")
-      if (hasModel)
-        spark.read.parquet(modelPath.toString).coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/_model")
-    }
-  }
-
-  /** Write a (model, index) pair as ONE self-contained artifact
-    * directory: code rows under `batch=-1` (the [[indexBatch]] append
-    * layout — later appends land as `batch=N` siblings), the model
-    * frame under `_model` (underscore-prefixed: invisible to Spark's
-    * partition discovery, so the code-row read never sees it). Rows
-    * cluster by `cell`, the probed-scan unit. */
-  def writeIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      model: IvfPqModel, index: DataFrame, numFiles: Int = 0): Unit = {
-    val n = if (numFiles > 0) numFiles else Sizing.writeWidth(index)
-    index.repartition(n, col("cell"))
-      .write.mode("overwrite").parquet(s"$dir/batch=-1")
-    model.toFrame(spark).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_model")
-  }
-
-  /** Read a [[writeIndex]]-layout artifact back as (model, code rows —
-    * base plus every appended batch). */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (IvfPqModel, DataFrame) = (
-    IvfPqModel.fromFrame(spark.read.parquet(s"$dir/_model")),
-    spark.read.option("basePath", dir).parquet(dir).drop("batch"))
-
-  /** Retrain + re-encode — the drift-refresh step that closes the
-    * index lifecycle (append → compact → retract → REBUILD): when
-    * enough appended batches have shifted the vector distribution
-    * away from the frozen quantizers (recall decays — retraining
-    * re-cells the whole index, which is exactly why [[indexBatch]]
-    * refuses to do it per batch), train fresh quantizers on the
-    * CURRENT corpus and swap a new base generation in place of the
-    * accumulated one. The swap rides the compaction discipline
-    * ([[Artifacts.swapInto]] — same `.compacting`/`.old` siblings, so
-    * [[Artifacts.recoverCompaction]] resolves a crashed rebuild too).
-    * One corpus scan (the [[ivfPqIndex]] encode), no appender may be
-    * active. Returns the new model (also persisted under `_model`). */
-  def rebuildIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-      dim: Int = 64, numFiles: Int = 0): IvfPqModel = {
-    val (model, index) = ivfPqIndex(corpus, idCol, vecCol, nlist, m,
-      ksub, dim)
-    Artifacts.swapInto(spark, indexDir) { tmp =>
-      writeIndex(spark, tmp, model, index, numFiles)
-    }
-    model
-  }
-
   /** Retract (un-keep) vectors from an IVF-PQ index FRAME: remove the
     * code rows of `ids` — the late-decontamination / takedown path.
     * Row-identical to re-encoding the surviving corpus under the same
@@ -654,23 +579,12 @@ object Similarity {
       broadcast(ids.select(col(idCol).as("neighbor_id")).distinct()),
       Seq("neighbor_id"), "left_anti")
 
-  /** [[retract]] against a PERSISTED index directory: rewrites only
-    * the `batch=N` partitions containing retracted ids. Returns the
-    * number of code rows removed. Run only while no appender is
-    * active. */
-  def retractIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame,
-      idCol: String = "neighbor_id"): Long =
-    Artifacts.retractPartitioned(spark, indexDir,
-      ids.select(col(idCol).as("neighbor_id")), "neighbor_id")
-
-  /** [[writeIndex]] in MANIFEST form ([[Manifest]] — the
-    * object-store-safe layout): the quantizer model stages to a fresh
-    * `model-<uuid>` directory and the code rows to a fresh base
-    * generation, then ONE manifest commit makes both live together —
-    * a reader can never see a new model with old codes (the
-    * rename-layout equivalent relies on the whole-directory swap).
-    * Appends land via [[Manifest.append]] (the model is untouched);
+  /** Write a (model, index) pair as ONE self-contained [[Manifest]]
+    * artifact: the quantizer model stages to a fresh `model-<uuid>`
+    * directory and the code rows to a fresh base generation clustered
+    * by `cell` (the probed-scan unit), then ONE manifest commit makes
+    * both live together — a reader can never see a new model with old
+    * codes. Appends land via [[Manifest.append]] (the model is untouched);
     * compaction via [[compactIndexManifest]]; retraction via
     * [[Manifest.retract]] with idCol `neighbor_id`. */
   def writeIndexManifest(spark: org.apache.spark.sql.SparkSession,
@@ -696,17 +610,28 @@ object Similarity {
       Manifest.rows(spark, dir).drop("batch"))
   }
 
-  /** [[compactIndex]] in manifest form: fold every appended
-    * generation into one base re-clustered by `cell` (the probed-scan
-    * unit); the `@model` property — and its directory — ride through
-    * untouched. */
+  /** Fold every appended generation into one base re-clustered by
+    * `cell` — the unit [[knnIvfPqOnIndex]]'s probed-cell scan reads,
+    * so compaction also restores the cell locality per-batch appends
+    * scattered. Query results are identical: the search is a function
+    * of the (neighbor_id, cell, codes) row set, which compaction
+    * preserves exactly (CompactionSpec). The `@model` property — and
+    * its directory — ride through untouched. Run only while no
+    * appender is active. */
   def compactIndexManifest(spark: org.apache.spark.sql.SparkSession,
       dir: String, numFiles: Int = 0): Unit =
     Manifest.compact(spark, dir, repartitionCols = Seq("cell"),
       numFiles = numFiles)
 
-  /** [[rebuildIndex]] in manifest form: retrain on the current
-    * corpus, re-encode, and swap rows AND model in one commit. */
+  /** Retrain + re-encode — the drift-refresh step that closes the
+    * index lifecycle (append → compact → retract → REBUILD): when
+    * enough appended batches have shifted the vector distribution
+    * away from the frozen quantizers (recall decays — retraining
+    * re-cells the whole index, which is exactly why [[indexBatch]]
+    * refuses to do it per batch), train fresh quantizers on the
+    * CURRENT corpus and swap rows AND model in one commit. One corpus
+    * scan (the [[ivfPqIndex]] encode); no appender may be active.
+    * Returns the new model. */
   def rebuildIndexManifest(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16, dim: Int = 64,

@@ -1,22 +1,22 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** WHEN to compact — the cadence policy the maintenance verbs
-  * ([[IngestStream.compact]] / [[IngestStream.compactManifest]])
-  * deliberately left to the operator: the operators are proven
-  * row-set-preserving, but nothing decided when running them pays.
+import graft.pipeline.Manifest
+
+/** WHEN to compact — the cadence policy the maintenance verb
+  * ([[IngestStream.compactManifest]]) deliberately left to the
+  * operator: compaction is proven row-set-preserving, but nothing
+  * decided when running it pays.
   * Two triggers, both cheap enough to evaluate at every stop/restart
   * boundary (the only place compaction is legal — the query must be
   * stopped, and [[IngestStream]]'s offsets-only checkpoint makes
   * stop → compact → restart safe by construction):
   *
-  *  - ''partition count'': every accreted `batch=N` directory (or
-  *    manifest generation) costs the store read a file listing and a
-  *    tiny-file task — the measured source of the per-batch wall
-  *    drift (`ingest_store`: 2.06→2.44 s over 40 batches). One
-  *    directory listing to evaluate.
+  *  - ''partition count'': every accreted manifest generation costs
+  *    the store read a file listing and a tiny-file task — the
+  *    measured source of the per-batch wall drift (`ingest_store`:
+  *    2.06→2.44 s over 40 batches). One manifest read to evaluate.
   *  - ''wall drift'': the recent per-batch wall over the early-run
   *    baseline — the symptom itself, caught even when partition
   *    count alone under-predicts it (skewed batch sizes, small-file
@@ -35,21 +35,12 @@ object CompactionPolicy {
   final case class Decision(compact: Boolean, partitions: Int,
       drift: Double, reason: String)
 
-  /** Count the accreted generations of one artifact: manifest
-    * entries when the directory is manifest-mode, `partitionCol=N`
-    * subdirectories otherwise (0 for a missing dir — outDir before
+  /** Count the accreted generations of one artifact: its manifest
+    * entries (0 for an artifact with no manifest yet — outDir before
     * the first batch). */
-  def generations(spark: SparkSession, dir: String,
-      partitionCol: String = "batch"): Int =
-    if (graft.pipeline.Manifest.exists(spark, dir))
-      graft.pipeline.Manifest.state(spark, dir).entries.size
-    else {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p)
-        .count(_.getPath.getName.startsWith(s"$partitionCol="))
-    }
+  def generations(spark: SparkSession, dir: String): Int =
+    if (Manifest.exists(spark, dir)) Manifest.state(spark, dir).entries.size
+    else 0
 
   /** Evaluate the two triggers for a stopped store/out pair.
     *

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, Manifest}
 
 /** Continuous-ingest dedup: the [[graft.pipeline.Dedup.ingestBatch]]
   * lifecycle as a STREAMING job — each arriving micro-batch is deduped
@@ -14,163 +14,75 @@ import graft.pipeline.Dedup
   * reference's collector→engine continuous-ingest boundary
   * (docker-compose.yml's always-on pipeline) applied to corpus dedup.
   *
-  * Storage layout (both dirs are plain parquet a batch pipeline can
-  * read with `spark.read.parquet`):
+  * Both artifacts are [[graft.pipeline.Manifest]] layouts (a batch
+  * pipeline reads them with `Manifest.rows`):
   *
-  *   storeDir/batch=-1/…   the seed store ([[seed]])
-  *   storeDir/batch=N/…    batch N's survivors' (id, sh, sig) rows
-  *   outDir/batch=N/…      batch N's surviving documents
+  *   storeDir   the seed generation (value -1, written by the caller
+  *              via `Manifest.append`) plus one (id, sh, sig, sz)
+  *              generation per batch's survivors
+  *   outDir     one generation of surviving documents per batch
   *
-  * RESTART-IDEMPOTENT by construction: every write is
-  * `mode(overwrite)` into a batchId-scoped partition directory, so a
-  * batch replayed after a crash rewrites the same content instead of
+  * RESTART-IDEMPOTENT by construction: each batch commits one
+  * generation per artifact keyed by its batchId, and
+  * [[graft.pipeline.Manifest.append]] upserts by value, so a batch
+  * replayed after a crash replaces its own entries instead of
   * appending duplicates (the foreachBatch at-least-once contract made
-  * effectively exactly-once). The store read EXCLUDES the current
-  * batchId's partition — a crashed attempt's own half-written rows
-  * must not make the replay's documents match themselves and vanish.
+  * effectively exactly-once). A half-written batch is never visible —
+  * it has no manifest entry — so crash recovery is pure garbage
+  * collection. The store read still EXCLUDES the current batchId's
+  * generation: a batch that committed its manifest entries but
+  * crashed before the CHECKPOINT commit replays, and must not match
+  * its prior attempt's rows.
   *
-  * Scale shape: one band join per micro-batch against the store
-  * (partition-discovered parquet — at 100 TB, bucket the store files
-  * by band hash and the join prunes to matching buckets); the batch
-  * side is micro-batch-sized. State lives entirely in the store
-  * parquet, not the state store — the streaming checkpoint carries
-  * only source offsets, so recovery cost is independent of corpus
-  * size. Per-batch wall therefore grows with the STORE (the
-  * `ingest_store` StreamLoadProbe scenario measures the curve), and
-  * the batch=N layout accretes one directory per batch: COMPACT
-  * periodically with [[compact]] (stop the query, compact, restart —
-  * any id-disjoint union of the same rows is equivalent to the band
-  * join; CompactionSpec proves keep/drop equivalence, and the
+  * Scale shape: one band join per micro-batch against the store (at
+  * 100 TB, bucket the store files by band hash and the join prunes to
+  * matching buckets); the batch side is micro-batch-sized. State lives
+  * entirely in the store parquet, not the state store — the streaming
+  * checkpoint carries only source offsets, so recovery cost is
+  * independent of corpus size. Per-batch wall therefore grows with the
+  * STORE (the `ingest_store` StreamLoadProbe scenario measures the
+  * curve), and the layout accretes one generation per batch: COMPACT
+  * periodically with [[compactManifest]] (stop the query, compact,
+  * restart — any id-disjoint union of the same rows is equivalent to
+  * the band join; CompactionSpec proves keep/drop equivalence, and the
   * `ingest_compact` probe scenario measures the per-batch wall
-  * dropping back after the directory count resets). Keep/drop is
+  * dropping back after the generation count resets). Keep/drop is
   * vs-store only ([[graft.pipeline.Dedup.dedupAgainstStore]]'s
   * contract); run a batch [[graft.pipeline.Dedup.minhashLsh]] pass over
   * outDir later if within-batch duplicates matter. */
 object IngestStream {
 
-  /** Write the seed store (the already-kept corpus' signature rows)
-    * into the batch=-1 partition of `storeDir`. */
-  def seed(kept: DataFrame, idCol: String, textCol: String,
-      storeDir: String, k: Int = 16, shingleN: Int = 3): Unit =
-    Dedup.signatureStore(kept, idCol, textCol, k, shingleN)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
-
   /** Start the continuous-ingest query over a streaming frame of
-    * (idCol, textCol) documents. Returns the running query; stop it
-    * (or crash it) and restart with the same checkpointDir to resume
-    * from the next unprocessed batch. */
-  def start(stream: DataFrame, idCol: String, textCol: String,
-      storeDir: String, outDir: String, checkpointDir: String,
-      k: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      minJaccard: Double = 0.7,
-      maxBroadcastRows: Long = 200000L): StreamingQuery = {
-    // a restart after a CRASHED compaction or retraction just works:
-    // resolve any half-finished swap before the first batch reads the
-    // store (conservative — the original data always wins; no-op on
-    // healthy dirs, and outDir may legitimately not exist yet).
-    // Safe here because both maintenance ops require the query
-    // stopped, so no swap can be in flight while a query is starting.
-    val sparkAtStart = stream.sparkSession
-    Seq(storeDir, outDir).foreach { d =>
-      require(!graft.pipeline.Manifest.exists(sparkAtStart, d),
-        s"$d is a MANIFEST-mode artifact — use startManifest " +
-          "(running the partitioned loop against it would mix layouts)")
-    }
-    graft.pipeline.Artifacts.recoverCompaction(sparkAtStart, storeDir)
-    graft.pipeline.Artifacts.recoverCompaction(sparkAtStart, outDir)
-    graft.pipeline.Artifacts.recoverRetraction(sparkAtStart, storeDir)
-    graft.pipeline.Artifacts.recoverRetraction(sparkAtStart, outDir)
-    runLoop(stream, idCol, textCol, checkpointDir, k, bands, shingleN,
-      minJaccard, maxBroadcastRows,
-      readStore = (spark, batchId) =>
-        // partition-discovered read: the `batch` column comes from the
-        // directory names, letting the replay exclude its own partial
-        // partition. basePath pins discovery to the store root.
-        spark.read.option("basePath", storeDir).parquet(storeDir)
-          .filter(col("batch") =!= batchId)
-          .drop("batch"),
-      writeOut = (survivors, batchId) =>
-        survivors.write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId"),
-      writeStore = (sigRows, batchId) =>
-        sigRows.write.mode("overwrite")
-          .parquet(s"$storeDir/batch=$batchId"))
-  }
-
-  /** [[start]] over MANIFEST-mode artifacts
-    * ([[graft.pipeline.Manifest]]) — the object-store-safe layout: a
-    * half-written batch is never visible (it has no manifest entry),
-    * so crash recovery is pure garbage collection and no directory is
-    * ever renamed. The own-batchId exclusion is still applied: a
-    * batch that committed its manifest entries but crashed before the
-    * CHECKPOINT commit replays, and must not match its prior
-    * attempt's rows ([[graft.pipeline.Manifest.append]]'s
-    * upsert-by-value then replaces them, keeping the replay
-    * idempotent). Seed the store first via
-    * [[graft.pipeline.Manifest.append]] with value -1. */
+    * (idCol, textCol) documents. Seed the store first via
+    * [[graft.pipeline.Manifest.append]] with value -1. Returns the
+    * running query; stop it (or crash it) and restart with the same
+    * checkpointDir to resume from the next unprocessed batch. */
   def startManifest(stream: DataFrame, idCol: String, textCol: String,
       storeDir: String, outDir: String, checkpointDir: String,
       k: Int = 16, bands: Int = 8, shingleN: Int = 3,
       minJaccard: Double = 0.7,
       maxBroadcastRows: Long = 200000L): StreamingQuery = {
-    import graft.pipeline.Manifest
-    val sparkAtStart = stream.sparkSession
-    require(Manifest.exists(sparkAtStart, storeDir),
+    val spark = stream.sparkSession
+    require(Manifest.exists(spark, storeDir),
       s"$storeDir has no manifest — seed it with Manifest.append " +
-        "(value -1), or adopt an existing batch=N layout with " +
-        "Manifest.adopt, or use start() for the partitioned loop")
-    // a crash between Manifest.adopt's two commits leaves a manifest
-    // whose entries still point at pre-adoption `batch=N` directories;
-    // Manifest.rows would mis-read those (the partition value lives in
-    // the directory NAME, not the rows — every micro-batch would die
-    // on a missing `batch` column without ever naming the fix). adopt
-    // is resumable from exactly that state — finish the fold here
-    // instead of failing later (round-17 advice).
-    Seq(storeDir, outDir).foreach { d =>
-      if (Manifest.exists(sparkAtStart, d) &&
-        !Manifest.state(sparkAtStart, d).entries
-          .forall(_.path.startsWith("gen-")))
-        Manifest.adopt(sparkAtStart, d)
-    }
-    // crash recovery in manifest mode IS garbage collection: a
-    // crashed batch/compact/retract left only unreferenced gen- dirs
-    Manifest.gc(sparkAtStart, storeDir)
-    if (Manifest.exists(sparkAtStart, outDir))
-      Manifest.gc(sparkAtStart, outDir)
+        "(value -1)")
+    // crash recovery IS garbage collection: a crashed batch/compact/
+    // retract left only unreferenced gen- dirs
+    Manifest.gc(spark, storeDir)
+    if (Manifest.exists(spark, outDir))
+      Manifest.gc(spark, outDir)
     // single-writer CACHED maintainers, built after recovery so the
     // cache reads the recovered state: the steady-state loop re-reads
     // no manifest — each micro-batch is two commits, not two
-    // read-modify-replace cycles plus a state read (the measured
-    // 15–25% per-append manifest overhead was mostly this). The out
-    // artifact is created on first append in the STORE's commit mode,
-    // keeping the pair on one layout.
-    val storeM = new Manifest.Maintainer(sparkAtStart, storeDir)
-    val outM = new Manifest.Maintainer(sparkAtStart, outDir,
-      ifNew = Manifest.commitMode(sparkAtStart, storeDir))
-    runLoop(stream, idCol, textCol, checkpointDir, k, bands, shingleN,
-      minJaccard, maxBroadcastRows,
-      readStore = (_, batchId) =>
-        storeM.rows()
-          .filter(col("batch") =!= batchId)
-          .drop("batch"),
-      writeOut = (survivors, batchId) => outM.append(survivors, batchId),
-      writeStore = (sigRows, batchId) => storeM.append(sigRows, batchId))
-  }
-
-  /** The shared micro-batch loop: dedup each arriving batch against
-    * the current store (excluding the batch's own prior half-written
-    * rows), write the survivors and their signature rows through the
-    * layout's writers. */
-  private def runLoop(stream: DataFrame, idCol: String,
-      textCol: String, checkpointDir: String, k: Int, bands: Int,
-      shingleN: Int, minJaccard: Double, maxBroadcastRows: Long,
-      readStore: (SparkSession, Long) => DataFrame,
-      writeOut: (DataFrame, Long) => Unit,
-      writeStore: (DataFrame, Long) => Unit): StreamingQuery = {
+    // read-and-commit cycles plus a state read (the measured 15–25%
+    // per-append manifest overhead was mostly this)
+    val storeM = new Manifest.Maintainer(spark, storeDir)
+    val outM = new Manifest.Maintainer(spark, outDir)
     val validated = new java.util.concurrent.atomic.AtomicBoolean(false)
     val step: (DataFrame, Long) => Unit = { (batch0, batchId) =>
-      val spark = batch0.sparkSession
-      val store = readStore(spark, batchId)
+      val store = storeM.rows()
+        .filter(col("batch") =!= batchId)
+        .drop("batch")
       // persist + count does double duty: the batch is read several
       // times downstream (content keying, the rep semi-join, the
       // survivor writes), so materializing it once pays for the size
@@ -195,17 +107,17 @@ object IngestStream {
             broadcastNew = batchRows <= maxBroadcastRows)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          writeOut(survivors, batchId)
+          outM.append(survivors, batchId)
           // write appends in the STORE'S OWN schema: against a store
           // written before the `sz` column existed, appending sz-
           // bearing rows would manufacture the mixed store the width
           // guard refuses (old rows read sz = null under schema
           // inference) and take the loop down on its next restart —
           // the pre-sz store stays homogeneous (and unpruned) until
-          // the operator opts in via rebuildStore
+          // the operator opts in via Manifest.rebuild
           val sigRows = Dedup.signatureStore(survivors, idCol,
             textCol, k, shingleN)
-          writeStore(
+          storeM.append(
             if (store.columns.contains("sz")) sigRows
             else sigRows.drop("sz"),
             batchId)
@@ -219,87 +131,25 @@ object IngestStream {
       .start()
   }
 
-  /** The accumulated kept corpus: every batch's survivors (the seed
-    * corpus itself lives with its owner — only streamed batches write
-    * here). Convenience for tests and downstream batch jobs. */
-  def keptDocs(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).parquet(outDir)
-
-  /** Compact both artifacts this stream accretes — the signature store
-    * and the kept-docs directory — into single base generations
-    * ([[graft.pipeline.Dedup.compactStore]] /
-    * [[graft.pipeline.Artifacts.compactPartitioned]]). Call with the
-    * query STOPPED; the checkpoint holds only source offsets, so a
-    * restart resumes from the next unprocessed batch against the
-    * compacted store, and keep/drop is unchanged (row-set-preserving —
-    * CompactionSpec).
+  /** Compact both artifacts this stream accretes — the signature
+    * store and the kept-docs output — folding each manifest's
+    * generations into one base. Call with the query STOPPED; the
+    * checkpoint holds only source offsets, so a restart resumes from
+    * the next unprocessed batch against the compacted store, and
+    * keep/drop is unchanged (row-set-preserving — CompactionSpec).
     *
     * `checkpointDir` (REQUIRED — it is the query's own checkpoint)
-    * guards the one genuinely unsafe window: compacting a batch whose
-    * commit marker is MISSING (the query crashed mid-batch). Folding
-    * that batch's rows into the unlabeled base would defeat
-    * [[start]]'s own-batchId store exclusion — the crash-replay's
-    * documents would match their own half-written rows in the base
-    * and every one would vanish (permanent, SILENT data loss). The
-    * guard fails loudly and tells the operator to restart (finishing
-    * the replay), stop cleanly, then compact. COMMITTED batch ids
-    * stay restart-safe with no guard needed: a committed batch never
-    * replays. A layout driven as a BATCH loop (no streaming
-    * checkpoint — every write is synchronous, so no partition can be
-    * mid-batch) compacts through [[compactBatchLayout]] instead; the
-    * unsafe path is deliberately not reachable by default (round-16
-    * advice: the opt-in guard left the default unsafe). */
-  def compact(spark: SparkSession, storeDir: String, outDir: String,
-      checkpointDir: String, numFiles: Int = 0): Unit = {
-    requirePartitionedLayout(spark, storeDir, outDir, "compactManifest")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val maxCommit = newestCommit(spark, checkpointDir)
-    def uncommitted(dir: String): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        .filter(b => b > maxCommit)
-    }
-    val bad = (uncommitted(storeDir) ++ uncommitted(outDir))
-      .distinct.sorted
-    require(bad.isEmpty,
-      s"uncommitted batch partition(s) ${bad.mkString(", ")} under " +
-        s"$storeDir / $outDir — the query crashed mid-batch; " +
-        "restart it to finish the replay, stop cleanly, then compact")
-    compactBatchLayout(spark, storeDir, outDir, numFiles)
-  }
-
-  /** [[compact]] without the uncommitted-batch guard — ONLY for a
-    * store/out pair driven as a synchronous BATCH loop (each `batch=N`
-    * write returned before the next began, so no partition can be a
-    * crash-replay's half; the q199 lifecycle gate's layout). For
-    * artifacts a streaming query accretes, use [[compact]] with the
-    * query's checkpoint — that path refuses the mid-batch window. */
-  def compactBatchLayout(spark: SparkSession, storeDir: String,
-      outDir: String, numFiles: Int = 0): Unit = {
-    requirePartitionedLayout(spark, storeDir, outDir, "compactManifest")
-    graft.pipeline.Dedup.compactStore(spark, storeDir, numFiles)
-    graft.pipeline.Artifacts.compactPartitioned(spark, outDir,
-      numFiles = numFiles)
-  }
-
-  /** [[compact]] for MANIFEST-mode artifacts ([[startManifest]]'s
-    * layout): fold both manifests' generations into one base each.
-    * The same uncommitted-batch guard applies — a batch whose
-    * manifest entries committed but whose CHECKPOINT commit is
-    * missing will replay, and folding its rows into the base (value
-    * -1) would defeat the replay's own-batchId exclusion exactly as
-    * in the partitioned layout. The guard reads batch ids from the
-    * MANIFEST (no directory listing): a half-written batch can't even
-    * appear there, so the only flagged state is the genuine
-    * checkpoint-lag window. */
+    * guards the one unsafe window: a batch whose manifest entries
+    * committed but whose CHECKPOINT commit is missing will replay, and
+    * folding its rows into the base (value -1) would defeat the
+    * replay's own-batchId exclusion — its documents would match their
+    * own folded rows and every one would vanish (permanent, SILENT
+    * data loss). The guard reads batch ids from the MANIFEST: a
+    * half-written batch can't even appear there, so the only flagged
+    * state is the genuine checkpoint-lag window. */
   def compactManifest(spark: SparkSession, storeDir: String,
       outDir: String, checkpointDir: String, numFiles: Int = 0)
       : Unit = {
-    import graft.pipeline.Manifest
     val maxCommit = newestCommit(spark, checkpointDir)
     def uncommitted(dir: String): Seq[Long] =
       if (!Manifest.exists(spark, dir)) Seq.empty
@@ -317,20 +167,23 @@ object IngestStream {
       Manifest.compact(spark, outDir, numFiles = numFiles)
   }
 
-  /** [[retract]] for MANIFEST-mode artifacts: remove the ids' rows
-    * from both manifests, rewriting only hit generations — each
-    * retraction is one atomic manifest swap per artifact (readers see
-    * all of it or none). Returns (store rows removed, kept docs
+  /** Retract (un-keep) documents from BOTH artifacts this stream
+    * accretes — signature rows from the store AND the documents
+    * themselves from the kept-docs output — the takedown path applied
+    * to the whole lifecycle state. Only generations holding a
+    * retracted id are rewritten, and each retraction is one atomic
+    * manifest swap per artifact (readers see all of it or none). Call
+    * with the query STOPPED; afterwards a restart ingests as if the
+    * docs had never been kept — a future near-dup of a retracted doc
+    * survives (RetractionSpec). Returns (store rows removed, kept docs
     * removed). */
   def retractManifest(spark: SparkSession, storeDir: String,
-      outDir: String, ids: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id"): (Long, Long) = {
-    import graft.pipeline.Manifest
+      outDir: String, ids: DataFrame,
+      idCol: String = "doc_id"): (Long, Long) =
     (Manifest.retract(spark, storeDir, ids, idCol),
       if (Manifest.exists(spark, outDir))
         Manifest.retract(spark, outDir, ids, idCol)
       else 0L)
-  }
 
   /** The newest committed batch id in a streaming checkpoint (-1 if
     * none). Streaming executes batches SEQUENTIALLY (batch N+1 starts
@@ -352,13 +205,11 @@ object IngestStream {
   }
 
   /** The policy-gated maintenance step for the stop/restart boundary:
-    * evaluate [[CompactionPolicy]] and compact only when it fires —
-    * one call for the cadence loop a deployment runs between stop()
-    * and the next [[start]]/[[startManifest]] (the `ingest_policy`
-    * probe drives exactly this decision externally; this helper is
-    * the same decision as one verb). Routes to [[compactManifest]]
-    * or [[compact]] by the store's layout. Returns the decision so
-    * the caller can log WHY. */
+    * evaluate [[CompactionPolicy]] and run [[compactManifest]] only
+    * when it fires — one call for the cadence loop a deployment runs
+    * between stop() and the next [[startManifest]] (the
+    * `ingest_policy` probe drives exactly this decision). Returns the
+    * decision so the caller can log WHY. */
   def maybeCompact(spark: SparkSession, storeDir: String,
       outDir: String, checkpointDir: String,
       maxPartitions: Int = 64,
@@ -368,73 +219,8 @@ object IngestStream {
       : CompactionPolicy.Decision = {
     val d = CompactionPolicy.evaluate(spark, storeDir, outDir,
       maxPartitions, recentWalls, baselineWalls, maxDrift)
-    if (d.compact) {
-      if (graft.pipeline.Manifest.exists(spark, storeDir))
-        compactManifest(spark, storeDir, outDir, checkpointDir,
-          numFiles)
-      else compact(spark, storeDir, outDir, checkpointDir, numFiles)
-    }
+    if (d.compact)
+      compactManifest(spark, storeDir, outDir, checkpointDir, numFiles)
     d
-  }
-
-  /** Retract (un-keep) documents from BOTH artifacts this stream
-    * accretes — signature rows from the store AND the documents
-    * themselves from the kept-docs directory — the takedown path
-    * applied to the whole lifecycle state. Only partitions containing
-    * retracted ids are rewritten ([[graft.pipeline.Artifacts.retractPartitioned]]).
-    * Call with the query STOPPED; afterwards a restart ingests as if
-    * the docs had never been kept — a future near-dup of a retracted
-    * doc survives (RetractionSpec). Returns (store rows removed,
-    * kept docs removed). */
-  def retract(spark: SparkSession, storeDir: String, outDir: String,
-      ids: DataFrame, idCol: String = "doc_id"): (Long, Long) = {
-    requirePartitionedLayout(spark, storeDir, outDir, "retractManifest")
-    (
-    graft.pipeline.Dedup.retractStore(spark, storeDir, ids, idCol),
-      graft.pipeline.Artifacts.retractPartitioned(spark, outDir, ids,
-        idCol))
-  }
-
-  /** The rename-layout maintenance verbs must never touch a
-    * manifest-mode artifact: partition discovery would sweep in
-    * unreferenced `gen-*` debris (a crash-replay's superseded attempt
-    * = duplicated rows; a crashed append's half-write = partial
-    * rows), and the directory swap would destroy `_MANIFEST` itself.
-    * Fail loudly and name the right verb instead. */
-  private def requirePartitionedLayout(spark: SparkSession,
-      storeDir: String, outDir: String, manifestVerb: String): Unit =
-    Seq(storeDir, outDir).foreach { d =>
-      require(!graft.pipeline.Manifest.exists(spark, d),
-        s"$d is a MANIFEST-mode artifact — use $manifestVerb " +
-          "(the rename-layout verb would fold uncommitted gen- " +
-          "debris and delete the manifest)")
-    }
-
-  /** Migrate a STREAMING store/out pair to the manifest layout at a
-    * clean stop — the guarded form of [[graft.pipeline.Manifest.adopt]]
-    * for artifacts this stream accretes: resolves any crashed
-    * rename-layout maintenance first (the restore arms need the
-    * pre-adoption layout; an unresolved `.retired-N` sibling would be
-    * silently left behind), then adopts BOTH directories with the
-    * checkpoint's newest commit as the fold bound, so a mid-batch
-    * crash's partition is refused rather than folded into the base
-    * (folding it would defeat the replay's own-batchId exclusion and
-    * vanish the batch — the same window [[compact]]'s guard
-    * documents). Afterwards [[startManifest]] resumes the SAME
-    * checkpoint (ManifestSpec's migration case). */
-  def adoptArtifacts(spark: SparkSession, storeDir: String,
-      outDir: String, checkpointDir: String): Unit = {
-    graft.pipeline.Artifacts.recoverCompaction(spark, storeDir)
-    graft.pipeline.Artifacts.recoverCompaction(spark, outDir)
-    graft.pipeline.Artifacts.recoverRetraction(spark, storeDir)
-    graft.pipeline.Artifacts.recoverRetraction(spark, outDir)
-    val maxCommit = newestCommit(spark, checkpointDir)
-    graft.pipeline.Manifest.adopt(spark, storeDir,
-      maxCommittedValue = maxCommit)
-    val outP = new org.apache.hadoop.fs.Path(outDir)
-    if (outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(outP))
-      graft.pipeline.Manifest.adopt(spark, outDir,
-        maxCommittedValue = maxCommit)
   }
 }

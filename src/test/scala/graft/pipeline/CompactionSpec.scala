@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Compaction of the lifecycle's batch-partitioned artifacts
-  * ([[Artifacts.compactPartitioned]] via [[Dedup.compactStore]] /
-  * [[Similarity.compactIndex]] / [[graft.streaming.IngestStream.compact]]):
-  * the row multiset is preserved exactly, keep/drop and ANN answers are
-  * identical against the compacted artifact, the directory count
-  * collapses to one base generation, and compaction is idempotent. */
+/** Compaction and rebuild of the lifecycle's [[Manifest]] artifacts
+  * ([[Manifest.compact]] / [[Manifest.rebuild]] /
+  * [[Similarity.compactIndexManifest]] /
+  * [[graft.streaming.IngestStream.compactManifest]]): the row multiset
+  * is preserved exactly, keep/drop and ANN answers are identical
+  * against the compacted artifact, the generation count collapses to
+  * one base, and compaction is idempotent. */
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,9 +23,8 @@ class CompactionSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  private def batchDirs(dir: String): Seq[String] =
-    new java.io.File(dir).listFiles().toSeq
-      .map(_.getName).filter(_.startsWith("batch=")).sorted
+  private def generations(dir: String): Seq[Long] =
+    Manifest.state(spark, dir).entries.map(_.value).sorted
 
   test("compactStore preserves the signature-store row set, collapses " +
       "to one base generation, keeps keep/drop identical, and is " +
@@ -39,16 +39,13 @@ class CompactionSpec extends SparkSpec {
       10L -> "fresh second-batch document about watermarks and state stores")
     val b3 = docsDf(
       20L -> "third batch content on codegen and tungsten pipelines here")
-    Dedup.signatureStore(b1, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=-1")
-    Dedup.signatureStore(b2, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=0")
-    Dedup.signatureStore(b3, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=1")
+    Seq(-1L -> b1, 0L -> b2, 1L -> b3).foreach { case (v, b) =>
+      Manifest.append(spark, storeDir,
+        Dedup.signatureStore(b, "doc_id", "text"), v)
+    }
 
     def store(): DataFrame =
-      spark.read.option("basePath", storeDir).parquet(storeDir)
-        .drop("batch")
+      Manifest.rows(spark, storeDir).drop("batch")
     // probe batch: near-dups of docs from ALL three generations plus
     // one fresh doc — keep/drop must not change under compaction
     val probe = docsDf(
@@ -64,15 +61,15 @@ class CompactionSpec extends SparkSpec {
     val keepBefore = keeps()
     assert(keepBefore == Set(103L)) // the three near-dups all drop
 
-    Dedup.compactStore(spark, storeDir)
-    assert(batchDirs(storeDir) == Seq("batch=-1"))
+    Manifest.compact(spark, storeDir)
+    assert(generations(storeDir) == Seq(-1L))
     assert(sortedRows(store()) == rowsBefore)
     assert(keeps() == keepBefore)
 
     // idempotent: compacting the already-compacted base is a no-op on
     // the row set
-    Dedup.compactStore(spark, storeDir)
-    assert(batchDirs(storeDir) == Seq("batch=-1"))
+    Manifest.compact(spark, storeDir)
+    assert(generations(storeDir) == Seq(-1L))
     assert(sortedRows(store()) == rowsBefore)
   }
 
@@ -84,80 +81,33 @@ class CompactionSpec extends SparkSpec {
     val d = docsDf(
       1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
       2L -> "completely different text about spark query engines and shuffles")
-    Dedup.signatureStore(d, "doc_id", "text", k = 8)
-      .write.parquet(s"$storeDir/batch=-1")
+    val d3 = docsDf(3L -> "a third document about watermarks and state stores")
+    Manifest.append(spark, storeDir,
+      Dedup.signatureStore(d, "doc_id", "text", k = 8), -1L)
+    Manifest.append(spark, storeDir,
+      Dedup.signatureStore(d3, "doc_id", "text", k = 8), 0L)
     val probe = docsDf(100L ->
       "alpha beta gamma delta epsilon zeta eta theta iota kappa xx")
-    def store(): org.apache.spark.sql.DataFrame =
-      spark.read.option("basePath", storeDir).parquet(storeDir)
-        .drop("batch")
+    def store(): DataFrame = Manifest.rows(spark, storeDir).drop("batch")
     // the k=8 store is refused at k=16 (the width guard's job) …
     val e = intercept[IllegalArgumentException] {
       Dedup.dedupAgainstStore(probe, "doc_id", "text", store(),
         k = 16, minJaccard = 0.5).collect()
     }
     assert(e.getMessage.contains("rebuild the store"))
-    // … and the rebuild migrates it: same corpus, new k, swap in place
-    Dedup.rebuildStore(spark, storeDir, d, "doc_id", "text", k = 16)
-    assert(new java.io.File(storeDir).listFiles().map(_.getName).toSeq
-      == Seq("batch=-1"))
+    // … and the rebuild migrates it: the current corpus re-hashed at
+    // the new k replaces every generation in one commit
+    val corpus = d.unionByName(d3)
+    Manifest.rebuild(spark, storeDir,
+      Dedup.signatureStore(corpus, "doc_id", "text", k = 16))
+    assert(generations(storeDir) == Seq(-1L))
+    assert(new java.io.File(storeDir).listFiles()
+      .count(_.getName.startsWith("gen-")) == 1)
     assert(Dedup.dedupAgainstStore(probe, "doc_id", "text", store(),
         k = 16, minJaccard = 0.5)
       .select("doc_id").as[Long].collect().isEmpty)
     assert(sortedRows(store()) == sortedRows(
-      Dedup.signatureStore(d, "doc_id", "text", k = 16)))
-  }
-
-  test("recoverCompaction resolves every documented crash window " +
-      "conservatively — the original data always wins") {
-    val root = Files.createTempDirectory("recover_compact").toString
-    val storeDir = s"$root/store"
-    val d = docsDf(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa")
-    Dedup.signatureStore(d, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=-1")
-    val rowsBefore = sortedRows(
-      spark.read.option("basePath", storeDir).parquet(storeDir))
-
-    def mv(a: String, b: String): Unit = {
-      assert(new java.io.File(a).renameTo(new java.io.File(b)))
-      ()
-    }
-    // window 1: crash BEFORE the first rename — dir intact, stale
-    // .compacting leftover
-    mkDirCopy(storeDir, s"$storeDir.compacting")
-    assert(Artifacts.recoverCompaction(spark, storeDir))
-    assert(!new java.io.File(s"$storeDir.compacting").exists())
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-      .parquet(storeDir)) == rowsBefore)
-
-    // window 2: crash BETWEEN the renames — dir missing, .old holds
-    // the original, .compacting holds the (untrusted) new base
-    mkDirCopy(storeDir, s"$storeDir.compacting")
-    mv(storeDir, s"$storeDir.old")
-    assert(Artifacts.recoverCompaction(spark, storeDir))
-    assert(new java.io.File(storeDir).exists())
-    assert(!new java.io.File(s"$storeDir.old").exists())
-    assert(!new java.io.File(s"$storeDir.compacting").exists())
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-      .parquet(storeDir)) == rowsBefore)
-
-    // idempotent on a healthy dir; false on a truly absent artifact
-    assert(Artifacts.recoverCompaction(spark, storeDir))
-    assert(!Artifacts.recoverCompaction(spark, s"$root/nowhere"))
-  }
-
-  private def mkDirCopy(src: String, dst: String): Unit = {
-    def copy(s: java.io.File, t: java.io.File): Unit = {
-      if (s.isDirectory) {
-        t.mkdirs()
-        s.listFiles().foreach(c => copy(c, new java.io.File(t, c.getName)))
-      } else {
-        java.nio.file.Files.copy(s.toPath, t.toPath)
-        ()
-      }
-    }
-    copy(new java.io.File(src), new java.io.File(dst))
+      Dedup.signatureStore(corpus, "doc_id", "text", k = 16)))
   }
 
   test("compactIndex preserves the (neighbor_id, cell, codes) row set " +
@@ -175,12 +125,12 @@ class CompactionSpec extends SparkSpec {
     val (model, idx1) = Similarity.ivfPqIndex(
       corpus.filter(col("vec_id") % 2 === 0), "vec_id", "v",
       nlist = 4, m = 8, ksub = 8)
-    idx1.write.parquet(s"$idxDir/batch=-1")
-    Similarity.indexBatch(corpus.filter(col("vec_id") % 2 === 1),
-      "vec_id", "v", model).write.parquet(s"$idxDir/batch=0")
+    Similarity.writeIndexManifest(spark, idxDir, model, idx1)
+    Manifest.append(spark, idxDir,
+      Similarity.indexBatch(corpus.filter(col("vec_id") % 2 === 1),
+        "vec_id", "v", model), 0L)
 
-    def index(): DataFrame =
-      spark.read.option("basePath", idxDir).parquet(idxDir).drop("batch")
+    def index(): DataFrame = Similarity.readIndexManifest(spark, idxDir)._2
     val probes = base.filter(col("vec_id") < 4)
     // shortlist 32 ≥ the probed cells' candidate count, so the re-rank
     // is exhaustive within them — coarse ksub=8 codes tie many ADCs
@@ -195,10 +145,16 @@ class CompactionSpec extends SparkSpec {
     val ansBefore = answer()
     assert(ansBefore == (0L until 4L).map(i => (i, i + 1000L)))
 
-    Similarity.compactIndex(spark, idxDir)
-    assert(batchDirs(idxDir) == Seq("batch=-1"))
+    Similarity.compactIndexManifest(spark, idxDir)
+    assert(generations(idxDir) == Seq(-1L))
     assert(sortedRows(index()) == rowsBefore)
     assert(answer() == ansBefore)
+    // the one base generation is clustered by cell: every cell's rows
+    // sit in exactly one parquet file
+    val filesPerCell = Manifest.rows(spark, idxDir)
+      .select(col("cell"), input_file_name().as("file")).distinct()
+      .groupBy("cell").count().select("count").as[Long].collect()
+    assert(filesPerCell.nonEmpty && filesPerCell.forall(_ == 1L))
   }
 
   test("IngestStream.compact folds store and out, the restarted query " +
@@ -216,12 +172,12 @@ class CompactionSpec extends SparkSpec {
     }
     def doc(id: Long, text: String): String =
       s"""{"doc_id":$id,"text":"$text"}"""
-    graft.streaming.IngestStream.seed(docsDf(
+    Manifest.append(spark, storeDir, Dedup.signatureStore(docsDf(
       1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      "doc_id", "text", storeDir)
+      "doc_id", "text"), -1L)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING")
-    def start() = graft.streaming.IngestStream.start(
+    def start() = graft.streaming.IngestStream.startManifest(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").json(inDir),
       "doc_id", "text", storeDir, outDir, ckpt, minJaccard = 0.5)
@@ -236,16 +192,17 @@ class CompactionSpec extends SparkSpec {
       doc(21L, "a fresh document about watermarks and state stores zz")))
     q1.processAllAvailable()
     q1.stop()
-    assert(graft.streaming.IngestStream.keptDocs(spark, outDir)
-      .select("doc_id").as[Long].collect().toSet == Set(10L, 11L, 20L))
+    def kept(): Set[Long] = Manifest.rows(spark, outDir)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept() == Set(10L, 11L, 20L))
 
-    // compact with the clean checkpoint: guard passes, dirs collapse
-    graft.streaming.IngestStream.compact(spark, storeDir, outDir,
+    // compact with the clean checkpoint: guard passes, generations
+    // collapse
+    graft.streaming.IngestStream.compactManifest(spark, storeDir, outDir,
       ckpt)
-    assert(batchDirs(storeDir) == Seq("batch=-1"))
-    assert(batchDirs(outDir) == Seq("batch=-1"))
-    assert(graft.streaming.IngestStream.keptDocs(spark, outDir)
-      .select("doc_id").as[Long].collect().toSet == Set(10L, 11L, 20L))
+    assert(generations(storeDir) == Seq(-1L))
+    assert(generations(outDir) == Seq(-1L))
+    assert(kept() == Set(10L, 11L, 20L))
 
     // restart on the compacted store: a near-dup of a pre-compaction
     // survivor still drops, a fresh doc still keeps — keep/drop is a
@@ -256,7 +213,7 @@ class CompactionSpec extends SparkSpec {
     val q2 = start()
     q2.processAllAvailable()
     q2.stop()
-    assert(spark.read.parquet(s"$outDir/batch=2")
+    assert(Manifest.rows(spark, outDir).filter(col("batch") === 2L)
       .select("doc_id").as[Long].collect().toSet == Set(31L))
 
     // crash simulation: delete the newest commit marker — batch 2 is
@@ -269,10 +226,10 @@ class CompactionSpec extends SparkSpec {
     Files.delete(newest)
     Files.deleteIfExists(commits.resolve(s".${newest.getFileName}.crc"))
     val e = intercept[IllegalArgumentException] {
-      graft.streaming.IngestStream.compact(spark, storeDir, outDir,
-        ckpt)
+      graft.streaming.IngestStream.compactManifest(spark, storeDir,
+        outDir, ckpt)
     }
-    assert(e.getMessage.contains("uncommitted batch partition"))
+    assert(e.getMessage.contains("no checkpoint commit"))
     // finish the replay, stop cleanly — now compaction proceeds
     val q3 = start()
     q3.processAllAvailable()
@@ -287,11 +244,9 @@ class CompactionSpec extends SparkSpec {
       .minBy(_.getFileName.toString.toLong)
     Files.delete(oldest)
     Files.deleteIfExists(commits.resolve(s".${oldest.getFileName}.crc"))
-    graft.streaming.IngestStream.compact(spark, storeDir, outDir,
+    graft.streaming.IngestStream.compactManifest(spark, storeDir, outDir,
       ckpt)
-    assert(batchDirs(storeDir) == Seq("batch=-1"))
-    assert(graft.streaming.IngestStream.keptDocs(spark, outDir)
-      .select("doc_id").as[Long].collect().toSet ==
-        Set(10L, 11L, 20L, 31L))
+    assert(generations(storeDir) == Seq(-1L))
+    assert(kept() == Set(10L, 11L, 20L, 31L))
   }
 }

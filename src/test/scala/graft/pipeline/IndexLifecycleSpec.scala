@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The persisted ANN index as a full-lifecycle artifact
-  * ([[Similarity.writeIndex]]/[[Similarity.readIndex]]/
-  * [[Similarity.rebuildIndex]]): the (model, codes) pair round-trips
-  * one self-contained directory, appends land beside the base,
-  * compaction folds them while the co-located model rides through,
-  * and a REBUILD (retrain + re-encode + swap) equals a from-scratch
-  * build over the current corpus. */
+  * ([[Similarity.writeIndexManifest]]/[[Similarity.readIndexManifest]]/
+  * [[Similarity.rebuildIndexManifest]]): the (model, codes) pair
+  * round-trips one self-contained directory, appends land beside the
+  * base, compaction folds them while the model rides through, and a
+  * REBUILD (retrain + re-encode + swap) equals a from-scratch build
+  * over the current corpus. */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,8 +37,8 @@ class IndexLifecycleSpec extends SparkSpec {
     // ---- build + persist as one artifact
     val (model0, index0) = Similarity.ivfPqIndex(corpus0, "vec_id",
       "v", nlist = 4, m = 8, ksub = 8)
-    Similarity.writeIndex(spark, idxDir, model0, index0)
-    val (modelR, codesR) = Similarity.readIndex(spark, idxDir)
+    Similarity.writeIndexManifest(spark, idxDir, model0, index0)
+    val (modelR, codesR) = Similarity.readIndexManifest(spark, idxDir)
     assert(modelR.cents.map(_.toSeq).toSeq ==
       model0.cents.map(_.toSeq).toSeq)
     assert(sortedRows(codesR) == sortedRows(index0))
@@ -56,13 +56,13 @@ class IndexLifecycleSpec extends SparkSpec {
     // model must ride through the swap
     val batch = (48L until 64L).map(i => (i, vec(i)))
       .toDF("vec_id", "v")
-    Similarity.indexBatch(batch, "vec_id", "v", modelR)
-      .write.parquet(s"$idxDir/batch=0")
+    Manifest.append(spark, idxDir,
+      Similarity.indexBatch(batch, "vec_id", "v", modelR), 0L)
     val corpus1 = corpus0.unionByName(batch)
-    Similarity.compactIndex(spark, idxDir)
-    assert(new java.io.File(idxDir).listFiles().map(_.getName).toSet
-      == Set("batch=-1", "_model"))
-    val (modelC, codesC) = Similarity.readIndex(spark, idxDir)
+    Similarity.compactIndexManifest(spark, idxDir)
+    assert(Manifest.state(spark, idxDir).entries.map(_.value) ==
+      Seq(-1L))
+    val (modelC, codesC) = Similarity.readIndexManifest(spark, idxDir)
     assert(modelC.cents.map(_.toSeq).toSeq ==
       model0.cents.map(_.toSeq).toSeq)
     assert(top1(codesC, modelC, corpus1) ==
@@ -71,9 +71,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // ---- rebuild: retrain on the grown corpus and swap — identical
     // to a from-scratch build (same deterministic sample -> same
     // quantizers -> same cells/codes)
-    val model2 = Similarity.rebuildIndex(spark, idxDir, corpus1,
+    val model2 = Similarity.rebuildIndexManifest(spark, idxDir, corpus1,
       "vec_id", "v", nlist = 4, m = 8, ksub = 8)
-    val (modelB, codesB) = Similarity.readIndex(spark, idxDir)
+    val (modelB, codesB) = Similarity.readIndexManifest(spark, idxDir)
     val (fresh, freshIdx) = Similarity.ivfPqIndex(corpus1, "vec_id",
       "v", nlist = 4, m = 8, ksub = 8)
     assert(modelB.cents.map(_.toSeq).toSeq ==
@@ -83,7 +83,11 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(sortedRows(codesB) == sortedRows(freshIdx))
     assert(top1(codesB, modelB, corpus1) ==
       (0L until 4L).map(i => (i, i + 1000L)))
-    // no swap leftovers
+    // no leftovers: one model, one generation, one manifest version
+    val names = new java.io.File(idxDir).listFiles().map(_.getName)
+    assert(names.count(_.startsWith("model-")) == 1)
+    assert(names.count(_.startsWith("gen-")) == 1)
+    assert(names.count(_.startsWith("_MANIFEST.v")) == 1)
     assert(new java.io.File(root).listFiles().map(_.getName).toSet
       == Set("index"))
   }

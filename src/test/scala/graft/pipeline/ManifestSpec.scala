@@ -7,16 +7,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The manifest-committed artifact layout ([[Manifest]]) — the
-  * object-store-safe twin of [[Artifacts]]'s rename swap. Proves the
-  * four lifecycle verbs row-identical to their rename-mode semantics
-  * (append/upsert, compact, retract, rebuild), re-proves the
-  * CompactionSpec/RetractionSpec crash cases RENAME-LESSLY (every
-  * crash window resolves by garbage collection alone — no restore
-  * arm), and — via [[RenameAuditFileSystem]] — proves the layout's
-  * only in-place mutation is the single-FILE `_MANIFEST` replace (the
-  * primitive an object PUT provides), where the [[Artifacts]] swap
-  * demands whole-DIRECTORY renames. */
+/** The manifest-committed artifact layout ([[Manifest]]): the four
+  * lifecycle verbs (append/upsert, compact, retract, rebuild) keep
+  * their row-level semantics, every crash window resolves by garbage
+  * collection alone (no restore arm), and — via
+  * [[RenameAuditFileSystem]] and [[NoRenameFileSystem]] — the layout
+  * never renames anything: every commit is a conditional create of a
+  * new version file. */
 class ManifestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,8 +52,11 @@ class ManifestSpec extends SparkSpec {
       sortedRows(sigs(corpus.filter(col("doc_id") <= 3))))
     val st = Manifest.state(spark, dir)
     assert(st.entries.map(_.value).sorted == Seq(-1L, 0L))
-    // the replaced generation is unreferenced debris; gc removes it
-    assert(Manifest.gc(spark, dir) == 1)
+    // the replaced generation is unreferenced debris, and so are the
+    // two superseded version files; gc removes all three
+    assert(Manifest.gc(spark, dir) == 3)
+    assert(new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("_MANIFEST")).toSeq == Seq("_MANIFEST.v3"))
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       sortedRows(sigs(corpus.filter(col("doc_id") <= 3))))
   }
@@ -140,10 +140,11 @@ class ManifestSpec extends SparkSpec {
       .write.parquet(s"$dir/gen--1-deadbeef")
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       rowsBefore)
-    // a crashed commit: the temp manifest was written, the atomic
-    // replace never happened — also invisible, also gc debris
-    Files.write(java.nio.file.Paths.get(dir, "_MANIFEST.tmp-crashed"),
-      "graft-manifest\t1\t99\tbatch\n".getBytes)
+    // a crashed commit: the next version file was torn mid-write (no
+    // end trailer) — also invisible, also gc debris
+    val v = Manifest.state(spark, dir).version
+    Files.write(java.nio.file.Paths.get(dir, s"_MANIFEST.v${v + 1}"),
+      s"graft-manifest\t1\t${v + 1}\tbatch\n".getBytes)
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       rowsBefore)
     assert(Manifest.gc(spark, dir) == 2)
@@ -166,37 +167,25 @@ class ManifestSpec extends SparkSpec {
       sortedRows(sigs(corpus.filter(col("doc_id") =!= 3L))))
   }
 
-  test("adopt migrates a batch=N layout in place, folds it to one " +
-      "base, and resumes after a crash between its two commits") {
-    val dir = Files.createTempDirectory("manifest_adopt").toString
-    sigs(corpus.filter(col("doc_id") <= 2))
-      .write.parquet(s"$dir/batch=-1")
-    sigs(corpus.filter(col("doc_id") > 2))
-      .write.parquet(s"$dir/batch=0")
-    val expect = sortedRows(sigs(corpus))
-    Manifest.adopt(spark, dir)
-    assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) == expect)
-    val st = Manifest.state(spark, dir)
-    assert(st.entries.map(_.value) == Seq(-1L))
-    // pre-adoption dirs are gone (folded + gc'd)
-    assert(!new java.io.File(s"$dir/batch=-1").exists())
-    assert(!new java.io.File(s"$dir/batch=0").exists())
-
-    // crash between adopt's two commits: manifest points at the old
-    // batch=N dirs; re-running adopt resumes the fold
-    val dir2 = Files.createTempDirectory("manifest_adopt2").toString
-    sigs(corpus.filter(col("doc_id") <= 2))
-      .write.parquet(s"$dir2/batch=-1")
-    sigs(corpus.filter(col("doc_id") > 2))
-      .write.parquet(s"$dir2/batch=0")
-    // hand-build the intermediate state: commit #1 only
-    Files.write(java.nio.file.Paths.get(dir2, "_MANIFEST"),
-      "graft-manifest\t1\t1\tbatch\n-1\tbatch=-1\t2\n0\tbatch=0\t2\n"
-        .getBytes)
-    Manifest.adopt(spark, dir2)
-    assert(sortedRows(Manifest.rows(spark, dir2).drop("batch")) ==
-      expect)
-    assert(Manifest.state(spark, dir2).entries.map(_.value) == Seq(-1L))
+  test("a directory still holding a single-file _MANIFEST is refused " +
+      "by every verb, never read as a new, empty artifact") {
+    val dir = Files.createTempDirectory("manifest_legacy").toString
+    sigs(corpus).withColumn("batch", lit(-1L))
+      .write.parquet(s"$dir/gen--1-0ld0ld00")
+    Files.write(java.nio.file.Paths.get(dir, "_MANIFEST"),
+      "graft-manifest\t1\t1\tbatch\n-1\tgen--1-0ld0ld00\t4\n".getBytes)
+    def refused(verb: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](verb)
+      assert(e.getMessage.contains("single-file _MANIFEST"), e.getMessage)
+    }
+    refused(Manifest.exists(spark, dir))
+    refused(Manifest.rows(spark, dir))
+    refused(Manifest.append(spark, dir, sigs(corpus), 0L))
+    refused(Manifest.gc(spark, dir))
+    // nothing was written: the committed generation is still the only
+    // data, and no version file appeared beside the legacy manifest
+    assert(new java.io.File(dir).listFiles().map(_.getName).toSet
+      .filterNot(_.startsWith(".")) == Set("_MANIFEST", "gen--1-0ld0ld00"))
   }
 
   test("gc with a minAge horizon defers deletion of fresh debris " +
@@ -212,106 +201,12 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.gc(spark, dir) == 1)
   }
 
-  test("layout MIGRATION under a live checkpoint: partitioned ingest, " +
-      "clean stop, adopt both artifacts, startManifest resumes the " +
-      "SAME checkpoint, and keep/drop continues as if never migrated") {
-    val root = Files.createTempDirectory("manifest_migrate").toString
-    val (inDir, storeDir, outDir, ckpt) =
-      (s"$root/in", s"$root/store", s"$root/out", s"$root/ckpt")
-    new java.io.File(inDir).mkdirs()
-    def writeFile(name: String, lines: Seq[String]): Unit = {
-      val tmp = java.nio.file.Paths.get(inDir, s".$name.tmp")
-      Files.write(tmp, lines.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, java.nio.file.Paths.get(inDir, name))
-      ()
-    }
-    def doc(id: Long, text: String): String =
-      s"""{"doc_id":$id,"text":"$text"}"""
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING")
-    def stream() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").json(inDir)
-
-    // phase 1: the PARTITIONED loop, two batches
-    graft.streaming.IngestStream.seed(corpus.limit(1), "doc_id",
-      "text", storeDir)
-    val q1 = graft.streaming.IngestStream.start(stream(), "doc_id",
-      "text", storeDir, outDir, ckpt, minJaccard = 0.5)
-    writeFile("b0.json", Seq(
-      doc(10L, "a fresh document about watermarks and state stores"),
-      doc(11L, "another fresh piece mentioning parquet bucketing today")))
-    q1.processAllAvailable()
-    writeFile("b1.json", Seq(
-      doc(20L, "genuinely new content on codegen and tungsten"),
-      doc(21L, "a fresh document about watermarks and state stores zz")))
-    q1.processAllAvailable()
-    q1.stop()
-
-    // phase 2: migrate BOTH artifacts in place at the clean stop —
-    // through the GUARDED verb. First prove the guard: with the
-    // newest checkpoint commit deleted, batch 1 looks mid-batch and
-    // adoption must refuse (folding it into the base would defeat the
-    // replay's own-batchId exclusion and vanish the batch)
-    val commits = java.nio.file.Paths.get(ckpt, "commits")
-    import scala.jdk.CollectionConverters._
-    val newest = Files.list(commits).iterator().asScala
-      .filter(p => p.getFileName.toString.forall(_.isDigit))
-      .maxBy(_.getFileName.toString.toLong)
-    val newestBytes = Files.readAllBytes(newest)
-    Files.delete(newest)
-    Files.deleteIfExists(commits.resolve(s".${newest.getFileName}.crc"))
-    val midBatch = intercept[IllegalArgumentException] {
-      graft.streaming.IngestStream.adoptArtifacts(spark, storeDir,
-        outDir, ckpt)
-    }
-    assert(midBatch.getMessage.contains("no checkpoint commit"))
-    Files.write(newest, newestBytes) // restore the clean stop
-    graft.streaming.IngestStream.adoptArtifacts(spark, storeDir,
-      outDir, ckpt)
-    // the layout guards route each loop — and the rename-layout
-    // maintenance verbs — away from the manifest artifact
-    val wrong = intercept[IllegalArgumentException] {
-      graft.streaming.IngestStream.start(stream(), "doc_id", "text",
-        storeDir, outDir, ckpt, minJaccard = 0.5)
-    }
-    assert(wrong.getMessage.contains("use startManifest"))
-    val wrongCompact = intercept[IllegalArgumentException] {
-      graft.streaming.IngestStream.compact(spark, storeDir, outDir,
-        ckpt)
-    }
-    assert(wrongCompact.getMessage.contains("use compactManifest"))
-
-    // the policy-gated maintenance helper routes to the manifest
-    // path; one fresh base generation per artifact -> nothing to do
-    val d = graft.streaming.IngestStream.maybeCompact(spark, storeDir,
-      outDir, ckpt, maxPartitions = 4)
-    assert(!d.compact && d.partitions == 1)
-
-    // phase 3: the MANIFEST loop resumes the same checkpoint
-    val q2 = graft.streaming.IngestStream.startManifest(stream(),
-      "doc_id", "text", storeDir, outDir, ckpt, minJaccard = 0.5)
-    writeFile("b2.json", Seq(
-      // near-dup of a PRE-migration survivor: the adopted store must
-      // still match it
-      doc(30L, "another fresh piece mentioning parquet bucketing today xx"),
-      doc(31L, "entirely unseen sentence about broadcast joins and skew")))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(Manifest.rows(spark, outDir)
-        .select("doc_id").as[Long].collect().toSet ==
-      Set(10L, 11L, 20L, 31L))
-  }
-
   test("the layout never renames a directory: the whole lifecycle on " +
       "a rename-auditing FS records only committer _temporary moves " +
       "and the single-file _MANIFEST replace; the Artifacts swap on " +
       "the same FS records whole-directory renames") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.audit.impl",
+    spark.sparkContext.hadoopConfiguration.set("fs.audit.impl",
       classOf[RenameAuditFileSystem].getName)
-    conf.set("fs.AbstractFileSystem.audit.impl",
-      classOf[RenameAuditAbstractFs].getName)
     val local = Files.createTempDirectory("manifest_audit").toString
     val dir = s"audit://$local/artifact"
 
@@ -325,33 +220,27 @@ class ManifestSpec extends SparkSpec {
     Manifest.rebuild(spark, dir, sigs(corpus))
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       sortedRows(sigs(corpus)))
+    // the output committer's internal task/job promotion is the only
+    // rename (a deployment swaps the committer on an object store; the
+    // LAYOUT's protocol is what's under proof here)
     val offenders = RenameAuditFileSystem.all().filterNot {
       case (src, dst, _) =>
-        // the output committer's internal task/job promotion (a
-        // deployment swaps the committer on an object store; the
-        // LAYOUT's protocol is what's under proof here) …
-        src.contains("/_temporary/") || dst.contains("/_temporary/") ||
-          // … and the one move the protocol itself makes: the
-          // single-FILE manifest replace (≡ an object PUT)
-          (src.contains("/_MANIFEST.tmp-") && dst.endsWith("/_MANIFEST"))
+        src.contains("/_temporary/") || dst.contains("/_temporary/")
     }
     assert(offenders.isEmpty,
       s"unexpected renames: ${offenders.mkString("; ")}")
-    // and the manifest replace is a FILE move, never a directory
-    assert(RenameAuditFileSystem.all()
-      .filter(_._2.endsWith("/_MANIFEST")).forall(!_._3))
 
-    // negative control: the rename-swap layout on the same FS moves
-    // whole DIRECTORIES outside _temporary — the object-store hazard
-    val swapLocal = Files.createTempDirectory("artifacts_audit").toString
-    val swapDir = s"audit://$swapLocal/store"
-    sigs(corpus).write.parquet(s"$swapDir/batch=-1")
+    // negative control: the audit sees a whole-DIRECTORY rename outside
+    // _temporary — the object-store hazard — so the empty offender
+    // list above is a measurement, not a blind instrument
+    val gen = Manifest.state(spark, dir).entries.head.path
     RenameAuditFileSystem.reset()
-    Artifacts.compactPartitioned(spark, swapDir)
-    assert(RenameAuditFileSystem.all().exists { case (src, dst, isDir) =>
-      isDir && !src.contains("/_temporary/") &&
-        !dst.contains("/_temporary/")
-    })
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$gen"),
+      new org.apache.hadoop.fs.Path(s"$dir/moved")))
+    assert(RenameAuditFileSystem.all() ==
+      Seq((s"$local/artifact/$gen", s"$local/artifact/moved", true)))
   }
 
   test("index artifact in manifest form: model and rows swap in ONE " +
@@ -420,14 +309,11 @@ class ManifestSpec extends SparkSpec {
       "create, readers resolve the highest complete version, gc keeps " +
       "only the current one; rename-mode commit fails on the same " +
       "store (negative control)") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.norename.impl", classOf[NoRenameFileSystem].getName)
-    conf.set("fs.AbstractFileSystem.norename.impl",
-      classOf[NoRenameAbstractFs].getName)
+    spark.sparkContext.hadoopConfiguration.set("fs.norename.impl",
+      classOf[NoRenameFileSystem].getName)
     val local = Files.createTempDirectory("manifest_norename").toString
     val dir = s"norename://$local/artifact"
 
-    Manifest.init(spark, dir, "batch", Manifest.VersionedCommit)
     Manifest.append(spark, dir, sigs(corpus.filter(col("doc_id") <= 2)),
       -1L)
     Manifest.append(spark, dir, sigs(corpus.filter(col("doc_id") === 3)),
@@ -462,20 +348,23 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.state(spark, dir).version == st.version + 1)
     assert(Manifest.state(spark, dir).entries.exists(_.value == 5L))
 
-    // negative control: a rename-mode artifact cannot even commit here
-    val rdir = s"norename://$local/rename_artifact"
-    val boom = intercept[Exception] {
-      Manifest.append(spark, rdir, sigs(corpus), -1L)
+    // negative control: the store really rejects a rename outside the
+    // committer's _temporary area
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = Manifest.state(spark, dir).entries.head.path
+    val boom = intercept[UnsupportedOperationException] {
+      fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$live"),
+        new org.apache.hadoop.fs.Path(s"$dir/moved"))
     }
-    assert(boom.getMessage != null &&
-      boom.getMessage.contains("no rename"))
+    assert(boom.getMessage.contains("no rename"))
   }
 
   test("single-maintainer contract is CHECKED: two interleaved " +
       "maintainers derive from the same version — the second commit " +
       "fails loudly in BOTH modes, the artifact keeps the first " +
       "commit's rows") {
-    // rename mode
+    // a stale append: B derives v2 from v1 after A committed v2
     val dir = Files.createTempDirectory("manifest_occ").toString
     Manifest.append(spark, dir, sigs(corpus.filter(col("doc_id") <= 2)),
       -1L)
@@ -494,49 +383,40 @@ class ManifestSpec extends SparkSpec {
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       sortedRows(sigs(corpus.filter(col("doc_id") <= 3))))
 
-    // versioned mode: the conditional create IS the check
-    val vdir = Files.createTempDirectory("manifest_occ_v").toString
-    Manifest.init(spark, vdir, "batch", Manifest.VersionedCommit)
-    Manifest.append(spark, vdir, sigs(corpus.filter(col("doc_id") <= 2)),
-      -1L)
-    val vloaded = Manifest.state(spark, vdir)
-    Manifest.append(spark, vdir,
-      sigs(corpus.filter(col("doc_id") === 3)), 0L)
+    // a stale state racing MAINTENANCE: A compacts (v3 replaces both
+    // entries with one base), B still holds v2 and tries to publish
+    // v3 — the conditional create is the check here too
+    val vloaded = Manifest.state(spark, dir)
+    Manifest.compact(spark, dir)
     val vstale = Manifest.State(vloaded.version + 1,
       vloaded.partitionCol, vloaded.entries, vloaded.props)
     val ve = intercept[IllegalStateException] {
-      Manifest.commit(spark, vdir, vstale)
+      Manifest.commit(spark, dir, vstale)
     }
     assert(ve.getMessage.contains("concurrent maintainer"))
-    assert(sortedRows(Manifest.rows(spark, vdir).drop("batch")) ==
+    assert(Manifest.state(spark, dir).entries.map(_.value) == Seq(-1L))
+    assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
       sortedRows(sigs(corpus.filter(col("doc_id") <= 3))))
-  }
 
-  test("commit leaves no tmp-sidecar debris: after many appends the " +
-      "artifact root holds the manifest, its (at most one) live " +
-      "checksum, and the live generations — nothing accumulates " +
-      "per-commit") {
-    val dir = Files.createTempDirectory("manifest_crc").toString
-    (0L until 5L).foreach { v =>
-      Manifest.append(spark, dir,
-        sigs(corpus.filter(col("doc_id") === 1)), v)
+    // stale by TWO versions: A appends then compacts, whose gc collects
+    // the version number B derives next — B's create succeeds, and the
+    // newer live version must still make it fail and withdraw the file
+    val old = Manifest.state(spark, dir)
+    Manifest.append(spark, dir, sigs(corpus.filter(col("doc_id") === 4)),
+      1L)
+    Manifest.compact(spark, dir)
+    val stale2 = Manifest.State(old.version + 1, old.partitionCol,
+      old.entries, old.props)
+    assert(!new java.io.File(s"$dir/_MANIFEST.v${stale2.version}")
+      .exists())
+    val e2 = intercept[IllegalStateException] {
+      Manifest.commit(spark, dir, stale2)
     }
-    // raw java.io listing — ChecksumFileSystem HIDES .crc files from
-    // FileSystem.listStatus, which is how sidecar debris would stay
-    // invisible (round-17 advice). What 5 commits must NOT leave: any
-    // `._MANIFEST.tmp-<uuid>.crc` (a per-commit leak grows the root
-    // unboundedly at 2 commits per micro-batch). What this Hadoop's
-    // LocalFs DOES leave: exactly ONE live `._MANIFEST.crc` —
-    // ChecksumFs.renameInternal moves the tmp's sidecar along with
-    // the tmp file, so the sidecar tracks the live manifest and the
-    // count stays constant. commit's post-rename delete plus gc's
-    // dot-tmp pattern cover FileContext bindings that DON'T move it.
-    def raw(): Seq[String] =
-      new java.io.File(dir).listFiles().map(_.getName).toSeq
-    assert(!raw().exists(_.contains("_MANIFEST.tmp-")),
-      s"tmp debris: ${raw().filter(_.contains("_MANIFEST.tmp-"))}")
-    assert(raw().count(_.endsWith(".crc")) <= 1)
-    assert(raw().count(_.startsWith("_MANIFEST")) == 1)
+    assert(e2.getMessage.contains("concurrent maintainer"))
+    assert(!new java.io.File(s"$dir/_MANIFEST.v${stale2.version}")
+      .exists())
+    assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) ==
+      sortedRows(sigs(corpus)))
   }
 
   test("gc horizon vs a LIVE concurrent reader: a scan planned from " +
@@ -561,8 +441,8 @@ class ManifestSpec extends SparkSpec {
     // new readers see the compacted artifact
     assert(sortedRows(Manifest.rows(spark, dir).drop("batch")) == before)
     // past the horizon (simulated by an immediate sweep) the two
-    // superseded generations go
-    assert(Manifest.gc(spark, dir) == 2)
+    // superseded generations and their two version files go
+    assert(Manifest.gc(spark, dir) == 4)
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("gen-")) == 1)
   }
@@ -686,49 +566,5 @@ class ManifestSpec extends SparkSpec {
       spark, storeDir, outDir, Seq(20L).toDF("doc_id"))
     assert(sr == 1L && dr == 1L)
     assert(kept() == Set(10L, 11L, 31L))
-  }
-
-  test("startManifest resumes a HALF-ADOPTED artifact: a crash " +
-      "between adopt's two commits leaves entries pointing at " +
-      "batch=N dirs — the next start finishes the fold instead of " +
-      "dying per-batch on the missing partition column") {
-    val root = Files.createTempDirectory("manifest_halfadopt").toString
-    val (inDir, storeDir, outDir, ckpt) =
-      (s"$root/in", s"$root/store", s"$root/out", s"$root/ckpt")
-    new java.io.File(inDir).mkdirs()
-    // the pre-adoption layout, with adopt's FIRST commit only (the
-    // crash window round-17 advice flagged: Manifest.exists passes,
-    // Manifest.rows would read dirs whose `batch` value lives in the
-    // directory NAME and fail unresolved-column on every micro-batch)
-    sigs(corpus.filter(col("doc_id") <= 2))
-      .write.parquet(s"$storeDir/batch=-1")
-    sigs(corpus.filter(col("doc_id") > 2))
-      .write.parquet(s"$storeDir/batch=0")
-    Files.write(java.nio.file.Paths.get(storeDir, "_MANIFEST"),
-      "graft-manifest\t1\t1\tbatch\n-1\tbatch=-1\t2\n0\tbatch=0\t2\n"
-        .getBytes)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING")
-    val q = graft.streaming.IngestStream.startManifest(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").json(inDir),
-      "doc_id", "text", storeDir, outDir, ckpt, minJaccard = 0.5)
-    // the fold completed at start: one proper base generation
-    assert(Manifest.state(spark, storeDir).entries.map(_.value) ==
-      Seq(-1L))
-    assert(!new java.io.File(s"$storeDir/batch=-1").exists())
-    // and the loop ingests against the folded store: a near-dup of an
-    // adopted doc drops, fresh content keeps
-    val tmp = java.nio.file.Paths.get(inDir, ".b0.json.tmp")
-    Files.write(tmp, Seq(
-      """{"doc_id":10,"text":"a document about watermarks and state stores in streaming jobs zz"}""",
-      """{"doc_id":11,"text":"entirely unseen sentence about broadcast joins and skew"}""")
-      .mkString("", "\n", "\n").getBytes)
-    Files.move(tmp, java.nio.file.Paths.get(inDir, "b0.json"))
-    q.processAllAvailable()
-    q.stop()
-    import spark.implicits._
-    assert(Manifest.rows(spark, outDir)
-      .select("doc_id").as[Long].collect().toSet == Set(11L))
   }
 }

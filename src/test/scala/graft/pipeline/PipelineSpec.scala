@@ -258,7 +258,7 @@ class DedupSpec extends SparkSpec {
     val mixed = store.unionByName(
       preSz.withColumn("sz", lit(null).cast("int")))
     val ex = intercept[IllegalArgumentException](pairs(mixed, bn = true))
-    assert(ex.getMessage.contains("rebuildStore"), ex.getMessage)
+    assert(ex.getMessage.contains("Manifest.rebuild"), ex.getMessage)
   }
 
   test("ingestBatch lifecycle: the batch-2 append makes its content " +
@@ -500,6 +500,20 @@ class ConnectedComponentsSpec extends SparkSpec {
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(comps == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+  }
+
+  test("connectedComponents: a chain longer than maxIter fails loudly, " +
+      "counting propagation steps") {
+    // chain 1-2-…-12: node 12 needs 11 propagation steps to learn 1
+    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(pairs, maxIter = 3))
+    // two steps per round: the loop stops after 4 steps, the first
+    // even count >= maxIter
+    assert(e.getMessage.contains("did not converge in 4 propagation " +
+      "steps (maxIter = 3)"), e.getMessage)
+    assert(Dedup.connectedComponents(pairs).select("comp").distinct()
+      .as[Long].collect().toSeq == Seq(1L))
   }
 
   test("connectedComponents: reliable-checkpoint mode matches local mode") {

@@ -2,17 +2,13 @@ package graft.pipeline
 
 import java.net.URI
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
 /** Test-only FileSystem that records every rename it is asked to
   * perform — the instrument behind ManifestSpec's rename-less proof:
   * run the whole manifest lifecycle on `audit://` paths, then assert
-  * the ONLY renames outside the output committer's `_temporary`
-  * internals are single-FILE moves of `_MANIFEST` (the atomic-replace
-  * primitive an object PUT provides natively). [[Artifacts]]'s swap
-  * discipline run on the same FS shows the contrast: whole-artifact
-  * DIRECTORY renames, the primitive object stores lack. */
+  * the ONLY renames are the output committer's `_temporary`
+  * internals. */
 class RenameAuditFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "audit"
   override def getUri: URI = URI.create("audit:///")
@@ -38,24 +34,16 @@ object RenameAuditFileSystem {
   }
 }
 
-/** The FileContext binding for the `audit` scheme ([[Manifest]]'s
-  * commit goes through FileContext for rename-with-overwrite);
-  * constructed reflectively by Hadoop from
-  * `fs.AbstractFileSystem.audit.impl`. */
-class RenameAuditAbstractFs(uri: URI, conf: Configuration)
-  extends DelegateToFileSystem(uri, new RenameAuditFileSystem, conf,
-    "audit", false)
-
 /** Test-only FileSystem that REJECTS file rename outright — the
   * strictest object-store model (S3A's "rename" is a COPY+DELETE
   * emulation; a store-native deployment has no rename primitive at
-  * all). [[Manifest.VersionedCommit]]'s whole lifecycle must run
-  * green on it: every commit is a conditional CREATE, never a move.
-  * The output committer's own `_temporary` promotion renames are
-  * exempted — a real object-store deployment swaps the committer for
-  * a direct-write one (S3A magic committer), and the LAYOUT's
-  * protocol is what's under proof here (the same argument
-  * ManifestSpec's rename audit makes). */
+  * all). The [[Manifest]] lifecycle must run green on it: every
+  * commit is a conditional CREATE, never a move. The output
+  * committer's own `_temporary` promotion renames are exempted — a
+  * real object-store deployment swaps the committer for a
+  * direct-write one (S3A magic committer), and the LAYOUT's protocol
+  * is what's under proof here (the same argument ManifestSpec's
+  * rename audit makes). */
 class NoRenameFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "norename"
   override def getUri: URI = URI.create("norename:///")
@@ -67,9 +55,3 @@ class NoRenameFileSystem extends RawLocalFileSystem {
     super.rename(src, dst)
   }
 }
-
-/** FileContext binding for `norename` — rename-mode commits reach
-  * rename through FileContext, and must fail on this store too. */
-class NoRenameAbstractFs(uri: URI, conf: Configuration)
-  extends DelegateToFileSystem(uri, new NoRenameFileSystem, conf,
-    "norename", false)

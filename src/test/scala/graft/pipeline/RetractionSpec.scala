@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Retraction (un-keep) from the lifecycle's persisted artifacts
-  * ([[Dedup.retract]] / [[Dedup.retractStore]] / [[Similarity.retract]]
-  * / [[Similarity.retractIndex]]): the result is row-identical to
-  * rebuilding the artifact from the surviving corpus, a later batch's
-  * near-dup of a retracted doc SURVIVES ingest (the
-  * late-decontamination / takedown semantics), and the directory-level
-  * path rewrites only the partitions that contain retracted ids. */
+/** Retraction (un-keep) from the lifecycle's artifacts
+  * ([[Dedup.retract]] / [[Similarity.retract]] on frames,
+  * [[Manifest.retract]] / [[graft.streaming.IngestStream.retractManifest]]
+  * on persisted ones): the result is row-identical to rebuilding the
+  * artifact from the surviving corpus, a later batch's near-dup of a
+  * retracted doc SURVIVES ingest (the late-decontamination / takedown
+  * semantics), and the persisted path rewrites only the generations
+  * that contain retracted ids. */
 class RetractionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,123 +61,36 @@ class RetractionSpec extends SparkSpec {
       0L -> corpus.filter(col("doc_id") === 3L),
       1L -> corpus.filter(col("doc_id") === 4L))
     slices.foreach { case (b, df) =>
-      Dedup.signatureStore(df, "doc_id", "text")
-        .write.parquet(s"$storeDir/batch=$b")
+      Manifest.append(spark, storeDir,
+        Dedup.signatureStore(df, "doc_id", "text"), b)
     }
-    def files(b: Long): Map[String, Long] =
-      new java.io.File(s"$storeDir/batch=$b").listFiles().toSeq
+    def files(b: Long): Map[String, Long] = {
+      val gen = Manifest.state(spark, storeDir).entries
+        .find(_.value == b).get.path
+      new java.io.File(s"$storeDir/$gen").listFiles().toSeq
         .filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> f.lastModified()).toMap
+    }
     val untouched0 = files(-1L)
     val untouched1 = files(1L)
 
-    // retract doc 3 (lives only in batch=0) plus an id the store never
-    // held (retraction lists routinely include already-gone docs)
-    val removed = Dedup.retractStore(spark, storeDir,
+    // retract doc 3 (lives only in generation 0) plus an id the store
+    // never held (retraction lists routinely include already-gone docs)
+    val removed = Manifest.retract(spark, storeDir,
       Seq(3L, 999L).toDF("doc_id"), "doc_id")
     assert(removed == 1L)
 
-    val after = spark.read.option("basePath", storeDir)
-      .parquet(storeDir).drop("batch")
+    val after = Manifest.rows(spark, storeDir).drop("batch")
     val rebuilt = Dedup.signatureStore(
       corpus.filter(col("doc_id") =!= 3L), "doc_id", "text")
     assert(sortedRows(after) == sortedRows(rebuilt))
-    // the partitions without retracted ids kept their files
+    // the generations without retracted ids kept their files
     // byte-identical — same names, same mtimes
     assert(files(-1L) == untouched0)
     assert(files(1L) == untouched1)
-    // no retired-sibling leftovers
-    assert(new java.io.File(root).listFiles().toSeq
-      .forall(f => !f.getName.contains(".retired")))
-  }
-
-  test("recoverRetraction resolves both crash windows: an uncommitted " +
-      "rewrite restores the retired sibling, a committed one drops " +
-      "it — and retractPartitioned self-recovers before its hit scan") {
-    val root = Files.createTempDirectory("recover_retract").toString
-    val storeDir = s"$root/store"
-    Dedup.signatureStore(corpus, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=-1")
-    val rowsBefore = sortedRows(spark.read
-      .option("basePath", storeDir).parquet(storeDir).drop("batch"))
-
-    // window A: crash AFTER rename, BEFORE the rewrite — partition
-    // gone, sibling holds the only copy; recovery must restore it
-    assert(new java.io.File(s"$storeDir/batch=-1")
-      .renameTo(new java.io.File(s"$storeDir.retired--1")))
-    assert(Artifacts.recoverRetraction(spark, storeDir) == 1)
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-      .parquet(storeDir).drop("batch")) == rowsBefore)
-    assert(!new java.io.File(s"$storeDir.retired--1").exists())
-
-    // window B: crash AFTER the rewrite committed (the explicit
-    // _RETRACT_COMMITTED marker present — retractPartitioned writes it
-    // itself after the survivor write returns) but before the sibling
-    // delete — recovery must keep the rewrite and drop the sibling.
-    // Materialize the rewrite BEFORE the overwrite (a lazy plan would
-    // read the very files the write deletes)
-    val src = spark.read.parquet(s"$storeDir/batch=-1")
-    val rewrittenRows = Dedup.retract(src,
-      Seq(3L).toDF("doc_id"), "doc_id").collect().toSeq
-    def cp(a: String, b: String): Unit = {
-      val s = new java.io.File(a); val t = new java.io.File(b)
-      t.mkdirs()
-      s.listFiles().foreach(f => java.nio.file.Files.copy(
-        f.toPath, new java.io.File(t, f.getName).toPath))
-    }
-    cp(s"$storeDir/batch=-1", s"$storeDir.retired--1") // the backup
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rewrittenRows), src.schema)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
-
-    // window B': the survivor write returned — the committer's
-    // _SUCCESS is present — but the crash hit BEFORE the explicit
-    // marker. _SUCCESS inside a post-rename partition can only come
-    // from the rewrite job's own commit (the rename moved the
-    // original _SUCCESS aside with the original rows), so recovery
-    // accepts it as a commit witness and keeps the rewrite — the
-    // pre-marker-era upgrade case: restoring here would silently
-    // un-retract a fully-committed pre-upgrade rewrite (round-17
-    // advice). The marker stays primary because _SUCCESS can be
-    // configured away (marksuccessfuljobs=false), never trusted by
-    // its ABSENCE.
-    assert(new java.io.File(s"$storeDir/batch=-1/_SUCCESS").exists())
-    assert(!new java.io.File(
-      s"$storeDir/batch=-1/_RETRACT_COMMITTED").exists())
-    val afterB1 = sortedRows(spark.read
-      .option("basePath", storeDir).parquet(storeDir).drop("batch"))
-    assert(Artifacts.recoverRetraction(spark, storeDir) == 1)
-    assert(!new java.io.File(s"$storeDir.retired--1").exists())
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-      .parquet(storeDir).drop("batch")) == afterB1)
-
-    // now the full window B: rewrite + marker present, sibling not
-    // yet deleted — recovery keeps the rewrite and drops the sibling
-    cp(s"$storeDir/batch=-1", s"$storeDir.retired--1")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rewrittenRows), src.schema)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
-    new java.io.File(s"$storeDir/batch=-1/_RETRACT_COMMITTED")
-      .createNewFile()
-    val afterRewrite = sortedRows(spark.read
-      .option("basePath", storeDir).parquet(storeDir).drop("batch"))
-    assert(Artifacts.recoverRetraction(spark, storeDir) == 1)
-    assert(!new java.io.File(s"$storeDir.retired--1").exists())
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-      .parquet(storeDir).drop("batch")) == afterRewrite)
-
-    // a NEW retraction self-recovers a window-A leftover before its
-    // hit scan, so the restored rows are visible to it
-    assert(new java.io.File(s"$storeDir/batch=-1")
-      .renameTo(new java.io.File(s"$storeDir.retired--1")))
-    val removed = Dedup.retractStore(spark, storeDir,
-      Seq(4L).toDF("doc_id"), "doc_id")
-    assert(removed == 1L)
-    assert(sortedRows(spark.read.option("basePath", storeDir)
-        .parquet(storeDir).drop("batch")) ==
-      sortedRows(Dedup.signatureStore(
-        corpus.filter(col("doc_id") =!= 3L && col("doc_id") =!= 4L),
-        "doc_id", "text")))
+    // the rewritten generation's old directory was collected
+    assert(new java.io.File(storeDir).listFiles()
+      .count(_.getName.startsWith("gen-")) == 3)
   }
 
   test("IngestStream.retract removes a doc from BOTH artifacts and a " +
@@ -186,24 +100,23 @@ class RetractionSpec extends SparkSpec {
     // two batch generations of store + out, the IngestStream layout
     val b0 = corpus.filter(col("doc_id") <= 2L)
     val b1 = corpus.filter(col("doc_id") > 2L)
-    graft.streaming.IngestStream.seed(b0, "doc_id", "text", storeDir)
-    b0.write.parquet(s"$outDir/batch=-1")
-    Dedup.signatureStore(b1, "doc_id", "text")
-      .write.parquet(s"$storeDir/batch=0")
-    b1.write.parquet(s"$outDir/batch=0")
+    Seq(-1L -> b0, 0L -> b1).foreach { case (v, b) =>
+      Manifest.append(spark, storeDir,
+        Dedup.signatureStore(b, "doc_id", "text"), v)
+      Manifest.append(spark, outDir, b, v)
+    }
 
     val (storeRemoved, docsRemoved) = graft.streaming.IngestStream
-      .retract(spark, storeDir, outDir, Seq(3L).toDF("doc_id"))
+      .retractManifest(spark, storeDir, outDir, Seq(3L).toDF("doc_id"))
     assert(storeRemoved == 1L && docsRemoved == 1L)
-    assert(graft.streaming.IngestStream.keptDocs(spark, outDir)
+    assert(Manifest.rows(spark, outDir)
       .select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 4L))
 
     // a near-dup of the retracted doc now survives a fresh batch
     val batch = Seq(30L ->
       "a document about watermarks and state stores in streaming jobs xx")
       .toDF("doc_id", "text")
-    val store = spark.read.option("basePath", storeDir)
-      .parquet(storeDir).drop("batch")
+    val store = Manifest.rows(spark, storeDir).drop("batch")
     assert(Dedup.dedupAgainstStore(batch, "doc_id", "text", store,
         minJaccard = 0.5).select("doc_id").as[Long].collect().toSet
       == Set(30L))
@@ -243,18 +156,17 @@ class RetractionSpec extends SparkSpec {
       sortedRows(reEncoded))
     assert(top1(retracted) == (0L until 4L).map(i => (i, i + 2000L)))
 
-    // directory-level: batches on disk, retract, same row set + answer
+    // persisted: two generations on disk, retract, same row set + answer
     val root = Files.createTempDirectory("retract_index").toString
     val idxDir = s"$root/index"
-    index.filter(col("neighbor_id") % 2 === 0)
-      .write.parquet(s"$idxDir/batch=-1")
-    index.filter(col("neighbor_id") % 2 === 1)
-      .write.parquet(s"$idxDir/batch=0")
-    val removed = Similarity.retractIndex(spark, idxDir,
-      ids.withColumnRenamed("vec_id", "neighbor_id"))
+    Similarity.writeIndexManifest(spark, idxDir, model,
+      index.filter(col("neighbor_id") % 2 === 0))
+    Manifest.append(spark, idxDir,
+      index.filter(col("neighbor_id") % 2 === 1), 0L)
+    val removed = Manifest.retract(spark, idxDir,
+      ids.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     assert(removed == 4L)
-    val onDisk = spark.read.option("basePath", idxDir).parquet(idxDir)
-      .drop("batch")
+    val onDisk = Similarity.readIndexManifest(spark, idxDir)._2
     assert(sortedRows(onDisk) == sortedRows(reEncoded))
     assert(top1(onDisk) == (0L until 4L).map(i => (i, i + 2000L)))
   }

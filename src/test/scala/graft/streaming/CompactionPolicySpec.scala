@@ -8,10 +8,10 @@ import graft.SparkSpec
 import graft.pipeline.{Dedup, Manifest}
 
 /** [[CompactionPolicy]] — the cadence decision over the proven
-  * maintenance verbs: the partition-count arm sees both layouts
-  * (batch=N directories and manifest generations), the drift arm
-  * fires on the wall-ratio and refuses to schedule a corpus rewrite
-  * off fewer than 3 samples, and a healthy pair decides false. */
+  * maintenance verbs: the partition-count arm counts manifest
+  * generations, the drift arm fires on the wall-ratio and refuses to
+  * schedule a corpus rewrite off fewer than 3 samples, and a healthy
+  * pair decides false. */
 class CompactionPolicySpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,16 +23,13 @@ class CompactionPolicySpec extends SparkSpec {
   test("generations counts batch=N dirs, manifest entries, and 0 for " +
       "a missing dir") {
     val root = Files.createTempDirectory("policy_gen").toString
-    val part = s"$root/partitioned"
-    Dedup.signatureStore(corpus, "doc_id", "text")
-      .write.parquet(s"$part/batch=-1")
-    Dedup.signatureStore(corpus, "doc_id", "text")
-      .write.parquet(s"$part/batch=0")
-    assert(CompactionPolicy.generations(spark, part) == 2)
-
     val man = s"$root/manifest"
     Manifest.append(spark, man,
       Dedup.signatureStore(corpus, "doc_id", "text"), -1L)
+    Manifest.append(spark, man,
+      Dedup.signatureStore(corpus, "doc_id", "text"), 0L)
+    assert(CompactionPolicy.generations(spark, man) == 2)
+    // a replayed batch upserts its entry: still two generations
     Manifest.append(spark, man,
       Dedup.signatureStore(corpus, "doc_id", "text"), 0L)
     assert(CompactionPolicy.generations(spark, man) == 2)
@@ -45,8 +42,8 @@ class CompactionPolicySpec extends SparkSpec {
     val root = Files.createTempDirectory("policy_eval").toString
     val store = s"$root/store"
     (-1 to 3).foreach { b =>
-      Dedup.signatureStore(corpus, "doc_id", "text")
-        .write.parquet(s"$store/batch=$b")
+      Manifest.append(spark, store,
+        Dedup.signatureStore(corpus, "doc_id", "text"), b.toLong)
     }
     // 5 partitions > 4: the count arm fires (out dir absent -> 0)
     val d1 = CompactionPolicy.evaluate(spark, store, s"$root/out",

@@ -5,14 +5,15 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.pipeline.{Dedup, Manifest}
 
 /** The continuous-ingest lifecycle over a REAL file source: documents
   * land as JSON files, each micro-batch dedups against the persisted
   * signature store and appends its survivors' rows
-  * ([[IngestStream]]) — then the query is stopped, restarted, and
-  * finally CRASH-REPLAYED (newest checkpoint commit marker deleted) to
-  * prove the batchId-scoped overwrite writes make at-least-once
-  * delivery effectively exactly-once. */
+  * ([[IngestStream.startManifest]]) — then the query is stopped,
+  * restarted, and finally CRASH-REPLAYED (newest checkpoint commit
+  * marker deleted) to prove the batchId-keyed upserts make
+  * at-least-once delivery effectively exactly-once. */
 class IngestStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,21 +40,21 @@ class IngestStreamSpec extends SparkSpec {
     new java.io.File(inDir).mkdirs()
 
     // seed store: the already-kept corpus
-    IngestStream.seed(Seq(
+    Manifest.append(spark, storeDir, Dedup.signatureStore(Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "completely different text about spark query engines and shuffles"))
-      .toDF("doc_id", "text"), "doc_id", "text", storeDir)
+      .toDF("doc_id", "text"), "doc_id", "text"), -1L)
 
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING")
-    def start() = IngestStream.start(
+    def start() = IngestStream.startManifest(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").json(inDir),
       "doc_id", "text", storeDir, outDir, ckpt,
       k = 16, bands = 8, minJaccard = 0.5)
 
     def survivorsOf(batch: Long): Set[Long] =
-      spark.read.parquet(s"$outDir/batch=$batch")
+      Manifest.rows(spark, outDir).filter(col("batch") === batch)
         .select("doc_id").as[Long].collect().toSet
 
     // ---- lifetime 1, batch 0: a near-dup of seed doc 1 (dropped
@@ -68,7 +69,7 @@ class IngestStreamSpec extends SparkSpec {
     q1.stop()
 
     // ---- lifetime 2 (RESTART): a near-dup of batch-0 survivor 11
-    // is dropped — its match lives only in the batch=0 store append,
+    // is dropped — its match lives only in the batch-0 store append,
     // which the restarted query must see — plus a near-dup of the
     // seed (dropped) and one fresh doc (kept)
     writeFile(inDir, "b1.json", Seq(
@@ -80,10 +81,10 @@ class IngestStreamSpec extends SparkSpec {
     assert(survivorsOf(1L) == Set(22L))
     q2.stop()
 
-    val keptBefore = IngestStream.keptDocs(spark, outDir)
+    val keptBefore = Manifest.rows(spark, outDir)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(keptBefore == Seq(11L, 12L, 22L))
-    val storeBefore = spark.read.parquet(storeDir)
+    val storeBefore = Manifest.rows(spark, storeDir)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(storeBefore == Seq(1L, 2L, 11L, 12L, 22L))
 
@@ -91,8 +92,8 @@ class IngestStreamSpec extends SparkSpec {
     // so the restart re-runs batch 1 — at-least-once delivery. The
     // replay reads a store that already CONTAINS batch 1's own rows
     // from the first attempt; the own-batch exclusion must keep doc
-    // 22 from matching itself, and the overwrite writes must leave
-    // every artifact byte-for-byte equivalent, not duplicated.
+    // 22 from matching itself, and the upsert-by-value commits must
+    // leave every artifact row-for-row equivalent, not duplicated.
     val commits = Paths.get(ckpt, "commits")
     import scala.jdk.CollectionConverters._
     val newestCommit = Files.list(commits).iterator().asScala
@@ -107,9 +108,9 @@ class IngestStreamSpec extends SparkSpec {
     q3.processAllAvailable()
     q3.stop()
     assert(survivorsOf(1L) == Set(22L))
-    assert(IngestStream.keptDocs(spark, outDir)
+    assert(Manifest.rows(spark, outDir)
       .select("doc_id").as[Long].collect().sorted.toSeq == keptBefore)
-    assert(spark.read.parquet(storeDir)
+    assert(Manifest.rows(spark, storeDir)
       .select("doc_id").as[Long].collect().sorted.toSeq == storeBefore)
   }
 
@@ -121,14 +122,12 @@ class IngestStreamSpec extends SparkSpec {
     val storeDir = s"$root/store"
     new java.io.File(inDir).mkdirs()
     // a store written BEFORE the sz column existed
-    graft.pipeline.Dedup.signatureStore(Seq(
+    Manifest.append(spark, storeDir, Dedup.signatureStore(Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-      .toDF("doc_id", "text"), "doc_id", "text")
-      .drop("sz")
-      .write.parquet(s"$storeDir/batch=-1")
+      .toDF("doc_id", "text"), "doc_id", "text").drop("sz"), -1L)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING")
-    def start() = IngestStream.start(
+    def start() = IngestStream.startManifest(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").json(inDir),
       "doc_id", "text", storeDir, s"$root/out", s"$root/ckpt",
@@ -145,7 +144,9 @@ class IngestStreamSpec extends SparkSpec {
     q1.processAllAvailable()
     q1.stop()
     // the append matched the store's own schema — no sz anywhere
-    assert(!spark.read.parquet(s"$storeDir/batch=0")
+    val gen0 = Manifest.state(spark, storeDir).entries
+      .find(_.value == 0L).get.path
+    assert(!spark.read.parquet(s"$storeDir/$gen0")
       .columns.contains("sz"))
     // the RESTART re-validates the (still homogeneous) store: must
     // not throw, and keep/drop still works against both generations
@@ -155,7 +156,8 @@ class IngestStreamSpec extends SparkSpec {
       doc(21L, "entirely new content on broadcast joins and skew")))
     q2.processAllAvailable()
     q2.stop()
-    assert(spark.read.parquet(s"$root/out/batch=1")
+    assert(Manifest.rows(spark, s"$root/out")
+      .filter(col("batch") === 1L)
       .select("doc_id").as[Long].collect().toSet == Set(21L))
   }
 }
