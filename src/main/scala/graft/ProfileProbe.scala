@@ -9,6 +9,13 @@ import org.apache.spark.scheduler._
   * stages by wall time. No query result is produced or persisted;
   * this is the guide §1 "measure first" harness.
   *
+  * Each query runs two passes, each after a cache and components-memo
+  * reset, and ends with one JSON line
+  * `{"query","sec","pass2_shuffle_mb","dir"}` (`sec` is the faster
+  * pass) — the per-query rows of SCALE.md's scaling tables, run
+  * against any data dir (e.g. the 10x synthesis of
+  * scripts/make_scale10.py).
+  *
   * Run: sbt "runMain graft.ProfileProbe q195_ingest_lifecycle ..."
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32). */
 object ProfileProbe {
@@ -60,41 +67,53 @@ object ProfileProbe {
           .format("noop").mode("overwrite").save()
       }
     } catch { case _: Throwable => () }
-    for (n <- names; pass <- 1 to 2) {
-      spark.catalog.clearCache()
-      PipelineQueries.resetMemo()
-      val acc = new Acc
-      spark.sparkContext.addSparkListener(acc)
-      spark.sparkContext.setJobDescription(s"profile:$n")
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        println(s"[profile] $n FAILED: ${e.getMessage}")
+    import scala.jdk.CollectionConverters._
+    names.foreach { n =>
+      // per pass: (wall seconds, shuffle MB written, ran without error)
+      val passes = (1 to 2).map { pass =>
+        spark.catalog.clearCache()
+        PipelineQueries.resetMemo()
+        val acc = new Acc
+        spark.sparkContext.addSparkListener(acc)
+        spark.sparkContext.setJobDescription(s"profile:$n")
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            SparkEntry.queries(n)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save()
+            true
+          } catch { case e: Throwable =>
+            println(s"[profile] $n FAILED: ${e.getMessage}")
+            false
+          }
+        val wall = (System.nanoTime() - t0) / 1e9
+        // listener events are posted async — give the bus a moment to
+        // drain before reading the accumulator (measurement-only slack)
+        Thread.sleep(500)
+        spark.sparkContext.removeSparkListener(acc)
+        val st = acc.stages.asScala.toSeq
+        val taskSec = st.map(_.taskMs).sum / 1e3
+        val stageWallSec = st.map(_.wallMs).sum / 1e3
+        val shufWriteMB = st.map(_.shufWriteMB).sum
+        println(f"[profile] $n pass$pass wall=$wall%.2fs jobs=${acc.jobs}" +
+          f" stages=${st.size} tasks=${st.map(_.tasks).sum}" +
+          f" taskTime=$taskSec%.2fs stageWallSum=$stageWallSec%.2fs" +
+          f" shufRead=${st.map(_.shufReadMB).sum}%.1fMB" +
+          f" shufWrite=$shufWriteMB%.1fMB" +
+          f" input=${st.map(_.inputMB).sum}%.1fMB" +
+          f" gc=${st.map(_.gcMs).sum / 1e3}%.2fs" +
+          f" deser=${st.map(_.deserMs).sum / 1e3}%.2fs")
+        if (pass == 2)
+          st.sortBy(-_.wallMs).take(12).foreach { s =>
+            println(f"    stage ${s.name}%-40s tasks=${s.tasks}%4d " +
+              f"wall=${s.wallMs / 1e3}%6.2fs task=${s.taskMs / 1e3}%6.2fs " +
+              f"sr=${s.shufReadMB}%8.2fMB sw=${s.shufWriteMB}%8.2fMB")
+          }
+        (wall, shufWriteMB, ok)
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async — give the bus a moment to
-      // drain before reading the accumulator (measurement-only slack)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(acc)
-      import scala.jdk.CollectionConverters._
-      val st = acc.stages.asScala.toSeq
-      val taskSec = st.map(_.taskMs).sum / 1e3
-      val stageWallSec = st.map(_.wallMs).sum / 1e3
-      println(f"[profile] $n pass$pass wall=$wall%.2fs jobs=${acc.jobs}" +
-        f" stages=${st.size} tasks=${st.map(_.tasks).sum}" +
-        f" taskTime=$taskSec%.2fs stageWallSum=$stageWallSec%.2fs" +
-        f" shufRead=${st.map(_.shufReadMB).sum}%.1fMB" +
-        f" shufWrite=${st.map(_.shufWriteMB).sum}%.1fMB" +
-        f" input=${st.map(_.inputMB).sum}%.1fMB" +
-        f" gc=${st.map(_.gcMs).sum / 1e3}%.2fs" +
-        f" deser=${st.map(_.deserMs).sum / 1e3}%.2fs")
-      if (pass == 2)
-        st.sortBy(-_.wallMs).take(12).foreach { s =>
-          println(f"    stage ${s.name}%-40s tasks=${s.tasks}%4d " +
-            f"wall=${s.wallMs / 1e3}%6.2fs task=${s.taskMs / 1e3}%6.2fs " +
-            f"sr=${s.shufReadMB}%8.2fMB sw=${s.shufWriteMB}%8.2fMB")
-        }
+      if (passes.forall(_._3))
+        println(f"""{"query":"$n","sec":${passes.map(_._1).min}%.3f,""" +
+          f""""pass2_shuffle_mb":${passes.last._2}%.1f,"dir":"$sfDir"}""")
     }
     spark.stop()
   }

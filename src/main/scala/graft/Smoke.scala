@@ -70,7 +70,7 @@ object Smoke {
 
     // progressive search: newest-first page over the full range must be
     // satisfied without scanning every ladder window
-    val page = graft.compile.SearchExecutor.paginate(Query(
+    val page = graft.compile.SearchExecutor.paginateCursor(Query(
       select = Seq(SelectItem("event_id", Some("event_id"), None)),
       from = "events",
       dateRange = Some(QueryCompiler.range(

@@ -2,6 +2,8 @@ package graft.analysis
 
 import scala.collection.mutable
 
+import graft.functions.Tokens
+
 /** DRAIN log-template miner (He et al., ICWS 2017) — Scala implementation
   * matching the reference's behavior
   * (packages/common-utils/src/drain/drain.ts: depth 4, sim 0.4,
@@ -10,17 +12,11 @@ import scala.collection.mutable
   *
   * Fixed-depth prefix tree: root → token-count → first (depth-2) tokens
   * (numeric tokens wildcarded) → leaf cluster list; a new line joins the
-  * most similar cluster at the leaf if similarity ≥ simTh (mismatching
+  * most similar cluster at the leaf if similarity ≥ 0.4 (mismatching
   * template positions degrade to `<*>`), else starts a new cluster.
   */
-final class Drain(
-    depth: Int = 4,
-    simTh: Double = 0.4,
-    maxChildren: Int = 100,
-    maxClusters: Option[Int] = None,
-    paramStr: String = "<*>",
-    parametrizeNumericTokens: Boolean = true) {
-  require(depth >= 3, "depth must be at least 3")
+final class Drain(maxClusters: Option[Int] = None) {
+  import Drain._
 
   final class LogCluster(var templateTokens: Vector[String], val id: Long) {
     var size: Long = 0
@@ -32,7 +28,7 @@ final class Drain(
     var clusterIds: List[Long] = Nil
   }
 
-  private val maxNodeDepth = depth - 2
+  private val maxNodeDepth = Depth - 2
   private val root = new Node
   private val clusters = mutable.LinkedHashMap.empty[Long, LogCluster]
   private var clustersCounter = 0L
@@ -44,7 +40,7 @@ final class Drain(
 
   def tokenize(content: String): Vector[String] = {
     val t = content.trim
-    if (t.isEmpty) Vector.empty else t.split("\\s+").toVector
+    if (t.isEmpty) Vector.empty else Tokens.split(t).toVector
   }
 
   /** (similarity, paramCount): fraction of positions where the template
@@ -56,7 +52,7 @@ final class Drain(
     var sim = 0; var params = 0
     var i = 0
     while (i < template.length) {
-      if (template(i) == paramStr) params += 1
+      if (template(i) == ParamStr) params += 1
       else if (template(i) == tokens(i)) sim += 1
       i += 1
     }
@@ -67,7 +63,7 @@ final class Drain(
   private def createTemplate(tokens: Vector[String],
       template: Vector[String]): Vector[String] =
     tokens.zip(template).map { case (t, tt) =>
-      if (t == tt) tt else paramStr
+      if (t == tt) tt else ParamStr
     }
 
   private def fastMatch(ids: List[Long], tokens: Vector[String])
@@ -84,7 +80,7 @@ final class Drain(
         }
       }
     }
-    best.filter(_ => bestSim >= simTh)
+    best.filter(_ => bestSim >= SimTh)
   }
 
   private def treeSearch(tokens: Vector[String]): Option[LogCluster] = {
@@ -100,7 +96,7 @@ final class Drain(
             curDepth < tokens.length) {
           val token = it.next()
           cur.children.get(token)
-            .orElse(cur.children.get(paramStr)) match {
+            .orElse(cur.children.get(ParamStr)) match {
             case Some(n) => cur = n; curDepth += 1
             case None => dead = true
           }
@@ -130,18 +126,18 @@ final class Drain(
         cur.children.get(token) match {
           case Some(n) => cur = n
           case None =>
-            if (parametrizeNumericTokens && hasNumbers(token)) {
-              cur = cur.children.getOrElseUpdate(paramStr, new Node)
-            } else if (cur.children.contains(paramStr)) {
-              if (cur.children.size < maxChildren)
+            if (hasNumbers(token)) {
+              cur = cur.children.getOrElseUpdate(ParamStr, new Node)
+            } else if (cur.children.contains(ParamStr)) {
+              if (cur.children.size < MaxChildren)
                 cur = cur.children.getOrElseUpdate(token, new Node)
-              else cur = cur.children(paramStr)
+              else cur = cur.children(ParamStr)
             } else {
-              if (cur.children.size + 1 < maxChildren)
+              if (cur.children.size + 1 < MaxChildren)
                 cur = cur.children.getOrElseUpdate(token, new Node)
-              else if (cur.children.size + 1 == maxChildren)
-                cur = cur.children.getOrElseUpdate(paramStr, new Node)
-              else cur = cur.children(paramStr)
+              else if (cur.children.size + 1 == MaxChildren)
+                cur = cur.children.getOrElseUpdate(ParamStr, new Node)
+              else cur = cur.children(ParamStr)
             }
         }
         curDepth += 1
@@ -191,6 +187,14 @@ final class Drain(
   private def evictIfNeeded(): Unit = maxClusters.foreach { cap =>
     while (clusters.size > cap) clusters.remove(clusters.head._1)
   }
+}
+
+/** The reference's fixed tree parameters. */
+object Drain {
+  private val Depth = 4
+  private val SimTh = 0.4
+  private val MaxChildren = 100
+  private val ParamStr = "<*>"
 }
 
 /** Masking pre-pass (reference drain/masking.ts): common variable patterns

@@ -30,12 +30,8 @@ object BuilderSql {
     "`" + name.replace("`", "``") + "`"
 
   /** Render `q` against `catalog`. Left(reason) mirrors the reference's
-    * error union for configs that don't fit one raw-SQL statement.
-    * `opts` must match the options the caller compiles with — auto
-    * granularity and the lucene-HAVING schema both depend on them. */
-  def render(q: Query, catalog: Catalog,
-      opts: QueryCompiler.Options = QueryCompiler.Options())
-      : Either[String, String] = {
+    * error union for configs that don't fit one raw-SQL statement. */
+  def render(q: Query, catalog: Catalog): Either[String, String] = {
     if (q.ctes.nonEmpty)
       return Left("CTE configs are not renderable as one raw-SQL statement")
     if (q.seriesLimit.nonEmpty)
@@ -55,8 +51,7 @@ object BuilderSql {
         // resolves it the same way), so auto renders as its resolved step
         q.dateRange match {
           case Some(dr) => Some(autoGranularitySeconds(
-            dr.to.getEpochSecond - dr.from.getEpochSecond,
-            opts.maxAutoBuckets))
+            dr.to.getEpochSecond - dr.from.getEpochSecond))
           case None =>
             return Left("auto granularity requires a dateRange to resolve")
         }
@@ -149,7 +144,7 @@ object BuilderSql {
         // having path), so alias references serialize identically.
         // Planning the having-less query is schema-only (no action).
         val aggSchema =
-          QueryCompiler.compile(q.copy(having = None), catalog, opts).schema
+          QueryCompiler.compile(q.copy(having = None), catalog).schema
         val hctx = LuceneContext(
           new graft.lucene.FieldResolver(aggSchema), None)
         s"\nHAVING ${sqlOf(QueryCompiler.compileCond(lucene, hctx))}"

@@ -19,31 +19,10 @@ import graft.lucene.{FieldResolver, LuceneCompiler, LuceneContext}
   */
 object QueryCompiler {
 
-  final case class Options(
-      /** quantile via percentile_approx (scale path) vs exact percentile
-        * (oracle parity). At 100 TB always use approx. */
-      approxQuantile: Boolean = false,
-      /** accuracy for percentile_approx. */
-      approxAccuracy: Int = 10000,
-      /** count_distinct via HLL approx_count_distinct — the reference's
-        * `count_distinct_implementation: uniqCombined64` setting
-        * (renderChartConfig.int.test.ts:41-46). At 100 TB exact distinct
-        * counts shuffle every key; HLL is the default posture there. */
-      approxCountDistinct: Boolean = false,
-      approxCountDistinctRsd: Double = 0.01,
-      /** centroid cap for the weighted-quantile Aggregator: exact while a
-        * group's rows stay under 2× this. */
-      // cap 2× this on (value, weight) centroids (16 B each → ≤ 1 MB per
-      // group); equal values coalesce losslessly first, so quantized value
-      // domains (2-decimal latencies etc.) stay EXACT at any row count
-      weightedQuantileCompression: Int = 32768,
-      maxAutoBuckets: Int = 60)
-
-  def compile(q: Query, catalog: Catalog,
-      opts: Options = Options()): DataFrame = {
+  def compile(q: Query, catalog: Catalog): DataFrame = {
     // ---- CTEs (one level deep, like the reference types.ts:1326-1331)
     val cat = q.ctes.foldLeft(catalog) { case (c, (name, cq)) =>
-      c.withSource(name, Source(compile(cq, c, opts)))
+      c.withSource(name, Source(compile(cq, c)))
     }
     val source = cat(q.from)
     val df = source.df
@@ -87,8 +66,7 @@ object QueryCompiler {
       case Granularity.Auto =>
         val dr = q.dateRange.getOrElse(throw new IllegalArgumentException(
           "auto granularity requires dateRange"))
-        autoGranularitySeconds(
-          dr.to.getEpochSecond - dr.from.getEpochSecond, opts.maxAutoBuckets)
+        autoGranularitySeconds(dr.to.getEpochSecond - dr.from.getEpochSecond)
     }
     val (bucketed, bucketCols) = granularitySeconds match {
       case Some(g) =>
@@ -113,7 +91,7 @@ object QueryCompiler {
         val groupCols = bucketCols.map(col) ++
           q.groupBy.map(g => expr(g).as(g))
         val aggExprs = q.select.zipWithIndex.map { case (s, i) =>
-          renderAgg(s, lctx, source, opts).as(aliasOf(s, i))
+          renderAgg(s, lctx, source).as(aliasOf(s, i))
         }
         val grouped =
           if (groupCols.isEmpty) bucketed.groupBy()
@@ -198,8 +176,8 @@ object QueryCompiler {
     * numerically coerced via toFloat64OrDefault — deliberately part of the
     * semantics. Conditional aggregation compiles to when(cond, x), the Spark
     * equivalent of ClickHouse `fnIf(x, cond)`. */
-  private def renderAgg(s: SelectItem, lctx: LuceneContext, source: Source,
-      opts: Options): Column = {
+  private def renderAgg(s: SelectItem, lctx: LuceneContext,
+      source: Source): Column = {
     val fn = s.aggFn.getOrElse(AggFn.NoAgg)
     val cond: Option[Column] = s.aggCondition.map(compileCond(_, lctx))
     def raw: Column = expr(s.valueExpression)
@@ -222,10 +200,7 @@ object QueryCompiler {
           case (Some(p), None) => count_if(p)
           case (None, None) => count(lit(1))
         }
-      case AggFn.CountDistinct =>
-        if (opts.approxCountDistinct)
-          approx_count_distinct(gated(raw), opts.approxCountDistinctRsd)
-        else count_distinct(gated(raw))
+      case AggFn.CountDistinct => count_distinct(gated(raw))
       case AggFn.Sum => weight match {
         case Some(w) => sum(gated(num * w))
         case None => sum(gated(num))
@@ -246,14 +221,8 @@ object QueryCompiler {
           case None => last(gated(raw), ignoreNulls = true)
         }
       case AggFn.Quantile(level) => weight match {
-        case Some(w) =>
-          graft.functions.WeightedQuantile(level, gated(num), w,
-            opts.weightedQuantileCompression)
-        case None =>
-          if (opts.approxQuantile)
-            percentile_approx(gated(num), lit(level),
-              lit(opts.approxAccuracy))
-          else callPercentile(gated(num), level)
+        case Some(w) => graft.functions.WeightedQuantile(level, gated(num), w)
+        case None => callPercentile(gated(num), level)
       }
       case AggFn.NoAgg => raw
       case AggFn.Increase =>

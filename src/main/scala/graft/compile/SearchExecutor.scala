@@ -19,9 +19,6 @@ import graft.ir._
   */
 object SearchExecutor {
 
-  final case class Page(rows: Array[org.apache.spark.sql.Row],
-      windowsScanned: Int)
-
   /** One cursor-resumable page: the rows, how many ladder windows this
     * call touched, and the opaque cursor for the NEXT page (None =
     * the whole date range is exhausted). */
@@ -53,9 +50,9 @@ object SearchExecutor {
     }
   }
 
-  /** Run ONE page of `q` progressively, resuming from `cursor` (None =
-    * first page) — the HTTP face of [[paginate]], mirroring the
-    * reference's useOffsetPaginatedQuery loop
+  /** Run ONE page of `q` (must have a dateRange and a limit)
+    * progressively, resuming from `cursor` (None = first page),
+    * mirroring the reference's useOffsetPaginatedQuery loop
     * (useOffsetPaginatedQuery.tsx:56-135): within a window the page
     * offset advances; when a window under-fills the page the remainder
     * tops up from the NEXT window in the same call, so a page is only
@@ -67,8 +64,7 @@ object SearchExecutor {
     * within a window (the reference pages the same way); the default
     * timestamp + unique-id sort the search surface emits satisfies it. */
   def paginateCursor(q: Query, catalog: Catalog,
-      cursor: Option[String] = None,
-      opts: QueryCompiler.Options = QueryCompiler.Options()): CursorPage = {
+      cursor: Option[String] = None): CursorPage = {
     val range = q.dateRange.getOrElse(throw new IllegalArgumentException(
       "progressive search requires a dateRange"))
     val limit = q.limit.getOrElse(throw new IllegalArgumentException(
@@ -97,7 +93,7 @@ object SearchExecutor {
       val sub = q.copy(dateRange = Some(windows(w)),
         limit = Some(need + 1),
         offset = if (off > 0) Some(off) else None)
-      val rows = QueryCompiler.compile(sub, catalog, opts).collect()
+      val rows = QueryCompiler.compile(sub, catalog).collect()
       if (rows.length > need) {
         out ++= rows.take(need)
         collected += need
@@ -114,32 +110,5 @@ object SearchExecutor {
     if (next.isEmpty && collected == limit && w < windows.length)
       next = Some(encodeCursor(w, 0))
     CursorPage(out.result().toArray, scanned, next)
-  }
-
-  /** Run `q` (must have a dateRange and a limit) progressively. */
-  def paginate(q: Query, catalog: Catalog,
-      opts: QueryCompiler.Options = QueryCompiler.Options()): Page = {
-    val range = q.dateRange.getOrElse(throw new IllegalArgumentException(
-      "progressive search requires a dateRange"))
-    val limit = q.limit.getOrElse(throw new IllegalArgumentException(
-      "progressive search requires a limit"))
-    val tsCol = catalog(q.from).timestampColumn.getOrElse(
-      throw new IllegalArgumentException("source has no timestamp column"))
-    val ascending = SearchWindows.isAscending(q.orderBy, tsCol)
-    val windows = SearchWindows.windows(range, ascending)
-    val out = Vector.newBuilder[org.apache.spark.sql.Row]
-    var collected = 0
-    var scanned = 0
-    val it = windows.iterator
-    while (collected < limit && it.hasNext) {
-      val w = it.next()
-      scanned += 1
-      val sub = q.copy(dateRange = Some(w),
-        limit = Some(limit - collected), offset = None)
-      val rows = QueryCompiler.compile(sub, catalog, opts).collect()
-      out ++= rows
-      collected += rows.length
-    }
-    Page(out.result().toArray, scanned)
   }
 }

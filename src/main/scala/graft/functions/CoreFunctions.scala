@@ -87,11 +87,14 @@ object CoreFunctions {
     15L, 30L, 60L, 5 * 60L, 15 * 60L, 30 * 60L, 3600L, 2 * 3600L,
     6 * 3600L, 12 * 3600L, 86400L, 2 * 86400L, 7 * 86400L, 30 * 86400L)
 
-  /** Auto granularity: smallest ladder step giving ≤ maxBuckets buckets over
-    * the range (reference DEFAULT_AUTO_GRANULARITY_MAX_BUCKETS=60,
-    * utils.ts:40). */
-  def autoGranularitySeconds(rangeSeconds: Long, maxBuckets: Int = 60): Long =
-    LadderSeconds.find(g => rangeSeconds / g <= maxBuckets)
+  /** Most buckets an auto-granularity series may have (reference
+    * DEFAULT_AUTO_GRANULARITY_MAX_BUCKETS, utils.ts:40). */
+  private val AutoBucketCap = 60
+
+  /** Auto granularity: smallest ladder step giving ≤ [[AutoBucketCap]]
+    * buckets over the range. */
+  def autoGranularitySeconds(rangeSeconds: Long): Long =
+    LadderSeconds.find(g => rangeSeconds / g <= AutoBucketCap)
       .getOrElse(LadderSeconds.last)
 
   /** `toStartOfInterval(ts, INTERVAL n seconds)` — floor the timestamp to a

@@ -17,9 +17,16 @@ import org.apache.spark.sql.functions.udaf
   * t-digest-style, weighting the merged position. Deterministic — no
   * randomness — so results are stable across retries.
   */
-final case class WeightedQuantileAgg(level: Double, compression: Int = 1024)
+final case class WeightedQuantileAgg(level: Double)
     extends Aggregator[(Double, Long), ArrayBuffer[(Double, Double)],
       Double] {
+
+  /** Centroid cap: the buffer is exact while a group holds at most
+    * 2× this many distinct values, and never holds more (16 B per
+    * centroid → ≤ 1 MB per group). Equal values coalesce losslessly
+    * first, so quantized value domains (2-decimal latencies etc.) stay
+    * exact at any row count. */
+  private val Compression = 32768
 
   override def zero: ArrayBuffer[(Double, Double)] = ArrayBuffer.empty
 
@@ -27,7 +34,7 @@ final case class WeightedQuantileAgg(level: Double, compression: Int = 1024)
       in: (Double, Long)): ArrayBuffer[(Double, Double)] = {
     if (in != null && in._2 > 0) {
       buf += ((in._1, in._2.toDouble))
-      if (buf.length > compression * 2) compress(buf)
+      if (buf.length > Compression * 2) compress(buf)
     }
     buf
   }
@@ -35,7 +42,7 @@ final case class WeightedQuantileAgg(level: Double, compression: Int = 1024)
   override def merge(a: ArrayBuffer[(Double, Double)],
       b: ArrayBuffer[(Double, Double)]): ArrayBuffer[(Double, Double)] = {
     a ++= b
-    if (a.length > compression * 2) compress(a)
+    if (a.length > Compression * 2) compress(a)
     a
   }
 
@@ -52,13 +59,13 @@ final case class WeightedQuantileAgg(level: Double, compression: Int = 1024)
         coalesced(coalesced.length - 1) = (last._1, last._2 + w)
       } else coalesced += ((v, w))
     }
-    if (coalesced.length <= compression * 2) {
+    if (coalesced.length <= Compression * 2) {
       buf.clear(); buf ++= coalesced
       return
     }
     val out = ArrayBuffer.empty[(Double, Double)]
     val targetWeight =
-      math.max(coalesced.map(_._2).sum / compression, 1e-12)
+      math.max(coalesced.map(_._2).sum / Compression, 1e-12)
     var curV = 0.0; var curW = 0.0
     coalesced.foreach { case (v, w) =>
       if (curW > 0 && curW + w > targetWeight) {
@@ -90,9 +97,8 @@ final case class WeightedQuantileAgg(level: Double, compression: Int = 1024)
 
 object WeightedQuantile {
   /** `weighted_quantile(level)(value, weight)` as a Column aggregate. */
-  def apply(level: Double, value: Column, weight: Column,
-      compression: Int = 1024): Column = {
-    val fn = udaf(WeightedQuantileAgg(level, compression))
+  def apply(level: Double, value: Column, weight: Column): Column = {
+    val fn = udaf(WeightedQuantileAgg(level))
     fn.apply(value.cast("double"), weight.cast("long"))
   }
 }

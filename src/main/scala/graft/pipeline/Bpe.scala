@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** Byte-pair-encoding vocabulary induction — the tokenizer-training step
   * of a pretraining data pipeline (Sennrich et al. 2016, the algorithm
   * behind GPT-2/RoBERTa/sentencepiece vocabularies).
@@ -158,8 +160,7 @@ object Bpe {
       .mapPartitions { it =>
         val ranks = bc.value.iterator.zipWithIndex.toMap
         it.map { case (id, text) =>
-          val words = text.trim.toLowerCase(java.util.Locale.ROOT)
-            .split("\\s+").filter(_.nonEmpty)
+          val words = Tokens.lowered(text).filter(_.nonEmpty)
           var nTok = 0L
           words.foreach(w => nTok += segmentWord(w, ranks).length)
           (id, words.length.toLong, nTok)

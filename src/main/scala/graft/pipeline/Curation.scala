@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** Corpus-curation operators a large-scale training-data pipeline needs
   * beyond dedup: benchmark decontamination (n-gram overlap against an
   * eval set), Gopher-style repetition signals, overlapping token-window
@@ -49,8 +51,7 @@ object Curation {
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
-        val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-          .split("\\s+")
+        val toks = Tokens.lowered(text)
         val seen = new java.util.HashSet[String]
         Iterator.range(0, math.max(toks.length - (n - 1), 0)).flatMap { i =>
           val g = toks.slice(i, i + n).mkString(" ")
@@ -87,8 +88,7 @@ object Curation {
         def bump(g: String): Unit =
           counts.computeIfAbsent(g, _ => new Array[Int](1))(0) += 1
         it.map { case (id, text) =>
-          val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-            .split("\\s+")
+          val toks = Tokens.lowered(text)
           val nt = toks.length
           // 2-grams: max multiplicity
           counts.clear()
@@ -140,8 +140,7 @@ object Curation {
       if (text == null) 0L
       else {
         val set = grams.value
-        val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-          .split("\\s+")
+        val toks = Tokens.lowered(text)
         val seen = new java.util.HashSet[String]
         val sb = new java.lang.StringBuilder
         var cnt = 0L
@@ -231,8 +230,7 @@ object Curation {
       if (text == null) true
       else {
         val set = grams.value
-        val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-          .split("\\s+")
+        val toks = Tokens.lowered(text)
         val sb = new java.lang.StringBuilder
         var i = 0
         val L = math.max(toks.length - (n - 1), 0)
@@ -356,8 +354,7 @@ object Curation {
     val lowRep = udf { text: String =>
       if (text == null) true
       else {
-        val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-          .split("\\s+")
+        val toks = Tokens.lowered(text)
         val nt = toks.length
         val tot3 = math.max(nt - 2, 0)
         if (tot3 == 0) 0.0 <= maxDup3GramFrac // the old frac-0.0 row

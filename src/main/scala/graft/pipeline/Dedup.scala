@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** Document deduplication suite for large-scale training-data pipelines:
   * exact (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard, and
   * embedding-cosine near-dup. Everything is built from codegen'd built-in
@@ -14,13 +16,6 @@ object Dedup {
 
   /** Whitespace tokens of normalized text. */
   def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
-
-  /** Precompiled whitespace tokenizer for the imperative kernels:
-    * `String.split("\\s+")` recompiles the regex on EVERY call (only
-    * single-char patterns take the fast path), which a JFR profile
-    * showed as measurable per-row cost — at 100 TB that is a per-row
-    * regex compile on the hottest path. Same regex, same semantics. */
-  private val WsPattern = java.util.regex.Pattern.compile("\\s+")
 
   /** LSH band hash over signature slots b·rows+1 … b·rows+rows:
     * xxhash64 of the raw long values. The previous form stringified
@@ -139,10 +134,7 @@ object Dedup {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, text) =>
-          // Locale.ROOT: keep the kernel locale-independent like Spark's
-          // lower() (a tr_TR default locale would dot-strip 'I' otherwise)
-          val toks =
-            WsPattern.split(text.trim.toLowerCase(java.util.Locale.ROOT))
+          val toks = Tokens.lowered(text)
           val L = toks.length - (shingleN - 1)
           if (L <= 0) Iterator.empty
           else {
@@ -1223,8 +1215,7 @@ object Dedup {
         val counts = new Array[Int](64)
         it.map { case (id, text) =>
           java.util.Arrays.fill(counts, 0)
-          val toks =
-            WsPattern.split(text.trim.toLowerCase(java.util.Locale.ROOT))
+          val toks = Tokens.lowered(text)
           var t = 0
           while (t < toks.length) {
             val h = hashToken(toks(t), 42L)
@@ -1396,7 +1387,7 @@ object Dedup {
       .repartition(defaultParallelism(df))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
-        val toks = WsPattern.split(text.trim.toLowerCase(java.util.Locale.ROOT))
+        val toks = Tokens.lowered(text)
         val L = toks.length - (k - 1)
         if (L <= 0) Iterator.empty
         else {
@@ -1494,7 +1485,7 @@ object Dedup {
       .join(spans, Seq(idCol), "left")
       .as[(Long, String, Seq[(Long, Long)])]
       .mapPartitions(_.map { case (id, text, sp) =>
-        val toks = WsPattern.split(text.trim.toLowerCase(java.util.Locale.ROOT))
+        val toks = Tokens.lowered(text)
         if (sp == null || sp.isEmpty)
           (id, toks.mkString(" "), 0L, 0L, toks.length.toLong)
         else {

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** Data Selection with Importance Resampling (DSIR, Xie et al. 2023):
   * pick raw-corpus documents that look like a small target domain by the
   * likelihood ratio of two hashed bag-of-n-grams models, then sample
@@ -58,8 +60,7 @@ object Dsir {
           ((((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
             ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % buckets).toInt
         it.flatMap { case (id, text) =>
-          val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-            .split("\\s+").filter(_.nonEmpty)
+          val toks = Tokens.lowered(text).filter(_.nonEmpty)
           val tb = new Array[Array[Byte]](toks.length)
           var i = 0
           while (i < toks.length) {

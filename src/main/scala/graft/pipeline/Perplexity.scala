@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** CCNet-style language-model quality scoring (Wenzek et al. 2020,
   * arXiv:1911.00359): train a token n-gram LM on a trusted reference
   * corpus (CCNet uses target-language Wikipedia; the gated query uses the
@@ -59,8 +61,7 @@ object Perplexity {
           m.computeIfAbsent(g, _ => new Array[Long](1))(0) += 1L
         it.flatMap { case (id, text) =>
           uni.clear(); bi.clear()
-          val toks = text.trim.toLowerCase(java.util.Locale.ROOT)
-            .split("\\s+").filter(_.nonEmpty)
+          val toks = Tokens.lowered(text).filter(_.nonEmpty)
           var i = 0
           while (i < toks.length) {
             if (allUnigrams || i == 0) bump(uni, toks(i))

@@ -17,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   * byte share, and cap at the session's configured parallelism so a
   * big input still fans out exactly as before.
   *
-  * `spark.graft.minPartitionBytes` (default 128 KB) is deliberately a
-  * floor, not a target: the cap — `spark.sql.shuffle.partitions`, the
+  * The 128 KB [[MinPartitionBytes]] is deliberately a floor, not a
+  * target: the cap — `spark.sql.shuffle.partitions`, the
   * knob a cluster deployment already sizes to executors × cores —
   * stays the operative bound whenever the data is big, so behaviour at
   * scale is unchanged; the floor only stops overhead-dominated
@@ -34,13 +34,11 @@ import org.apache.spark.sql.DataFrame
   * land on the cap, i.e. exactly the previous behaviour. */
 object Sizing {
 
-  val MinPartitionBytesKey = "spark.graft.minPartitionBytes"
-  val DefaultMinPartitionBytes: Long = 128L * 1024
+  val MinPartitionBytes: Long = 128L * 1024
 
   /** Partition count for an explicit repartition of `df`:
-    * clamp(ceil(estimatedBytes / minPartitionBytes), 1, shufflePartitions). */
-  def parallelism(df: DataFrame): Int =
-    width(df, MinPartitionBytesKey, DefaultMinPartitionBytes)
+    * clamp(ceil(estimatedBytes / MinPartitionBytes), 1, shufflePartitions). */
+  def parallelism(df: DataFrame): Int = widthFor(df, MinPartitionBytes)
 
   /** Byte floor for CPU-DENSE consumers (interpreted per-doc text
     * expressions, per-gram MD5): these do orders of magnitude more CPU
@@ -57,19 +55,17 @@ object Sizing {
   def parallelism(df: DataFrame, floorBytes: Long): Int =
     widthFor(df, floorBytes)
 
-  val TargetFileBytesKey = "spark.graft.targetFileBytes"
-  val DefaultTargetFileBytes: Long = 32L * 1024 * 1024
+  val TargetFileBytes: Long = 32L * 1024 * 1024
 
   /** File count for an artifact write (compaction / rebuild / index
-    * write): clamp(ceil(estimatedBytes / targetFileBytes), 1,
+    * write): clamp(ceil(estimatedBytes / TargetFileBytes), 1,
     * shufflePartitions). The previous constant wrote
     * `numShufflePartitions` files regardless of size — KB-scale files
     * at small inputs (listing + per-file open overhead on every later
     * read, guide §6 "small files hurt twice") and a hard ceiling on
     * file size at large ones. The cap keeps write parallelism at the
     * session's configured width for big artifacts. */
-  def writeWidth(df: DataFrame): Int =
-    width(df, TargetFileBytesKey, DefaultTargetFileBytes)
+  def writeWidth(df: DataFrame): Int = widthFor(df, TargetFileBytes)
 
   val MaxBroadcastBatchBytesKey = "spark.graft.maxBroadcastBatchBytes"
   val DefaultMaxBroadcastBatchBytes: Long = 64L * 1024 * 1024
@@ -92,10 +88,6 @@ object Sizing {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     bytes > 0 && bytes <= cap
   }
-
-  private def width(df: DataFrame, key: String, dflt: Long): Int =
-    widthFor(df, java.lang.Long.parseLong(
-      df.sparkSession.conf.get(key, dflt.toString)))
 
   private def widthFor(df: DataFrame, floor: Long): Int = {
     val cap = df.sparkSession.sessionState.conf.numShufflePartitions

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokens
+
 /** Text analysis for training-data curation: language-ID (stopword/charset
   * heuristic), quality scoring, token counting (whitespace + BPE-ish
   * regex), and winnowing document fingerprints. Pure built-in expressions.
@@ -195,8 +197,7 @@ object TextAnalysis {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, text) =>
-          val toks =
-            text.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+          val toks = Tokens.lowered(text)
           val L = math.max(toks.length - (n - 1), 0)
           val out = new Array[String](L)
           var i = 0

@@ -26,6 +26,20 @@ private[serve] object QueryJsonOut {
   }
 }
 
+/** `k=v&k=v` (a URL query string or a form-encoded body) as URL-decoded
+  * pairs in request order; a key without `=` maps to "". */
+private[serve] object FormParams {
+  def pairs(raw: String): Seq[(String, String)] = {
+    def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
+    raw.split("&").toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => dec(k) -> dec(v)
+        case Array(k) => dec(k) -> ""
+      }
+    }
+  }
+}
+
 /** /labels request (GET query params or POST JSON): which catalog
   * source holds the metric frame, an optional PromQL selector to narrow
   * the rows, an optional single label (the label-VALUES dropdown call),
@@ -43,13 +57,7 @@ private[serve] object LabelsReq {
     else fromJson(body)
 
   private def fromParams(raw: String): LabelsReq = {
-    def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
-    val params = raw.split("&").iterator.filter(_.nonEmpty).map { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => dec(k) -> dec(v)
-        case Array(k) => dec(k) -> ""
-      }
-    }.toMap
+    val params = FormParams.pairs(raw).toMap
     build(params.get("from"), params.get("selector"),
       params.get("label"),
       params.get("maxValues").map { s =>
@@ -609,20 +617,12 @@ final class Server(spark: SparkSession, catalog: Catalog, port: Int,
     * reference's getParams does. */
   private def promParams(ex: HttpExchange, body: String)
       : Seq[(String, String)] = {
-    def pairs(raw: String): Seq[(String, String)] =
-      raw.split("&").toSeq.filter(_.nonEmpty).flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => Some(dec(k) -> dec(v))
-          case Array(k) => Some(dec(k) -> "")
-          case _ => None
-        }
-      }
-    def dec(s: String) = java.net.URLDecoder.decode(s, UTF_8)
     // a form-encoded body percent-escapes '{', so a leading brace can
     // only be a JSON body (which these endpoints don't take as params)
     val formBody =
-      if (body.trim.startsWith("{")) Nil else pairs(body)
-    pairs(Option(ex.getRequestURI.getRawQuery).getOrElse("")) ++ formBody
+      if (body.trim.startsWith("{")) Nil else FormParams.pairs(body)
+    FormParams.pairs(Option(ex.getRequestURI.getRawQuery).getOrElse("")) ++
+      formBody
   }
 
   /** Last occurrence wins — body params are appended after the query

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Tokens
+
 /** Continuous crawl-novelty monitor — the streaming twin of
   * [[graft.pipeline.Dedup.gramNovelty]]: per (key, tumbling window),
   * how many of the arriving documents' distinct n-grams have NEVER
@@ -76,7 +78,7 @@ object NoveltyStream {
   private def grams(text: String, n: Int): Iterator[String] =
     if (text == null) Iterator.empty
     else {
-      val toks = text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      val toks = Tokens.lowered(text).filter(_.nonEmpty)
       if (toks.length < n) Iterator.empty
       else toks.sliding(n).map(_.mkString(" ")).toSet.iterator
     }

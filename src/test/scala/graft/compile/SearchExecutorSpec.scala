@@ -28,7 +28,7 @@ class SearchExecutorSpec extends SparkSpec {
       dateRange = Some(range),
       orderBy = Seq(OrderBy("ts", desc = true)),
       limit = Some(1))
-    val page = SearchExecutor.paginate(q, catalog)
+    val page = SearchExecutor.paginateCursor(q, catalog)
     assert(page.windowsScanned == 1) // only the newest 15m window ran
     assert(page.rows.head.getLong(0) == 287L) // the newest row
   }
@@ -40,7 +40,7 @@ class SearchExecutorSpec extends SparkSpec {
       dateRange = Some(range),
       orderBy = Seq(OrderBy("ts", desc = true)),
       limit = Some(50))
-    val page = SearchExecutor.paginate(q, catalog)
+    val page = SearchExecutor.paginateCursor(q, catalog)
     // newest window (15m ending at the exclusive range end that holds the
     // last point) + enough 6h windows to reach 50 rows
     assert(page.rows.length == 50)
@@ -57,7 +57,7 @@ class SearchExecutorSpec extends SparkSpec {
       dateRange = Some(range),
       orderBy = Seq(OrderBy("ts")),
       limit = Some(3))
-    val page = SearchExecutor.paginate(q, catalog)
+    val page = SearchExecutor.paginateCursor(q, catalog)
     assert(page.rows.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
     // the first 15m window holds only rows 0,1 (10-minute spacing);
     // row 2 comes from the second window

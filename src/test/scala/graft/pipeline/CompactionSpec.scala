@@ -26,9 +26,9 @@ class CompactionSpec extends SparkSpec {
   private def generations(dir: String): Seq[Long] =
     Manifest.state(spark, dir).entries.map(_.value).sorted
 
-  test("compactStore preserves the signature-store row set, collapses " +
-      "to one base generation, keeps keep/drop identical, and is " +
-      "idempotent") {
+  test("Manifest.compact preserves the signature-store row set, " +
+      "collapses to one base generation, keeps keep/drop identical, " +
+      "and is idempotent") {
     val root = Files.createTempDirectory("compact_store").toString
     val storeDir = s"$root/store"
     // three generations, the q195 shape: seed + two batch appends
@@ -73,8 +73,8 @@ class CompactionSpec extends SparkSpec {
     assert(sortedRows(store()) == rowsBefore)
   }
 
-  test("rebuildStore re-hashes the corpus under new parameters and " +
-      "swaps — the old-k store would be refused, the rebuilt one " +
+  test("Manifest.rebuild re-hashes the corpus under new parameters " +
+      "and swaps — the old-k store would be refused, the rebuilt one " +
       "answers") {
     val root = Files.createTempDirectory("rebuild_store").toString
     val storeDir = s"$root/store"
@@ -110,8 +110,8 @@ class CompactionSpec extends SparkSpec {
       Dedup.signatureStore(corpus, "doc_id", "text", k = 16)))
   }
 
-  test("compactIndex preserves the (neighbor_id, cell, codes) row set " +
-      "and the ANN answer over the persisted index") {
+  test("Similarity.compactIndexManifest preserves the (neighbor_id, " +
+      "cell, codes) row set and the ANN answer over the persisted index") {
     val root = Files.createTempDirectory("compact_index").toString
     val idxDir = s"$root/index"
     // deterministic vectors; planted exact copies (+1000) so the
@@ -157,7 +157,8 @@ class CompactionSpec extends SparkSpec {
     assert(filesPerCell.nonEmpty && filesPerCell.forall(_ == 1L))
   }
 
-  test("IngestStream.compact folds store and out, the restarted query " +
+  test("IngestStream.compactManifest folds store and out, the " +
+      "restarted query " +
       "sees identical keep/drop, and the uncommitted-batch guard " +
       "fails loudly on a crashed checkpoint") {
     val root = Files.createTempDirectory("compact_ingest").toString

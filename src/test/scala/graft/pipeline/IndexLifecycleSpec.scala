@@ -23,7 +23,8 @@ class IndexLifecycleSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("writeIndex/readIndex round-trip one directory; appends + " +
+  test("writeIndexManifest/readIndexManifest round-trip one " +
+      "directory; appends + " +
       "compaction preserve the co-located model; rebuild == " +
       "from-scratch build over the grown corpus") {
     val root = Files.createTempDirectory("index_lifecycle").toString

@@ -202,9 +202,9 @@ class ManifestSpec extends SparkSpec {
   }
 
   test("the layout never renames a directory: the whole lifecycle on " +
-      "a rename-auditing FS records only committer _temporary moves " +
-      "and the single-file _MANIFEST replace; the Artifacts swap on " +
-      "the same FS records whole-directory renames") {
+      "a rename-auditing FS records only committer _temporary moves; " +
+      "a directory rename on the same FS is recorded (negative " +
+      "control)") {
     spark.sparkContext.hadoopConfiguration.set("fs.audit.impl",
       classOf[RenameAuditFileSystem].getName)
     val local = Files.createTempDirectory("manifest_audit").toString
@@ -304,11 +304,10 @@ class ManifestSpec extends SparkSpec {
     assert(names.count(_.startsWith("gen-")) == 1)
   }
 
-  test("versioned commit mode: the WHOLE lifecycle runs on a store " +
-      "that rejects file rename outright — every commit a conditional " +
-      "create, readers resolve the highest complete version, gc keeps " +
-      "only the current one; rename-mode commit fails on the same " +
-      "store (negative control)") {
+  test("the WHOLE lifecycle runs on a store that rejects file rename " +
+      "outright — every commit a conditional create, readers resolve " +
+      "the highest complete version, gc keeps only the current one; a " +
+      "rename on the same store fails (negative control)") {
     spark.sparkContext.hadoopConfiguration.set("fs.norename.impl",
       classOf[NoRenameFileSystem].getName)
     val local = Files.createTempDirectory("manifest_norename").toString
@@ -362,8 +361,8 @@ class ManifestSpec extends SparkSpec {
 
   test("single-maintainer contract is CHECKED: two interleaved " +
       "maintainers derive from the same version — the second commit " +
-      "fails loudly in BOTH modes, the artifact keeps the first " +
-      "commit's rows") {
+      "fails loudly after an append or a compaction, the artifact " +
+      "keeps the first commit's rows") {
     // a stale append: B derives v2 from v1 after A committed v2
     val dir = Files.createTempDirectory("manifest_occ").toString
     Manifest.append(spark, dir, sigs(corpus.filter(col("doc_id") <= 2)),

@@ -52,8 +52,8 @@ class RetractionSpec extends SparkSpec {
     assert(keepsAfter == Set(30L))
   }
 
-  test("retractStore rewrites only the hit partitions and equals the " +
-      "rebuilt store") {
+  test("Manifest.retract rewrites only the hit generations and equals " +
+      "the rebuilt store") {
     val root = Files.createTempDirectory("retract_store").toString
     val storeDir = s"$root/store"
     val slices = Seq(
@@ -93,8 +93,8 @@ class RetractionSpec extends SparkSpec {
       .count(_.getName.startsWith("gen-")) == 3)
   }
 
-  test("IngestStream.retract removes a doc from BOTH artifacts and a " +
-      "restarted ingest treats its near-dup as novel") {
+  test("IngestStream.retractManifest removes a doc from BOTH artifacts " +
+      "and a fresh batch treats its near-dup as novel") {
     val root = Files.createTempDirectory("retract_ingest").toString
     val (storeDir, outDir) = (s"$root/store", s"$root/out")
     // two batch generations of store + out, the IngestStream layout
@@ -123,8 +123,8 @@ class RetractionSpec extends SparkSpec {
   }
 
   test("Similarity.retract == re-encode of the surviving corpus; the " +
-      "ANN answer falls to the next copy; retractIndex matches on " +
-      "disk") {
+      "ANN answer falls to the next copy; Manifest.retract on the " +
+      "persisted index matches on disk") {
     def vec(i: Long): Seq[Double] =
       (0 until 64).map(d => math.sin(i * 64 + d).abs + 0.01)
     val base = (0L until 48L).map(i => (i, vec(i))).toDF("vec_id", "v")

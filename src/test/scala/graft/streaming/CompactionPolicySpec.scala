@@ -20,8 +20,8 @@ class CompactionPolicySpec extends SparkSpec {
     2L -> "completely different text about spark query engines and shuffles")
     .toDF("doc_id", "text")
 
-  test("generations counts batch=N dirs, manifest entries, and 0 for " +
-      "a missing dir") {
+  test("generations counts manifest entries, a replayed batch adds " +
+      "none, and a missing dir counts 0") {
     val root = Files.createTempDirectory("policy_gen").toString
     val man = s"$root/manifest"
     Manifest.append(spark, man,
