@@ -138,9 +138,10 @@ object AnalysisQueries {
   /** MV routing for quantile + count_distinct through sketch partials
     * (reference quantileState/uniqState MV columns,
     * materializedViews.ts:380-465): an hourly rollup materializes a
-    * value→count histogram and a distinct-user set per cell; the day-level
-    * query re-aggregates ONLY the rollup — quantileMerge/distinctMerge are
-    * lossless, so the answer hash-matches the raw-table oracle. */
+    * value→count histogram and a distinct-user theta sketch per cell; the
+    * day-level query re-aggregates ONLY the rollup — quantileMerge and
+    * distinctMerge are lossless below their caps (4096 bins per cell,
+    * 16,384 hashes), so the answer hash-matches the raw-table oracle. */
   def q53_mv_quantile(spark: SparkSession, dir: String): DataFrame = {
     val events = Queries.cat(spark, dir)("events").df
     val rollup = MvRouter.buildRollup(events, "ts", 3600,
@@ -181,7 +182,8 @@ object AnalysisQueries {
 
   /** MV tiering: the q53 query answered from a COMPACTED rollup — hourly
     * sketch cells re-aggregated to 6-hour cells (ClickHouse TTL GROUP BY
-    * lifecycle) with histogram/KMV partials unioned under their caps —
+    * lifecycle) with histogram partials unioned under their 4096-bin cap
+    * and theta-sketch partials under their 16,384-hash one —
     * then routed. Equality against the raw-table oracle proves the
     * partials are closed under compaction: hourly → 6-hourly → daily
     * merge loses nothing while cells stay under the caps. */

@@ -520,7 +520,7 @@ object PipelineQueries {
     * planted (+1e5 and +2e5), the +1e5 set is retracted, and top-1
     * must fall to the +2e5 copy at cosine 1.0. Load-bearing by the
     * ranking's own tie-break: equal scores resolve to the LOWER
-    * neighbor_id (TopK scaladoc), so a no-op retraction
+    * neighbor_id (the shortlist's struct order), so a no-op retraction
     * deterministically answers +1e5 and fails the gate. The corpus
     * frame still carries the retracted rows (only the INDEX forgets
     * them), proving candidates come from the index alone. */
@@ -2485,7 +2485,7 @@ object PipelineQueries {
       |FROM sel ORDER BY sel_rank""".stripMargin
 
   /** Domain balancing: at most 15 docs per source, by (n_chars DESC,
-    * doc_id) — the bounded-heap TopK aggregation vs the oracle's
+    * doc_id) — the bounded `collect_top_k` aggregation vs the oracle's
     * per-domain row_number. */
   def q124_domain_cap(spark: SparkSession, dir: String): DataFrame =
     Curation.domainCap(docs(spark, dir), "source", "n_chars",

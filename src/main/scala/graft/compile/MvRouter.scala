@@ -18,9 +18,10 @@ import graft.ir._
   * sum → sum(sum_col); min/max → min/max of the partial min/max;
   * avg → sum(sum_col)/sum(cnt of value); quantile → quantileMerge over
   * per-cell value→count histogram partials; count_distinct →
-  * distinctMerge over per-cell distinct-value sets (the reference's
-  * quantileState/uniqState MV columns, materializedViews.ts:380-465 —
-  * see graft.functions.QuantileSketch). Sketch partials are only present
+  * distinctMerge over per-cell theta sketches (Spark's
+  * `theta_sketch_agg`, 16,384 hashes) — the reference's
+  * quantileState/uniqState MV columns, materializedViews.ts:380-465;
+  * see graft.functions.QuantileSketch. Sketch partials are only present
   * when the rollup was built with `withSketches` (they cost memory per
   * cell); without them quantile/count_distinct veto routing.
   */
@@ -43,7 +44,8 @@ object MvRouter {
       max: String,
       /** value→count histogram column (quantile routing), when built. */
       hist: Option[String] = None,
-      /** distinct-value set column (count_distinct routing), when built. */
+      /** distinct-value theta sketch column (count_distinct routing),
+        * when built. */
       distinct: Option[String] = None)
 
   /** Attempt to answer `q` from a rollup. Returns None when the query shape
@@ -119,7 +121,8 @@ object MvRouter {
   /** Build a rollup table from a raw frame (the batch equivalent of the
     * streaming rollup in graft.streaming — used to materialize pre-aggs).
     * With `withSketches`, each value column additionally materializes a
-    * value→count histogram and a distinct-value set per cell, enabling
+    * value→count histogram and a distinct-value theta sketch (binary)
+    * per cell, enabling
     * quantile / count_distinct routing (the reference's quantileState /
     * uniqState MV columns). */
   def buildRollup(df: DataFrame, tsCol: String, granularitySeconds: Long,
@@ -156,7 +159,7 @@ object MvRouter {
     * hourly cells for a week, compact to daily for a year) that keeps
     * long-retention storage bounded without giving up routing. Every
     * partial is CLOSED under this merge: counts/sums add, min/max nest,
-    * and the histogram / KMV sketch partials union under their own caps
+    * and the histogram / theta sketch partials union under their own caps
     * (QuantileSketch.histUnion/distinctUnion), so the compacted rollup
     * answers exactly the query classes the original did — and stays
     * EXACT under the same conditions (every merged cell under the

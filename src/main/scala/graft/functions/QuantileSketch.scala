@@ -5,7 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.functions.{lit, map, theta_sketch_agg,
+  theta_sketch_estimate, theta_union_agg, udaf, udf, when}
 
 /** ClickHouse `quantileState`/`quantileMerge` and `uniqState`/`uniqMerge`
   * analogues backing materialized-view routing (reference maps
@@ -16,38 +17,37 @@ import org.apache.spark.sql.functions.udaf
   * fixed cap, so a 100-TB build with pathological per-cell cardinality
   * degrades to a documented approximation instead of an OOM:
   *
-  *  - quantile: a value→count histogram capped at [[HistState.MaxBins]]
-  *    distinct values. Below the cap the histogram is lossless and the
-  *    merged quantile uses the SAME `position = level·(N−1)` linear
-  *    interpolation as Spark's exact percentile, so a rollup-answered
-  *    quantile hash-matches the raw answer (quantized observability
-  *    values typically stay under the cap at any row count). Above the
-  *    cap, adjacent centroids merge t-digest-style (weighted mean,
-  *    equal-weight targets — the same scheme as [[WeightedQuantileAgg]]),
-  *    giving a deterministic-per-partitioning approximation.
-  *  - count_distinct: a KMV (k-minimum-values) sketch over a splitmix64
-  *    hash of the value — keep the [[DistinctState.K]] smallest hashes
-  *    seen. Exact whenever a cell's true cardinality is < K (the kept set
-  *    IS the distinct set); above K the estimator (K−1)/U(K) has ~1/√K
-  *    (≈0.8%) relative error. Merging unions hash sets and re-trims, so
-  *    the sketch is order-insensitive and retry-deterministic.
+  *  - quantile: a value→count histogram capped at [[MaxBins]] distinct
+  *    values, summed by the one capped map-sum [[HistSum]]. Below the
+  *    cap the histogram is lossless and the merged quantile uses the
+  *    SAME `position = level·(N−1)` linear interpolation as Spark's
+  *    exact percentile, so a rollup-answered quantile hash-matches the
+  *    raw answer (quantized observability values typically stay under
+  *    the cap at any row count). Above the cap, adjacent centroids merge
+  *    t-digest-style (weighted mean, equal-weight targets — the same
+  *    scheme as [[WeightedQuantileAgg]]), giving a
+  *    deterministic-per-partitioning approximation.
+  *  - count_distinct: Spark's theta sketch (`theta_sketch_agg`,
+  *    `theta_union_agg`, `theta_sketch_estimate`) at 2^[[LgNomEntries]]
+  *    = 16,384 hashes. Exact whenever a cell's true cardinality is below
+  *    that; above it the estimate has ~1/√16384 (≈0.8%) relative error.
+  *    A cell's state is the serialized sketch (binary, ≤ 8 bytes per
+  *    kept hash plus a preamble); unions are order-insensitive and
+  *    retry-deterministic. Doubles hash canonically: -0.0 counts as
+  *    +0.0 and every NaN as one value, like Spark's own DISTINCT.
   *
   * Values are float64-coerced like every rollup partial; route only
   * numeric columns.
   */
 object QuantileSketch {
 
-  /** splitmix64 finalizer over the raw double bits — a deterministic,
-    * well-mixed 64-bit hash (public-domain constant set; same mixer Spark
-    * uses inside xxhash64's avalanche). Sign bit cleared so hashes order
-    * as non-negative longs on a 63-bit scale. */
-  private[functions] def hash63(v: Double): Long = {
-    var z = java.lang.Double.doubleToLongBits(v) + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
-    z & Long.MaxValue
-  }
+  /** Max distinct values a rollup cell's histogram keeps exactly; 2×
+    * hysteresis before compaction amortizes the sort. 4096
+    * doubles+longs ≈ 64 KiB worst-case cell state. */
+  val MaxBins = 4096
+
+  /** log2 of the theta sketch's nominal entries: 16,384 hashes. */
+  val LgNomEntries = 14
 
   /** Merge a value→count histogram down to `cap` centroid bins: sort by
     * value, then greedily fill equal-weight buckets, replacing each with
@@ -80,166 +80,13 @@ object QuantileSketch {
     cur
   }
 
-  /** Build-side partial: capped value→count histogram per rollup cell. */
-  object HistState extends Aggregator[java.lang.Double,
-      mutable.Map[Double, Long], Map[Double, Long]] {
-    /** Max distinct values kept exactly; 2× hysteresis before compaction
-      * amortizes the sort. 4096 doubles+longs ≈ 64 KiB worst-case cell
-      * state. */
-    val MaxBins = 4096
-
-    override def zero: mutable.Map[Double, Long] = mutable.Map.empty
-
-    override def reduce(buf: mutable.Map[Double, Long],
-        in: java.lang.Double): mutable.Map[Double, Long] = {
-      if (in != null) {
-        val v = in.doubleValue()
-        buf.update(v, buf.getOrElse(v, 0L) + 1L)
-        if (buf.size > MaxBins * 2) compact(buf, MaxBins) else buf
-      } else buf
-    }
-
-    override def merge(a: mutable.Map[Double, Long],
-        b: mutable.Map[Double, Long]): mutable.Map[Double, Long] = {
-      b.foreach { case (k, v) => a.update(k, a.getOrElse(k, 0L) + v) }
-      if (a.size > MaxBins * 2) compact(a, MaxBins) else a
-    }
-
-    override def finish(r: mutable.Map[Double, Long]): Map[Double, Long] =
-      compact(r, MaxBins).toMap
-
-    override def bufferEncoder: Encoder[mutable.Map[Double, Long]] =
-      ExpressionEncoder[mutable.Map[Double, Long]]()
-    override def outputEncoder: Encoder[Map[Double, Long]] =
-      ExpressionEncoder[Map[Double, Long]]()
-
-    lazy val fn = udaf(HistState)
-  }
-
-  /** Query-side merge + finish: interpolated quantile over merged
-    * value→count histograms — the same `position = level·(N−1)` linear
-    * interpolation as Spark's exact percentile. Routed answers match the
-    * raw path only while BOTH stay exact: every cell under the MaxBins
-    * cap AND the cross-cell union of distinct values under this merge
-    * buffer's own 8·MaxBins cap — a union of many exact cells can exceed
-    * it and compact (approximate) even though no single cell did. */
-  final case class QuantileMergeAgg(level: Double)
-      extends Aggregator[Map[Double, Long], mutable.Map[Double, Long],
-        Double] {
-    override def zero: mutable.Map[Double, Long] = mutable.Map.empty
-
-    override def reduce(buf: mutable.Map[Double, Long],
-        in: Map[Double, Long]): mutable.Map[Double, Long] = {
-      if (in != null) in.foreach { case (k, v) =>
-        buf.update(k, buf.getOrElse(k, 0L) + v)
-      }
-      if (buf.size > HistState.MaxBins * 8) compact(buf, HistState.MaxBins * 4)
-      else buf
-    }
-
-    override def merge(a: mutable.Map[Double, Long],
-        b: mutable.Map[Double, Long]): mutable.Map[Double, Long] = {
-      b.foreach { case (k, v) => a.update(k, a.getOrElse(k, 0L) + v) }
-      if (a.size > HistState.MaxBins * 8) compact(a, HistState.MaxBins * 4)
-      else a
-    }
-
-    override def finish(hist: mutable.Map[Double, Long]): Double = {
-      if (hist.isEmpty) return Double.NaN
-      val sorted = hist.toArray.sortBy(_._1)
-      val n = sorted.iterator.map(_._2).sum
-      val pos = level * (n - 1)
-      val lowerIdx = math.floor(pos).toLong
-      val higherIdx = math.ceil(pos).toLong
-      var cum = 0L
-      var lowerKey = sorted.head._1
-      var higherKey = sorted.head._1
-      var i = 0
-      while (i < sorted.length && cum <= higherIdx) {
-        val (v, c) = sorted(i)
-        if (cum <= lowerIdx && lowerIdx < cum + c) lowerKey = v
-        if (cum <= higherIdx && higherIdx < cum + c) higherKey = v
-        cum += c
-        i += 1
-      }
-      if (lowerIdx == higherIdx) lowerKey
-      else (higherIdx - pos) * lowerKey + (pos - lowerIdx) * higherKey
-    }
-
-    override def bufferEncoder: Encoder[mutable.Map[Double, Long]] =
-      ExpressionEncoder[mutable.Map[Double, Long]]()
-    override def outputEncoder: Encoder[Double] =
-      ExpressionEncoder[Double]()
-  }
-
-  /** Build-side partial: KMV sketch (K smallest value-hashes) per cell. */
-  object DistinctState extends Aggregator[java.lang.Double,
-      mutable.Set[Long], Seq[Long]] {
-    /** Sketch size: exact below K distinct values; ~1/√K ≈ 0.8% relative
-      * error above. 16384 longs = 128 KiB worst-case cell state. */
-    val K = 16384
-
-    private def trim(buf: mutable.Set[Long]): mutable.Set[Long] =
-      if (buf.size <= K * 2) buf
-      else mutable.Set.from(buf.toArray.sorted.take(K))
-
-    override def zero: mutable.Set[Long] = mutable.Set.empty
-    override def reduce(buf: mutable.Set[Long], in: java.lang.Double)
-        : mutable.Set[Long] = {
-      if (in != null) trim(buf += hash63(in.doubleValue())) else buf
-    }
-    override def merge(a: mutable.Set[Long], b: mutable.Set[Long])
-        : mutable.Set[Long] = trim(a ++= b)
-    override def finish(r: mutable.Set[Long]): Seq[Long] =
-      r.toArray.sorted.take(K).toSeq
-    override def bufferEncoder: Encoder[mutable.Set[Long]] =
-      ExpressionEncoder[mutable.Set[Long]]()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      ExpressionEncoder[Seq[Long]]()
-    lazy val fn = udaf(DistinctState)
-  }
-
-  /** Query-side merge + finish: union KMV sketches; exact count when the
-    * union stayed under K, else the (K−1)/U(K) KMV estimator. */
-  object DistinctMergeAgg extends Aggregator[Seq[Long],
-      mutable.Set[Long], Long] {
-    override def zero: mutable.Set[Long] = mutable.Set.empty
-    override def reduce(buf: mutable.Set[Long], in: Seq[Long])
-        : mutable.Set[Long] = {
-      if (in != null) buf ++= in
-      if (buf.size > DistinctState.K * 2)
-        mutable.Set.from(buf.toArray.sorted.take(DistinctState.K))
-      else buf
-    }
-    override def merge(a: mutable.Set[Long], b: mutable.Set[Long])
-        : mutable.Set[Long] = {
-      a ++= b
-      if (a.size > DistinctState.K * 2)
-        mutable.Set.from(a.toArray.sorted.take(DistinctState.K))
-      else a
-    }
-    override def finish(r: mutable.Set[Long]): Long = {
-      val k = DistinctState.K
-      if (r.size < k) r.size.toLong
-      else {
-        val kth = r.toArray.sorted.apply(k - 1)
-        // hashes are uniform on [0, 2^63); U(k) = kth / 2^63
-        math.round((k - 1).toDouble * Long.MaxValue.toDouble / kth.toDouble)
-      }
-    }
-    override def bufferEncoder: Encoder[mutable.Set[Long]] =
-      ExpressionEncoder[mutable.Set[Long]]()
-    override def outputEncoder: Encoder[Long] = ExpressionEncoder[Long]()
-    lazy val fn = udaf(DistinctMergeAgg)
-  }
-
-  /** Compaction-side histogram union that stays a PARTIAL (the
-    * `-MergeState` combinator): sum value→count histograms into one
-    * histogram under the same [[HistState.MaxBins]] cap, so a fine
-    * rollup can tier into a coarser rollup without losing quantile
-    * routability. Exact while the union stays under the cap — the same
-    * contract as [[HistState]] itself. */
-  object HistUnionAgg extends Aggregator[Map[Double, Long],
+  /** The capped map-sum behind every histogram partial: sums value→count
+    * maps, compacting to `cap` bins whenever the buffer passes `2·cap`
+    * and once more at finish. [[MaxBins]] for the build side (one-entry
+    * maps per value) and the rollup-tiering union; `4·MaxBins` for the
+    * query-side merge, whose union of many exact cells may hold more
+    * distinct values than any one cell. Exact while no compaction ran. */
+  final case class HistSum(cap: Int) extends Aggregator[Map[Double, Long],
       mutable.Map[Double, Long], Map[Double, Long]] {
     override def zero: mutable.Map[Double, Long] = mutable.Map.empty
 
@@ -248,71 +95,79 @@ object QuantileSketch {
       if (in != null) in.foreach { case (k, v) =>
         buf.update(k, buf.getOrElse(k, 0L) + v)
       }
-      if (buf.size > HistState.MaxBins * 2) compact(buf, HistState.MaxBins)
-      else buf
+      if (buf.size > cap * 2) compact(buf, cap) else buf
     }
 
     override def merge(a: mutable.Map[Double, Long],
         b: mutable.Map[Double, Long]): mutable.Map[Double, Long] = {
       b.foreach { case (k, v) => a.update(k, a.getOrElse(k, 0L) + v) }
-      if (a.size > HistState.MaxBins * 2) compact(a, HistState.MaxBins)
-      else a
+      if (a.size > cap * 2) compact(a, cap) else a
     }
 
     override def finish(r: mutable.Map[Double, Long]): Map[Double, Long] =
-      compact(r, HistState.MaxBins).toMap
+      compact(r, cap).toMap
 
     override def bufferEncoder: Encoder[mutable.Map[Double, Long]] =
       ExpressionEncoder[mutable.Map[Double, Long]]()
     override def outputEncoder: Encoder[Map[Double, Long]] =
       ExpressionEncoder[Map[Double, Long]]()
-
-    lazy val fn = udaf(HistUnionAgg)
   }
 
-  /** Compaction-side KMV union that stays a PARTIAL: union sketch sets
-    * and keep the K smallest hashes — closed under [[DistinctState.K]],
-    * exact while the true union cardinality is below K. */
-  object DistinctUnionAgg extends Aggregator[Seq[Long],
-      mutable.Set[Long], Seq[Long]] {
-    private def trim(buf: mutable.Set[Long]): mutable.Set[Long] =
-      if (buf.size <= DistinctState.K * 2) buf
-      else mutable.Set.from(buf.toArray.sorted.take(DistinctState.K))
-
-    override def zero: mutable.Set[Long] = mutable.Set.empty
-    override def reduce(buf: mutable.Set[Long], in: Seq[Long])
-        : mutable.Set[Long] = {
-      if (in != null) buf ++= in
-      trim(buf)
+  /** Interpolated quantile of a value→count histogram — the same
+    * `position = level·(N−1)` linear interpolation as Spark's exact
+    * percentile; NaN for an empty histogram. */
+  def interpolate(hist: Map[Double, Long], level: Double): Double = {
+    if (hist.isEmpty) return Double.NaN
+    val sorted = hist.toArray.sortBy(_._1)
+    val n = sorted.iterator.map(_._2).sum
+    val pos = level * (n - 1)
+    val lowerIdx = math.floor(pos).toLong
+    val higherIdx = math.ceil(pos).toLong
+    var cum = 0L
+    var lowerKey = sorted.head._1
+    var higherKey = sorted.head._1
+    var i = 0
+    while (i < sorted.length && cum <= higherIdx) {
+      val (v, c) = sorted(i)
+      if (cum <= lowerIdx && lowerIdx < cum + c) lowerKey = v
+      if (cum <= higherIdx && higherIdx < cum + c) higherKey = v
+      cum += c
+      i += 1
     }
-    override def merge(a: mutable.Set[Long], b: mutable.Set[Long])
-        : mutable.Set[Long] = trim(a ++= b)
-    override def finish(r: mutable.Set[Long]): Seq[Long] =
-      r.toArray.sorted.take(DistinctState.K).toSeq
-    override def bufferEncoder: Encoder[mutable.Set[Long]] =
-      ExpressionEncoder[mutable.Set[Long]]()
-    override def outputEncoder: Encoder[Seq[Long]] =
-      ExpressionEncoder[Seq[Long]]()
-    lazy val fn = udaf(DistinctUnionAgg)
+    if (lowerIdx == higherIdx) lowerKey
+    else (higherIdx - pos) * lowerKey + (pos - lowerIdx) * higherKey
   }
+
+  private lazy val cellSum = udaf(HistSum(MaxBins))
+  private lazy val querySum = udaf(HistSum(MaxBins * 4))
 
   /** value→count histogram partial of a double column. */
-  def histState(v: Column): Column = HistState.fn(v.cast("double"))
-
-  /** Exact quantile from merged histogram partials. */
-  def quantileMerge(level: Double, hist: Column): Column =
-    udaf(QuantileMergeAgg(level),
-      ExpressionEncoder[Map[Double, Long]]())(hist)
+  def histState(v: Column): Column = {
+    val d = v.cast("double")
+    cellSum(when(d.isNotNull, map(d, lit(1L))))
+  }
 
   /** Histogram partial → histogram partial union (rollup tiering). */
-  def histUnion(hist: Column): Column = HistUnionAgg.fn(hist)
+  def histUnion(hist: Column): Column = cellSum(hist)
 
-  /** Distinct-value KMV partial of a double column. */
-  def distinctState(v: Column): Column = DistinctState.fn(v.cast("double"))
+  /** Quantile from merged histogram partials. Matches the raw path only
+    * while BOTH stay exact: every cell under [[MaxBins]] AND the
+    * cross-cell union of distinct values under the merge's 4·MaxBins
+    * cap — a union of many exact cells can exceed it and compact
+    * (approximate) even though no single cell did. */
+  def quantileMerge(level: Double, hist: Column): Column =
+    udf((h: Map[Double, Long]) => interpolate(h, level))
+      .apply(querySum(hist))
 
-  /** Distinct count from merged KMV partials. */
-  def distinctMerge(sets: Column): Column = DistinctMergeAgg.fn(sets)
+  /** Distinct-value theta sketch partial of a double column. */
+  def distinctState(v: Column): Column =
+    theta_sketch_agg(v.cast("double"), LgNomEntries)
 
-  /** KMV partial → KMV partial union (rollup tiering). */
-  def distinctUnion(sets: Column): Column = DistinctUnionAgg.fn(sets)
+  /** Theta partial → theta partial union (rollup tiering). */
+  def distinctUnion(sketch: Column): Column =
+    theta_union_agg(sketch, LgNomEntries)
+
+  /** Distinct count from merged theta partials. */
+  def distinctMerge(sketch: Column): Column =
+    theta_sketch_estimate(theta_union_agg(sketch, LgNomEntries))
 }

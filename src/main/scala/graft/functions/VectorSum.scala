@@ -38,32 +38,8 @@ object VectorSum extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
   def sumForEach(c: Column): Column = fn(c)
 }
 
-/** Same for double arrays. */
-object VectorSumDouble
-    extends Aggregator[Seq[Double], Array[Double], Seq[Double]] {
-  override def zero: Array[Double] = Array.emptyDoubleArray
-  override def reduce(buf: Array[Double], in: Seq[Double]): Array[Double] =
-    if (in == null) buf else merge(buf, in.toArray)
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-    if (a.length == 0) return b
-    if (b.length == 0) return a
-    val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-    var i = 0
-    while (i < small.length) { big(i) += small(i); i += 1 }
-    big
-  }
-  override def finish(r: Array[Double]): Seq[Double] = r.toSeq
-  override def bufferEncoder: Encoder[Array[Double]] =
-    ExprEncoders.doubleArray
-  override def outputEncoder: Encoder[Seq[Double]] = ExprEncoders.doubleSeq
-  lazy val fn = udaf(VectorSumDouble)
-  def sumForEach(c: Column): Column = fn(c)
-}
-
 private[functions] object ExprEncoders {
   import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
   val longArray: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   val longSeq: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
-  val doubleArray: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
-  val doubleSeq: Encoder[Seq[Double]] = ExpressionEncoder[Seq[Double]]()
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.Tokens
 
@@ -787,40 +788,41 @@ object Curation {
     * BEST `cap` under an explicit priority such as a quality score).
     *
     * Scale shape: one hash aggregation keyed on the domain whose
-    * per-group state is the bounded [[graft.functions.TopK]] heap
-    * (≤ 2·cap (priority, id) pairs, map-side combined) — never a
-    * per-domain `row_number` window, which would gather a hot
+    * per-group state is Spark's bounded `collect_top_k`
+    * ([[org.apache.spark.sql.graftbridge.ColumnBridge.smallestN]]: ≤ cap
+    * (priority, id) pairs per partial, combined before the exchange) —
+    * never a per-domain `row_number` window, which would gather a hot
     * domain's full row set into one task. Domains are FEW and HOT by
     * nature (a web corpus has ~10⁶ hosts but the top host holds
-    * ~10⁻² of all docs), exactly the skew the bounded heap absorbs.
+    * ~10⁻² of all docs), exactly the skew the bounded state absorbs.
     * The kept (id, priority) pairs then semi-join back to the corpus
     * to re-attach full rows — ids-only through the shuffle, text
     * never moves.
     *
-    * Ties on priority break ascending id (deterministic across
-    * engines and partitionings); ids must be integral (the TopK
-    * encoder contract). Priority must be non-null and finite; |p| <
-    * 2^53 keeps the double negation exact. */
+    * Ties on priority break on ascending id in the id type's native
+    * order (deterministic across engines and partitionings). Priority
+    * must be non-null and finite; |p| < 2^53 keeps the double negation
+    * exact. */
   def domainCap(df: DataFrame, domainCol: String, priorityCol: String,
       idCol: String, cap: Int): DataFrame = {
     require(cap > 0, "cap must be positive")
-    // priority DESC == negated-priority ASC, which is TopK's order;
-    // ties fall through to ascending id inside the heap comparator
+    // priority DESC == negated-priority ASC, which is smallestN's
+    // order; ties fall through to ascending id in the struct order
     val kept = df
       .select(col(domainCol), col(priorityCol), col(idCol))
       .groupBy(col(domainCol))
-      .agg(graft.functions.TopK.topSmallest(
+      .agg(ColumnBridge.smallestN(struct(
         lit(0.0) - col(priorityCol).cast("double"),
-        col(idCol).cast("long"), cap).as("__xs"))
+        col(idCol).as("id")), cap).as("__xs"))
       .select(col(domainCol).as("__keep_dom"),
         explode(col("__xs")).as("__x"))
-      .select(col("__keep_dom"), col("__x._2").as("__keep_id"))
+      .select(col("__keep_dom"), col("__x.id").as("__keep_id"))
     // semi-join on (domain, id), not id alone: ids only need to be
     // unique WITHIN a domain — a per-domain sequence id reused across
     // domains must not resurrect rows another domain's ranking rejected
     df.join(kept,
       col(domainCol) === col("__keep_dom") &&
-        col(idCol).cast("long") === col("__keep_id"), "left_semi")
+        col(idCol) === col("__keep_id"), "left_semi")
   }
 
   /** Deterministic stratified sample: keep exactly `n` rows per
@@ -832,11 +834,11 @@ object Curation {
     * makes the tie-break total).
     *
     * Scale shape: one hash aggregation keyed on the strata whose
-    * per-group state is the bounded [[graft.functions.TopKString]]
-    * heap (≤ 2n codes, map-side combined) — never a per-stratum
+    * per-group state is Spark's bounded `collect_top_k` (≤ n codes per
+    * partial, combined before the exchange) — never a per-stratum
     * row_number window, which would gather a hot stratum's full row
     * set into one task ([[domainCap]]'s argument). The sample key is
-    * md5 ‖ zero-padded id, so heap order IS (md5, id) order. */
+    * md5 ‖ zero-padded id, so code order IS (md5, id) order. */
   def stratifiedSample(df: DataFrame, strataCols: Seq[String],
       idCol: String, n: Int): DataFrame = {
     require(strataCols.nonEmpty, "need at least one stratum column")
@@ -845,12 +847,11 @@ object Curation {
     val kept = df
       .select(strataCols.map(col) :+ code.as("__code"): _*)
       .groupBy(strataCols.map(col): _*)
-      .agg(graft.functions.TopK.topSmallestString(
-        lit(0.0), col("__code"), n).as("__xs"))
+      .agg(ColumnBridge.smallestN(col("__code"), n).as("__xs"))
       .select(strataCols.zipWithIndex.map { case (c, i) =>
         col(c).as(s"__ks_$i") } :+ explode(col("__xs")).as("__x"): _*)
       .select((strataCols.indices.map(i => col(s"__ks_$i")) :+
-        substring(col("__x._2"), 33, 20).cast("long").as("__keep_id"))
+        substring(col("__x"), 33, 20).cast("long").as("__keep_id"))
         : _*)
     val cond = strataCols.zipWithIndex.map { case (c, i) =>
       col(c) <=> col(s"__ks_$i") }.reduce(_ && _) &&

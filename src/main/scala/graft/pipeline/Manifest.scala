@@ -308,12 +308,11 @@ object Manifest {
     * directories. A crash anywhere leaves the prior manifest and all
     * its data untouched; the half-written new base is [[gc]] debris. */
   def compact(spark: SparkSession, dir: String, baseValue: Long = -1L,
-      repartitionCols: Seq[String] = Nil, numFiles: Int = 0,
-      gcMinAgeMs: Long = 0L): Unit = {
+      repartitionCols: Seq[String] = Nil, gcMinAgeMs: Long = 0L): Unit = {
     val st = state(spark, dir)
     val data = rowsOf(spark, dir, st).drop(st.partitionCol)
-    // file count sized by artifact bytes unless the caller pinned one
-    val n = if (numFiles > 0) numFiles else Sizing.writeWidth(data)
+    // file count sized by artifact bytes
+    val n = Sizing.writeWidth(data)
     val shaped =
       if (repartitionCols.nonEmpty)
         data.repartition(n, repartitionCols.map(col): _*)
@@ -336,11 +335,10 @@ object Manifest {
     * manifest form; existing properties carry through. Same crash
     * story as [[compact]]. */
   def rebuild(spark: SparkSession, dir: String, df: DataFrame,
-      baseValue: Long = -1L, numFiles: Int = 0,
-      gcMinAgeMs: Long = 0L): Unit = {
+      baseValue: Long = -1L, gcMinAgeMs: Long = 0L): Unit = {
     val st = state(spark, dir)
-    replaceAll(spark, dir, df, baseValue, st.partitionCol, numFiles,
-      Nil, st.props, gcMinAgeMs)
+    replaceAll(spark, dir, df, baseValue, st.partitionCol, Nil, st.props,
+      gcMinAgeMs)
   }
 
   /** The general whole-artifact swap: write `df` as the single base
@@ -352,7 +350,7 @@ object Manifest {
     * directory) under `dir` BEFORE calling; a crash leaves them as
     * unreferenced debris, never a half-swapped artifact. */
   def replaceAll(spark: SparkSession, dir: String, df: DataFrame,
-      baseValue: Long, partitionCol: String, numFiles: Int,
+      baseValue: Long, partitionCol: String,
       repartitionCols: Seq[String], props: Map[String, String],
       gcMinAgeMs: Long = 0L): Unit = {
     val st =
@@ -361,7 +359,7 @@ object Manifest {
     require(st.partitionCol == partitionCol,
       s"manifest at $dir tracks '${st.partitionCol}', not " +
         s"'$partitionCol'")
-    val n = if (numFiles > 0) numFiles else Sizing.writeWidth(df)
+    val n = Sizing.writeWidth(df)
     val shaped =
       if (repartitionCols.nonEmpty)
         df.repartition(n, repartitionCols.map(col): _*)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, ByteType, DecimalType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Similarity search over embedding columns (`Array[Float]`): brute-force
   * cosine top-k as the exact baseline, and a random-hyperplane-LSH bucketed
@@ -85,11 +85,11 @@ object Similarity {
   }
 
   /** Exact per-probe top-k by descending cosine (ties → ascending
-    * neighbor_id), ranked with the two-stage bounded [[topShortlist]]
+    * neighbor_id), ranked with the bounded [[topShortlist]]
     * instead of a per-probe `row_number` window — no task ever gathers
-    * more than one partition's candidates for a probe, so a probe whose
-    * candidate set is a constant fraction of the corpus no longer
-    * serializes into a single sort task. `lit(0.0) - cosine` (not unary
+    * more than `k` of one partition's candidates for a probe, so a
+    * probe whose candidate set is a constant fraction of the corpus no
+    * longer serializes into a single sort task. `lit(0.0) - cosine` (not unary
     * minus) keeps a 0.0 cosine at +0.0 so the ascending shortlist order
     * is exactly the descending-cosine order; the round trip is
     * bit-exact for every finite double. Deliberate divergence from the
@@ -278,6 +278,29 @@ object Similarity {
     topByCosine(scored, k)
   }
 
+  /** The bounded top-n shortlist shared by every ANN path ([[knnBrute]],
+    * [[knnIvf]], [[knnPq]], [[knnIvfPq]], [[knnBinary]]): per probe,
+    * keep the `n` smallest `(score, neighbor_id)` structs with
+    * Catalyst's `collect_top_k`. Its partial aggregate caps each
+    * partition's state at `n` per probe before the exchange, so no
+    * task ever gathers a probe's full candidate set — this replaces the
+    * single-task-per-probe `row_number` window a global top-k would
+    * need. Struct order breaks score ties on `neighbor_id` in the id
+    * type's native order, so the shortlist is deterministic across
+    * partitionings for every id type, and scores and ids keep their
+    * types. */
+  private def topShortlist(scored: DataFrame, score: String, n: Int)
+      : DataFrame =
+    // a null embedding that slipped past the joins makes a null score:
+    // a null-scored candidate is meaningless to rank, so drop it here
+    scored.filter(col(score).isNotNull && col("neighbor_id").isNotNull)
+      .groupBy(col("probe_id"))
+      .agg(ColumnBridge.smallestN(
+        struct(col(score), col("neighbor_id")), n).as("__xs"))
+      .select(col("probe_id"), explode(col("__xs")).as("__x"))
+      .select(col("probe_id"), col("__x." + score).as(score),
+        col("__x.neighbor_id").as("neighbor_id"))
+
   /** Product-quantization approximate top-k — the compressed-domain ANN
     * layout for corpora whose raw vectors are too big to scan (the
     * IVF-PQ half Faiss pairs with [[knnIvf]]'s cells): the vector space
@@ -291,107 +314,12 @@ object Similarity {
     * an exact cosine re-rank of the `shortlist` best codes per probe.
     *
     * Shuffle discipline: the ADC scan output is reduced to the
-    * per-probe shortlist in TWO stages (per-partition top-`shortlist`
-    * via sorted-slice partials, then a final merge), so the exchange
-    * carries ≤ partitions × shortlist narrow rows per probe, never the
-    * corpus; full vectors re-attach per id only for the ≤ `shortlist`
-    * re-rank rows (the knnLsh pattern). With `shortlist` ≥ corpus size
+    * per-probe shortlist by the bounded [[topShortlist]], so the
+    * exchange carries ≤ partitions × shortlist narrow rows per probe,
+    * never the corpus; full vectors re-attach per id only for the
+    * ≤ `shortlist` re-rank rows (the knnLsh pattern). With `shortlist` ≥ corpus size
     * the exact re-rank makes the result identical to [[knnBrute]]
     * regardless of quantization error (SimilaritySpec asserts this). */
-  /** One stage of the bounded top-n shortlist shared by the quantized
-    * ANN paths ([[knnPq]], [[knnIvfPq]], [[knnBinary]]): per group-key
-    * tuple, keep the `n` smallest `(score, neighbor_id)` structs via
-    * sorted-slice aggregation. Called twice — once keyed on
-    * `(probe_id, spark_partition_id)` so no task ever gathers more than
-    * one partition's candidates for a probe, then once on `probe_id`
-    * over the ≤ partitions × n partials — this replaces the
-    * single-task-per-probe `row_number` window a global top-k would
-    * need. Struct ordering breaks score ties on `neighbor_id`, keeping
-    * the shortlist deterministic across partitionings. */
-  private def topSliceStage(df0: DataFrame, keys: Seq[Column],
-      score: String, n: Int): DataFrame = {
-    // a null score or id (a null embedding that slipped past the
-    // joins) is never a rankable neighbor, and the primitive-encoded
-    // TopK paths would throw on it — make the non-null contract
-    // explicit for every branch
-    val d = df0.filter(col(score).isNotNull && col("neighbor_id").isNotNull)
-    val scoreType = d.schema(score).dataType
-    val idType = d.schema("neighbor_id").dataType
-    val integralId = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (integralId)
-      // bounded-heap partial state (≤ 2n entries per group cell)
-      // instead of collect_list+sort+slice, whose buffer is
-      // partition-sized per probe; comparisons and tie-breaks are
-      // identical (TopK's scaladoc pins the parity argument). Scores/
-      // ids ride as (double, long) through the aggregate and cast
-      // back losslessly, so e.g. knnBinary's int hamming keeps its
-      // output type.
-      d.groupBy(keys: _*)
-        .agg(graft.functions.TopK.topSmallest(
-          col(score).cast("double"), col("neighbor_id").cast("long"), n)
-          .as("__xs"))
-        .select((keys :+ explode(col("__xs")).as("__x")): _*)
-        .select((keys :+ col("__x._1").cast(scoreType).as(score)
-          :+ col("__x._2").cast(idType).as("neighbor_id")): _*)
-    else {
-      // non-integral ids ride TopKString's bounded heap through a
-      // LOSSLESS string encoding: strings as-is, decimals via their
-      // canonical cast (restored by casting back), binary via hex
-      // (restored by unhex). The score-tie tie-break becomes the
-      // ENCODED form's UTF-8 order — a different (but equally
-      // deterministic) choice than the native struct order a
-      // sorted-slice would use; ties still resolve identically across
-      // partitionings, which is the contract. Only a non-atomic id
-      // type (struct/array — no credible corpus key) still falls to
-      // the type-agnostic sorted-slice, whose buffer is
-      // partition-bounded rather than k-bounded.
-      val codec: Option[(Column => Column, Column => Column)] =
-        idType match {
-          case StringType => Some((identity, identity))
-          case _: DecimalType =>
-            Some((c => c.cast("string"), c => c.cast(idType)))
-          case BinaryType => Some((c => hex(c), c => unhex(c)))
-          case _ => None
-        }
-      codec match {
-        case Some((enc, dec)) =>
-          d.groupBy(keys: _*)
-            .agg(graft.functions.TopK.topSmallestString(
-              col(score).cast("double"), enc(col("neighbor_id")), n)
-              .as("__xs"))
-            .select((keys :+ explode(col("__xs")).as("__x")): _*)
-            .select((keys :+ col("__x._1").cast(scoreType).as(score)
-              :+ dec(col("__x._2")).as("neighbor_id")): _*)
-        case None =>
-          d.groupBy(keys: _*)
-            .agg(slice(array_sort(collect_list(
-              struct(col(score), col("neighbor_id")))), 1, n).as("__xs"))
-            .select((keys :+ explode(col("__xs")).as("__x")): _*)
-            .select((keys :+ col("__x." + score).as(score)
-              :+ col("__x.neighbor_id").as("neighbor_id")): _*)
-      }
-    }
-  }
-
-  /** Two-stage bounded top-n: partition-local partials, then the final
-    * per-probe merge. See [[topSliceStage]]. */
-  private def topShortlist(scored: DataFrame, score: String, n: Int)
-      : DataFrame = {
-    // explicit non-null contract at the one funnel every ANN path rides:
-    // a null embedding slipping past the joins makes a null score (and
-    // the TopK encoders would throw a runtime encoder error on it) —
-    // a null-scored candidate is meaningless to rank, so drop it here
-    val nonNull = scored.filter(
-      col(score).isNotNull && col("neighbor_id").isNotNull)
-    val partial = topSliceStage(
-      nonNull.withColumn("__pid", spark_partition_id()),
-      Seq(col("probe_id"), col("__pid")), score, n)
-    topSliceStage(partial, Seq(col("probe_id")), score, n)
-  }
-
   def knnPq(probes: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
       shortlist: Int = 32, dim: Int = 64): DataFrame = {
@@ -429,7 +357,7 @@ object Similarity {
     val scored = broadcast(pLut)
       .join(codes, col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), adc.as("__adc"))
-    // two-stage bounded top-shortlist (sorted-slice partials, then merge)
+    // bounded top-shortlist (partition partials, then merge)
     val short = topShortlist(scored, "__adc", shortlist)
       .select("probe_id", "neighbor_id")
     // exact re-rank of the shortlist only — vectors re-attach per id
@@ -448,7 +376,7 @@ object Similarity {
     * `by_residual=false` layout; documented, not hidden), so one code
     * frame serves every cell and the per-probe LUT is built once, not
     * per visited cell. Search: top-`nprobe` cells per probe → cell
-    * equi-join against the (cell, id, codes) frame → ADC → two-stage
+    * equi-join against the (cell, id, codes) frame → ADC →
     * bounded shortlist → exact cosine re-rank (the [[knnPq]] discipline;
     * full vectors only touch the ≤ `shortlist` re-rank rows). An exact
     * duplicate of a probe lands in the probe's own top-1 cell with
@@ -588,14 +516,13 @@ object Similarity {
     * compaction via [[compactIndexManifest]]; retraction via
     * [[Manifest.retract]] with idCol `neighbor_id`. */
   def writeIndexManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, model: IvfPqModel, index: DataFrame,
-      numFiles: Int = 0): Unit = {
+      dir: String, model: IvfPqModel, index: DataFrame): Unit = {
     val modelGen =
       s"model-${java.util.UUID.randomUUID().toString.take(8)}"
     model.toFrame(spark).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/$modelGen")
-    Manifest.replaceAll(spark, dir, index, -1L, "batch", numFiles,
-      Seq("cell"), Map("model" -> modelGen))
+    Manifest.replaceAll(spark, dir, index, -1L, "batch", Seq("cell"),
+      Map("model" -> modelGen))
   }
 
   /** Read a [[writeIndexManifest]] artifact back as (model, code rows
@@ -619,9 +546,8 @@ object Similarity {
     * its directory — ride through untouched. Run only while no
     * appender is active. */
   def compactIndexManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, numFiles: Int = 0): Unit =
-    Manifest.compact(spark, dir, repartitionCols = Seq("cell"),
-      numFiles = numFiles)
+      dir: String): Unit =
+    Manifest.compact(spark, dir, repartitionCols = Seq("cell"))
 
   /** Retrain + re-encode — the drift-refresh step that closes the
     * index lifecycle (append → compact → retract → REBUILD): when
@@ -634,11 +560,11 @@ object Similarity {
     * Returns the new model. */
   def rebuildIndexManifest(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, m: Int = 8, ksub: Int = 16, dim: Int = 64,
-      numFiles: Int = 0): IvfPqModel = {
+      nlist: Int = 16, m: Int = 8, ksub: Int = 16, dim: Int = 64)
+      : IvfPqModel = {
     val (model, index) = ivfPqIndex(corpus, idCol, vecCol, nlist, m,
       ksub, dim)
-    writeIndexManifest(spark, dir, model, index, numFiles)
+    writeIndexManifest(spark, dir, model, index)
     model
   }
 
@@ -986,10 +912,9 @@ object Similarity {
     val ps = probes.select(col(idCol).as("probe_id"),
       binarySignature(col(vecCol).cast("array<double>"), med).as("ps"))
     val shortN = k * shortlistFactor
-    // Hamming scan → two-stage bounded shortlist (the knnPq topSlice
-    // discipline): no per-probe corpus-wide window, no single-task
-    // gather — each stage-1 task ranks only its own partition's
-    // candidates for a probe.
+    // Hamming scan → bounded shortlist (the knnPq discipline): no
+    // per-probe corpus-wide window, no single-task gather — each
+    // partial ranks only its own partition's candidates for a probe.
     val scored = broadcast(ps)
       .join(cs, col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
@@ -997,7 +922,7 @@ object Similarity {
     val shortlist = topShortlist(scored, "hamming", shortN)
     // exact re-rank: vectors join the ids, not the scan — and the rank
     // is the one ranking idiom every ANN path shares ([[topByCosine]]:
-    // two-stage bounded shortlist, never a per-probe row_number window
+    // bounded shortlist, never a per-probe row_number window
     // whose task would gather a probe's whole candidate set)
     val pv = probes.select(col(idCol).as("probe_id"),
       col(vecCol).cast("array<double>").as("pv"))
@@ -1027,7 +952,7 @@ object Similarity {
     * label filter runs BEFORE the shortlist, never consuming the k
     * slots on them). Exact brute-force scoring — [[knnBrute]]'s
     * broadcast-probe scan plus the cross-label predicate — reduced
-    * through the same bounded two-stage shortlist; [[hardNegativesIvf]]
+    * through the same bounded shortlist; [[hardNegativesIvf]]
     * is the cell-pruned shape for corpus-scale probe sets.
     *
     * Output: probe_id, neighbor_id, probe_label, neighbor_label,

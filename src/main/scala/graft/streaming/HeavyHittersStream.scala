@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
 /** Streaming SpaceSaving heavy hitters — the streaming twin of the
-  * batch TopK/frequent-items pass (q84): per tumbling window, track
+  * batch frequent-items pass (q84): per tumbling window, track
   * the `capacity` heaviest keys with the Metwally et al. 2005
   * SpaceSaving summary. An exact windowed groupBy-count would carry
   * state proportional to the window's DISTINCT keys — unbounded on a

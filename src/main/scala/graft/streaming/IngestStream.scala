@@ -148,8 +148,7 @@ object IngestStream {
     * half-written batch can't even appear there, so the only flagged
     * state is the genuine checkpoint-lag window. */
   def compactManifest(spark: SparkSession, storeDir: String,
-      outDir: String, checkpointDir: String, numFiles: Int = 0)
-      : Unit = {
+      outDir: String, checkpointDir: String): Unit = {
     val maxCommit = newestCommit(spark, checkpointDir)
     def uncommitted(dir: String): Seq[Long] =
       if (!Manifest.exists(spark, dir)) Seq.empty
@@ -162,9 +161,8 @@ object IngestStream {
         s"$outDir have no checkpoint commit — the query crashed " +
         "before committing; restart it to finish the replay, stop " +
         "cleanly, then compact")
-    Manifest.compact(spark, storeDir, numFiles = numFiles)
-    if (Manifest.exists(spark, outDir))
-      Manifest.compact(spark, outDir, numFiles = numFiles)
+    Manifest.compact(spark, storeDir)
+    if (Manifest.exists(spark, outDir)) Manifest.compact(spark, outDir)
   }
 
   /** Retract (un-keep) documents from BOTH artifacts this stream
@@ -215,12 +213,11 @@ object IngestStream {
       maxPartitions: Int = 64,
       recentWalls: Seq[Double] = Nil,
       baselineWalls: Seq[Double] = Nil,
-      maxDrift: Double = 1.3, numFiles: Int = 0)
-      : CompactionPolicy.Decision = {
+      maxDrift: Double = 1.3): CompactionPolicy.Decision = {
     val d = CompactionPolicy.evaluate(spark, storeDir, outDir,
       maxPartitions, recentWalls, baselineWalls, maxDrift)
     if (d.compact)
-      compactManifest(spark, storeDir, outDir, checkpointDir, numFiles)
+      compactManifest(spark, storeDir, outDir, checkpointDir)
     d
   }
 }

@@ -34,12 +34,13 @@ object Streaming {
     * window_start, groupBy…, cnt, sum_value[, hist_state, uniq_state].
     *
     * `withSketches` additionally maintains the MV-routing sketch partials
-    * (graft.functions.QuantileSketch): the quantile histogram and
-    * distinct-KMV columns MvRouter merges at query time. Both are
-    * BOUNDED-state mergeable Aggregators (≤ ~128 KiB per cell at any
-    * cardinality), so the streaming state store cannot grow past
-    * cells × cap — the streaming twin of the batch
-    * MvRouter.buildRollup(withSketches = true). */
+    * (graft.functions.QuantileSketch): the quantile histogram (a capped
+    * map-sum Aggregator, ≤ 4096 bins) and the distinct-count theta
+    * sketch (Spark's `theta_sketch_agg`, ≤ 16,384 hashes) MvRouter
+    * merges at query time. Both are BOUNDED-state mergeable aggregates
+    * (≤ ~128 KiB per cell at any cardinality), so the streaming state
+    * store cannot grow past cells × cap — the streaming twin of the
+    * batch MvRouter.buildRollup(withSketches = true). */
   def rollup(stream: DataFrame, tsCol: String, valueCol: Option[String],
       stepSeconds: Long, groupBy: Seq[String],
       watermarkDelay: String = "10 minutes",

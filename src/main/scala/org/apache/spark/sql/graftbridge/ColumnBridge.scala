@@ -20,6 +20,21 @@ object ColumnBridge {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** The `n` smallest values of `c` per group, ascending — Catalyst's
+    * bounded `collect_top_k` (`CollectTopK(c, n, reverse = true)`, an
+    * internal function, so it is reached from this package). It
+    * plans as `partial_collect_top_k` → exchange → `collect_top_k`, and
+    * each partial keeps at most `n` values per group, so a hot group's
+    * state is `n`-bounded instead of partition-sized. Order is Spark's
+    * native one: a struct compares field by field, NaN sorts largest,
+    * -0.0 ties with +0.0 and strings compare as UTF-8 bytes — so
+    * `struct(score, id)` ranks by score with ties broken on id. Null
+    * values are skipped. */
+  def smallestN(c: Column, n: Int): Column =
+    Column.internalFn("collect_top_k", c,
+      org.apache.spark.sql.functions.lit(n),
+      org.apache.spark.sql.functions.lit(true))
+
   /** A bare `LocalLimit` (per-partition row cap) with no global collect
     * phase: `df.limit(n)` plans GlobalLimit(LocalLimit(n)) whose global
     * step funnels every partition into one task — the per-partition form

@@ -77,6 +77,21 @@ class MvRouterSpec extends SparkSpec {
     assert(got == Seq(("a", 15.0, 2L), ("b", 5.0, 1L), ("a", 7.0, 1L)))
   }
 
+  test("sketch-routed count_distinct counts -0.0 as +0.0 and NaN once, " +
+      "like the raw count(DISTINCT)") {
+    val edge = Seq(0.0, -0.0, Double.NaN, 1.0)
+      .map(v => (t("2024-01-01 00:10:00"), "a", v)).toDF("ts", "svc", "v")
+    val sketchy = MvRouter.buildRollup(edge, "ts", 3600, Seq("svc"),
+      Seq("v"), withSketches = true)
+    val dq = q.copy(select = Seq(
+      SelectItem("v", Some("uniq_v"), Some(AggFn.CountDistinct))))
+    val routed = MvRouter.tryRoute(dq, sketchy).get
+      .select("uniq_v").as[Long].collect().toSeq
+    val raw = edge.agg(countDistinct($"v")).as[Long].collect().toSeq
+    assert(raw == Seq(3L))
+    assert(routed == raw)
+  }
+
   test("compacted rollup answers the same query with the same values") {
     val sketchy = MvRouter.buildRollup(raw, "ts", 3600, Seq("svc"),
       Seq("v"), withSketches = true)

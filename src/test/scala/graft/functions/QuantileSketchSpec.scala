@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Bounded-state behavior of the MV sketch partials: exact below the caps
-  * (the oracle-gated path), bounded + close above them. */
+  * (the oracle-gated path), bounded + close above them. The distinct
+  * partial is Spark's theta sketch at 2^LgNomEntries hashes (K). */
 class QuantileSketchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,11 +21,11 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("quantile state stays bounded and close above the bin cap") {
-    val n = QuantileSketch.HistState.MaxBins * 4
+    val n = QuantileSketch.MaxBins * 4
     val df = (1 to n).map(_.toDouble).toDF("v")
     val partial = df.agg(QuantileSketch.histState($"v").as("h"))
     val bins = partial.select(size(map_keys($"h"))).head().getInt(0)
-    assert(bins <= QuantileSketch.HistState.MaxBins)
+    assert(bins <= QuantileSketch.MaxBins)
     val p50 = partial
       .agg(QuantileSketch.quantileMerge(0.5, $"h").as("p50"))
       .head().getDouble(0)
@@ -43,11 +44,13 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("distinct sketch stays bounded and within 5% above K") {
-    val n = QuantileSketch.DistinctState.K * 3
+    val k = 1 << QuantileSketch.LgNomEntries
+    val n = k * 3
     val df = (1 to n).map(_.toDouble).toDF("v")
     val partial = df.agg(QuantileSketch.distinctState($"v").as("s"))
-    val kept = partial.select(size($"s")).head().getInt(0)
-    assert(kept <= QuantileSketch.DistinctState.K)
+    // ≤ K 8-byte hashes plus the compact sketch's 24-byte preamble
+    val bytes = partial.select(length($"s")).head().getInt(0)
+    assert(bytes <= 8 * k + 24, s"bytes=$bytes")
     val est = partial
       .agg(QuantileSketch.distinctMerge($"s").as("d"))
       .head().getLong(0)
@@ -55,24 +58,26 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("property: partition-split merges match single-pass (seeded)") {
-    // aggregator-level (no Spark): any split of the input into partials
-    // must finish to the same quantile/distinct answer as one pass,
-    // and below-cap answers must be exact
+    // any split of the input into partials must finish to the same
+    // quantile/distinct answer as one pass, and below-cap answers must
+    // be exact; the histogram half runs the aggregator without Spark
+    val cell = QuantileSketch.HistSum(QuantileSketch.MaxBins)
+    val query = QuantileSketch.HistSum(QuantileSketch.MaxBins * 4)
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
       val n = 2000 + rnd.nextInt(3000)
       val vals = Array.fill(n)((rnd.nextInt(500) + 1).toDouble)
       // single pass
-      val one = vals.foldLeft(QuantileSketch.HistState.zero)(
-        (b, v) => QuantileSketch.HistState.reduce(b, v))
+      val one = vals.foldLeft(cell.zero)(
+        (b, v) => cell.reduce(b, Map(v -> 1L)))
       // random 4-way split, merged
-      val parts = Array.fill(4)(QuantileSketch.HistState.zero)
-      vals.foreach(v => QuantileSketch.HistState.reduce(
-        parts(rnd.nextInt(4)), v))
-      val merged = parts.reduce(QuantileSketch.HistState.merge)
-      val q = QuantileSketch.QuantileMergeAgg(0.9)
+      val split = vals.map(v => (rnd.nextInt(4), v))
+      val parts = Array.fill(4)(cell.zero)
+      split.foreach { case (p, v) => cell.reduce(parts(p), Map(v -> 1L)) }
+      val merged = parts.reduce(cell.merge)
       def fin(h: scala.collection.mutable.Map[Double, Long]) =
-        q.finish(q.reduce(q.zero, h.toMap))
+        QuantileSketch.interpolate(
+          query.finish(query.reduce(query.zero, cell.finish(h))), 0.9)
       assert(fin(one) === fin(merged))
       // exactness below cap: matches a sorted-array interpolation
       val sorted = vals.sorted
@@ -82,19 +87,15 @@ class QuantileSketchSpec extends SparkSpec {
       val exact = lo + (pos - math.floor(pos)) * (hi - lo)
       assert(math.abs(fin(one) - exact) < 1e-9)
 
-      val d1 = vals.foldLeft(QuantileSketch.DistinctState.zero)(
-        (b, v) => QuantileSketch.DistinctState.reduce(b, v))
-      val dp = Array.fill(4)(QuantileSketch.DistinctState.zero)
-      vals.foreach(v => QuantileSketch.DistinctState.reduce(
-        dp(rnd.nextInt(4)), v))
-      val dm = dp.reduce(QuantileSketch.DistinctState.merge)
-      def dfin(s: scala.collection.mutable.Set[Long]) =
-        QuantileSketch.DistinctMergeAgg.finish(
-          QuantileSketch.DistinctMergeAgg.reduce(
-            QuantileSketch.DistinctMergeAgg.zero,
-            QuantileSketch.DistinctState.finish(s)))
-      assert(dfin(d1) === dfin(dm))
-      assert(dfin(d1) === vals.distinct.length.toLong)
+      // the same split through the theta sketch partials
+      val df = split.toSeq.toDF("p", "v")
+      val d1 = df.agg(QuantileSketch.distinctState($"v").as("s"))
+        .agg(QuantileSketch.distinctMerge($"s")).head().getLong(0)
+      val dm = df.groupBy($"p")
+        .agg(QuantileSketch.distinctState($"v").as("s"))
+        .agg(QuantileSketch.distinctMerge($"s")).head().getLong(0)
+      assert(d1 === dm)
+      assert(d1 === vals.distinct.length.toLong)
     }
   }
 

@@ -245,7 +245,8 @@ class ManifestSpec extends SparkSpec {
 
   test("index artifact in manifest form: model and rows swap in ONE " +
       "commit — a staged-but-uncommitted rebuild serves the old pair, " +
-      "compaction carries the model, the answer tracks writeIndex") {
+      "compaction carries the model, the answer holds through " +
+      "compaction and rebuild") {
     def vec(i: Long): Seq[Double] =
       (0 until 64).map(d => math.sin(i * 64 + d).abs + 0.01)
     val base = (0L until 48L).map(i => (i, vec(i))).toDF("vec_id", "v")
@@ -481,7 +482,7 @@ class ManifestSpec extends SparkSpec {
   }
 
   test("startManifest: streaming ingest over manifest artifacts — " +
-      "keep/drop matches the partitioned layout, compactManifest's " +
+      "near-dups drop across batches, compactManifest's " +
       "guard refuses a checkpoint-lagged batch, restart resumes") {
     val root = Files.createTempDirectory("manifest_ingest").toString
     val (inDir, storeDir, outDir, ckpt) =

@@ -566,7 +566,7 @@ class SimilaritySpec extends SparkSpec {
     assert(recallMp >= 0.8, s"multiprobe recall $recallMp unexpectedly low")
   }
 
-  test("string ids ride the bounded TopKString shortlist path: knnBrute " +
+  test("string ids ride the bounded collect_top_k shortlist: knnBrute " +
       "results match the numeric-id run 1:1 and the plan carries no " +
       "collect_list") {
     val dir = "/root/testdata/sf0.001"
@@ -579,18 +579,17 @@ class SimilaritySpec extends SparkSpec {
       .as[(String, String)].collect().toSet
     // same corpus with string ids (zero-padded so string order == the
     // numeric tie-break order) must produce the same pairs — a string
-    // id type takes the bounded-heap TopKString aggregate (UTF-8
-    // binary tie-break), never nulling through TopK's long cast
+    // id rides the bounded collect_top_k in its native (UTF-8 binary)
+    // order
     val pad = format_string("%05d", col("vec_id"))
     val es = e.withColumn("vec_id", pad)
     val ps = probes.withColumn("vec_id", pad)
     val stringyDf = Similarity.knnBrute(ps, es, "vec_id", "embedding", 5)
     // the k-bounded path, not the partition-sized sorted-slice buffer:
-    // the plan must rank through the Aggregator, with no collect_list
+    // the plan must rank through collect_top_k, with no collect_list
     val plan = stringyDf.queryExecution.optimizedPlan.toString
     assert(!plan.contains("collect_list"), plan.take(2000))
-    assert(plan.contains("TopKString") || plan.contains("topkstring"),
-      plan.take(2000))
+    assert(plan.contains("collect_top_k"), plan.take(2000))
     val stringy = stringyDf
       .select(col("probe_id").cast("int").cast("string"),
         col("neighbor_id").cast("int").cast("string"))
@@ -619,43 +618,48 @@ class SimilaritySpec extends SparkSpec {
     assert(unpadded == oracle)
   }
 
-  test("decimal and binary ids ride the k-bounded shortlist through a " +
-      "lossless string codec — same pairs as the numeric run, no " +
-      "collect_list in the plan") {
+  test("every id type plans collect_top_k, never collect_list: long, " +
+      "string, decimal, binary and struct ids keep their type and " +
+      "return the sorted-slice oracle's pairs") {
     val dir = "/root/testdata/sf0.001"
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val probes = e.filter(col("vec_id") < 3)
-    val numeric = Similarity
-      .knnBrute(probes, e, "vec_id", "embedding", 5)
-      .select(col("probe_id").cast("long"), col("neighbor_id").cast("long"))
-      .as[(Long, Long)].collect().toSet
-    // decimal ids: canonical string cast is lossless both ways
-    val ed = e.withColumn("vec_id", col("vec_id").cast("decimal(12,0)"))
-    val pd = probes.withColumn("vec_id", col("vec_id").cast("decimal(12,0)"))
-    val decDf = Similarity.knnBrute(pd, ed, "vec_id", "embedding", 5)
-    val decPlan = decDf.queryExecution.optimizedPlan.toString
-    assert(!decPlan.contains("collect_list"), decPlan.take(2000))
-    val dec = decDf
-      .select(col("probe_id").cast("long"), col("neighbor_id").cast("long"))
-      .as[(Long, Long)].collect().toSet
-    assert(dec == numeric)
-    // decimal output keeps its original type
-    assert(decDf.schema("neighbor_id").dataType ==
-      org.apache.spark.sql.types.DecimalType(12, 0))
-    // binary ids: hex/unhex round-trips arbitrary bytes losslessly
-    val bin = format_string("%05d", col("vec_id")).cast("binary")
-    val eb = e.withColumn("vec_id", bin)
-    val pb = probes.withColumn("vec_id", bin)
-    val binDf = Similarity.knnBrute(pb, eb, "vec_id", "embedding", 5)
-    val binPlan = binDf.queryExecution.optimizedPlan.toString
-    assert(!binPlan.contains("collect_list"), binPlan.take(2000))
-    assert(binDf.schema("neighbor_id").dataType ==
-      org.apache.spark.sql.types.BinaryType)
-    val binOut = binDf
-      .select(col("probe_id").cast("string").cast("long"),
-        col("neighbor_id").cast("string").cast("long"))
-      .as[(Long, Long)].collect().toSet
-    assert(binOut == numeric)
+    val k = 5
+    val ids: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "long" -> col("vec_id"),
+      "string" -> col("vec_id").cast("string"),
+      "decimal" -> col("vec_id").cast("decimal(12,0)"),
+      "binary" -> format_string("%05d", col("vec_id")).cast("binary"),
+      "struct" -> struct((col("vec_id") % 7).as("a"), col("vec_id").as("b")))
+    for ((name, id) <- ids) {
+      val typed = e.withColumn("vec_id", id)
+      val probes = typed.filter(col("embedding").isNotNull)
+        .orderBy(col("vec_id")).limit(3)
+      val got = Similarity.knnBrute(probes, typed, "vec_id", "embedding", k)
+      val plan = got.queryExecution.optimizedPlan.toString
+      assert(plan.contains("collect_top_k"), s"$name: ${plan.take(2000)}")
+      assert(!plan.contains("collect_list"), s"$name: ${plan.take(2000)}")
+      assert(got.schema("neighbor_id").dataType ==
+        typed.schema("vec_id").dataType, name)
+      // the oracle: every candidate's (−cosine, id) struct collected,
+      // sorted and sliced — the unbounded shape the kernel bounds
+      val oracle = probes.select(col("vec_id").as("probe_id"),
+          col("embedding").cast("array<double>").as("pv"))
+        .crossJoin(typed.select(col("vec_id").as("neighbor_id"),
+          col("embedding").cast("array<double>").as("cv")))
+        .filter(col("probe_id") =!= col("neighbor_id"))
+        .groupBy("probe_id")
+        .agg(slice(array_sort(collect_list(struct(
+          (lit(0.0) - Similarity.cosine(col("pv"), col("cv"))).as("s"),
+          col("neighbor_id")))), 1, k).as("xs"))
+        .select(col("probe_id"), explode(col("xs.neighbor_id"))
+          .as("neighbor_id"))
+      def pairs(df: org.apache.spark.sql.DataFrame): Set[String] =
+        df.select(to_json(struct(col("probe_id"), col("neighbor_id"))))
+          .as[String].collect().toSet
+      val want = pairs(oracle)
+      assert(want.size == 3 * k, name)
+      assert(pairs(got) == want, name)
+    }
   }
 
   test("knnIvf: exhaustive nprobe equals brute; partial nprobe recalls") {
