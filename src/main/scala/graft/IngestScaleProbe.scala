@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, Sizing}
 
 /** The 1000× point for the continuous-ingest slope claim: round 16
   * measured to 100× that the broadcast micro-batch path keeps the
@@ -20,12 +20,13 @@ import graft.pipeline.Dedup
   * docs so the match path does real verification work.
   *
   * Both paths run twice (min taken) with per-pass shuffle bytes from
-  * the stage listener:
-  *  - broadcast (`broadcastNew = true`): the batch's banded rows
-  *    broadcast; the store flows through one fused map-side stage —
-  *    shuffle should stay ~candidate-sized, INDEPENDENT of the store
-  *  - smj (`broadcastNew = false`): the store's banded rows exchange —
-  *    the O(store) term the broadcast path exists to delete
+  * the stage listener; each is forced through the band join's byte
+  * gate (`spark.graft.maxBroadcastBatchBytes`):
+  *  - broadcast (cap unbounded): the batch's banded rows broadcast;
+  *    the store flows through one fused map-side stage — shuffle
+  *    should stay ~candidate-sized, INDEPENDENT of the store
+  *  - smj (cap 0): the store's banded rows exchange — the O(store)
+  *    term the broadcast path exists to delete
   *
   * Prints one JSON line (echoed to ingest_scale_out.json):
   * {"probe":"ingest_scale","store_docs":…,"batch_docs":…,
@@ -106,28 +107,29 @@ object IngestScaleProbe {
       v
     }
 
-    def measure(broadcastNew: Boolean,
+    def measure(broadcast: Boolean,
         storeFn: () => org.apache.spark.sql.DataFrame = store _)
         : (Double, Double, Long) = {
-      val passes = (0 until 2).map { _ =>
+      spark.conf.set(Sizing.MaxBroadcastBatchBytesKey,
+        if (broadcast) Long.MaxValue else 0L)
+      val passes = try (0 until 2).map { _ =>
         spark.catalog.clearCache()
         drainedShuffle()
         shuffleBytes.set(0L)
         val t = System.nanoTime()
         val kept = Dedup.dedupAgainstStore(batch, "doc_id", "text",
           storeFn(), k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-          checkWidths = false, broadcastNew = broadcastNew).count()
+          checkWidths = false).count()
         val wall = (System.nanoTime() - t) / 1e9
         (wall, drainedShuffle() / 1e6, kept)
-      }
-      val best = passes.minBy(_._1)
-      best
+      } finally spark.conf.unset(Sizing.MaxBroadcastBatchBytesKey)
+      passes.minBy(_._1)
     }
 
-    val (bSec, bMb, bKept) = measure(broadcastNew = true)
+    val (bSec, bMb, bKept) = measure(broadcast = true)
     println(f"[ingest_scale] broadcast: $bSec%.1f s, $bMb%.1f MB " +
       f"shuffle, kept=$bKept")
-    val (sSec, sMb, sKept) = measure(broadcastNew = false)
+    val (sSec, sMb, sKept) = measure(broadcast = false)
     println(f"[ingest_scale] smj: $sSec%.1f s, $sMb%.1f MB shuffle, " +
       f"kept=$sKept")
     require(bKept == sKept,
@@ -155,7 +157,7 @@ object IngestScaleProbe {
     }
     val mBuildSec = (System.nanoTime() - tSplit) / 1e9
     def mstoreFn() = Manifest.rows(spark, mStore).drop("batch")
-    val (mSec, mMb, mKept) = measure(broadcastNew = true,
+    val (mSec, mMb, mKept) = measure(broadcast = true,
       storeFn = mstoreFn _)
     println(f"[ingest_scale] manifest(8 gens): $mSec%.1f s, $mMb%.1f " +
       f"MB shuffle, kept=$mKept")

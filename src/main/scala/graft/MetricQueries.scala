@@ -1214,8 +1214,7 @@ object MetricQueries {
       lit(2).as("AggregationTemporality"),
       lit(true).as("IsMonotonic"))
     epochBucket(graft.metrics.PromQl.eval(shaped,
-      "sum by (ServiceName) (increase(ctr[4h]))", 3600,
-      prometheusRate = true))
+      "sum by (ServiceName) (increase(ctr[4h]))", 3600))
       .withColumn("value", round(col("value"), 6))
       .withColumnRenamed("ServiceName", "event_type")
       .select("bucket", "event_type", "value")

@@ -40,17 +40,6 @@ object PipelineQueries {
   private def embs(spark: SparkSession, dir: String): DataFrame =
     Queries.cat(spark, dir)("embeddings").df
 
-  /** Size gate for the lifecycle gates' broadcast-ingest fast path,
-    * mirroring IngestStream's row cap: the gates' batches are a FIXED
-    * FRACTION of the corpus, so a hardcoded `broadcastNew = true`
-    * forces a multi-TB broadcast build at 100 TB (the explicit hint
-    * bypasses autoBroadcastJoinThreshold). The estimate-based gate
-    * keeps the broadcast plan at bench scale and falls back to the
-    * shuffled band join — same pair set, same output — above the cap
-    * (`spark.graft.maxBroadcastBatchBytes`). */
-  private def bcastBatch(df: DataFrame): Boolean =
-    graft.pipeline.Sizing.broadcastableBatch(df)
-
   /** documents ∪ perturbed copies of every 10th doc (planted near-dups). */
   private def corpusWithDups(spark: SparkSession, dir: String): DataFrame = {
     val d = docsRaw(spark, dir).select("doc_id", "text")
@@ -1288,8 +1277,7 @@ object PipelineQueries {
         k = 16, shingleN = 3)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (s2raw, store2) = Dedup.ingestBatch(store1, b2, "doc_id",
-      "text", k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-      broadcastNew = bcastBatch(b2))
+      "text", k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
     // survivors feed BOTH the store append and the output union —
     // unpersisted, the batch-2 anti-join match would run twice more
     val s2 = s2raw.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1300,7 +1288,7 @@ object PipelineQueries {
     // store-wide re-scan per batch)
     val (s3, _) = Dedup.ingestBatch(store2p, b3, "doc_id", "text",
       k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-      checkWidths = false, broadcastNew = bcastBatch(b3))
+      checkWidths = false)
     b1.select(col("doc_id"), lit(1L).as("batch"))
       .unionByName(s2.select(col("doc_id"), lit(2L).as("batch")))
       .unionByName(s3.select(col("doc_id"), lit(3L).as("batch")))
@@ -1389,8 +1377,7 @@ object PipelineQueries {
         (col("doc_id") + 1000000).as("doc_id"),
         concat(col("text"), lit(" zz9")).as("text")))
     Dedup.dedupAgainstStore(batch, "doc_id", "text", retracted,
-      k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-      broadcastNew = bcastBatch(batch))
+      k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
       .select("doc_id").orderBy("doc_id")
   }
 
@@ -1486,8 +1473,7 @@ object PipelineQueries {
     val store = Dedup.signatureStore(old, "doc_id", "text",
       k = 16, shingleN = 3)
     Dedup.incrementalComponents(prev, store, batch, "doc_id", "text",
-        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(batch))
+        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
       .orderBy("id")
   }
 
@@ -1530,8 +1516,7 @@ object PipelineQueries {
     // this query returns — executed lazily by its consumer — must not
     // depend on them
     Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
-        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(b2))
+        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
       .write.parquet(s"$root/s2")
     val s2 = spark.read.parquet(s"$root/s2")
     Manifest.append(spark, storeDir,
@@ -1542,8 +1527,7 @@ object PipelineQueries {
     Manifest.rebuild(spark, storeDir, Dedup.signatureStore(
       b1.unionByName(s2), "doc_id", "text", k = 32, shingleN = 3))
     val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
-      k = 32, bands = 16, shingleN = 3, minJaccard = 0.7,
-      broadcastNew = bcastBatch(b3))
+      k = 32, bands = 16, shingleN = 3, minJaccard = 0.7)
     b1.select(col("doc_id"), lit(1L).as("batch"))
       .unionByName(s2.select(col("doc_id"), lit(2L).as("batch")))
       .unionByName(s3.select(col("doc_id"), lit(3L).as("batch")))
@@ -1620,8 +1604,7 @@ object PipelineQueries {
     def store(): DataFrame =
       Manifest.rows(spark, storeDir).drop("batch")
     val s2 = Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
-        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(b2))
+        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       Manifest.append(spark, outDir,
@@ -1637,7 +1620,7 @@ object PipelineQueries {
     // discipline: skip the per-batch store-wide width re-scan
     val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
       k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-      checkWidths = false, broadcastNew = bcastBatch(b3))
+      checkWidths = false)
     Manifest.append(spark, outDir,
       s3.select(col("doc_id"), lit(3L).as("lifecycle")), 1L)
     b1.select(col("doc_id"), lit(1L).as("batch"))
@@ -1686,8 +1669,7 @@ object PipelineQueries {
     def store(): DataFrame =
       Manifest.rows(spark, storeDir).drop("batch")
     val s2 = Dedup.dedupAgainstStore(b2, "doc_id", "text", store(),
-        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(b2))
+        k = 16, bands = 8, shingleN = 3, minJaccard = 0.7)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       Manifest.append(spark, outDir,
@@ -1706,8 +1688,7 @@ object PipelineQueries {
       Manifest.retract(spark, storeDir,
         b1.filter(col("doc_id") % 30 === 6).select("doc_id"), "doc_id")
       val s3 = Dedup.dedupAgainstStore(b3, "doc_id", "text", store(),
-        k = 32, bands = 16, shingleN = 3, minJaccard = 0.7,
-        broadcastNew = bcastBatch(b3))
+        k = 32, bands = 16, shingleN = 3, minJaccard = 0.7)
       Manifest.append(spark, outDir,
         s3.select(col("doc_id"), lit(3L).as("lifecycle")), 1L)
     } finally { s2.unpersist(); () }

@@ -81,12 +81,13 @@ object AlertRunner {
     * The scan padding for sliding range functions is derived from the
     * parsed expression (`PromQl.maxLookback`) — a `max_over_time(m[1h])`
     * alert automatically scans one hour before the first window, so edge
-    * windows never aggregate truncated data. All PromQl vector families
-    * bucket at window STARTS, the same convention the threshold machine
-    * compares against — no re-keying flag. */
+    * windows never aggregate truncated data. rate()/increase() take
+    * PromQl's one sliding semantics (Prometheus's extrapolatedRate). All
+    * PromQl vector families bucket at window STARTS, the same
+    * convention the threshold machine compares against — no re-keying
+    * flag. */
   def evaluatePromQl(df: org.apache.spark.sql.DataFrame, promql: String,
-      cfg: AlertConfig, now: Instant,
-      prometheusRate: Boolean = true): Seq[AlertResult] = {
+      cfg: AlertConfig, now: Instant): Seq[AlertResult] = {
     val windowSecs = cfg.intervalMinutes * 60L
     val currentStart = Alerts.getScheduledWindowStart(now,
       cfg.intervalMinutes, cfg.scheduleOffsetMinutes)
@@ -97,8 +98,7 @@ object AlertRunner {
       col("TimeUnix") >= lit(java.sql.Timestamp.from(
         windowStarts.head.minusSeconds(lookback))) &&
         col("TimeUnix") < lit(java.sql.Timestamp.from(currentStart)))
-    val out = graft.metrics.PromQl.eval(scoped, promql, windowSecs,
-      prometheusRate)
+    val out = graft.metrics.PromQl.eval(scoped, promql, windowSecs)
     val groupCols = out.columns.toSeq
       .filterNot(c => c == TimeBucketAlias || c == "value")
     threshold(out.collect(), groupCols, windowStarts, cfg)

@@ -130,18 +130,6 @@ object MetricCompiler {
       .agg(sum(col("Rate")).as("rate"))
   }
 
-  /** Counter rate bucketed per series: keeps the series key in the grouping
-    * so an outer aggregation (avg/min/max/count across series) can be applied
-    * on top — PromQL `avg(rate(m[5m]))` semantics. */
-  def counterRatePerSeries(df: DataFrame, stepSeconds: Long,
-      groupBy: Seq[String] = Nil): DataFrame = {
-    val rated = counterRatePerRow(df)
-      .withColumn(Bucket, timeBucket(col("TimeUnix"), stepSeconds))
-    rated
-      .groupBy((col(Bucket) +: col(SeriesKey) +: groupBy.map(col)): _*)
-      .agg(sum(col("Rate")).as("rate"))
-  }
-
   /** Counter rate over a bounded chart range: the scan is padded one step
     * EARLIER than the range so the first in-range bucket's lag-delta diffs
     * against the last pre-range point instead of starting at 0, then the

@@ -104,11 +104,10 @@ import graft.functions.CoreFunctions._
   * one time). The only residue vs Prometheus is the half-open boundary of
   * the tumbling families ([L, L+step) vs (L, L+step]).
   *
-  * Semantics notes: rate()/increase() default to Prometheus's sliding
-  * extrapolatedRate (`prometheusRate = true`); pass `prometheusRate =
-  * false` for the reference's chart semantics (step-aligned tumbling
-  * counterRate with first-point-zero; gauges aggregate last-value per
-  * bucket either way).
+  * Semantics notes: rate()/increase() have one semantics, Prometheus's
+  * sliding extrapolatedRate (gauges aggregate last-value per bucket).
+  * The reference's step-aligned tumbling counter rate stays available
+  * to chart configs as [[MetricCompiler.counterRate]].
   */
 object PromQl {
 
@@ -117,11 +116,9 @@ object PromQl {
   final case class Selector(metric: String,
       matchers: Seq[(String, String, String)],
       offsetSeconds: Long = 0) extends Expr
+  /** rate/increase over a sliding (t − range, t] window, Prometheus's
+    * extrapolatedRate. */
   final case class Rate(sel: Selector, windowSeconds: Long,
-      increase: Boolean) extends Expr
-  /** Prometheus-exact sliding rate/increase (extrapolatedRate): produced
-    * by the `prometheusRate` rewrite, never by the parser directly. */
-  final case class RateSliding(sel: Selector, windowSeconds: Long,
       increase: Boolean) extends Expr
   final case class Aggr(op: String, by: Seq[String], inner: Expr,
       without: Boolean = false) extends Expr
@@ -908,16 +905,11 @@ object PromQl {
     * as a range query at `stepSeconds`. Output: __time_bucket, grouping
     * labels…, value.
     *
-    * `prometheusRate` (default true) gives rate()/increase() Prometheus's
-    * exact semantics: a sliding (t − range, t] lookback at every step with
-    * counter-reset monotonicization and boundary extrapolation
-    * (extrapolatedRate). Pass false for the engine's step-aligned tumbling
-    * counterRate — the reference's chart semantics. */
-  def eval(df: DataFrame, query: String, stepSeconds: Long,
-      prometheusRate: Boolean = true): DataFrame = {
-    val ast = parse(query)
-    compile(df, if (prometheusRate) rewriteRates(ast) else ast, stepSeconds)
-  }
+    * rate()/increase() follow Prometheus exactly: a sliding
+    * (t − range, t] lookback at every step with counter-reset
+    * monotonicization and boundary extrapolation (extrapolatedRate). */
+  def eval(df: DataFrame, query: String, stepSeconds: Long): DataFrame =
+    compile(df, parse(query), stepSeconds)
 
   /** Parse a bare instant selector (`metric{label=~"..."}`) and filter
     * `df` to the rows it matches — the introspection face of
@@ -1030,32 +1022,6 @@ object PromQl {
     ev(ast)
   }
 
-  /** Swap every Rate node for its sliding-semantics twin. */
-  private def rewriteRates(e: Expr): Expr = e match {
-    case Rate(sel, w, inc) => RateSliding(sel, w, inc)
-    case Aggr(op, by, inner, wo) => Aggr(op, by, rewriteRates(inner), wo)
-    case BinOp(op, l, r, m) =>
-      BinOp(op, rewriteRates(l), rewriteRates(r), m)
-    case CmpOp(op, l, r, b, m) =>
-      CmpOp(op, rewriteRates(l), rewriteRates(r), b, m)
-    case SetOp(op, l, r) => SetOp(op, rewriteRates(l), rewriteRates(r))
-    case MathFn(f, i, a) => MathFn(f, rewriteRates(i), a)
-    case LabelReplace(i, d, rp, src, rx) =>
-      LabelReplace(rewriteRates(i), d, rp, src, rx)
-    case LabelJoin(i, d, sep, ss) => LabelJoin(rewriteRates(i), d, sep, ss)
-    case TopK(k, i, b, by) => TopK(k, rewriteRates(i), b, by)
-    case LimitK(k, i, r, by) => LimitK(k, rewriteRates(i), r, by)
-    case Clamp(i, lo, hi) => Clamp(rewriteRates(i), lo, hi)
-    case OverTimeSub(op, i, r, s, l) =>
-      OverTimeSub(op, rewriteRates(i), r, s, l)
-    case ClassicHistQuantile(phi, i) =>
-      ClassicHistQuantile(phi, rewriteRates(i))
-    case CountValues(l, i) => CountValues(l, rewriteRates(i))
-    case ScalarOf(i) => ScalarOf(rewriteRates(i))
-    case At(i, spec) => At(rewriteRates(i), spec)
-    case other => other
-  }
-
   /** Largest lookback (range + offset, seconds) any node of the parsed
     * expression needs. A caller scoping the input frame to a query range
     * must extend the scan this far before the range start, or edge
@@ -1066,7 +1032,6 @@ object PromQl {
   private def lookbackOf(e: Expr): Long = e match {
     case Selector(_, _, off) => off
     case Rate(sel, w, _) => sel.offsetSeconds + w
-    case RateSliding(sel, w, _) => sel.offsetSeconds + w
     case OverTime(_, sel, w, _, _) => sel.offsetSeconds + w
     case AbsentOverTime(sel, w) => sel.offsetSeconds + w
     // the inner expression evaluates at substep over its own lookback,
@@ -1135,13 +1100,8 @@ object PromQl {
       case sel: Selector =>
         // instant-vector semantics per series: last value per step bucket
         MetricCompiler.gauge(applySelector(df, sel), step, "last_value")
-      case Rate(sel, _, increase) =>
-        val rated = MetricCompiler.counterRate(applySelector(df, sel), step)
-        if (increase) rated.withColumnRenamed("rate", "value")
-        else rated.withColumn("value", col("rate") / step).drop("rate")
-      case RateSliding(sel, range, increase) =>
-        // bare sliding rate mirrors the bare tumbling path: sum across
-        // series per eval bucket
+      case Rate(sel, range, increase) =>
+        // bare rate sums across series per eval bucket
         slidingRate(df, sel, range, step, Nil, increase)
           .groupBy(col(TimeBucketAlias))
           .agg(sum(col("value")).as("value"))
@@ -1176,19 +1136,9 @@ object PromQl {
             val src = withLabels(applySelector(df, sel), by)
             // per-series last_value, then the outer op across series
             MetricCompiler.gauge(src, step, op, by)
-          case Rate(sel, _, increase) =>
-            val src = withLabels(applySelector(df, sel), by)
-            // rate per series (series key kept in the grouping), then the
-            // outer op across series — avg/min/max/count need the
-            // per-series rates, and for sum the result is identical
-            val perSeries =
-              MetricCompiler.counterRatePerSeries(src, step, by)
-            val valued =
-              if (increase) perSeries.withColumnRenamed("rate", "value")
-              else perSeries.withColumn("value", col("rate") / step)
-                .drop("rate")
-            aggregate0(valued, op, by)
-          case RateSliding(sel, range, increase) =>
+          case Rate(sel, range, increase) =>
+            // rate per series, then the outer op across series —
+            // avg/min/max/count need the per-series rates
             aggregate0(slidingRate(df, sel, range, step, by, increase),
               op, by)
           case ot: OverTime =>

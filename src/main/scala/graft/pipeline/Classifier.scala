@@ -59,42 +59,44 @@ object Classifier {
       .join(labeled.select(col(idCol),
         col(labelCol).cast("int").as("__y")), idCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE action for the doc census (from the labels — empty classes
-    // are a caller error, name it loudly) and the per-class token mass
-    // (from the feature frame, whose persist this materializes): the
-    // previous two collects each paid a full job's scheduling latency.
-    val statRows = labeled
-      .groupBy(col(labelCol).cast("int").as("__y"))
-      .agg(count(lit(1)).as("__v"))
-      .select(lit("docs").as("__k"), col("__y"), col("__v"))
-      .unionByName(f.groupBy(col("__y"))
-        .agg(sum(col("cnt")).as("__v"))
-        .select(lit("mass").as("__k"), col("__y"), col("__v")))
-      .collect()
-    val docCensus = statRows.filter(_.getString(0) == "docs")
-      .map(r => r.getInt(1) -> r.getLong(2)).toMap
-    require(docCensus.contains(1) && docCensus.contains(0),
-      s"logCountRatio needs both classes in $labelCol; " +
-        s"saw ${docCensus.keySet}")
-    val mass = statRows.filter(_.getString(0) == "mass")
-      .map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val posTot = mass.getOrElse(1, 0L)
-    val negTot = mass.getOrElse(0, 0L)
-    // the weight table stays a LAZY aggregate over the persisted
-    // feature frame — it broadcasts at scoring time like the local
-    // relation it replaces, minus the ≤buckets-row collect job here.
-    // `f` deliberately stays persisted: the broadcast build reads it
-    // from cache (released via clearCache — the Dsir convention).
-    val weights = f.groupBy(col("bucket"))
-      .agg(
-        (log((sum(when(col("__y") === 1, col("cnt")).otherwise(0L)) +
-          alpha) / (posTot + alpha * buckets)) -
-         log((sum(when(col("__y") === 0, col("cnt")).otherwise(0L)) +
-          alpha) / (negTot + alpha * buckets))).as("r"))
-    val unseenR = math.log(alpha / (posTot + alpha * buckets)) -
-      math.log(alpha / (negTot + alpha * buckets))
-    LinearModel(weights, unseenR,
-      math.log(docCensus(1).toDouble / docCensus(0)), buckets)
+    try {
+      // ONE action for the doc census (from the labels — empty classes
+      // are a caller error, name it loudly) and the per-class token mass
+      // (from the feature frame, whose persist this materializes): the
+      // previous two collects each paid a full job's scheduling latency.
+      val statRows = labeled
+        .groupBy(col(labelCol).cast("int").as("__y"))
+        .agg(count(lit(1)).as("__v"))
+        .select(lit("docs").as("__k"), col("__y"), col("__v"))
+        .unionByName(f.groupBy(col("__y"))
+          .agg(sum(col("cnt")).as("__v"))
+          .select(lit("mass").as("__k"), col("__y"), col("__v")))
+        .collect()
+      val docCensus = statRows.filter(_.getString(0) == "docs")
+        .map(r => r.getInt(1) -> r.getLong(2)).toMap
+      require(docCensus.contains(1) && docCensus.contains(0),
+        s"logCountRatio needs both classes in $labelCol; " +
+          s"saw ${docCensus.keySet}")
+      val mass = statRows.filter(_.getString(0) == "mass")
+        .map(r => r.getInt(1) -> r.getLong(2)).toMap
+      val posTot = mass.getOrElse(1, 0L)
+      val negTot = mass.getOrElse(0, 0L)
+      // the ≤buckets-row weight table is collected into a LOCAL relation:
+      // the model carries no lineage over the caller's input, so a cache
+      // release or an overwritten source cannot change it
+      val weightsAgg = f.groupBy(col("bucket"))
+        .agg(
+          (log((sum(when(col("__y") === 1, col("cnt")).otherwise(0L)) +
+            alpha) / (posTot + alpha * buckets)) -
+           log((sum(when(col("__y") === 0, col("cnt")).otherwise(0L)) +
+            alpha) / (negTot + alpha * buckets))).as("r"))
+      val weights = labeled.sparkSession.createDataFrame(
+        java.util.Arrays.asList(weightsAgg.collect(): _*), weightsAgg.schema)
+      val unseenR = math.log(alpha / (posTot + alpha * buckets)) -
+        math.log(alpha / (negTot + alpha * buckets))
+      LinearModel(weights, unseenR,
+        math.log(docCensus(1).toDouble / docCensus(0)), buckets)
+    } finally f.unpersist()
   }
 
   /** (id, score): prior + Σ cnt·r over a corpus feature frame (from

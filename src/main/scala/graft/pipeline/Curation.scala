@@ -128,9 +128,10 @@ object Curation {
 
   /** (id, n_hits): documents sharing at least one normalized token
     * n-gram with any benchmark text; n_hits counts the DISTINCT
-    * contaminated grams per document. The benchmark gram set rides a
-    * broadcast semi-join, so the corpus side never shuffles its text —
-    * the only exchange is the per-doc count aggregation. n = 13 is the
+    * contaminated grams per document. The benchmark gram set is
+    * collected and broadcast EAGERLY, while this call builds the plan,
+    * so the corpus side never shuffles its text and needs no exchange
+    * at all — the per-row kernel counts hits in place. n = 13 is the
     * classic eval-set decontamination window (GPT-3 appendix C / Llama).
     * Ids must be integral (the gram kernel casts to long); wrap arbitrary
     * keys with Dedup.longIds first. */
@@ -172,21 +173,29 @@ object Curation {
     * contract), so the set rides one driver hop and the corpus-side
     * sweep becomes a pure per-row membership scan — no gram explode,
     * no semi-join exchange, no per-doc count shuffle. The cap keeps an
-    * accidentally-corpus-sized `bench` from silently OOMing the
-    * driver; gram construction is [[Dedup.shingles]] verbatim (the
-    * same normalization the previous broadcast semi-join used). */
+    * accidentally-corpus-sized `bench` from OOMing the driver: the
+    * distinct-gram count is checked by a bounded count job BEFORE
+    * anything is collected, so an oversized bench fails with the
+    * contract message; gram construction is [[Dedup.shingles]]
+    * verbatim (the same normalization the previous broadcast
+    * semi-join used). EAGER: runs two driver jobs when the caller
+    * builds its plan, not when the plan executes — the count, which
+    * also caches the distinct grams, and the collect, which reads that
+    * cache instead of re-running the gram construction. */
   private def benchGramSet(spark: org.apache.spark.sql.SparkSession,
       bench: DataFrame, benchTextCol: String, n: Int,
       maxGrams: Int = 8388608)
       : org.apache.spark.broadcast.Broadcast[java.util.HashSet[String]] = {
-    val rows = bench
+    val grams = bench
       .select(explode(Dedup.shingles(col(benchTextCol), n)).as("__g"))
       .distinct()
-      .limit(maxGrams + 1)
-      .collect()
-    require(rows.length <= maxGrams,
-      s"contamination bench produced more than $maxGrams distinct " +
-        "grams — eval sets are small by contract; split the sweep")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = try {
+      require(grams.limit(maxGrams + 1).count() <= maxGrams,
+        s"contamination bench produced more than $maxGrams distinct " +
+          "grams — eval sets are small by contract; split the sweep")
+      grams.collect()
+    } finally grams.unpersist()
     val set = new java.util.HashSet[String](rows.length * 2)
     rows.foreach(r => set.add(r.getString(0)))
     spark.sparkContext.broadcast(set)
@@ -223,7 +232,9 @@ object Curation {
     * FILTER against the broadcast bench-gram set (short-circuiting on
     * the first hit): the previous shape re-ran the gram kernel into a
     * per-doc count exchange and anti-joined it back onto the corpus —
-    * two corpus-keyed exchanges for a predicate of the row itself. */
+    * two corpus-keyed exchanges for a predicate of the row itself.
+    * Like [[contaminationHits]], it collects the bench grams eagerly,
+    * while the call builds the plan. */
   def decontaminated(docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 13): DataFrame = {
     val grams = benchGramSet(docs.sparkSession, bench, benchTextCol, n)

@@ -33,20 +33,16 @@ object Dedup {
   /** Target parallelism for pair-generation stages: size-adaptive
     * ([[Sizing.parallelism]] — the testdata parquet often arrives as ONE
     * input split, so an explicit repartition is still needed for any
-    * parallelism at all; its WIDTH now derives from the input size
-    * instead of pinning every downstream stage to the session constant).
-    * CPU-DENSE floor (8 KB), not the 128 KB default: the shingle/minhash
-    * kernels burn orders of magnitude more CPU per input byte than the
-    * downstream hash stages (per-token hashing, per-shingle rolling
-    * hashes, k minhash passes), so the 128 KB floor starved them — a
-    * small filtered frame (q126's paragraph frame) landed on ~5
-    * partitions while the rest of the machine idled (the five touched
-    * regressions of the r18 verdict cluster exactly here). */
+    * parallelism at all; its WIDTH derives from the input size instead
+    * of pinning every downstream stage to the session constant), at the
+    * 32 KB [[PairKernelFloorBytes]]. */
   private def defaultParallelism(df: DataFrame): Int =
     Sizing.parallelism(df, PairKernelFloorBytes)
 
-  /** Floor for the pair-generation kernels, between Sizing's defaults:
-    * 128 KB starves the minhash/verify-heavy paths (q126's paragraph
+  /** Floor for the pair-generation kernels, between the 8 KB
+    * [[Sizing.CpuDenseFloorBytes]] and the retired 128 KB floor: the
+    * shingle/minhash kernels burn far more CPU per input byte than the
+    * downstream hash stages, and 128 KB starved them (q126's paragraph
     * frame landed on ~5 partitions while the machine idled — the r18
     * verdict's touched regressions), while the 8 KB CPU-dense floor
     * triples the gates' total task time at 32 cores (measured: q195
@@ -478,8 +474,8 @@ object Dedup {
   def incrementalComponents(prevComps: DataFrame, store: DataFrame,
       batch: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      minJaccard: Double = 0.7, checkWidths: Boolean = true,
-      broadcastNew: Boolean = false): DataFrame = {
+      minJaccard: Double = 0.7,
+      checkWidths: Boolean = true): DataFrame = {
     val within = clusterEdges(batch, idCol, textCol, k, bands,
       shingleN, minJaccard).select("id_a", "id_b")
     // content-collapse the batch side before the band join (the
@@ -490,7 +486,7 @@ object Dedup {
     val repDocs = batch.join(
       reps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi")
     val cross = crossCorpusPairsFromStore(repDocs, idCol, textCol,
-      store, k, bands, shingleN, minJaccard, checkWidths, broadcastNew)
+      store, k, bands, shingleN, minJaccard, checkWidths)
       .select(col("new_id").as("id_a"), col("kept_id").as("id_b"))
     val prevStar = prevComps.filter(col("id") =!= col("comp"))
       .select(col("comp").as("id_a"), col("id").as("id_b"))
@@ -585,7 +581,7 @@ object Dedup {
     val keptSig = shingleMinhash(keptL, idCol, textCol, shingleN, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val verified = crossPairsFromSigs(newSig, keptSig, k, bands,
-      minJaccard)
+      minJaccard, broadcastBatch = false)
     restoreIds(restoreIds(verified, newMap, Seq("new_id")),
       keptMap, Seq("kept_id"))
   }
@@ -596,9 +592,10 @@ object Dedup {
     * jaccard). Pure extraction — the frames' ids pass through
     * untouched.
     *
-    * `broadcastNew` is the micro-batch fast path: when the NEW side is
-    * batch-sized (the continuous-ingest loop), its banded rows —
-    * carrying their signatures — broadcast, and the kept side flows
+    * `broadcastBatch` is the micro-batch fast path, chosen by
+    * [[crossCorpusPairsFromStore]] from the batch's own size: when the
+    * NEW side is batch-sized (the continuous-ingest loop), its banded
+    * rows — carrying their signatures — broadcast, and the kept side flows
     * through ONE fused map-side stage: scan → band-explode → broadcast
     * band join → size prune → est_jaccard → candidate projection. The
     * store is scanned ONCE per batch, never exchanged, and never
@@ -612,14 +609,13 @@ object Dedup {
     * arrays is the expensive move; a broadcast batch flips that — the
     * wide columns stream through the scan stage without ever being
     * exchanged, and only candidate-sized rows shuffle (the pair
-    * dedupe). Broadcast bytes: bands × (~32 B + 8k B sig) per doc —
-    * size the caller's row cap accordingly
-    * ([[graft.streaming.IngestStream]] defaults to 200k rows ≈ 250 MB
-    * at k = 16, bands = 8). Semantics identical — both paths compute
-    * the same est/jaccard expressions on the same deduped pair set. */
+    * dedupe). Broadcast bytes: bands × (~32 B + 8k B sig) per doc,
+    * bounded by [[Sizing.broadcastableBatch]]'s byte cap. Semantics
+    * identical — both paths compute the same est/jaccard expressions
+    * on the same deduped pair set. */
   private def crossPairsFromSigs(newSig: DataFrame, keptSig: DataFrame,
       k: Int, bands: Int, minJaccard: Double,
-      broadcastNew: Boolean = false): DataFrame = {
+      broadcastBatch: Boolean): DataFrame = {
     val rows = k / bands
     def bandHash(sig: Column, b: Int): Column =
       bandHashLongs(sig, b, rows)
@@ -640,7 +636,7 @@ object Dedup {
     val sizePrune =
       least(col("sz_a"), col("sz_b")).cast("double") /
         greatest(col("sz_a"), col("sz_b")) >= minJaccard
-    if (broadcastNew) {
+    if (broadcastBatch) {
       // single-scan path: batch band rows carry their signature
       val a = newSig.select(col("id").as("new_id"),
           szOf(newSig).as("sz_a"), col("sig").as("sig_a"),
@@ -725,12 +721,17 @@ object Dedup {
     * SAME k and shingleN the batch is hashed with: sig length is
     * checked loudly against k (a mismatched store would silently
     * mis-scale est_jaccard and band on different slices); shingleN has
-    * no in-band witness, so it rides the caller's contract. */
+    * no in-band witness, so it rides the caller's contract.
+    *
+    * The band join picks its own path from the batch it is given: a
+    * batch under [[Sizing.broadcastableBatch]]'s byte cap broadcasts,
+    * anything larger (or of unknown size) sort-merge joins. Persist
+    * and materialize a streamed batch first so the gate reads its
+    * measured size rather than an estimate. */
   def crossCorpusPairsFromStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true,
-      broadcastNew: Boolean = false): DataFrame = {
+      checkWidths: Boolean = true): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     require(Set(idCol, "sig", "sh").subsetOf(store.columns.toSet),
       s"signature store must carry ($idCol, sig, sh); " +
@@ -780,7 +781,8 @@ object Dedup {
       (if (hasSz) Seq(col("sz")) else Nil)
     val keptSig = store.select(keptCols: _*)
     restoreIds(crossPairsFromSigs(newSig, keptSig, k, bands,
-      minJaccard, broadcastNew), newMap, Seq("new_id"))
+      minJaccard, Sizing.broadcastableBatch(newDf)), newMap,
+      Seq("new_id"))
   }
 
   /** Keep exactly the new-batch docs with NO verified near-dup in the
@@ -802,8 +804,7 @@ object Dedup {
   def dedupAgainstStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true,
-      broadcastNew: Boolean = false): DataFrame = {
+      checkWidths: Boolean = true): DataFrame = {
     val newKeyed = newDf
       .select(col(idCol), md5(col(textCol)).as("__ck"))
     val newReps = newKeyed.groupBy(col("__ck"))
@@ -811,8 +812,7 @@ object Dedup {
     val newRepDocs = newDf.join(
       newReps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi")
     val matchedRep = crossCorpusPairsFromStore(newRepDocs, idCol,
-      textCol, store, k, bands, shingleN, minJaccard, checkWidths,
-      broadcastNew)
+      textCol, store, k, bands, shingleN, minJaccard, checkWidths)
       .select(col("new_id").as("__rep")).distinct()
     val matchedIds = newKeyed
       .join(newReps.join(matchedRep, "__rep"), "__ck")
@@ -848,10 +848,10 @@ object Dedup {
     * contract. */
   def ingestBatch(store: DataFrame, newDf: DataFrame, idCol: String,
       textCol: String, k: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      minJaccard: Double = 0.7, checkWidths: Boolean = true,
-      broadcastNew: Boolean = false): (DataFrame, DataFrame) = {
+      minJaccard: Double = 0.7,
+      checkWidths: Boolean = true): (DataFrame, DataFrame) = {
     val survivors = dedupAgainstStore(newDf, idCol, textCol, store,
-      k, bands, shingleN, minJaccard, checkWidths, broadcastNew)
+      k, bands, shingleN, minJaccard, checkWidths)
     // align a pre-`sz` store so the union's schema matches the fresh
     // append's (computed sizes, never null-filled)
     val aligned = if (store.columns.contains("sz")) store

@@ -17,16 +17,19 @@ import org.apache.spark.sql.DataFrame
   * byte share, and cap at the session's configured parallelism so a
   * big input still fans out exactly as before.
   *
-  * The 128 KB [[MinPartitionBytes]] is deliberately a floor, not a
-  * target: the cap — `spark.sql.shuffle.partitions`, the
-  * knob a cluster deployment already sizes to executors × cores —
-  * stays the operative bound whenever the data is big, so behaviour at
-  * scale is unchanged; the floor only stops overhead-dominated
-  * confetti tasks when the data is small. 128 KB reproduces the
-  * measured sweet spot at sf0.1 (4–8 partitions: q195 10.3→8.5 s,
-  * q181 4.7→3.5 s, q79 2.3→2.0 s against 32-partition baselines) and
-  * is conservative for the CPU-dense text/vector kernels these
-  * repartitions feed (a 128 KB text slice hashes in single-digit ms).
+  * Two repartition floors are live, each a floor and not a target:
+  * the cap — `spark.sql.shuffle.partitions`, the knob a cluster
+  * deployment already sizes to executors × cores — stays the operative
+  * bound whenever the data is big, so behaviour at scale is unchanged;
+  * the floor only stops overhead-dominated confetti tasks when the
+  * data is small. Each caller passes its floor to [[parallelism]]:
+  *
+  *  - [[CpuDenseFloorBytes]] (8 KB) for the per-doc text and vector
+  *    kernels;
+  *  - Dedup's pair-kernel floor (32 KB) for the signature and pair
+  *    stages.
+  *
+  * Artifact writes size by file bytes instead ([[writeWidth]]).
   *
   * Estimates come from `optimizedPlan.stats.sizeInBytes` — file sizes
   * for parquet scans, propagated through projections/filters/unions;
@@ -34,24 +37,18 @@ import org.apache.spark.sql.DataFrame
   * land on the cap, i.e. exactly the previous behaviour. */
 object Sizing {
 
-  val MinPartitionBytes: Long = 128L * 1024
-
-  /** Partition count for an explicit repartition of `df`:
-    * clamp(ceil(estimatedBytes / MinPartitionBytes), 1, shufflePartitions). */
-  def parallelism(df: DataFrame): Int = widthFor(df, MinPartitionBytes)
-
   /** Byte floor for CPU-DENSE consumers (interpreted per-doc text
     * expressions, per-gram MD5): these do orders of magnitude more CPU
     * per input byte than the hash kernels, so their partitions must be
     * much smaller before the per-task overhead outweighs the
-    * parallelism — measured at sf0.1: the 128 KB floor cost the
+    * parallelism — measured at sf0.1: a 128 KB floor cost the
     * curation/text family 30–80% (q190 1.07→1.97 s, q154 1.25→2.04 s,
-    * q138 0.60→1.07 s) where the same floor WON 15–45% on the
-    * hash-kernel gates. 8 KB restores full fan-out for those consumers
+    * q138 0.60→1.07 s). 8 KB restores full fan-out for those consumers
     * at sf0.1 while still collapsing truly tiny inputs. */
   val CpuDenseFloorBytes: Long = 8L * 1024
 
-  /** [[parallelism]] with an explicit per-partition byte floor. */
+  /** Partition count for an explicit repartition of `df`:
+    * clamp(ceil(estimatedBytes / floorBytes), 1, shufflePartitions). */
   def parallelism(df: DataFrame, floorBytes: Long): Int =
     widthFor(df, floorBytes)
 
@@ -71,14 +68,15 @@ object Sizing {
   val DefaultMaxBroadcastBatchBytes: Long = 64L * 1024 * 1024
 
   /** Whether a micro-batch frame is small enough for the broadcast
-    * ingest path (Dedup's `broadcastNew`), judged by the plan's size
-    * estimate against `spark.graft.maxBroadcastBatchBytes`. The
-    * broadcast payload is roughly bands × (band hash + signature +
-    * shingle array) per row — several times the raw (id, text) bytes —
-    * so the default 64 MB estimate cap lands the built relation well
-    * under IngestStream's measured ~250 MB at its 200k-row cap, far
-    * from the 8 GB broadcast hard limit. An explicit broadcast() hint
-    * BYPASSES autoBroadcastJoinThreshold, so without this gate a
+    * band join of [[Dedup.crossCorpusPairsFromStore]], judged by the
+    * plan's size against `spark.graft.maxBroadcastBatchBytes` (a
+    * persisted, materialized batch reports its measured cached bytes).
+    * The broadcast side carries (id, sz, sig, band) per band per row —
+    * bands × (~32 B + 8k B) at signature width k, several times the
+    * raw (id, text) bytes — so the default 64 MB cap builds a relation
+    * of a few hundred MB for typical documents and stays under the
+    * 8 GB broadcast hard limit even for very short ones. An explicit
+    * broadcast() hint BYPASSES autoBroadcastJoinThreshold, so without this gate a
     * corpus-fraction "batch" forces a multi-TB broadcast build at
     * scale; unknown-size frames (Long.MaxValue stats) land on false —
     * the shuffled path is the safe default. */

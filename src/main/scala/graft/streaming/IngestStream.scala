@@ -36,7 +36,11 @@ import graft.pipeline.{Dedup, Manifest}
   *
   * Scale shape: one band join per micro-batch against the store (at
   * 100 TB, bucket the store files by band hash and the join prunes to
-  * matching buckets); the batch side is micro-batch-sized. State lives
+  * matching buckets); the batch side is micro-batch-sized. A batch
+  * under `spark.graft.maxBroadcastBatchBytes` (measured after the
+  * batch is cached) broadcasts, so the STORE — the side that grows
+  * forever — is scanned once map-side and never exchanged; a larger
+  * batch falls back to the shuffled band join. State lives
   * entirely in the store parquet, not the state store — the streaming
   * checkpoint carries only source offsets, so recovery cost is
   * independent of corpus size. Per-batch wall therefore grows with the
@@ -60,8 +64,7 @@ object IngestStream {
   def startManifest(stream: DataFrame, idCol: String, textCol: String,
       storeDir: String, outDir: String, checkpointDir: String,
       k: Int = 16, bands: Int = 8, shingleN: Int = 3,
-      minJaccard: Double = 0.7,
-      maxBroadcastRows: Long = 200000L): StreamingQuery = {
+      minJaccard: Double = 0.7): StreamingQuery = {
     val spark = stream.sparkSession
     require(Manifest.exists(spark, storeDir),
       s"$storeDir has no manifest — seed it with Manifest.append " +
@@ -85,26 +88,22 @@ object IngestStream {
         .drop("batch")
       // persist + count does double duty: the batch is read several
       // times downstream (content keying, the rep semi-join, the
-      // survivor writes), so materializing it once pays for the size
-      // the broadcast decision needs anyway
+      // survivor writes), and once materialized its cached relation
+      // reports the batch's MEASURED bytes — the size the band join's
+      // broadcast gate (Sizing.broadcastableBatch) reads
       val batch = batch0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val batchRows = batch.count()
+        batch.count()
         // the store-wide width guard costs one column-pruned store
         // scan on top of the band join — run it on the FIRST batch of
         // this query's lifetime (it would catch a foreign-k store dir,
         // or a pre-`sz` store mixed with new appends), then skip:
         // every later generation is this loop's own append under the
-        // same k. Broadcast decision per batch: a micro-batch under
-        // maxBroadcastRows hints itself broadcast through the whole
-        // match path, so the STORE — the side that grows forever — is
-        // scanned ONCE map-side and never exchanged (the per-batch
-        // O(store) shuffle that would dominate a 100-TB ingest loop).
+        // same k
         val survivors = Dedup.dedupAgainstStore(batch, idCol, textCol,
             store, k, bands, shingleN, minJaccard,
-            checkWidths = validated.compareAndSet(false, true),
-            broadcastNew = batchRows <= maxBroadcastRows)
+            checkWidths = validated.compareAndSet(false, true))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           outM.append(survivors, batchId)

@@ -74,40 +74,43 @@ class PromQlSpec extends SparkSpec {
     assert(regex.length == 2)
   }
 
+  // two counter series one minute apart: host a 100 → 130, host b
+  // 50 → 56. At step 1m a [2m] window holds both samples exactly once,
+  // at eval t = 00:01 (window (−1m, 1m], emitted at label 00:00):
+  // n=2, tf=0, tl=60 → sampled=60, avgInterval=60, threshold=66;
+  // startGap=60 (the zero-crossing durations 60·100/30=200 and
+  // 60·50/6=500 cap nothing) < 66 → extrapolates fully; endGap=0.
+  //   a: increase = 30·(60+60+0)/60 = 60, rate = 60/120 = 0.5
+  //   b: increase =  6·(60+60+0)/60 = 12, rate = 12/120 = 0.1
+  // Every other eval time holds one sample → no point.
+  private lazy val twoHosts: DataFrame = Seq(
+    ("req", "api", t(0), 100.0, Map("host" -> "a"), 2, true),
+    ("req", "api", t(1), 130.0, Map("host" -> "a"), 2, true),
+    ("req", "api", t(0), 50.0, Map("host" -> "b"), 2, true),
+    ("req", "api", t(1), 56.0, Map("host" -> "b"), 2, true))
+    .toDF("MetricName", "ServiceName", "TimeUnix", "Value", "Attributes",
+      "AggregationTemporality", "IsMonotonic")
+
   test("sum by (label) over rate: per-label counter rates") {
-    val twoHosts = Seq(
-      ("req", "api", t(0), 10.0, Map("host" -> "a"), 2, true),
-      ("req", "api", t(1), 40.0, Map("host" -> "a"), 2, true),
-      ("req", "api", t(0), 5.0, Map("host" -> "b"), 2, true),
-      ("req", "api", t(1), 11.0, Map("host" -> "b"), 2, true))
-      .toDF("MetricName", "ServiceName", "TimeUnix", "Value", "Attributes",
-        "AggregationTemporality", "IsMonotonic")
     val out = PromQl.eval(PromQl.withLabels(twoHosts, Seq("host")),
-      "sum by (host) (increase(req[1m]))", 60, prometheusRate = false)
+      "sum by (host) (increase(req[2m]))", 60)
       .orderBy("__time_bucket", "host")
-      .select("host", "value").as[(String, Double)].collect().toSeq
-    // minute 0: both first points → 0; minute 1: a +30, b +6
-    assert(out == Seq(("a", 0.0), ("b", 0.0), ("a", 30.0), ("b", 6.0)))
+      .select("__time_bucket", "host", "value")
+      .as[(Timestamp, String, Double)].collect().toSeq
+    assert(out == Seq((t(0), "a", 60.0), (t(0), "b", 12.0)))
   }
 
   test("avg/max/count over rate aggregate across per-series rates") {
-    val twoHosts = Seq(
-      ("req", "api", t(0), 10.0, Map("host" -> "a"), 2, true),
-      ("req", "api", t(1), 40.0, Map("host" -> "a"), 2, true),
-      ("req", "api", t(0), 5.0, Map("host" -> "b"), 2, true),
-      ("req", "api", t(1), 11.0, Map("host" -> "b"), 2, true))
-      .toDF("MetricName", "ServiceName", "TimeUnix", "Value", "Attributes",
-        "AggregationTemporality", "IsMonotonic")
     def run(q: String): Seq[Double] =
-      PromQl.eval(twoHosts, q, 60, prometheusRate = false)
+      PromQl.eval(twoHosts, q, 60)
         .orderBy("__time_bucket")
         .select("value").as[Double].collect().toSeq
-    // minute 1 per-series rates: a 30/60=0.5, b 6/60=0.1
-    assert(run("avg(rate(req[1m]))") == Seq(0.0, 0.3))
-    assert(run("max(rate(req[1m]))") == Seq(0.0, 0.5))
-    assert(run("min(rate(req[1m]))") == Seq(0.0, 0.1))
-    assert(run("count(rate(req[1m]))") == Seq(2.0, 2.0))
-    assert(run("sum(increase(req[1m]))") == Seq(0.0, 36.0))
+    // per-series rates: a 0.5, b 0.1
+    assert(run("avg(rate(req[2m]))") == Seq(0.3))
+    assert(run("max(rate(req[2m]))") == Seq(0.5))
+    assert(run("min(rate(req[2m]))") == Seq(0.1))
+    assert(run("count(rate(req[2m]))") == Seq(2.0))
+    assert(run("sum(increase(req[2m]))") == Seq(72.0))
   }
 
   test("avg over a gauge averages per-series last values") {
@@ -197,23 +200,20 @@ class PromQlSpec extends SparkSpec {
     val scaled = PromQl.eval(frame, "sum(err) * 2 + 5", 3600)
       .select("value").as[Double].collect().toSeq
     assert(scaled == Seq(25.0))
-    // rate * step == increase (tumbling chart semantics)
-    val inc = PromQl.eval(counters, "rate(requests_total[1m]) * 60", 60,
-      prometheusRate = false)
-      .orderBy("__time_bucket").select("value").as[Double].collect().toSeq
-    assert(inc == Seq(0.0, 60.0, 0.0))
-  }
-
-  test("tumbling rate/increase (prometheusRate=false) over a reset") {
-    // per-minute buckets: deltas 0, +60, reset→0 (clamp)
-    val inc = PromQl.eval(counters, "increase(requests_total[1m])", 60,
-      prometheusRate = false)
-      .orderBy("__time_bucket").select("value").as[Double].collect().toSeq
-    assert(inc == Seq(0.0, 60.0, 0.0))
-    val rate = PromQl.eval(counters, "rate(requests_total[1m])", 60,
-      prometheusRate = false)
-      .orderBy("__time_bucket").select("value").as[Double].collect().toSeq
-    assert(rate == Seq(0.0, 1.0, 0.0)) // 60 per 60s → 1/s
+    // rate × step == increase when the range is one step. At step 2m
+    // the only window holding two samples is eval t = 00:02 (window
+    // (0, 2m], label 00:00), and it spans the counter reset:
+    // 160 @00:01, 20 @00:02 → monotonicized 160, 180 (delta=20);
+    // n=2, sampled=60, avgInterval=60, threshold=66; startGap=60
+    // (zero-crossing 60·160/20=480 caps nothing) → full; endGap=0 →
+    // increase = 20·(60+60)/60 = 40, rate = 40/120
+    val inc = PromQl.eval(counters, "increase(requests_total[2m])", 120)
+      .select("value").as[Double].collect().toSeq
+    assert(inc == Seq(40.0))
+    val scaledRate = PromQl.eval(counters,
+      "rate(requests_total[2m]) * 120", 120)
+      .select("value").as[Double].collect().toSeq
+    assert(scaledRate == Seq(40.0))
   }
 
   test("parser: topk, offset, histogram_quantile, *_over_time") {

@@ -59,6 +59,30 @@ class ClassifierSpec extends SparkSpec {
     assert(again == s(10L))
   }
 
+  test("logCountRatio's model is a local table: clearCache between " +
+      "training and scoring leaves the scores unchanged") {
+    val labeled = Seq(
+      (1L, "spark shuffle partition executor", 1),
+      (2L, "spark partition spark memory", 1),
+      (3L, "oven butter sugar flour", 0),
+      (4L, "recipe oven sugar", 0)).toDF("id", "text", "y")
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    val m = Classifier.logCountRatio(labeled, "id", "text", "y", B)
+    // the feature frame is released; the weights carry no lineage
+    assert(sc.getPersistentRDDs.size <= cachedBefore)
+    assert(m.weights.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val corpus = Seq((10L, "spark executor shuffle"),
+      (11L, "butter flour recipe")).toDF("id", "text")
+    def scores() = Classifier.score(corpus, "id", "text", m)
+      .as[(Long, Double)].collect().toMap
+    val before = scores()
+    spark.catalog.clearCache()
+    assert(scores() == before)
+    assert(sc.getPersistentRDDs.size <= cachedBefore)
+  }
+
   test("logCountRatio refuses a single-class frame, loudly") {
     val e = intercept[IllegalArgumentException] {
       Classifier.logCountRatio(

@@ -218,46 +218,47 @@ class DedupSpec extends SparkSpec {
     assert(pairsS.contains(("doc-10", "doc-1")), pairsS.toString)
   }
 
-  test("broadcastNew micro-batch hint: identical pairs and keep-set, " +
-      "kept side joins broadcast; pre-sz stores fall back; a mixed " +
-      "sz store is refused loudly") {
+  test("broadcast band join of a small batch: identical pairs and " +
+      "keep-set, kept side joins broadcast; pre-sz stores fall back; a " +
+      "mixed sz store is refused loudly") {
     val kept = base.toDF("doc_id", "text")
     val batch = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank"),
       (11L, "a genuinely novel document about streaming watermarks and state"))
       .toDF("doc_id", "text")
     val store = Dedup.signatureStore(kept, "doc_id", "text", k = 16)
-    def pairs(s: org.apache.spark.sql.DataFrame, bn: Boolean) =
+    def pairs(s: org.apache.spark.sql.DataFrame) =
       Dedup.crossCorpusPairsFromStore(batch, "doc_id", "text", s,
-        k = 16, bands = 8, minJaccard = 0.5, broadcastNew = bn)
-    val plain = pairs(store, bn = false)
-      .select("new_id", "kept_id", "est_jaccard", "jaccard")
-      .as[(Long, Long, Double, Double)].collect().toSet
-    val hinted = pairs(store, bn = true)
-    assert(hinted.select("new_id", "kept_id", "est_jaccard", "jaccard")
-      .as[(Long, Long, Double, Double)].collect().toSet == plain)
+        k = 16, bands = 8, minJaccard = 0.5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("new_id", "kept_id", "est_jaccard", "jaccard")
+        .as[(Long, Long, Double, Double)].collect().toSet
+    // the shuffled path: the batch above the byte gate's cap
+    spark.conf.set(Sizing.MaxBroadcastBatchBytesKey, "1")
+    val plain = try rows(pairs(store))
+      finally spark.conf.unset(Sizing.MaxBroadcastBatchBytesKey)
+    val hinted = pairs(store)
+    assert(rows(hinted) == plain)
     assert(plain.nonEmpty)
-    // the hint turns every kept-side join broadcast — the store is
-    // never exchanged (no SortMergeJoin should touch it)
+    // the small batch broadcasts its band rows — the store is never
+    // exchanged (no SortMergeJoin should touch it)
     val plan = hinted.queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode)
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     // keep-set parity through dedupAgainstStore too
     assert(Dedup.dedupAgainstStore(batch, "doc_id", "text", store,
-        k = 16, bands = 8, minJaccard = 0.5, broadcastNew = true)
+        k = 16, bands = 8, minJaccard = 0.5)
       .select("doc_id").as[Long].collect().toSet == Set(11L))
     // a store written before the sz column existed answers identically
     // (the band stage falls back to size(sh))
     val preSz = store.drop("sz")
-    assert(pairs(preSz, bn = true)
-      .select("new_id", "kept_id", "est_jaccard", "jaccard")
-      .as[(Long, Long, Double, Double)].collect().toSet == plain)
+    assert(rows(pairs(preSz)) == plain)
     // …but MIXING pre-sz rows into an sz store silently un-prunes
     // those rows and leaves the schema footer-sampling-ambiguous —
     // the width-guard pass refuses it loudly instead
     val mixed = store.unionByName(
       preSz.withColumn("sz", lit(null).cast("int")))
-    val ex = intercept[IllegalArgumentException](pairs(mixed, bn = true))
+    val ex = intercept[IllegalArgumentException](pairs(mixed))
     assert(ex.getMessage.contains("Manifest.rebuild"), ex.getMessage)
   }
 
