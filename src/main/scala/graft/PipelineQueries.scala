@@ -3688,9 +3688,9 @@ object PipelineQueries {
   /** [[Snapshots.applyChangesetBucketed]] — the SAME changeset
     * synthesis (and oracle) as q155, routed through bucketed tables:
     * the full-outer payload join reads co-bucketed sides with zero
-    * exchange and zero sort (plan pinned in SnapshotsSpec; shuffle
-    * delta measured in BucketedProbe). Proving value-identity through
-    * the bucketed path is the point of the gate. */
+    * exchange and zero sort (plan pinned in SnapshotsSpec). Proving
+    * value-identity through the bucketed path is the point of the
+    * gate. */
   def q160_bucketed_changeset(spark: SparkSession, dir: String)
       : DataFrame = {
     val base = docs(spark, dir).select("doc_id", "text")

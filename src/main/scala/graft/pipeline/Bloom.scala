@@ -46,7 +46,7 @@ object Bloom {
 
   /** Build the bitmap from (h1, h2) hash pairs. `bitsPerKey`=12 with
     * 5 hashes ≈ 0.3% false positives. */
-  private[graft] def buildBits(hashes: Array[(Long, Long)],
+  private[pipeline] def buildBits(hashes: Array[(Long, Long)],
       bitsPerKey: Int, numHashes: Int): Array[Long] = {
     val mBits = math.max(64L, hashes.length.toLong * bitsPerKey)
     val words = new Array[Long](((mBits + 63) / 64).toInt)
@@ -62,7 +62,7 @@ object Bloom {
     * would carry the array through every copy/canonicalize/toString,
     * so the big-filter path (the module's 150 MB-at-10⁸-grams design
     * point) rides a broadcast variable instead. */
-  private[graft] val literalMaxWords: Int = 1 << 20
+  private[pipeline] val literalMaxWords: Int = 1 << 20
 
   /** Membership test: AND of k double-hashed bit probes. `h1`/`h2`
     * must be the same xxhash64 spellings the builder used. Small
@@ -72,7 +72,7 @@ object Bloom {
     * release handle destroys that broadcast (noop on the literal
     * path) — call it AFTER the consuming action, the standard
     * Releasable contract. */
-  private[graft] def mightContainReleasable(df: DataFrame,
+  private[pipeline] def mightContainReleasable(df: DataFrame,
       bits: Array[Long], h1: Column, h2: Column, numHashes: Int,
       maxLiteralWords: Int = literalMaxWords)
       : (Column, () => Unit) = {

@@ -45,7 +45,7 @@ object Curation {
     * Dedup.shingles) runs its lambdas interpreted and re-evaluates the
     * tokenizer per gram element; this kernel tokenizes once per row (the
     * md5ShingleFrame precedent). Ids must be integral (cast to long). */
-  private[graft] def distinctGramFrame(df: DataFrame, idCol: String,
+  private[pipeline] def distinctGramFrame(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._

@@ -565,13 +565,33 @@ object Dedup {
     * kept-side reshuffle. Both band explodes ship only (id, size);
     * signatures and shingles re-attach per-id AFTER the narrow pair
     * dedupe, exactly like [[minhashLsh]] — the 100-TB kept text never
-    * enters the join. */
+    * enters the join.
+    *
+    * Eager: the verified pairs are collected into a driver-local
+    * relation while the plan is built, so that the two persisted
+    * signature frames are released before it returns. The collect is
+    * bounded — more than 2^20 verified pairs fail with the contract
+    * message instead of filling the driver; near-dup cliques multiply
+    * (c new × c' kept clones → c·c' rows), so collapse contents first
+    * ([[dedupAgainst]] does) or match against a [[signatureStore]]
+    * ([[crossCorpusPairsFromStore]] stays distributed). */
   def crossCorpusPairs(newDf: DataFrame, keptDf: DataFrame,
       idCol: String, textCol: String, k: Int = 16, bands: Int = 8,
-      shingleN: Int = 3, minJaccard: Double = 0.7): DataFrame = {
+      shingleN: Int = 3, minJaccard: Double = 0.7): DataFrame =
+    boundedCrossPairs(newDf, keptDf, idCol, textCol, k, bands,
+      shingleN, minJaccard, MaxCrossPairs)
+
+  /** Row cap of [[crossCorpusPairs]]' driver-local result. */
+  private val MaxCrossPairs: Int = 1 << 20
+
+  /** [[crossCorpusPairs]] with its row cap as a parameter (DedupSpec
+    * trips a small one). */
+  private[pipeline] def boundedCrossPairs(newDf: DataFrame,
+      keptDf: DataFrame, idCol: String, textCol: String, k: Int,
+      bands: Int, shingleN: Int, minJaccard: Double,
+      maxPairs: Int): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     import org.apache.spark.storage.StorageLevel
-    val rows = k / bands
     val (newL, newMap) = longIds(newDf, idCol)
     val (keptL, keptMap) = longIds(keptDf, idCol)
     // both signature frames feed three branches each (band explode, sig
@@ -582,8 +602,19 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val verified = crossPairsFromSigs(newSig, keptSig, k, bands,
       minJaccard, broadcastBatch = false)
-    restoreIds(restoreIds(verified, newMap, Seq("new_id")),
+    val pairs = restoreIds(restoreIds(verified, newMap, Seq("new_id")),
       keptMap, Seq("kept_id"))
+    // a lazy plan over the persisted frames would keep them cached for
+    // the life of the session; one limited collect both bounds the
+    // driver rows and detects the overflow
+    val got = try pairs.limit(maxPairs + 1).collect()
+      finally { newSig.unpersist(); keptSig.unpersist() }
+    require(got.length <= maxPairs,
+      s"crossCorpusPairs verified more than $maxPairs pairs — collapse " +
+        "duplicate contents first (dedupAgainst) or match against a " +
+        "signatureStore (crossCorpusPairsFromStore)")
+    pairs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(got: _*), pairs.schema)
   }
 
   /** The NEW×KEPT band-join core shared by [[crossCorpusPairs]] and
@@ -727,11 +758,27 @@ object Dedup {
     * batch under [[Sizing.broadcastableBatch]]'s byte cap broadcasts,
     * anything larger (or of unknown size) sort-merge joins. Persist
     * and materialize a streamed batch first so the gate reads its
-    * measured size rather than an estimate. */
+    * measured size rather than an estimate.
+    *
+    * Nothing is cached: the batch's signature frame is recomputed for
+    * each branch that reads it (batch-local hashing; a persisted frame
+    * would outlive the returned lazy plan). The streaming loop hashes
+    * once through [[dedupAgainstStoreReleasable]] instead. */
   def crossCorpusPairsFromStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true): DataFrame = {
+      checkWidths: Boolean = true): DataFrame =
+    pairsFromStore(newDf, idCol, textCol, store, k, bands, shingleN,
+      minJaccard, checkWidths, cacheSig = false)._1
+
+  /** [[crossCorpusPairsFromStore]]'s body. With `cacheSig` the batch's
+    * signature frame is persisted once for the band join and both
+    * re-attaches, and the handle unpersists it — call it after the
+    * consuming action; without, the handle is a noop. */
+  private def pairsFromStore(newDf: DataFrame, idCol: String,
+      textCol: String, store: DataFrame, k: Int, bands: Int,
+      shingleN: Int, minJaccard: Double, checkWidths: Boolean,
+      cacheSig: Boolean): (DataFrame, () => Unit) = {
     require(k % bands == 0, "k must be divisible by bands")
     require(Set(idCol, "sig", "sh").subsetOf(store.columns.toSet),
       s"signature store must carry ($idCol, sig, sh); " +
@@ -773,16 +820,18 @@ object Dedup {
           }
         }
     }
-    import org.apache.spark.storage.StorageLevel
     val (newL, newMap) = longIds(newDf, idCol)
-    val newSig = shingleMinhash(newL, idCol, textCol, shingleN, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sig = shingleMinhash(newL, idCol, textCol, shingleN, k)
+    val newSig = if (cacheSig)
+      sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else sig
     val keptCols = Seq(col(idCol).as("id"), col("sh"), col("sig")) ++
       (if (hasSz) Seq(col("sz")) else Nil)
     val keptSig = store.select(keptCols: _*)
-    restoreIds(crossPairsFromSigs(newSig, keptSig, k, bands,
+    (restoreIds(crossPairsFromSigs(newSig, keptSig, k, bands,
       minJaccard, Sizing.broadcastableBatch(newDf)), newMap,
-      Seq("new_id"))
+      Seq("new_id")),
+      () => if (cacheSig) { newSig.unpersist(); () })
   }
 
   /** Keep exactly the new-batch docs with NO verified near-dup in the
@@ -804,20 +853,40 @@ object Dedup {
   def dedupAgainstStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true): DataFrame = {
+      checkWidths: Boolean = true): DataFrame =
+    againstStore(newDf, idCol, textCol, store, k, bands, shingleN,
+      minJaccard, checkWidths, cacheSig = false)._1
+
+  /** [[dedupAgainstStore]] for a caller that consumes the survivors in
+    * one scope, the streaming ingest loop: the batch's signature frame
+    * is hashed once and cached for the band join and both re-attaches
+    * (the unpersisted twin hashes it once per branch — two or three
+    * times), and the handle releases it. Call the handle after the
+    * last action that reads the survivors. */
+  private[graft] def dedupAgainstStoreReleasable(newDf: DataFrame,
+      idCol: String, textCol: String, store: DataFrame, k: Int,
+      bands: Int, shingleN: Int, minJaccard: Double,
+      checkWidths: Boolean): (DataFrame, () => Unit) =
+    againstStore(newDf, idCol, textCol, store, k, bands, shingleN,
+      minJaccard, checkWidths, cacheSig = true)
+
+  private def againstStore(newDf: DataFrame, idCol: String,
+      textCol: String, store: DataFrame, k: Int, bands: Int,
+      shingleN: Int, minJaccard: Double, checkWidths: Boolean,
+      cacheSig: Boolean): (DataFrame, () => Unit) = {
     val newKeyed = newDf
       .select(col(idCol), md5(col(textCol)).as("__ck"))
     val newReps = newKeyed.groupBy(col("__ck"))
       .agg(min(col(idCol)).as("__rep"))
     val newRepDocs = newDf.join(
       newReps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi")
-    val matchedRep = crossCorpusPairsFromStore(newRepDocs, idCol,
-      textCol, store, k, bands, shingleN, minJaccard, checkWidths)
-      .select(col("new_id").as("__rep")).distinct()
+    val (pairs, release) = pairsFromStore(newRepDocs, idCol, textCol,
+      store, k, bands, shingleN, minJaccard, checkWidths, cacheSig)
+    val matchedRep = pairs.select(col("new_id").as("__rep")).distinct()
     val matchedIds = newKeyed
       .join(newReps.join(matchedRep, "__rep"), "__ck")
       .select(col(idCol))
-    newDf.join(matchedIds, Seq(idCol), "left_anti")
+    (newDf.join(matchedIds, Seq(idCol), "left_anti"), release)
   }
 
   /** ONE step of the continuous-ingest lifecycle: dedup a new batch

@@ -32,7 +32,12 @@ object Dsir {
   /** (id, bucket, cnt): hashed unigram+bigram counts per document, one
     * tokenizer pass per row, counts pre-aggregated in-kernel so the
     * downstream exchange is bounded by min(grams, buckets) rows per doc.
-    * Ids must be integral (cast to long). */
+    * Ids must be integral (cast to long).
+    *
+    * `buckets` must be at most 4Mi (`1 << 22`); larger values are
+    * rejected. Every task allocates one dense count array of
+    * 8·`buckets` bytes, whatever its input size: 32 MB per task at the
+    * cap, times the number of concurrent tasks. */
   def hashedFeatures(df: DataFrame, idCol: String, textCol: String,
       buckets: Int): DataFrame = {
     require(buckets > 0, "buckets must be positive")

@@ -77,11 +77,9 @@ object Snapshots {
   }
 
   /** Audit + project the two changeset-join sides: base payloads as
-    * `__b_*`, changeset as validated `__op` + `__c_*` payloads.
-    * Package-visible so BucketedProbe measures the plain and bucketed
-    * twins symmetrically (join only — audit and derivation outside
-    * the timed passes). */
-  private[graft] def changesetSides(base: DataFrame, changes: DataFrame,
+    * `__b_*`, changeset as validated `__op` + `__c_*` payloads. Shared
+    * by the plain and the bucketed apply, so both join the same sides. */
+  private def changesetSides(base: DataFrame, changes: DataFrame,
       idCol: String, opCol: String, payloadCols: Seq[String])
       : (DataFrame, DataFrame) = {
     require(payloadCols.nonEmpty, "applyChangeset needs payload columns")
@@ -110,7 +108,7 @@ object Snapshots {
 
   /** Fold the joined sides into the applied snapshot (deletes drop,
     * upserts take the changeset payload, untouched rows keep base). */
-  private[graft] def mergeChangeset(joined: DataFrame, idCol: String,
+  private def mergeChangeset(joined: DataFrame, idCol: String,
       payloadCols: Seq[String]): DataFrame =
     joined
       .filter(col("__op").isNull || col("__op") =!= "d")

@@ -15,20 +15,24 @@ import graft.pipeline.Manifest
   *
   *  - ''partition count'': every accreted manifest generation costs
   *    the store read a file listing and a tiny-file task — the
-  *    measured source of the per-batch wall drift (`ingest_store`:
-  *    2.06→2.44 s over 40 batches). One manifest read to evaluate.
+  *    measured source of the per-batch wall drift (2.06→2.44 s over 40
+  *    batches, SCALE.md). One manifest read to evaluate.
   *  - ''wall drift'': the recent per-batch wall over the early-run
   *    baseline — the symptom itself, caught even when partition
   *    count alone under-predicts it (skewed batch sizes, small-file
   *    pressure). The caller supplies both samples; the policy keeps
   *    no state.
   *
-  * The `ingest_policy` StreamLoadProbe scenario drives ≥80 batches
-  * with the POLICY (not a hard-coded midpoint) triggering compaction
-  * and records the wall curve staying flat. At 100 TB the same two
-  * signals scale: generation count is a manifest read, and per-batch
-  * wall is already on every streaming progress event. */
+  * IngestLifecycleSpec lets the policy (not a hard-coded midpoint)
+  * decide at every restart of a stream; SCALE.md keeps the measured
+  * wall curve of an 80-batch run. At 100 TB the same two signals
+  * scale: generation count is a manifest read, and per-batch wall is
+  * already on every streaming progress event. */
 object CompactionPolicy {
+
+  /** The drift arm fires when mean(recent)/mean(baseline) exceeds
+    * this. */
+  val MaxDrift: Double = 1.3
 
   /** What [[evaluate]] decided and why — `reason` is empty when no
     * trigger fired. */
@@ -50,15 +54,13 @@ object CompactionPolicy {
     *   store read can absorb)
     * @param recentWalls  newest per-batch wall samples (seconds)
     * @param baselineWalls early-run wall samples from AFTER the last
-    *   compaction (or run start)
-    * @param maxDrift compact when mean(recent)/mean(baseline)
-    *   exceeds this; samples sized < 3 never fire the drift arm
-    *   (two noisy walls shouldn't schedule a corpus-wide rewrite) */
+    *   compaction (or run start); the drift arm compares the means
+    *   against [[MaxDrift]], and samples sized < 3 never fire it (two
+    *   noisy walls shouldn't schedule a corpus-wide rewrite) */
   def evaluate(spark: SparkSession, storeDir: String, outDir: String,
       maxPartitions: Int = 64,
       recentWalls: Seq[Double] = Nil,
-      baselineWalls: Seq[Double] = Nil,
-      maxDrift: Double = 1.3): Decision = {
+      baselineWalls: Seq[Double] = Nil): Decision = {
     val parts = math.max(generations(spark, storeDir),
       generations(spark, outDir))
     val drift =
@@ -68,8 +70,8 @@ object CompactionPolicy {
     val reasons = Seq(
       if (parts > maxPartitions)
         Some(s"partitions $parts > $maxPartitions") else None,
-      if (drift > maxDrift)
-        Some(f"wall drift $drift%.2fx > $maxDrift%.2fx") else None
+      if (drift > MaxDrift)
+        Some(f"wall drift $drift%.2fx > $MaxDrift%.2fx") else None
     ).flatten
     Decision(reasons.nonEmpty, parts, drift, reasons.mkString("; "))
   }

@@ -50,7 +50,7 @@ object HeavyHittersStream {
     * deterministic-minimum eviction. TreeSet entries are removed
     * BEFORE their slot mutates and re-added after — the comparator
     * reads the live arrays. */
-  private[graft] final class Summary(capacity: Int) {
+  private[streaming] final class Summary(capacity: Int) {
     private val keys = new mutable.ArrayBuffer[String](capacity)
     private val counts = new mutable.ArrayBuffer[Long](capacity)
     private val errs = new mutable.ArrayBuffer[Long](capacity)

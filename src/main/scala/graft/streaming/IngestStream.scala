@@ -44,13 +44,13 @@ import graft.pipeline.{Dedup, Manifest}
   * entirely in the store parquet, not the state store — the streaming
   * checkpoint carries only source offsets, so recovery cost is
   * independent of corpus size. Per-batch wall therefore grows with the
-  * STORE (the `ingest_store` StreamLoadProbe scenario measures the
-  * curve), and the layout accretes one generation per batch: COMPACT
-  * periodically with [[compactManifest]] (stop the query, compact,
-  * restart — any id-disjoint union of the same rows is equivalent to
-  * the band join; CompactionSpec proves keep/drop equivalence, and the
-  * `ingest_compact` probe scenario measures the per-batch wall
-  * dropping back after the generation count resets). Keep/drop is
+  * STORE (perfbench's batch `ingest_stream` job reports it as
+  * `stream.add_batch_ms`), and the layout accretes one generation per
+  * batch: COMPACT periodically with [[compactManifest]] (stop the
+  * query, compact, restart — any id-disjoint union of the same rows is
+  * equivalent to the band join; CompactionSpec proves keep/drop
+  * equivalence, and IngestLifecycleSpec checks it composed with
+  * retraction and rebuild across restarts). Keep/drop is
   * vs-store only ([[graft.pipeline.Dedup.dedupAgainstStore]]'s
   * contract); run a batch [[graft.pipeline.Dedup.minhashLsh]] pass over
   * outDir later if within-batch duplicates matter. */
@@ -100,10 +100,12 @@ object IngestStream {
         // this query's lifetime (it would catch a foreign-k store dir,
         // or a pre-`sz` store mixed with new appends), then skip:
         // every later generation is this loop's own append under the
-        // same k
-        val survivors = Dedup.dedupAgainstStore(batch, idCol, textCol,
-            store, k, bands, shingleN, minJaccard,
-            checkWidths = validated.compareAndSet(false, true))
+        // same k. The batch's signature frame is cached for the band
+        // join and released with the survivors after the two commits
+        val (matched, releaseSig) = Dedup.dedupAgainstStoreReleasable(
+          batch, idCol, textCol, store, k, bands, shingleN, minJaccard,
+          checkWidths = validated.compareAndSet(false, true))
+        val survivors = matched
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           outM.append(survivors, batchId)
@@ -120,7 +122,7 @@ object IngestStream {
             if (store.columns.contains("sz")) sigRows
             else sigRows.drop("sz"),
             batchId)
-        } finally survivors.unpersist()
+        } finally { survivors.unpersist(); releaseSig() }
       } finally batch.unpersist()
       ()
     }
@@ -204,17 +206,16 @@ object IngestStream {
   /** The policy-gated maintenance step for the stop/restart boundary:
     * evaluate [[CompactionPolicy]] and run [[compactManifest]] only
     * when it fires — one call for the cadence loop a deployment runs
-    * between stop() and the next [[startManifest]] (the
-    * `ingest_policy` probe drives exactly this decision). Returns the
+    * between stop() and the next [[startManifest]]
+    * (IngestLifecycleSpec drives it at every restart). Returns the
     * decision so the caller can log WHY. */
   def maybeCompact(spark: SparkSession, storeDir: String,
       outDir: String, checkpointDir: String,
       maxPartitions: Int = 64,
       recentWalls: Seq[Double] = Nil,
-      baselineWalls: Seq[Double] = Nil,
-      maxDrift: Double = 1.3): CompactionPolicy.Decision = {
+      baselineWalls: Seq[Double] = Nil): CompactionPolicy.Decision = {
     val d = CompactionPolicy.evaluate(spark, storeDir, outDir,
-      maxPartitions, recentWalls, baselineWalls, maxDrift)
+      maxPartitions, recentWalls, baselineWalls)
     if (d.compact)
       compactManifest(spark, storeDir, outDir, checkpointDir)
     d

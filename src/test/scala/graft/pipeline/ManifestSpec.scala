@@ -75,11 +75,15 @@ class ManifestSpec extends SparkSpec {
       100L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa xx",
       103L -> "a genuinely novel document mentioning nothing seen before now")
       .toDF("doc_id", "text")
-    def keeps(): Set[Long] =
-      Dedup.dedupAgainstStore(probe, "doc_id", "text", store(),
+    def keepsAgainst(s: DataFrame): Set[Long] =
+      Dedup.dedupAgainstStore(probe, "doc_id", "text", s,
         minJaccard = 0.5).select("doc_id").as[Long].collect().toSet
+    def keeps(): Set[Long] = keepsAgainst(store())
     val rowsBefore = sortedRows(store())
     assert(keeps() == Set(103L))
+    // the three-generation manifest read keeps what the plain frame of
+    // the same rows keeps
+    assert(keepsAgainst(sigs(corpus)) == keeps())
 
     Manifest.compact(spark, dir)
     val st = Manifest.state(spark, dir)

@@ -163,6 +163,29 @@ class DedupSpec extends SparkSpec {
     assert(s2 == Set(11L, 13L), s2.toString)
   }
 
+  test("crossCorpusPairs collects at most its pair cap: a clique " +
+      "product over the cap fails with the contract message, and both " +
+      "outcomes release the signature frames") {
+    val text = "the quick brown fox jumps over the lazy dog near the river bank"
+    // 3 new clones × 3 kept clones = 9 verified pairs
+    val batch = (10L to 12L).map(i => (i, text)).toDF("doc_id", "text")
+    val kept = (1L to 3L).map(i => (i, text)).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val firstId = sc.parallelize(Seq(0)).id
+    def cachedSince(): Int = sc.getPersistentRDDs.keys.count(_ > firstId)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.boundedCrossPairs(batch, kept, "doc_id", "text", 16, 8, 3,
+        0.7, maxPairs = 8)
+    }
+    assert(e.getMessage.contains("more than 8 pairs"), e.getMessage)
+    assert(cachedSince() == 0)
+    val at = Dedup.boundedCrossPairs(batch, kept, "doc_id", "text", 16,
+      8, 3, 0.7, maxPairs = 9)
+    assert(cachedSince() == 0)
+    assert(at.select("new_id", "kept_id").as[(Long, Long)].collect()
+      .toSet == (for (n <- 10L to 12L; k <- 1L to 3L) yield (n, k)).toSet)
+  }
+
   test("signature store: the parquet round-trip answers the identical " +
       "pair set as the text path, k mismatch fails loudly, string ids " +
       "come back original") {

@@ -58,13 +58,13 @@ class CompactionPolicySpec extends SparkSpec {
     val d3 = CompactionPolicy.evaluate(spark, store, s"$root/out",
       maxPartitions = 8,
       recentWalls = Seq(2.0, 2.0, 2.0),
-      baselineWalls = Seq(1.0, 1.0, 1.0), maxDrift = 1.3)
+      baselineWalls = Seq(1.0, 1.0, 1.0))
     assert(d3.compact && d3.drift > 1.9 && d3.reason.contains("drift"))
     // fewer than 3 samples on either side: the drift arm stays quiet
     val d4 = CompactionPolicy.evaluate(spark, store, s"$root/out",
       maxPartitions = 8,
       recentWalls = Seq(9.0, 9.0),
-      baselineWalls = Seq(1.0, 1.0, 1.0), maxDrift = 1.3)
+      baselineWalls = Seq(1.0, 1.0, 1.0))
     assert(!d4.compact && d4.drift == 1.0)
   }
 }

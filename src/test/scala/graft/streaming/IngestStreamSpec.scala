@@ -160,4 +160,35 @@ class IngestStreamSpec extends SparkSpec {
       .filter(col("batch") === 1L)
       .select("doc_id").as[Long].collect().toSet == Set(21L))
   }
+
+  test("micro-batches cache nothing past their own commits: the " +
+      "persisted-RDD count stays flat across the stream") {
+    val root = Files.createTempDirectory("ingest_flat").toString
+    Manifest.append(spark, s"$root/store", Dedup.signatureStore(Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text"), "doc_id", "text"), -1L)
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val sc = spark.sparkContext
+    // only RDDs this stream persists count: other suites' cached
+    // frames on the shared session are older (lower ids)
+    val firstId = sc.parallelize(Seq(0)).id
+    def cachedByStream(): Int = sc.getPersistentRDDs.keys.count(_ > firstId)
+    val q = IngestStream.startManifest(mem.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", s"$root/store", s"$root/out", s"$root/ckpt")
+    val counts = try (0 until 5).map { b =>
+      mem.addData((0 until 20).map { j =>
+        val id = 100L * (b + 1) + j
+        // every 4th doc re-sends seed doc 1 (dropped by the match)
+        if (j % 4 == 0)
+          (id, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
+        else (id, (0 until 12).map(w => s"w${id * 12 + w}").mkString(" "))
+      })
+      q.processAllAvailable()
+      cachedByStream()
+    } finally q.stop()
+    assert(counts.forall(_ == counts.head), counts.mkString(", "))
+    assert(Manifest.rows(spark, s"$root/out").count() == 75L)
+  }
 }

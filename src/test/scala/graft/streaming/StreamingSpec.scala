@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -134,6 +135,46 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.read.parquet(s"$dir/out")
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(rows == Seq(1L, 5L), rows.toString)
+  }
+
+  test("dedupStream state stops growing at the watermark horizon; a " +
+      "plain dropDuplicates fed the same input keeps growing") {
+    implicit val sc = spark.sqlContext
+    // event time advances 30 s per micro-batch against a 60 s
+    // watermark; 35 of each batch's 50 rows are fresh keys, 15 repeat
+    // a fresh key of the batch before. No-data batches are off so
+    // eviction runs inside each data batch and every reading is the
+    // state after exactly that batch.
+    val (batches, perBatch, fresh) = (20, 50, 35)
+    def rows(b: Int): Seq[(Timestamp, String)] = (0 until perBatch).map { j =>
+      val base = b.toLong * perBatch
+      val key = if (j % 10 < 7) base + j else math.max(0L, base - perBatch + j - 7)
+      (new Timestamp(1700000000000L + b * 30000L + j * 30000L / perBatch),
+        s"k-$key")
+    }
+    def stateRows(dedup: DataFrame => DataFrame): Seq[Long] = {
+      val mem = MemoryStream[(Timestamp, String)]
+      val q = dedup(mem.toDF().toDF("ts", "key")).writeStream
+        .format("noop").outputMode("update")
+        .option("checkpointLocation", java.nio.file.Files
+          .createTempDirectory("dd_state").toString)
+        .start()
+      try (0 until batches).map { b =>
+        mem.addData(rows(b))
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      } finally q.stop()
+    }
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val (watermarked, plain) = try (
+      stateRows(Streaming.dedupStream(_, "ts", Seq("key"), "60 seconds")),
+      stateRows(_.dropDuplicates("key")))
+    finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    // the horizon (60 s watermark delay + 60 s expiry) spans about
+    // five batches; past it the state holds steady
+    assert(watermarked.drop(8).forall(_ <= watermarked(7)),
+      watermarked.mkString(", "))
+    assert(plain == (1 to batches).map(_.toLong * fresh), plain.mkString(", "))
   }
 
   test("sessionRollup merges events into gap-bounded sessions") {
