@@ -19,8 +19,8 @@ verdict:
   unresolved  the base's own runs spread wider than the bound, so the
               medians cannot tell.
 
-It also prints every run's `correct` flag, failed-operation count and steal,
-and, for batch, the per-job median times.
+It also prints every run's end-to-end values, `correct` flag,
+failed-operation count and steal, and, for batch, the per-job median times.
 
   python3 scripts/ab.py --ref HEAD~1 --into /tmp/ab-base --pairs 5
 """
@@ -109,9 +109,14 @@ def main():
                 res, notes = run_bench(sides[side], wl,
                                        bench["run_seconds"])
                 runs[side].append((res, notes))
+                vals = " ".join(
+                    f"{m['name']}={res['metrics'][m['name']]['value']:.2f}"
+                    for m in bench["end_to_end"]
+                    if m["name"] in res["metrics"])
                 print(f"[{wl}] pair {i + 1} {side}: correct={res['correct']} "
                       f"failed={res['failed']}/{res['attempted']} "
-                      f"steal={notes.get('steal_pct', '?')}%", flush=True)
+                      f"steal={notes.get('steal_pct', '?')}% {vals}",
+                      flush=True)
         print(f"\n== {wl}: {a.pairs} pairs, medians base -> change")
         for m in bench["end_to_end"]:
             name = m["name"]

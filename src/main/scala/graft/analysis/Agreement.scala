@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Inter-annotator / label-source agreement — the training-data QA
@@ -28,37 +28,39 @@ object Agreement {
     *
     * Scale shape: one hash aggregate collapses the corpus to the
     * (label_a, label_b) contingency table — vocabulary² cells at
-    * most, map-side combined; marginals and totals are re-aggregates
-    * of those cells, so corpus rows shuffle exactly once. Leaves the
-    * cell cache to the session; long-lived services use
-    * [[cohenKappaReleasable]] (the [[Slo.burnRatesReleasable]]
-    * convention). */
+    * most, map-side combined; each cell then splits into its A-side
+    * and B-side label rows (a tagged explode), one label-keyed
+    * aggregate gives both marginals, and a one-row aggregate over the
+    * labels gives n, agree and S — one chain, so corpus rows shuffle
+    * exactly once and nothing is cached. */
   def cohenKappa(df: DataFrame, aCol: String, bCol: String)
-      : DataFrame =
-    cohenKappaReleasable(df, aCol, bCol)._1
-
-  /** [[cohenKappa]] plus a release handle that unpersists the
-    * contingency-cell cache — call it after the consuming action. */
-  def cohenKappaReleasable(df: DataFrame, aCol: String, bCol: String)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).cast("string").as("__a"),
         col(bCol).cast("string").as("__b"))
       .groupBy("__a", "__b").agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // a cell's agreement count rides its A-side row only, so the
+    // label sums add up to the table's diagonal exactly once
+    def side(label: String, na: Column, nb: Column, agree: Column) =
+      struct(col(label).as("l"), na.as("na"), nb.as("nb"),
+        agree.as("agree"))
     val dec = "decimal(38,0)"
-    val totals = cells.agg(
-      sum(col("__c")).cast(dec).as("n"),
-      sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L))
-        .cast(dec).as("agree"))
-    val ma = cells.groupBy("__a").agg(sum(col("__c")).as("__na"))
-    val mb = cells.groupBy("__b").agg(sum(col("__c")).as("__nb"))
-    // only labels both sources use contribute to chance agreement
-    val s = ma.join(mb, col("__a") === col("__b"))
-      .agg(coalesce(sum(col("__na").cast(dec) * col("__nb")), lit(0)
-        .cast(dec)).as("__s"))
-    val out = totals.crossJoin(s)
+    val marginals = cells
+      .select(explode(array(
+        side("__a", col("__c"), lit(0L),
+          when(col("__a") === col("__b"), col("__c")).otherwise(0L)),
+        side("__b", lit(0L), col("__c"), lit(0L)))).as("__s"))
+      .groupBy(col("__s.l"))
+      .agg(sum(col("__s.na")).as("__na"), sum(col("__s.nb")).as("__nb"),
+        sum(col("__s.agree")).as("__ag"))
+    // a label only one source uses has a zero marginal on the other
+    // side, so only shared labels contribute to chance agreement
+    marginals
+      .agg(sum(col("__na")).cast(dec).as("n"),
+        sum(col("__ag")).cast(dec).as("agree"),
+        coalesce(sum(col("__na").cast(dec) * col("__nb")),
+          lit(0).cast(dec)).as("__s"))
       .withColumn("__n2", col("n") * col("n"))
       .select(
         col("n").cast("long").as("n"),
@@ -73,6 +75,5 @@ object Agreement {
           (col("agree") * col("n") - col("__s")).cast("double") /
             (col("__n2") - col("__s")).cast("double"), 6))
           .as("kappa"))
-    (out, () => { cells.unpersist(blocking = false); () })
   }
 }

@@ -188,9 +188,8 @@ object AlertRunner {
     * steps and the firing decision can use; `windowValues` reports the
     * recent closed steps' SHORT-window burn (the fast-moving signal a
     * responder watches), most recent last. Missing steps (no traffic)
-    * report burn 0 and never fire. The [[Slo]] bucket cache is
-    * released before returning, so a repeating scheduler does not
-    * accumulate cache entries. */
+    * report burn 0 and never fire. [[Slo.multiWindowAlert]] caches
+    * nothing, so a repeating scheduler leaves no state behind. */
   def evaluateBurnRate(df: org.apache.spark.sql.DataFrame, tsCol: String,
       isError: org.apache.spark.sql.Column, cfg: AlertConfig, now: Instant,
       shortWindowSeconds: Long, longWindowSeconds: Long,
@@ -217,17 +216,13 @@ object AlertRunner {
     val scoped = df.filter(
       col(tsCol) >= lit(java.sql.Timestamp.from(scanFrom)) &&
         col(tsCol) < lit(java.sql.Timestamp.from(currentStart)))
-    val (alert, release) = Slo.multiWindowAlertReleasable(scoped, tsCol,
-      isError, step, shortWindowSeconds, longWindowSeconds, errorBudget,
-      cfg.threshold)
-    val out =
-      try alert
-        .select(col("bucket"), col(s"burn_${shortWindowSeconds}s"),
-          col("firing"))
-        .collect()
-        .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) 0.0 else r.getDouble(1), r.getLong(2)))
-      finally release()
+    val out = Slo.multiWindowAlert(scoped, tsCol, isError, step,
+        shortWindowSeconds, longWindowSeconds, errorBudget, cfg.threshold)
+      .select(col("bucket"), col(s"burn_${shortWindowSeconds}s"),
+        col("firing"))
+      .collect()
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) 0.0 else r.getDouble(1), r.getLong(2)))
     val byBucket = out.map { case (b, burn, firing) =>
       b -> (burn, firing) }.toMap
     val fire = byBucket.get(lastClosed.getEpochSecond)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * per-bin so no cross-row float sum decides a gated value.
   *
   * Scale shape: ONE map-side-combined hash aggregate keyed on the bin
-  * index (≤ `bins` cells) + a one-row total; corpus rows never
+  * index (≤ `bins` cells) + a window total over them; corpus rows never
   * shuffle. Bin index = floor(score·bins) clamped so score = 1.0
   * lands in the top bin, not a phantom bin `bins`.
   */
@@ -44,15 +44,14 @@ object Calibration {
       .select(
         least(floor(s * bins).cast("int"), lit(bins - 1)).as("bin"),
         s.as("s"), y.as("y"))
-    // ≤ `bins` cells: the persist is free and the total branch + the
-    // crossJoin both read it (the mixtureDiversity convention)
-    val cells = rows.groupBy(col("bin")).agg(
+    // ≤ `bins` cells: the grand total is a window over all of them,
+    // one task, in the same chain
+    rows.groupBy(col("bin")).agg(
       count(lit(1)).as("n"),
       sum(col("s")).as("__ssum"),
       sum(col("y")).as("__ypos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = cells.agg(sum("n").as("__t"))
-    cells.crossJoin(total)
+      .withColumn("__t", sum(col("n")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy()))
       .select(col("bin"),
         round(col("bin").cast("double") / bins, 6).as("lo"),
         round((col("bin") + 1).cast("double") / bins, 6).as("hi"),
@@ -67,24 +66,6 @@ object Calibration {
             col("__ssum") / col("n")), 6).as("ece_term"))
   }
 
-  /** Precision/recall threshold sweep — the curve that picks a
-    * curation filter's operating point: for each candidate threshold
-    * t = k/bins (k = 0..bins−1), classify score ≥ t as positive and
-    * report tp/fp/fn with precision, recall, and F1. F1 is computed as
-    * 2·tp / (2·tp + fp + fn) — ONE division of exact longs, never the
-    * 2pr/(p+r) division-of-divisions whose float association an
-    * independent engine could disagree with. Thresholds align with the
-    * score buckets, so "score ≥ k/bins" is exactly "bucket ≥ k" (1.0
-    * clamps into the top bucket like [[reliabilityBins]]).
-    *
-    * Same sample rules as [[reliabilityBins]]: null/NaN/out-of-range
-    * scores are excluded. precision is null at thresholds where
-    * nothing is predicted positive.
-    *
-    * Scale shape: corpus rows collapse into ≤ bins cells map-side; the
-    * sweep is a bins × bins conditional aggregate over CELLS plus a
-    * one-row positives total — nothing downstream of the first
-    * aggregate scales with the corpus. */
   /** Exact ROC AUC via the Mann–Whitney rank statistic — the
     * one-number ranking quality of a curation classifier, computed
     * WITHOUT sampling or trapezoid approximation: with midranks
@@ -171,6 +152,24 @@ object Calibration {
           round(col("__sse") / col("n"), 6)).as("brier"))
   }
 
+  /** Precision/recall threshold sweep — the curve that picks a
+    * curation filter's operating point: for each candidate threshold
+    * t = k/bins (k = 0..bins−1), classify score ≥ t as positive and
+    * report tp/fp/fn with precision, recall, and F1. F1 is computed as
+    * 2·tp / (2·tp + fp + fn) — ONE division of exact longs, never the
+    * 2pr/(p+r) division-of-divisions whose float association an
+    * independent engine could disagree with. Thresholds align with the
+    * score buckets, so "score ≥ k/bins" is exactly "bucket ≥ k" (1.0
+    * clamps into the top bucket like [[reliabilityBins]]).
+    *
+    * Same sample rules as [[reliabilityBins]]: null/NaN/out-of-range
+    * scores are excluded. precision is null at thresholds where
+    * nothing is predicted positive.
+    *
+    * Scale shape: corpus rows collapse into ≤ bins cells map-side; the
+    * sweep is a bins × bins conditional aggregate over CELLS whose
+    * unconditional positives sum is the total P — nothing downstream
+    * of the first aggregate scales with the corpus. */
   def prCurve(df: DataFrame, scoreCol: String, labelCol: String,
       bins: Int = 16): DataFrame = {
     require(bins > 0, "bins must be positive")
@@ -183,18 +182,18 @@ object Calibration {
         y.as("y"))
     val cells = rows.groupBy(col("b")).agg(
       count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = cells.agg(coalesce(sum(col("pos")), lit(0L)).as("__p"))
     val ks = df.sparkSession.range(bins.toLong)
       .select(col("id").cast("int").as("k"))
+    // every cell meets every threshold, so the plain positives sum
+    // is the total P
     ks.crossJoin(cells)
       .groupBy(col("k"))
       .agg(
         coalesce(sum(when(col("b") >= col("k"), col("pos"))), lit(0L))
           .as("tp"),
         coalesce(sum(when(col("b") >= col("k"),
-          col("n") - col("pos"))), lit(0L)).as("fp"))
-      .crossJoin(total)
+          col("n") - col("pos"))), lit(0L)).as("fp"),
+        sum(col("pos")).as("__p"))
       .select(
         round(col("k").cast("double") / bins, 6).as("threshold"),
         col("tp"), col("fp"), (col("__p") - col("tp")).as("fn"),

@@ -33,7 +33,8 @@ object Correlation {
     *
     * Leaves the ranked-frame cache to the session; long-lived services
     * should use [[spearmanPairsReleasable]] and release after their
-    * action (the [[Slo.burnRatesReleasable]] convention). */
+    * action (the eager series audit reads the cache, so the plan
+    * cannot share the ranked frame instead). */
   def spearmanPairs(df: DataFrame, keyCol: String, bucketCol: String,
       valueCol: String, maxSeries: Int = 500): DataFrame =
     spearmanPairsReleasable(df, keyCol, bucketCol, valueCol,

@@ -78,7 +78,8 @@ object Drift {
     ksDriftReleasable(ref, cur, keyCols, valueCol, maxDistinct)._1
 
   /** [[ksDrift]] plus a release handle for the internal cell cache
-    * (the [[Slo.burnRatesReleasable]] convention). */
+    * that the eager `maxDistinct` audit reads — call it after the
+    * consuming action. */
   def ksDriftReleasable(ref: DataFrame, cur: DataFrame,
       keyCols: Seq[String], valueCol: String,
       maxDistinct: Long = 1000000L): (DataFrame, () => Unit) = {

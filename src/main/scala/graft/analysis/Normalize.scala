@@ -34,7 +34,8 @@ object Normalize {
       maxDistinct, maxGlobalDistinct)._1
 
   /** [[quantileNormalize]] plus a release handle for the internal
-    * cell cache (the Slo convention). */
+    * cell cache that the eager distinct audit reads — call it after
+    * the consuming action. */
   def quantileNormalizeReleasable(df: DataFrame,
       groupCols: Seq[String], valueCol: String,
       maxDistinct: Long = 4096L, maxGlobalDistinct: Long = 65536L)

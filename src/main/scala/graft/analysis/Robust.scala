@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * honest bands. 0.6745 scales MAD to σ-equivalents under normality
   * (Φ⁻¹(0.75)), making `k` comparable to a z-score threshold.
   *
-  * Scale shape: two aggregates over the (series, bucket) frame — the
-  * per-series median, then (after one broadcast-size join back) the
-  * per-series MAD. Both run Spark's exact `median` aggregate, whose
+  * Scale shape: two windows over the (series, bucket) frame, both
+  * partitioned by the series key so they share one shuffle — the
+  * per-series median, then the per-series MAD of the deviations from
+  * it. Both run Spark's exact `median` aggregate, whose
   * state is the series' bucket list — bounded by the time range (the
   * engine's series contract), never by raw event volume. Medians are
   * order-independent, so results are bit-stable across partitionings
@@ -30,37 +31,22 @@ object Robust {
     * (MAD = 0 — over half the points identical) answers null
     * robust_z/outlier rather than flagging every deviation from the
     * median: no dispersion signal, no detection — the
-    * [[ChangePoint.ewmaChart]] degenerate convention.
-    *
-    * Leaves the internal base-frame cache to the session; long-lived
-    * services should use [[madOutliersReleasable]] and release after
-    * their action (the [[Slo.burnRatesReleasable]] convention). */
+    * [[ChangePoint.ewmaChart]] degenerate convention. Rows with a null
+    * series key belong to no series and drop out. */
   def madOutliers(df: DataFrame, keyCols: Seq[String],
       bucketCol: String, valueCol: String, k: Double = 3.5)
-      : DataFrame =
-    madOutliersReleasable(df, keyCols, bucketCol, valueCol, k)._1
-
-  /** [[madOutliers]] plus a release handle that unpersists the
-    * internal cache — call it after the consuming action. */
-  def madOutliersReleasable(df: DataFrame, keyCols: Seq[String],
-      bucketCol: String, valueCol: String, k: Double = 3.5)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(keyCols.nonEmpty, "madOutliers needs at least one series key")
     require(k > 0.0, "threshold k must be positive")
     val keyCs = keyCols.map(col)
-    // persisted: the median branch, the MAD branch, and the final
-    // select all read this frame — without the pin the caller's
-    // upstream aggregation would replay once per branch
-    val base = df.select(keyCs :+ col(bucketCol).cast("long").as("__b")
-      :+ col(valueCol).cast("double").as("__x"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val med = base.groupBy(keyCs: _*)
-      .agg(median(col("__x")).as("med"))
-    val withMed = base.join(med, keyCols)
-    val mad = withMed.groupBy(keyCs: _*)
-      .agg(median(abs(col("__x") - col("med"))).as("mad"))
+    val series = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCs: _*)
     val rz = lit(0.6745) * (col("__x") - col("med")) / col("mad")
-    val out = withMed.join(mad, keyCols)
+    df.filter(keyCs.map(_.isNotNull).reduce(_ && _))
+      .select(keyCs :+ col(bucketCol).cast("long").as("__b")
+        :+ col(valueCol).cast("double").as("__x"): _*)
+      .withColumn("med", median(col("__x")).over(series))
+      .withColumn("mad", median(abs(col("__x") - col("med"))).over(series))
       .select(keyCs ++ Seq(
         col("__b").as(bucketCol),
         col("__x").as(valueCol),
@@ -68,7 +54,6 @@ object Robust {
         when(col("mad") > 0.0, round(rz, 6)).as("robust_z"),
         when(col("mad") > 0.0,
           when(abs(rz) > k, 1L).otherwise(0L)).as("outlier")): _*)
-    (out, () => { base.unpersist(blocking = false); () })
   }
 
   /** Per-group winsorization at [pLo, pHi] with percentile_disc
@@ -80,52 +65,35 @@ object Robust {
     * or mixing decisions. Output: keys…, v, lo, hi, v_wins.
     *
     * Scale shape: value cells collapse map-side per group (the
-    * ksDrift quantize-first contract bounds distinct values); the
-    * bounds ride per-group windows over CELLS and broadcast back onto
-    * the scan — corpus rows shuffle zero times. */
+    * ksDrift quantize-first contract bounds distinct values); one
+    * per-group window over CELLS builds the ladder, one conditional
+    * aggregate reads both bounds off it, and the bounds broadcast
+    * back onto a second pass over the input — corpus rows shuffle
+    * zero times. */
   def winsorize(df: DataFrame, groupCols: Seq[String],
       valueCol: String, pLo: Double = 0.05, pHi: Double = 0.95)
-      : DataFrame =
-    winsorizeReleasable(df, groupCols, valueCol, pLo, pHi)._1
-
-  /** [[winsorize]] plus a release handle for the internal ladder
-    * cache — call after the consuming action. */
-  def winsorizeReleasable(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, pLo: Double = 0.05, pHi: Double = 0.95)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(groupCols.nonEmpty, "need at least one group column")
     require(pLo >= 0 && pHi <= 1 && pLo < pHi,
       "need 0 <= pLo < pHi <= 1")
+    import org.apache.spark.sql.expressions.Window
     val keyCs = groupCols.map(col)
     val v = col(valueCol).cast("double")
-    val cells = df.filter(v.isNotNull)
+    val wOrd = Window.partitionBy(keyCs: _*).orderBy(col("cv"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = Window.partitionBy(keyCs: _*)
+    val bounds = df.filter(v.isNotNull)
       .groupBy(keyCs :+ v.as("cv"): _*)
       .agg(count(lit(1)).as("cn"))
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCs: _*).orderBy(col("cv"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCs: _*)
-    // the ladder is cell-bounded and BOTH bounds read it: persist so
-    // the corpus aggregation runs once, not once per bound (the
-    // madOutliers multi-branch convention); released after the plan
-    // is wired — the bounds are broadcast-sized
-    val ladder = cells
       .withColumn("__frac",
         sum(col("cn")).over(wOrd).cast("double") /
           sum(col("cn")).over(wAll))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bound(p: Double) = ladder.filter(col("__frac") >= p)
-      .groupBy(keyCs: _*).agg(min(col("cv")))
-    val lo = bound(pLo).toDF(groupCols :+ "lo": _*)
-    val hi = bound(pHi).toDF(groupCols :+ "hi": _*)
-    val out = df.filter(v.isNotNull)
-      .join(broadcast(lo), groupCols)
-      .join(broadcast(hi), groupCols)
+      .groupBy(keyCs: _*)
+      .agg(min(when(col("__frac") >= pLo, col("cv"))).as("lo"),
+        min(when(col("__frac") >= pHi, col("cv"))).as("hi"))
+    df.filter(v.isNotNull)
+      .join(broadcast(bounds), groupCols)
       .select(keyCs ++ Seq(v.as("v"), col("lo"), col("hi"),
         greatest(col("lo"), least(col("hi"), v)).as("v_wins")): _*)
-    (out, () => { ladder.unpersist(blocking = false); () })
   }
 }

@@ -62,69 +62,50 @@ object Slo {
     * step-aligned epoch seconds; the trailing window at step B covers
     * buckets (B − w, B] — the Prometheus range-selector convention.
     *
-    * The step-bucket count frame is persisted (two plan branches read
-    * it; unpersisted each would replay the full source scan). Library
-    * callers running inside a long-lived service should use
-    * [[burnRatesReleasable]] and release after their action — the
-    * plain entry point leaves the KB-scale cache to the session (the
-    * Dedup multi-branch convention).
+    * One chain, no cache: the step-bucket counts (≤ range/step rows)
+    * pass one ordered window that finds each bucket's next observed
+    * bucket, so the gap-filled spine rides the same fan-out as the
+    * windows — a spine row covers its bucket up to the next observed
+    * one — and one hash aggregation sums every family conditionally,
+    * keeping the steps the spine reached.
     */
   def burnRates(events: DataFrame, tsCol: String, isError: Column,
       stepSeconds: Long, windows: Seq[Long],
-      errorBudget: Double): DataFrame =
-    burnRatesReleasable(events, tsCol, isError, stepSeconds, windows,
-      errorBudget)._1
-
-  /** [[burnRates]] plus a release handle that unpersists the internal
-    * bucket-count cache — call it AFTER the action that consumes the
-    * frame. Repeated schedulers (e.g.
-    * [[AlertRunner.evaluateBurnRate]]) must release, or each
-    * evaluation leaks one cache entry. */
-  def burnRatesReleasable(events: DataFrame, tsCol: String,
-      isError: Column, stepSeconds: Long, windows: Seq[Long],
-      errorBudget: Double): (DataFrame, () => Unit) = {
+      errorBudget: Double): DataFrame = {
     validateWindows(stepSeconds, windows)
     // the ONLY pass over the data: map-side-combined counts per step
-    // bucket, persisted for its two readers (spine bounds + fan-out).
-    // The frame is ≤ range/step rows — KB-scale.
+    // bucket — KB-scale, so the spine's ordered window runs in one task
     val counts = events
       .select(stepBucket(tsCol, stepSeconds).as("__b"),
         when(isError, 1L).otherwise(0L).as("__e"))
       .groupBy("__b")
       .agg(count(lit(1)).as("__n"), sum(col("__e")).as("__err"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the step spine: one aggregated (min, max) row exploded to the
-    // full grid — O(range/step) rows from a one-row frame
-    val spine = counts
-      .agg(min(col("__b")).as("__lo"), max(col("__b")).as("__hi"))
-      .select(explode(sequence(col("__lo"), col("__hi"),
-        lit(stepSeconds))).as("bucket"))
-    // every window in ONE fan-out (the SloStream shape): each (bucket,
-    // window) pair explodes to its member steps and one hash
-    // aggregation sums every family conditionally — one shuffle total,
-    // fan-out Σ⌈w/step⌉ per bucket row (query shape, not data)
-    val slid = counts
-      .withColumn("__w", explode(array(windows.map(lit(_)): _*)))
-      .select(memberSteps(col("__b"), col("__w"), stepSeconds)
-        .as("bucket"), col("__w"), col("__n"), col("__err"))
-      .groupBy("bucket")
+    // window 0 is the spine: bucket b stands for the empty steps up to
+    // the next observed bucket (just itself when it is the last)
+    val next = lead(col("__b"), 1).over(
+      org.apache.spark.sql.expressions.Window.orderBy("__b"))
+    val span = when(col("__w") === 0L,
+      coalesce(col("__next") - col("__b"), lit(stepSeconds)))
+      .otherwise(col("__w"))
     val fams = windows.flatMap(w => Seq(
       sum(when(col("__w") === w, col("__n")).otherwise(0L))
         .as(s"total_${w}s"),
       sum(when(col("__w") === w, col("__err")).otherwise(0L))
         .as(s"err_${w}s")))
-    val slidAgg = slid.agg(fams.head, fams.tail: _*)
-    val out = windows
-      .foldLeft(spine.join(slidAgg, Seq("bucket"), "left")) { (acc, w) =>
-        acc.withColumn(s"total_${w}s",
-          coalesce(col(s"total_${w}s"), lit(0L)))
-          .withColumn(s"err_${w}s", coalesce(col(s"err_${w}s"), lit(0L)))
-          .withColumn(s"burn_${w}s",
-            when(col(s"total_${w}s") > 0,
-              (col(s"err_${w}s").cast("double") / col(s"total_${w}s")) /
-                errorBudget))
-      }
-    (out, () => { counts.unpersist(blocking = false); () })
+    val slid = counts
+      .withColumn("__next", next)
+      .withColumn("__w", explode(array((0L +: windows).map(lit(_)): _*)))
+      .select(memberSteps(col("__b"), span, stepSeconds).as("bucket"),
+        col("__w"), col("__n"), col("__err"))
+      .groupBy("bucket")
+      .agg(max(col("__w") === 0L).as("__spine"), fams: _*)
+      .filter(col("__spine"))
+    val sums = windows.flatMap(w =>
+      Seq(col(s"total_${w}s"), col(s"err_${w}s")))
+    val burns = windows.map(w => when(col(s"total_${w}s") > 0,
+      (col(s"err_${w}s").cast("double") / col(s"total_${w}s")) /
+        errorBudget).as(s"burn_${w}s"))
+    slid.select((col("bucket") +: sums) ++ burns: _*)
   }
 
   /** The two-window policy: burn rates for (shortWindow, longWindow)
@@ -134,24 +115,14 @@ object Slo {
     * `>=` — a burn exactly at threshold does NOT fire here. */
   def multiWindowAlert(events: DataFrame, tsCol: String, isError: Column,
       stepSeconds: Long, shortWindow: Long, longWindow: Long,
-      errorBudget: Double, threshold: Double): DataFrame =
-    multiWindowAlertReleasable(events, tsCol, isError, stepSeconds,
-      shortWindow, longWindow, errorBudget, threshold)._1
-
-  /** [[multiWindowAlert]] with the cache-release handle of
-    * [[burnRatesReleasable]]. */
-  def multiWindowAlertReleasable(events: DataFrame, tsCol: String,
-      isError: Column, stepSeconds: Long, shortWindow: Long,
-      longWindow: Long, errorBudget: Double, threshold: Double)
-      : (DataFrame, () => Unit) = {
+      errorBudget: Double, threshold: Double): DataFrame = {
     require(shortWindow < longWindow,
       s"shortWindow ($shortWindow) must be strictly shorter than " +
         s"longWindow ($longWindow)")
-    val (rates, release) = burnRatesReleasable(events, tsCol, isError,
-      stepSeconds, Seq(shortWindow, longWindow), errorBudget)
-    (rates.withColumn("firing",
-      when(col(s"burn_${shortWindow}s") > threshold &&
-        col(s"burn_${longWindow}s") > threshold, 1L).otherwise(0L)),
-      release)
+    burnRates(events, tsCol, isError, stepSeconds,
+      Seq(shortWindow, longWindow), errorBudget)
+      .withColumn("firing",
+        when(col(s"burn_${shortWindow}s") > threshold &&
+          col(s"burn_${longWindow}s") > threshold, 1L).otherwise(0L))
   }
 }

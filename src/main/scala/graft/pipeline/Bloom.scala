@@ -107,18 +107,30 @@ object Bloom {
     }
   }
 
-  /** [[mightContainReleasable]] without the handle — literal-sized
-    * filters only; a big filter probed through this leaks its
-    * broadcast until the session ends (use the Releasable twin in
-    * long-lived services). */
-  private[pipeline] def mightContain(df: DataFrame, bits: Array[Long],
-      h1: Column, h2: Column, numHashes: Int,
-      maxLiteralWords: Int = literalMaxWords): Column =
-    mightContainReleasable(df, bits, h1, h2, numHashes,
-      maxLiteralWords)._1
-
   private def gramHashes(g: Column): (Column, Column) =
     (xxhash64(g), xxhash64(g, lit(1L)))
+
+  /** Distinct bench grams [[benchHashPairs]] collects at most — the
+    * [[Curation.contaminationHits]] gram cap (8 Mi grams, 128 MB of
+    * hash pairs). */
+  private val MaxBenchGrams: Int = 1 << 23
+
+  /** The (h1, h2) pairs of the distinct bench grams in `benchGrams`
+    * (column `__g`), collected to build the filter. Hashes are
+    * computed IN Spark so builder and probe share the exact xxhash64;
+    * the collect is the small-side contract the exact broadcast makes,
+    * of 16-byte pairs instead of gram strings. A bounded count job
+    * runs first, so a corpus-sized bench fails with the contract
+    * message instead of filling the driver. */
+  private[pipeline] def benchHashPairs(benchGrams: DataFrame,
+      maxGrams: Int): Array[(Long, Long)] = {
+    require(benchGrams.limit(maxGrams + 1).count() <= maxGrams,
+      s"bloom bench produced more than $maxGrams distinct grams — " +
+        "eval sets are small by contract; split the sweep")
+    val (h1, h2) = gramHashes(col("__g"))
+    benchGrams.select(h1.as("h1"), h2.as("h2"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  }
 
   /** [[Curation.contaminationHits]] with the bloom prefilter: same
     * output frame (doc_id, n_hits over distinct contaminated grams),
@@ -133,7 +145,7 @@ object Bloom {
   /** [[bloomContaminationHits]] plus a release handle that destroys
     * the big-filter broadcast (noop when the bitmap shipped as a plan
     * literal) — long-lived services call it after the consuming
-    * action, the same convention as burnRatesReleasable. */
+    * action. */
   def bloomContaminationHitsReleasable(docs: DataFrame, idCol: String,
       textCol: String, bench: DataFrame, benchTextCol: String,
       n: Int = 13, bitsPerKey: Int = 12, numHashes: Int = 5)
@@ -141,13 +153,8 @@ object Bloom {
     val benchGrams = bench
       .select(explode(Dedup.shingles(col(benchTextCol), n)).as("__g"))
       .distinct()
-    // hashes computed IN Spark so builder and probe share the exact
-    // xxhash64; the collect is the same small-side contract the exact
-    // broadcast makes, but of 16-byte pairs instead of gram strings
-    val (bh1, bh2) = gramHashes(col("__g"))
-    val hashPairs = benchGrams.select(bh1.as("h1"), bh2.as("h2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val bits = buildBits(hashPairs, bitsPerKey, numHashes)
+    val bits = buildBits(benchHashPairs(benchGrams, MaxBenchGrams),
+      bitsPerKey, numHashes)
     val corpusGrams = Curation.distinctGramFrame(docs, idCol, textCol, n)
     val (ch1, ch2) = gramHashes(col("__g"))
     val (test, release) =

@@ -39,7 +39,8 @@ object Linkage {
       maxBlock)._1
 
   /** [[linkPairs]] plus a release handle for the internal base cache
-    * (the Slo convention). */
+    * that the eager block audit reads — call it after the consuming
+    * action. */
   def linkPairsReleasable(df: DataFrame, idCol: String,
       nameCol: String, maxDist: Int = 3, prefixLen: Int = 4,
       maxBlock: Long = 10000L): (DataFrame, () => Unit) = {

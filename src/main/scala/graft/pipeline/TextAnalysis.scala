@@ -362,12 +362,11 @@ object TextAnalysis {
     * chunk-frequency agg keyed by the 8-byte xxhash64 of the chunk (the
     * corpus text never rides the frequency shuffle), a left_anti against
     * the small boilerplate-hash set (broadcastable — boilerplate is rare
-    * by definition), and the per-doc rebuild agg. The chunk frame feeds
-    * both the frequency count and the anti-join, so it is persisted like
-    * the minhash signature projection. */
+    * by definition), and the per-doc rebuild agg. The frequency count
+    * and the anti-join read the one chunk exchange (reused, not
+    * recomputed). */
   def scrubBoilerplate(df: DataFrame, idCol: String, textCol: String,
       chunkWords: Int = 10, maxDocs: Long = 2): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(chunkWords > 0 && maxDocs > 0, "need chunkWords, maxDocs > 0")
     val words = df.select(col(idCol),
       posexplode(split(col(textCol), " ")).as(Seq("__pos", "__w")))
@@ -377,7 +376,6 @@ object TextAnalysis {
         struct(col("__pos").as("p"), col("__w").as("w")))),
         x => x.getField("w")), " ").as("__chunk"))
       .withColumn("__h", xxhash64(col("__chunk")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val boilerplate = chunks.groupBy(col("__h"))
       .agg(count_distinct(col(idCol)).as("__nd"))
       .filter(col("__nd") > maxDocs)
@@ -401,29 +399,18 @@ object TextAnalysis {
     * merge — never a global sort of the full vocabulary), and the
     * rank/cumulative window runs on the k surviving rows in a single
     * tiny task. The grand total rides a cross-join of one scalar
-    * row. */
-  def vocabStats(df: DataFrame, textCol: String, k: Int): DataFrame =
-    vocabStatsReleasable(df, textCol, k)._1
-
-  /** [[vocabStats]] plus a release handle that unpersists the internal
-    * counts cache — long-lived services call it after the consuming
-    * action (the [[graft.analysis.Slo.burnRatesReleasable]]
-    * convention; the plain entry leaves the cache to the session). */
-  def vocabStatsReleasable(df: DataFrame, textCol: String, k: Int)
-      : (DataFrame, () => Unit) = {
+    * row; the top-k branch and the total read the one counts
+    * exchange (AQE reuses it — SharedSubplanSpec pins one scan). */
+  def vocabStats(df: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k > 0, "vocabStats needs k > 0")
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(explode(tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")
-    // persisted: the top-k branch and the total-token scalar both read
-    // the counts frame — without the pin the corpus-sized token scan
-    // runs twice (exchange reuse is an AQE maybe, not a guarantee)
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val total = counts.agg(sum("cnt").as("__total"))
     val top = counts.orderBy(desc("cnt"), col("tok")).limit(k)
     val w = Window.orderBy(desc("cnt"), col("tok"))
-    val out = top.crossJoin(total)
+    top.crossJoin(total)
       .withColumn("rank", row_number().over(w))
       .withColumn("share",
         round(col("cnt").cast("double") / col("__total"), 6))
@@ -432,7 +419,6 @@ object TextAnalysis {
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast("double") / col("__total"), 6))
       .select("rank", "tok", "cnt", "share", "cum_share")
-    (out, () => { counts.unpersist(blocking = false); () })
   }
 
   /** Adjacent-bigram PMI phrase mining: pointwise mutual information
@@ -443,23 +429,19 @@ object TextAnalysis {
     *
     * Scale shape: ONE corpus scan — unigrams and bigrams ride a
     * tagged-union explode (the `repetitionSignals` idiom) into one
-    * hash aggregate, persisted vocabulary-sized; the corpus token
-    * count N derives from the unigram counts rather than a second
-    * scan; the probability joins are term-keyed over vocab frames
-    * (never corpus rows); the final top-`k` collapses through
-    * TakeOrderedAndProject's bounded per-partition heap, not a global
-    * sort. */
+    * hash aggregate, vocabulary-sized. Every unigram cell keys its
+    * word and every kept bigram keys both of its words, so one
+    * word-keyed window hands each bigram side its unigram count and a
+    * per-bigram regroup joins the two sides — vocab frames, never
+    * corpus rows. The corpus token count N is a conditional sum over
+    * the same counts exchange (no filter on a grouping key, so AQE
+    * reuses the exchange instead of rescanning); the final top-`k`
+    * collapses through TakeOrderedAndProject's bounded per-partition
+    * heap, not a global sort. */
   def pmiBigrams(df: DataFrame, textCol: String, minCount: Long,
-      k: Int): DataFrame =
-    pmiBigramsReleasable(df, textCol, minCount, k)._1
-
-  /** [[pmiBigrams]] plus a release handle that unpersists the internal
-    * counts cache — long-lived services call it after the consuming
-    * action (the [[graft.analysis.Slo.burnRatesReleasable]]
-    * convention; the plain entry leaves the cache to the session). */
-  def pmiBigramsReleasable(df: DataFrame, textCol: String,
-      minCount: Long, k: Int): (DataFrame, () => Unit) = {
+      k: Int): DataFrame = {
     require(k > 0 && minCount > 0, "pmiBigrams needs k, minCount > 0")
+    import org.apache.spark.sql.expressions.Window
     // a null text tokenizes to a null array, and with ANSI off
     // size(null) = -1 — one null doc would subtract from the corpus
     // token count N and skew every PMI; drop null rows at the funnel
@@ -483,22 +465,27 @@ object TextAnalysis {
         (col("__k") === "u" || col("w2") =!= ""))
     val counts = tagged.groupBy("__k", "w1", "w2")
       .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val uni = counts.filter(col("__k") === "u")
-      .select(col("w1").as("w"), col("c").as("cw"))
-    val n = uni.agg(sum("cw").as("__n"))
-    val bi = counts.filter(col("__k") === "b" && col("c") >= minCount)
-      .select(col("w1"), col("w2"), col("c").as("cxy"))
-    val scored = bi
-      .join(uni.select(col("w").as("w1"), col("cw").as("cx")), Seq("w1"))
-      .join(uni.select(col("w").as("w2"), col("cw").as("cy")), Seq("w2"))
+    val n = counts.agg(sum(when(col("__k") === "u", col("c"))).as("__n"))
+    def side(s: String, w: String) = struct(lit(s).as("s"),
+      col(w).as("w"), col("w1"), col("w2"), col("c"))
+    val sides = counts
+      .filter(col("__k") === "u" || col("c") >= minCount)
+      .select(explode(when(col("__k") === "u", array(side("u", "w1")))
+        .otherwise(array(side("x", "w1"), side("y", "w2")))).as("__s"))
+      .select("__s.*")
+      .withColumn("cw", max(when(col("s") === "u", col("c")))
+        .over(Window.partitionBy("w")))
+      .filter(col("s") =!= "u")
+    val scored = sides.groupBy("w1", "w2")
+      .agg(max(col("c")).as("cxy"),
+        max(when(col("s") === "x", col("cw"))).as("cx"),
+        max(when(col("s") === "y", col("cw"))).as("cy"))
       .crossJoin(n)
       .withColumn("pmi", round(
         log(col("cxy").cast("double") * col("__n") /
           (col("cx").cast("double") * col("cy"))), 6))
-    val out = scored.orderBy(desc("pmi"), col("w1"), col("w2")).limit(k)
+    scored.orderBy(desc("pmi"), col("w1"), col("w2")).limit(k)
       .select("w1", "w2", "cxy", "pmi")
-    (out, () => { counts.unpersist(blocking = false); () })
   }
 
   /** Flesch reading-ease frame (Flesch 1948): per doc, word count
@@ -544,29 +531,20 @@ object TextAnalysis {
     * finding, not a drop.
     *
     * Scale shape: one map-side-combined hash aggregate to group cells
-    * + a one-row total cross join; corpus rows never shuffle. */
+    * + a one-row total cross join over the same cells exchange
+    * (reused, not recomputed); corpus rows never shuffle. */
   def mixtureDiversity(df: DataFrame, groupCols: Seq[String])
-      : DataFrame =
-    mixtureDiversityReleasable(df, groupCols)._1
-
-  /** [[mixtureDiversity]] plus a release handle for the internal cell
-    * cache (the Slo convention — the total branch and the cross join
-    * both read the corpus-wide aggregate; AQE exchange reuse is a
-    * maybe, the pin is a guarantee). */
-  def mixtureDiversityReleasable(df: DataFrame, groupCols: Seq[String])
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(groupCols.nonEmpty, "need at least one group column")
     val keyCs = groupCols.map(col)
     val cells = df.groupBy(keyCs: _*).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val total = cells.agg(sum("n").as("__t"))
-    val out = cells.crossJoin(total)
+    cells.crossJoin(total)
       .withColumn("__p", col("n").cast("double") / col("__t"))
       .select(keyCs ++ Seq(col("n"),
         round(col("__p"), 6).as("share"),
         round(lit(0.0) - col("__p") * log(col("__p")), 6)
           .as("entropy_term")): _*)
-    (out, () => { cells.unpersist(blocking = false); () })
   }
 
   // ------------------------------------------- script mix / normalization
@@ -733,29 +711,21 @@ object TextAnalysis {
     *
     * Scale shape: one explode + map-side-combined hash aggregate keyed
     * (id, char) — bounded by alphabet size per doc, and the join back
-    * to per-doc totals carries cell rows only. */
+    * to per-doc totals carries cell rows only; the totals and the
+    * join read the one cells exchange (reused, not recomputed). */
   def charEntropyCells(df: DataFrame, idCol: String, textCol: String)
-      : DataFrame =
-    charEntropyCellsReleasable(df, idCol, textCol)._1
-
-  /** [[charEntropyCells]] plus a release handle for the internal cell
-    * cache (the totals branch and the join both read it — AQE
-    * exchange reuse is a maybe, the pin is a guarantee). */
-  def charEntropyCellsReleasable(df: DataFrame, idCol: String,
-      textCol: String): (DataFrame, () => Unit) = {
+      : DataFrame = {
     val chars = df.select(col(idCol),
       explode(filter(split(col(textCol), ""), c => c =!= " ")).as("ch"))
     val cells = chars.groupBy(col(idCol), col("ch"))
       .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = cells.groupBy(col(idCol)).agg(sum("n").as("__t"))
-    val out = cells.join(totals, Seq(idCol))
+    cells.join(totals, Seq(idCol))
       .withColumn("__p", col("n").cast("double") / col("__t"))
       .select(col(idCol), col("ch"), col("n"),
         round(col("__p"), 6).as("p"),
         round(lit(0.0) - col("__p") * log(2.0, col("__p")), 6)
           .as("entropy_term"))
-    (out, () => { cells.unpersist(blocking = false); () })
   }
 
   // ------------------------------------------------ vocabulary overlap
@@ -772,30 +742,23 @@ object TextAnalysis {
     * Groups are FEW by nature (sources/langs); the output is at most
     * #groups² / 2 rows — pairs sharing ZERO tokens emit no row
     * (absence = zero overlap; materializing every pair would need a
-    * groups×groups cross join for rows that carry no signal). */
+    * groups×groups cross join for rows that carry no signal). The
+    * sizes and both self-join sides read one vocabulary exchange
+    * (reused, not recomputed — the corpus explode runs once). */
   def vocabOverlap(df: DataFrame, groupCol: String, textCol: String)
-      : DataFrame =
-    vocabOverlapReleasable(df, groupCol, textCol)._1
-
-  /** [[vocabOverlap]] plus a release handle for the vocabulary cache
-    * (sizes + both self-join sides read it — the tokenize/explode/
-    * distinct over the corpus is the dominant cost and must not
-    * replay per branch). */
-  def vocabOverlapReleasable(df: DataFrame, groupCol: String,
-      textCol: String): (DataFrame, () => Unit) = {
+      : DataFrame = {
     val vocab = df
       .select(col(groupCol).cast("string").as("g"),
         explode(tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = vocab.groupBy(col("g")).agg(count(lit(1)).as("nv"))
     val inter = vocab.as("a")
       .join(vocab.as("b"),
         col("a.tok") === col("b.tok") && col("a.g") < col("b.g"))
       .groupBy(col("a.g").as("ga"), col("b.g").as("gb"))
       .agg(count(lit(1)).as("n_inter"))
-    val out = inter
+    inter
       .join(broadcast(sizes.select(col("g").as("ga"),
         col("nv").as("na"))), Seq("ga"))
       .join(broadcast(sizes.select(col("g").as("gb"),
@@ -804,7 +767,6 @@ object TextAnalysis {
         col("n_inter"),
         round(col("n_inter").cast("double") /
           (col("na") + col("nb") - col("n_inter")), 6).as("jaccard"))
-    (out, () => { vocab.unpersist(blocking = false); () })
   }
 
   // ------------------------------------------------------------ OOV rate

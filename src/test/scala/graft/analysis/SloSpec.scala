@@ -77,15 +77,4 @@ class SloSpec extends SparkSpec {
         60L, 300L, 300L, 0.1, 2.0)
     }
   }
-
-  test("releasable variant unpersists the bucket cache after the action") {
-    val df = ev((0L, true), (70L, false))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (frame, release) = Slo.burnRatesReleasable(df, "ts",
-      col("kind") === "error", 60L, Seq(120L), 0.1)
-    frame.collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > before)
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
-  }
 }

@@ -17,11 +17,14 @@ class BloomSpec extends SparkSpec {
         xxhash64(col("g"), lit(1L)).as("h2"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val bits = Bloom.buildBits(hashes, bitsPerKey = 12, numHashes = 5)
+    // every probe runs its release after the action: a destroyed
+    // broadcast on the big path, a noop on the literal path
     def hits(df: org.apache.spark.sql.DataFrame,
-        maxLit: Int = Bloom.literalMaxWords): Long = df
-      .filter(Bloom.mightContain(df, bits, xxhash64(col("g")),
-        xxhash64(col("g"), lit(1L)), 5, maxLit))
-      .count()
+        maxLit: Int = Bloom.literalMaxWords): Long = {
+      val (test, release) = Bloom.mightContainReleasable(df, bits,
+        xxhash64(col("g")), xxhash64(col("g"), lit(1L)), 5, maxLit)
+      try df.filter(test).count() finally release()
+    }
     assert(hits(insDf) == 2000L) // zero false negatives, by construction
     val probe = (1 to 10000).map(i => s"absent key $i").toDF("g")
     val fp = hits(probe)
@@ -31,16 +34,16 @@ class BloomSpec extends SparkSpec {
     // forcing it (maxLiteralWords = 0) must reproduce both counts
     assert(hits(insDf, 0) == 2000L)
     assert(hits(probe, 0) == fp)
-    // the Releasable twin: big path hands back a broadcast-destroy
-    // handle usable after the consuming action; literal path's is a
-    // safe noop
-    val (bigTest, bigRelease) = Bloom.mightContainReleasable(insDf,
-      bits, xxhash64(col("g")), xxhash64(col("g"), lit(1L)), 5, 0)
-    assert(insDf.filter(bigTest).count() == 2000L)
-    bigRelease() // must not throw; broadcast destroyed
-    val (_, litRelease) = Bloom.mightContainReleasable(insDf, bits,
-      xxhash64(col("g")), xxhash64(col("g"), lit(1L)), 5)
-    litRelease()
+  }
+
+  test("benchHashPairs fails with the contract message over its cap " +
+      "and collects every pair at it") {
+    val grams = (1 to 50).map(i => s"gram $i").toDF("__g")
+    val err = intercept[IllegalArgumentException] {
+      Bloom.benchHashPairs(grams, maxGrams = 49)
+    }
+    assert(err.getMessage.contains("more than 49 distinct grams"))
+    assert(Bloom.benchHashPairs(grams, maxGrams = 50).length == 50)
   }
 
   test("bloomContaminationHits is bit-identical to the exact " +
