@@ -21,6 +21,10 @@ verdict:
 
 It also prints every run's end-to-end values, `correct` flag,
 failed-operation count and steal, and, for batch, the per-job median times.
+After the pairs of a workload it runs `--trace 1` once per side and prints
+every per-layer metric of BENCHMARK.json for both sides with its delta, so
+the ledger layer that moved is named next to the end-to-end verdict (one
+traced run per side locates a saving; it is not A/B evidence).
 
   python3 scripts/ab.py --ref HEAD~1 --into /tmp/ab-base --pairs 5
 """
@@ -35,11 +39,12 @@ HERE = Path(__file__).resolve().parent.parent
 SEED = 1
 
 
-def run_bench(checkout, workload, seconds):
+def run_bench(checkout, workload, seconds, trace=0):
     """One perfbench run; returns (result, notes)."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(SEED), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(SEED), "--seconds", str(seconds),
+         "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True)
     out = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not out:
@@ -142,6 +147,19 @@ def main():
                 mb, mc = statistics.median(b), statistics.median(c)
                 print(f"  job {n:22s} {mb:9.0f} -> {mc:9.0f} ms "
                       f"{(mc - mb) / mb * 100 if mb else 0:+6.1f}%")
+        traced = {s: run_bench(sides[s], wl, bench["run_seconds"], trace=1)[0]
+                  for s in ("base", "change")}
+        print(f"\n== {wl}: ledger, one --trace 1 run per side, base -> change "
+              f"(correct {traced['base']['correct']} -> "
+              f"{traced['change']['correct']})")
+        for m in bench["per_layer"]:
+            b, c = (traced[s]["metrics"].get(m["name"], {}).get("value")
+                    for s in ("base", "change"))
+            if b is None or c is None:
+                continue
+            d = f"{(c - b) / abs(b) * 100:+7.1f}%" if b else "       "
+            print(f"  {m['name']:24s} {b:12.2f} -> {c:12.2f} "
+                  f"{m['unit']:5s} {d}")
         print(flush=True)
 
 

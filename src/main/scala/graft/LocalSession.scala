@@ -26,6 +26,34 @@ import org.apache.spark.sql.SparkSession
   * execution slots, so more partitions only add scheduling overhead while
   * fewer leave cores idle. On a real cluster this knob scales with
   * executor count × cores (SCALE.md).
+  *
+  * Generated classes are compiled once per JVM for every plan shape that
+  * fits the codegen cache (`spark.sql.codegen.cache.maxEntries`, default
+  * 100). Entries are keyed by source text and classloader, so the driver
+  * and the executor side of one local stage are two entries. Counted with
+  * an unbounded cache: the whole perfbench dashboard grid compiles about
+  * 1,010 classes and one batch pass about 340–360, so at 100 entries every
+  * class is evicted before a plan shape runs again (a dashboard refresh,
+  * a repeated pipeline run) and is compiled anew. 2048 is the smallest
+  * power of two at least twice the larger working set. At about 25–30 KB
+  * of live heap per cached class, the ceiling is 2048 × 30 KB ≈ 60 MB; a
+  * batch run holds about 7 MB more than at 100 entries. The cache is a
+  * field of Spark's JVM-wide `CodeGenerator` object, sized once by the
+  * first session that generates code; a later session's value is
+  * ignored, so the setting lives here, in the one builder every entry
+  * point, perfbench and the tests go through, and nowhere else.
+  *
+  * That heap is paid back by Spark's status history, which keeps up to
+  * 1,000 stages and 1,000 SQL executions (with their plan graphs) for a
+  * UI that is disabled here; nothing in the engine reads it (no
+  * `statusTracker` or `statusStore` use). One perfbench batch run per
+  * setting, 50 entries each: the stage cap freed about 2.5 MB of live
+  * heap, the SQL execution cap about 2.0 MB, the two together 6.2 MB;
+  * capping jobs or tasks per stage moved nothing, so those keep Spark's
+  * defaults.
+  *
+  * Settings the builder does not fix can be passed as `-Dspark.*` system
+  * properties, which `SparkConf` loads.
   */
 object LocalSession {
   def builder(cores: Int): SparkSession.Builder =
@@ -55,21 +83,12 @@ object LocalSession {
       // scheduling is identical to FIFO, so this costs nothing there.
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", 2048)
+      .config("spark.ui.retainedStages", 50)
+      .config("spark.sql.ui.retainedExecutions", 50)
 
   def get(cores: Int): SparkSession = {
-    // deployment-specific overrides without a recompile:
-    // SPARK_GRAFT_EXTRA_CONF="spark.a=x;spark.b=y". Local defaults above
-    // stay the bench-comparable configuration; a cluster run sets its
-    // own shuffle partitioning / memory here (SCALE.md) — and the
-    // optimization rounds use it for measured A/B config experiments.
-    val b = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder(cores)) { (bld, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        bld.config(k.trim, v.trim)
-      }
-    val s = b.getOrCreate()
+    val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
