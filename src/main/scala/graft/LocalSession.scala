@@ -22,35 +22,48 @@ import org.apache.spark.sql.SparkSession
   *    all-ASCII corpus, where the two are semantically identical (and
   *    identical to the DuckDB oracle's `lower`).
   *
-  * Shuffle partitions default to the core count: local[N] has exactly N
+  * Shuffle partitions are fixed to the core count: local[N] has exactly N
   * execution slots, so more partitions only add scheduling overhead while
-  * fewer leave cores idle. On a real cluster this knob scales with
-  * executor count × cores (SCALE.md).
+  * fewer leave cores idle. The builder's values override `-Dspark.*`
+  * system properties, so this one (like the master) changes only in code;
+  * a cluster build would size it to executors × cores (SCALE.md).
   *
   * Generated classes are compiled once per JVM for every plan shape that
-  * fits the codegen cache (`spark.sql.codegen.cache.maxEntries`, default
-  * 100). Entries are keyed by source text and classloader, so the driver
-  * and the executor side of one local stage are two entries. Counted with
-  * an unbounded cache: the whole perfbench dashboard grid compiles about
-  * 1,010 classes and one batch pass about 340–360, so at 100 entries every
-  * class is evicted before a plan shape runs again (a dashboard refresh,
-  * a repeated pipeline run) and is compiled anew. 2048 is the smallest
-  * power of two at least twice the larger working set. At about 25–30 KB
-  * of live heap per cached class, the ceiling is 2048 × 30 KB ≈ 60 MB; a
-  * batch run holds about 7 MB more than at 100 entries. The cache is a
+  * fits the codegen cache (`spark.sql.codegen.cache.maxEntries`, Spark's
+  * default 100). Entries are keyed by source text and classloader, so the
+  * driver and the executor side of one local stage are two entries. The
+  * size is bounded by measurement from both sides:
+  *
+  *  - below, by plan shapes that do repeat: one perfbench batch run (its
+  *    checking pass and its timed passes) compiles about 390–430 classes
+  *    with an unbounded cache, so at 100 entries every class is evicted
+  *    before its plan shape runs again and is compiled anew;
+  *  - above, by traffic that never repeats, which fills any size: a
+  *    relative-time dashboard (perfbench's ten tiles, the window moved by
+  *    one minute on each refresh) compiles about 28 new classes per
+  *    refresh. Once the cache is full each entry holds about 50 KB of live
+  *    heap (its source text, its classloader's bytecode) and 14 KB of
+  *    metaspace. After 140 such refreshes on two clients, live heap read
+  *    115 MB with Spark's defaults (cache 100, full status history), 108 MB
+  *    at 512 entries and 182 MB at 2048; metaspace read 169, 175 and
+  *    196 MB.
+  *
+  * 512 is the one power of two between the two bounds. The cache is a
   * field of Spark's JVM-wide `CodeGenerator` object, sized once by the
   * first session that generates code; a later session's value is
   * ignored, so the setting lives here, in the one builder every entry
   * point, perfbench and the tests go through, and nowhere else.
   *
-  * That heap is paid back by Spark's status history, which keeps up to
-  * 1,000 stages and 1,000 SQL executions (with their plan graphs) for a
-  * UI that is disabled here; nothing in the engine reads it (no
+  * The kept classes are paid for by Spark's status history, which keeps
+  * up to 1,000 stages and 1,000 SQL executions (with their plan graphs)
+  * for a UI that is disabled here; nothing in the engine reads it (no
   * `statusTracker` or `statusStore` use). One perfbench batch run per
   * setting, 50 entries each: the stage cap freed about 2.5 MB of live
   * heap, the SQL execution cap about 2.0 MB, the two together 6.2 MB;
   * capping jobs or tasks per stage moved nothing, so those keep Spark's
-  * defaults.
+  * defaults. A long-running server fills the history: in the dashboard
+  * loop above, at 100 cache entries, the two caps took live heap from
+  * 115 to 87 MB.
   *
   * Settings the builder does not fix can be passed as `-Dspark.*` system
   * properties, which `SparkConf` loads.
@@ -83,7 +96,7 @@ object LocalSession {
       // scheduling is identical to FIFO, so this costs nothing there.
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", 2048)
+      .config("spark.sql.codegen.cache.maxEntries", 512)
       .config("spark.ui.retainedStages", 50)
       .config("spark.sql.ui.retainedExecutions", 50)
 

@@ -18,9 +18,10 @@ import org.apache.spark.sql.DataFrame
   * big input still fans out exactly as before.
   *
   * Two repartition floors are live, each a floor and not a target:
-  * the cap — `spark.sql.shuffle.partitions`, the knob a cluster
-  * deployment already sizes to executors × cores — stays the operative
-  * bound whenever the data is big, so behaviour at scale is unchanged;
+  * the cap — `spark.sql.shuffle.partitions`, which `LocalSession.builder`
+  * fixes to the core count and which changes only in code — stays the
+  * operative bound whenever the data is big, so behaviour at scale is
+  * unchanged;
   * the floor only stops overhead-dominated confetti tasks when the
   * data is small. Each caller passes its floor to [[parallelism]]:
   *
