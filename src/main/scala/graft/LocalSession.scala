@@ -48,7 +48,8 @@ import org.apache.spark.sql.SparkSession
   *    at 512 entries and 182 MB at 2048; metaspace read 169, 175 and
   *    196 MB.
   *
-  * 512 is the one power of two between the two bounds. The cache is a
+  * 512 is the one power of two between the two bounds; full, it holds
+  * about 512 × 50 KB ≈ 25 MB of heap and 7 MB of metaspace. The cache is a
   * field of Spark's JVM-wide `CodeGenerator` object, sized once by the
   * first session that generates code; a later session's value is
   * ignored, so the setting lives here, in the one builder every entry
