@@ -580,8 +580,8 @@ object AnalysisQueries {
     * the exact active-session step function over the same graced user
     * sessions — every distinct boundary second with the number of
     * sessions covering [t, next). The engine computes it with the
-    * distributed prefix sum (range partition + per-partition cumsum +
-    * broadcast bases); the oracle is DuckDB's global running-sum window
+    * distributed prefix sum (range partition + per-partition cumsum over
+    * driver-side bases); the oracle is DuckDB's global running-sum window
     * over the same ±1 deltas. Full-fidelity compare: every boundary row
     * hashes, so a single misplaced delta anywhere in the sweep fails
     * the gate. */

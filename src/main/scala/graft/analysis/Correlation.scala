@@ -31,20 +31,12 @@ object Correlation {
     * degenerate all-tied series makes the formula's denominator
     * meaningless).
     *
-    * Leaves the ranked-frame cache to the session; long-lived services
-    * should use [[spearmanPairsReleasable]] and release after their
-    * action (the eager series audit reads the cache, so the plan
-    * cannot share the ranked frame instead). */
+    * The ranked-frame cache stays persisted for the returned frame
+    * and is released by the caller's `spark.catalog.clearCache()`
+    * (the Dsir convention): the eager series audit reads the cache,
+    * so the plan cannot share the ranked frame instead. */
   def spearmanPairs(df: DataFrame, keyCol: String, bucketCol: String,
-      valueCol: String, maxSeries: Int = 500): DataFrame =
-    spearmanPairsReleasable(df, keyCol, bucketCol, valueCol,
-      maxSeries)._1
-
-  /** [[spearmanPairs]] plus a release handle that unpersists the
-    * internal ranked cache — call it after the consuming action. */
-  def spearmanPairsReleasable(df: DataFrame, keyCol: String,
-      bucketCol: String, valueCol: String, maxSeries: Int = 500)
-      : (DataFrame, () => Unit) = {
+      valueCol: String, maxSeries: Int = 500): DataFrame = {
     // persisted WITH the tie-averaged rank folded in: the audit and
     // both join sides read this frame — without the pin the two rank
     // windows (and the caller's upstream aggregation) would replay
@@ -78,7 +70,7 @@ object Correlation {
     val b = ranked.join(tied, keyCol :: Nil)
       .select(col(keyCol).as("key_b"), col("__b"),
         col("__r").as("__rb"), col("__tied").as("__tb"))
-    val out = a.join(b, Seq("__b"))
+    a.join(b, Seq("__b"))
       .filter(col("key_a") < col("key_b"))
       .groupBy("key_a", "key_b")
       .agg(count(lit(1)).as("n"),
@@ -89,6 +81,5 @@ object Correlation {
           lit(1.0) - lit(6.0) * col("__d2") /
             (col("n") * (col("n") * col("n") - lit(1.0))), 6)))
       .select("key_a", "key_b", "n", "rho")
-    (out, () => { ranked.unpersist(blocking = false); () })
   }
 }

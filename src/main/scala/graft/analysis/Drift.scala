@@ -72,17 +72,12 @@ object Drift {
     * distinct-value count. That count is the honest bound: this is an
     * operator for bucketed metrics and bounded-precision scores (round
     * first — the PSI variant below quantizes for free); `maxDistinct`
-    * audits the hottest key loudly before the window runs. */
+    * audits the hottest key loudly before the window runs. The cell
+    * cache that audit reads stays persisted for the returned frame and
+    * is released by the caller's `spark.catalog.clearCache()` (the
+    * Dsir convention). */
   def ksDrift(ref: DataFrame, cur: DataFrame, keyCols: Seq[String],
-      valueCol: String, maxDistinct: Long = 1000000L): DataFrame =
-    ksDriftReleasable(ref, cur, keyCols, valueCol, maxDistinct)._1
-
-  /** [[ksDrift]] plus a release handle for the internal cell cache
-    * that the eager `maxDistinct` audit reads — call it after the
-    * consuming action. */
-  def ksDriftReleasable(ref: DataFrame, cur: DataFrame,
-      keyCols: Seq[String], valueCol: String,
-      maxDistinct: Long = 1000000L): (DataFrame, () => Unit) = {
+      valueCol: String, maxDistinct: Long = 1000000L): DataFrame = {
     require(keyCols.nonEmpty, "ksDrift needs at least one key column")
     val keyCs = keyCols.map(col)
     def cells(df: DataFrame, side: String) = df
@@ -117,7 +112,7 @@ object Drift {
       .withColumn("__cc", sum(col("__c")).over(wOrd))
       .withColumn("__tr", sum(col("__r")).over(wAll))
       .withColumn("__tc", sum(col("__c")).over(wAll))
-    val out = stepped.groupBy(keyCs: _*)
+    stepped.groupBy(keyCs: _*)
       .agg(max(col("__tr")).as("n_ref"), max(col("__tc")).as("n_cur"),
         max(when(col("__tr") > 0 && col("__tc") > 0,
           abs(col("__cr") / col("__tr") - col("__cc") / col("__tc"))))
@@ -136,7 +131,6 @@ object Drift {
         when(col("d_stat") > col("d_crit"), 1L).otherwise(0L)))
       .select(keyCs ++ Seq(col("n_ref"), col("n_cur"), col("d_stat"),
         col("d_crit"), col("drifted")): _*)
-    (out, () => { joined.unpersist(blocking = false); () })
   }
 
   /** Population Stability Index terms over equal-width bins — the

@@ -3,6 +3,8 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Dedup
+
 /** Forest resolution — root and depth per node of a parent-pointer
   * hierarchy (trace span trees assembled from ParentSpanId links are the
   * reference's shape: the trace detail page rebuilds the span tree from
@@ -82,7 +84,7 @@ object Hierarchy {
           when(col("root").isNotNull, col("dist"))
             .otherwise(col("dist") + coalesce(col("__tdist"), lit(0L)))
             .as("dist")))
-      checkpointRdd(state).foreach(_.unpersist(blocking = false))
+      Dedup.checkpointRdd(state).foreach(_.unpersist(blocking = false))
       state = stepped
       unresolved = state.filter(col("root").isNull).count()
       round += 1
@@ -95,12 +97,4 @@ object Hierarchy {
           s"or depth beyond 2^$maxRounds")
     state.select(col("id"), col("root"), col("dist").as("depth"))
   }
-
-  /** The materialized RDD behind an eagerly checkpointed frame, for
-    * explicit storage release (same shape as Dedup's helper). */
-  private def checkpointRdd(d: DataFrame)
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    d.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Curation
+
 /** Interval algebra over half-open [start, end) timestamp intervals —
   * the temporal-join family the engine's as-of join ([[AsOfJoin]]) does
   * not cover: "which intervals overlap" (session × incident correlation,
@@ -27,10 +29,9 @@ import org.apache.spark.sql.functions._
   *    dedupes pairs for free, with no wide `dropDuplicates` shuffle.
   *  - [[concurrency]] turns intervals into ±1 boundary deltas, shrinks
   *    them to one net delta per distinct boundary timestamp (one hash
-  *    shuffle), then takes the global running sum with the same
-  *    distributed prefix-sum used by `Curation.packSequences`:
-  *    range-partition by time, per-partition local cumsum, O(#partitions)
-  *    subtotals prefix-summed driver-side as broadcast bases — never a
+  *    shuffle), then takes the global running sum with
+  *    `Curation.prefixSum`: range-partition by time, per-partition
+  *    local cumsum over O(#partitions) driver-side bases — never a
   *    single-task global sort.
   */
 object Intervals {
@@ -128,36 +129,18 @@ object Intervals {
     * Two shuffles, both narrow: a hash shuffle that collapses the ±1
     * boundary events to one net delta per distinct timestamp, and a
     * range repartition of those (t, delta) rows for the distributed
-    * prefix sum (per-partition cumsum + O(#partitions) driver-side
-    * bases). Row volume after the first shuffle is the number of
-    * DISTINCT boundary instants — at 100 TB with second-resolution
-    * data that is bounded by the time range, not the interval count. */
+    * prefix sum (`Curation.prefixSum`). Row volume after the first
+    * shuffle is the number of DISTINCT boundary instants — at 100 TB
+    * with second-resolution data that is bounded by the time range,
+    * not the interval count. */
   def concurrency(df: DataFrame, startCol: String, endCol: String)
       : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val deltas = df.select(col(startCol).cast("double").as("t"),
         lit(1L).as("__d"))
       .unionAll(df.select(col(endCol).cast("double").as("t"),
         lit(-1L).as("__d")))
       .groupBy("t").agg(sum("__d").as("__d"))
-      .repartitionByRange(col("t"))
-      .sortWithinPartitions("t")
-      .withColumn("__pid", spark_partition_id())
-    deltas.persist()
-    val totals = deltas.groupBy("__pid").agg(sum("__d").as("__t"))
-      .as[(Int, Long)].collect().sortBy(_._1)
-    val bases = totals
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
-      .init.zip(totals)
-      .map { case ((_, base), (pid, _)) => (pid, base) }
-    val baseDf = broadcast(bases.toSeq.toDF("__pid", "__base"))
-    val w = Window.partitionBy("__pid").orderBy("t")
-    // deltas stays persisted until the caller's action: unpersisting
-    // first would recompute repartitionByRange with fresh sampled
-    // boundaries, detaching the rows from the collected bases.
-    deltas.join(baseDf, "__pid")
-      .withColumn("active", col("__base") + sum(col("__d")).over(w))
+    Curation.prefixSum(deltas, Seq(col("t")), col("__d"), "active")._1
       .select(col("t"), col("active"))
   }
 

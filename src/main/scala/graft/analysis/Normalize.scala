@@ -26,20 +26,14 @@ object Normalize {
   /** One row per (group, value) cell: keys…, `v`, `n` (cell count),
     * `r` (within-group midrank fraction, 6dp), `qnorm` (the global
     * value at that fraction). Join back to rows on (keys, value) for
-    * per-row normalized scores. */
+    * per-row normalized scores.
+    *
+    * The cell cache the eager distinct audits read stays persisted for
+    * the returned frame and is released by the caller's
+    * `spark.catalog.clearCache()` (the Dsir convention). */
   def quantileNormalize(df: DataFrame, groupCols: Seq[String],
       valueCol: String, maxDistinct: Long = 4096L,
-      maxGlobalDistinct: Long = 65536L): DataFrame =
-    quantileNormalizeReleasable(df, groupCols, valueCol,
-      maxDistinct, maxGlobalDistinct)._1
-
-  /** [[quantileNormalize]] plus a release handle for the internal
-    * cell cache that the eager distinct audit reads — call it after
-    * the consuming action. */
-  def quantileNormalizeReleasable(df: DataFrame,
-      groupCols: Seq[String], valueCol: String,
-      maxDistinct: Long = 4096L, maxGlobalDistinct: Long = 65536L)
-      : (DataFrame, () => Unit) = {
+      maxGlobalDistinct: Long = 65536L): DataFrame = {
     require(groupCols.nonEmpty, "need at least one group column")
     val keyCs = groupCols.map(col)
     // filter AFTER the cast: a string score like "N/A" casts to null
@@ -109,8 +103,7 @@ object Normalize {
         col("__gfrac") >= col("__r"))
       .groupBy(keyCs :+ col("v") :+ col("n") :+ col("__r"): _*)
       .agg(min(col("gv")).as("qnorm"))
-    val out = mapped.select(keyCs ++ Seq(col("v"), col("n"),
+    mapped.select(keyCs ++ Seq(col("v"), col("n"),
       round(col("__r"), 6).as("r"), col("qnorm")): _*)
-    (out, () => { cells.unpersist(blocking = false); () })
   }
 }

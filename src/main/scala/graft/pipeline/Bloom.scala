@@ -68,18 +68,17 @@ object Bloom {
     * must be the same xxhash64 spellings the builder used. Small
     * bitmaps inline as a literal (pure codegen'd expressions); large
     * ones ship ONCE per executor as a broadcast variable probed by a
-    * deterministic UDF walking the identical arithmetic. The returned
-    * release handle destroys that broadcast (noop on the literal
-    * path) — call it AFTER the consuming action, the standard
-    * Releasable contract. */
-  private[pipeline] def mightContainReleasable(df: DataFrame,
+    * deterministic UDF walking the identical arithmetic. The UDF
+    * captures that broadcast, so it lives as long as a plan that
+    * holds the column: Spark's `ContextCleaner` frees it once the
+    * plan is unreachable, and nothing here destroys it. */
+  private[pipeline] def mightContain(df: DataFrame,
       bits: Array[Long], h1: Column, h2: Column, numHashes: Int,
-      maxLiteralWords: Int = literalMaxWords)
-      : (Column, () => Unit) = {
+      maxLiteralWords: Int = literalMaxWords): Column = {
     val mBits = bits.length.toLong * 64
     if (bits.length <= maxLiteralWords) {
       val bitsLit = lit(bits)
-      val c = (0 until numHashes).map { i =>
+      (0 until numHashes).map { i =>
         val p = pmod(h1 + lit(i.toLong) * h2, lit(mBits))
         // functions.shiftleft only takes a static shift; the SQL
         // spelling accepts a column
@@ -87,7 +86,6 @@ object Bloom {
         (element_at(bitsLit, (p / 64).cast("int") + 1)
           .bitwiseAND(mask)) =!= 0L
       }.reduce(_ && _)
-      (c, () => ())
     } else {
       val bc = df.sparkSession.sparkContext.broadcast(bits)
       val k = numHashes
@@ -103,7 +101,7 @@ object Bloom {
         }
         ok
       }
-      (probe(h1, h2), () => { bc.destroy(); () })
+      probe(h1, h2)
     }
   }
 
@@ -138,18 +136,7 @@ object Bloom {
   def bloomContaminationHits(docs: DataFrame, idCol: String,
       textCol: String, bench: DataFrame, benchTextCol: String,
       n: Int = 13, bitsPerKey: Int = 12, numHashes: Int = 5)
-      : DataFrame =
-    bloomContaminationHitsReleasable(docs, idCol, textCol, bench,
-      benchTextCol, n, bitsPerKey, numHashes)._1
-
-  /** [[bloomContaminationHits]] plus a release handle that destroys
-    * the big-filter broadcast (noop when the bitmap shipped as a plan
-    * literal) — long-lived services call it after the consuming
-    * action. */
-  def bloomContaminationHitsReleasable(docs: DataFrame, idCol: String,
-      textCol: String, bench: DataFrame, benchTextCol: String,
-      n: Int = 13, bitsPerKey: Int = 12, numHashes: Int = 5)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     val benchGrams = bench
       .select(explode(Dedup.shingles(col(benchTextCol), n)).as("__g"))
       .distinct()
@@ -157,15 +144,13 @@ object Bloom {
       bitsPerKey, numHashes)
     val corpusGrams = Curation.distinctGramFrame(docs, idCol, textCol, n)
     val (ch1, ch2) = gramHashes(col("__g"))
-    val (test, release) =
-      mightContainReleasable(docs, bits, ch1, ch2, numHashes)
-    val candidates = corpusGrams.filter(test)
+    val candidates = corpusGrams.filter(
+      mightContain(docs, bits, ch1, ch2, numHashes))
     // exact confirm: bloom false positives die here
-    val hits = candidates
+    candidates
       .join(broadcast(benchGrams), Seq("__g"), "left_semi")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))
-    (hits, release)
   }
 
   /** The corpus with every bloom-confirmed contaminated document

@@ -507,82 +507,63 @@ object Curation {
     * tokens leave room for n up to ~46k; shard the corpus first if a
     * single draw needs more).
     *
-    * Scale shape: the cumulative line is the [[packSequences]]
-    * DISTRIBUTED PREFIX SUM — range-repartition on the permutation
-    * key, per-partition subtotals (one P-row collect), partition-local
-    * running sums — never a global single-task window; selection is
-    * then a pure expression. Weights must be non-negative integers
-    * (checked in the same subtotal pass); zero-weight rows are never
-    * selected. Output: the selected rows (original columns) + `copies`. */
+    * Scale shape: the cumulative line is the [[prefixSum]] over the
+    * permutation key — never a global single-task window; selection is
+    * then a pure expression. Weights must be non-negative integers,
+    * checked by one weight-only aggregate before the range shuffle;
+    * zero-weight rows are never selected. Output: the selected rows
+    * (original columns) + `copies`. */
   def ppsSystematicSample(df: DataFrame, idCol: String,
       weightCol: String, n: Long): DataFrame = {
     require(n > 0, "sample size n must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cols = df.columns.toSeq
-    val ranged = df
-      .withColumn("__u", md5(col(idCol).cast("string")))
-      .withColumn("__w", col(weightCol).cast("long"))
-      .repartitionByRange(col("__u"), col(idCol))
-      .sortWithinPartitions(col("__u"), col(idCol))
-      .withColumn("__pid", spark_partition_id())
-    ranged.persist()
-    // the same subtotal pass audits the weights: a null weight would
-    // silently never be selected (and a partition of only nulls would
-    // crash the totals decode), and a fractional weight would silently
-    // truncate through cast('long') — both are caller mistakes the
-    // exact-arithmetic contract must refuse loudly, like negatives
-    val audited = ranged.groupBy("__pid")
-      .agg(coalesce(sum(col("__w")), lit(0L)).as("__t"),
-        coalesce(min(col("__w")), lit(0L)).as("__m"),
-        sum(when(col("__w").isNull, 1L).otherwise(0L)).as("__nulls"),
-        sum(when(col("__w").isNotNull &&
-          col(weightCol).cast("double") =!= col("__w").cast("double"),
-          1L).otherwise(0L)).as("__frac"))
-      .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1)
-    val nullW = audited.map(_._4).sum
+    val w = col(weightCol).cast("long")
+    // one weight-only aggregate refuses bad weights before the range
+    // shuffle: a null weight would silently never be selected, a
+    // fractional one would silently truncate through cast('long') —
+    // caller mistakes the exact-arithmetic contract must refuse
+    // loudly, like negatives
+    val audit = df.agg(coalesce(sum(w), lit(0L)),
+      coalesce(min(w), lit(0L)), count_if(w.isNull),
+      count_if(w.isNotNull &&
+        col(weightCol).cast("double") =!= w.cast("double"))).head()
+    val nullW = audit.getLong(2)
     require(nullW == 0L,
       s"ppsSystematicSample: $nullW null (or non-numeric) weights in " +
         s"$weightCol — a null row can never be selected; filter or " +
         "impute explicitly")
-    val fracW = audited.map(_._5).sum
+    val fracW = audit.getLong(3)
     require(fracW == 0L,
       s"ppsSystematicSample: $fracW weights in $weightCol change value " +
         "under cast to long — fractional weights would truncate " +
         "silently; pre-scale to integers explicitly")
-    val totals = audited.map(t => (t._1, t._2, t._3))
-    require(totals.forall(_._3 >= 0L),
+    require(audit.getLong(1) >= 0L,
       s"ppsSystematicSample: negative weight in $weightCol")
-    val grandTotal = totals.map(_._2).sum
+    val grandTotal = audit.getLong(0)
     require(grandTotal > 0L, "ppsSystematicSample: total weight is zero")
     require(grandTotal <= Long.MaxValue / (2L * n),
       s"ppsSystematicSample: 2n*W overflows 64-bit (n=$n, W=$grandTotal)" +
         " — shard the corpus and draw per shard")
-    val bases = totals
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, t, _)) => (pid, acc + t) }
-      .init.zip(totals)
-      .map { case ((_, base), (pid, _, _)) => (pid, base) }
-    val baseDf = broadcast(bases.toSeq.toDF("__pid", "__base"))
-    val w = Window.partitionBy("__pid").orderBy(col("__u"), col(idCol))
+    val (walked, total) = prefixSum(
+      df.withColumn("__u", md5(col(idCol).cast("string")))
+        .withColumn("__w", w),
+      Seq(col("__u"), col(idCol)), col("__w"), "__ca")
+    require(total == grandTotal,
+      s"ppsSystematicSample: the walk summed W=$total but the audit " +
+        s"read W=$grandTotal — the input is not deterministic")
     // 64-bit INTEGRAL division throughout (`div`): `/` on longs is
     // floating division in Spark SQL and loses exactness past 2^53.
     // f(x) = #odd integers in [1, x] = (x+1) div 2; operands here are
     // ≥ -1, where truncating div and floor div agree on f.
-    val out = ranged
-      .join(baseDf, "__pid")
-      .withColumn("__ca",
-        col("__base") + sum(col("__w")).over(w))
+    walked
       .withColumn("__A", (col("__ca") - col("__w")) * lit(2L * n))
       .withColumn("__B", col("__ca") * lit(2L * n))
       // lo = ceil(A/W); hi = ceil(B/W) - 1 = (B-1) div W for B ≥ 1
-      .withColumn("__lo", expr(s"(__A + $grandTotal - 1) div $grandTotal"))
-      .withColumn("__hi", expr(s"(__B - 1) div $grandTotal"))
+      .withColumn("__lo", expr(s"(__A + $total - 1) div $total"))
+      .withColumn("__hi", expr(s"(__B - 1) div $total"))
       .withColumn("copies",
         expr("(__hi + 1) div 2 - __lo div 2"))
       .filter(col("copies") >= 1L)
-      .select(cols.map(col) :+ col("copies"): _*)
-    out
+      .select(df.columns.toSeq.map(col) :+ col("copies"): _*)
   }
 
   /** Deterministic stratified sampling for domain mixing: keep a row iff
@@ -606,47 +587,65 @@ object Curation {
     * (`sample_id`) and the window its last token lands in
     * (`end_sample_id` — a doc may straddle window boundaries).
     *
-    * The global running offset is a DISTRIBUTED PREFIX SUM, not a global
-    * window: `Window.orderBy` with no partitionBy funnels the whole
-    * corpus through ONE task — the classic packing scale trap. Instead:
-    * range-repartition by id (sorted partitions), per-partition token
-    * subtotals (one P-row aggregate collected to the driver — O(#
-    * partitions), never O(rows)), prefix-sum the subtotals, then each
-    * partition adds its base offset to a partition-local running sum.
+    * The global running offset is the [[prefixSum]] in id order, not a
+    * global window: `Window.orderBy` with no partitionBy funnels the
+    * whole corpus through ONE task — the classic packing scale trap.
     * Output is independent of the partition count or boundaries: base +
     * local cumsum IS the global prefix sum under range ordering. */
   def packSequences(df: DataFrame, idCol: String, tokenCol: String,
       contextLen: Int): DataFrame = {
     require(contextLen > 0, "contextLen must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ranged = df
-      .select(col(idCol), col(tokenCol).cast("long").as("__tok"))
-      .repartitionByRange(col(idCol))
-      .sortWithinPartitions(idCol)
-      .withColumn("__pid", spark_partition_id())
-    ranged.persist()
-    val totals = ranged.groupBy("__pid")
-      .agg(sum(col("__tok")).as("__t"))
-      .as[(Int, Long)].collect().sortBy(_._1)
-    val bases = totals
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
-      .init.zip(totals)
-      .map { case ((_, base), (pid, _)) => (pid, base) }
-    val baseDf = broadcast(bases.toSeq.toDF("__pid", "__base"))
-    val w = Window.partitionBy("__pid").orderBy(idCol)
-    val out = ranged
-      .join(baseDf, "__pid")
-      .withColumn("start_off",
-        col("__base") + sum(col("__tok")).over(w) - col("__tok"))
+    val (summed, _) = prefixSum(
+      df.select(col(idCol), col(tokenCol).cast("long").as("__tok")),
+      Seq(col(idCol)), col("__tok"), "__cum")
+    summed
+      .withColumn("start_off", col("__cum") - col("__tok"))
       .withColumn("sample_id", floor(col("start_off") / contextLen))
       .withColumn("end_sample_id",
         floor((col("start_off") + greatest(col("__tok"), lit(1L)) - 1)
           / contextLen))
       .select(col(idCol), col("__tok").as("tokens"), col("start_off"),
         col("sample_id"), col("end_sample_id"))
-    out
+  }
+
+  /** The DISTRIBUTED PREFIX SUM behind every global running total in
+    * the engine ([[packSequences]], [[ppsSystematicSample]],
+    * [[tokenBudgetCut]], `Intervals.concurrency`): `df` plus `outCol`,
+    * the inclusive running sum of `value` (nulls count 0) in `order`,
+    * and the grand total. Rows tied on `order` are summed one at a
+    * time, in the order the shuffle reads them.
+    *
+    * Scale shape: never a global single-task window. One range
+    * shuffle on `order`, whose output is ONE RDD read twice: a job
+    * sums each partition (O(#partitions) longs to the driver), and the
+    * returned frame adds each partition's exclusive base to a
+    * partition-local running sum. Both reads share the RDD's shuffle
+    * dependency, so the range boundaries are sampled once and every
+    * later action on the frame re-reads the same shuffle output: no
+    * persist to release, no broadcast (the bases ride the task
+    * closure) and no second exchange on a partition id. */
+  private[graft] def prefixSum(df: DataFrame, order: Seq[Column],
+      value: Column, outCol: String): (DataFrame, Long) = {
+    val ranged = df
+      .withColumn("__v", coalesce(value.cast("long"), lit(0L)))
+      .repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
+    val rows = ranged.rdd
+    val vi = ranged.schema.fieldIndex("__v")
+    val bases = rows
+      .mapPartitions(it => Iterator(it.map(_.getLong(vi)).sum))
+      .collect().scanLeft(0L)(_ + _)
+    val summed = rows.mapPartitionsWithIndex { (pid, it) =>
+      var cum = bases(pid)
+      it.map { r =>
+        cum += r.getLong(vi)
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cum)
+      }
+    }
+    val schema = ranged.schema.add(outCol,
+      org.apache.spark.sql.types.LongType, nullable = false)
+    (df.sparkSession.createDataFrame(summed, schema).drop("__v"),
+      bases.last)
   }
 
   // --------------------------------------------------------- shard export
@@ -888,65 +887,23 @@ object Curation {
     * the walk). Returns (id, n_tokens, cum_tokens) for the kept
     * prefix; semi-join back for the documents.
     *
-    * Scale shape: the global running sum NEVER runs in one task, and
-    * the corpus crosses the wire ONCE: range-repartition on the order
-    * code, per-partition totals → O(#partitions) driver-side base
-    * offsets, then a sequential mapPartitions scan adds each
-    * partition's base — no window, so no second exchange (a
-    * `Window.partitionBy(pid)` would not trust the range partitioning
-    * and re-shuffle), and duplicate order codes accumulate one at a
-    * time exactly like the definitional walk. */
+    * Scale shape: the running total is the [[prefixSum]] over the
+    * order code, so it never runs in one task and the corpus crosses
+    * the wire ONCE; duplicate order codes accumulate one at a time
+    * exactly like the definitional walk. */
   def tokenBudgetCut(df: DataFrame, idCol: String, tokensCol: String,
-      budget: Long): DataFrame =
-    tokenBudgetCutReleasable(df, idCol, tokensCol, budget)._1
-
-  /** [[tokenBudgetCut]] plus a release handle that unpersists the
-    * internal range-partitioned cache (the Releasable convention) —
-    * long-lived services call it after the consuming action; calling
-    * earlier risks re-sampled range boundaries detaching rows from
-    * the collected base offsets. */
-  def tokenBudgetCutReleasable(df: DataFrame, idCol: String,
-      tokensCol: String, budget: Long): (DataFrame, () => Unit) = {
+      budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keyed = df
-      .select(col(idCol).cast("long").as("__id"),
+    val (walked, _) = prefixSum(
+      df.select(col(idCol).cast("long").as("__id"),
         greatest(lit(0L),
           coalesce(col(tokensCol).cast("long"), lit(0L))).as("__n"),
-        orderCode(idCol).as("__code"))
-      .repartitionByRange(col("__code"))
-      .sortWithinPartitions("__code")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-partition token totals → exclusive-prefix base offsets
-    val totals = keyed
-      .select(spark_partition_id().as("__pid"), col("__n"))
-      .groupBy("__pid").agg(sum(col("__n")).as("__t"))
-      .as[(Int, Long)].collect().sortBy(_._1).toSeq
-    val bases: Map[Int, Long] = totals
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
-      .init.zip(totals)
-      .map { case ((_, base), (pid, _)) => (pid, base) }.toMap
-    val bc = spark.sparkContext.broadcast(bases)
-    // keyed stays persisted until the caller's action (the Intervals
-    // caveat: unpersisting first would re-sample the range boundaries
-    // and detach rows from the collected bases)
-    val out = keyed.as[(Long, Long, String)]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var cum = bc.value.getOrElse(pid, 0L)
-        it.map { case (id, n, _) =>
-          cum += n
-          (id, n, cum)
-        }
-      }
-      .toDF(idCol, "n_tokens", "cum_tokens")
-      .filter(col("cum_tokens") <= budget)
-    (out, () => {
-      keyed.unpersist(blocking = false)
-      bc.destroy()
-      ()
-    })
+        orderCode(idCol).as("__code")),
+      Seq(col("__code")), col("__n"), "__cum")
+    walked
+      .filter(col("__cum") <= budget)
+      .select(col("__id").as(idCol), col("__n").as("n_tokens"),
+        col("__cum").as("cum_tokens"))
   }
 
   /** Hash-based train/val/test split assignment: each id lands in the

@@ -762,23 +762,11 @@ object Dedup {
     *
     * Nothing is cached: the batch's signature frame is recomputed for
     * each branch that reads it (batch-local hashing; a persisted frame
-    * would outlive the returned lazy plan). The streaming loop hashes
-    * once through [[dedupAgainstStoreReleasable]] instead. */
+    * would outlive the returned lazy plan). */
   def crossCorpusPairsFromStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true): DataFrame =
-    pairsFromStore(newDf, idCol, textCol, store, k, bands, shingleN,
-      minJaccard, checkWidths, cacheSig = false)._1
-
-  /** [[crossCorpusPairsFromStore]]'s body. With `cacheSig` the batch's
-    * signature frame is persisted once for the band join and both
-    * re-attaches, and the handle unpersists it — call it after the
-    * consuming action; without, the handle is a noop. */
-  private def pairsFromStore(newDf: DataFrame, idCol: String,
-      textCol: String, store: DataFrame, k: Int, bands: Int,
-      shingleN: Int, minJaccard: Double, checkWidths: Boolean,
-      cacheSig: Boolean): (DataFrame, () => Unit) = {
+      checkWidths: Boolean = true): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     require(Set(idCol, "sig", "sh").subsetOf(store.columns.toSet),
       s"signature store must carry ($idCol, sig, sh); " +
@@ -821,17 +809,13 @@ object Dedup {
         }
     }
     val (newL, newMap) = longIds(newDf, idCol)
-    val sig = shingleMinhash(newL, idCol, textCol, shingleN, k)
-    val newSig = if (cacheSig)
-      sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sig
+    val newSig = shingleMinhash(newL, idCol, textCol, shingleN, k)
     val keptCols = Seq(col(idCol).as("id"), col("sh"), col("sig")) ++
       (if (hasSz) Seq(col("sz")) else Nil)
     val keptSig = store.select(keptCols: _*)
-    (restoreIds(crossPairsFromSigs(newSig, keptSig, k, bands,
+    restoreIds(crossPairsFromSigs(newSig, keptSig, k, bands,
       minJaccard, Sizing.broadcastableBatch(newDf)), newMap,
-      Seq("new_id")),
-      () => if (cacheSig) { newSig.unpersist(); () })
+      Seq("new_id"))
   }
 
   /** Keep exactly the new-batch docs with NO verified near-dup in the
@@ -853,40 +837,20 @@ object Dedup {
   def dedupAgainstStore(newDf: DataFrame, idCol: String,
       textCol: String, store: DataFrame, k: Int = 16, bands: Int = 8,
       shingleN: Int = 3, minJaccard: Double = 0.7,
-      checkWidths: Boolean = true): DataFrame =
-    againstStore(newDf, idCol, textCol, store, k, bands, shingleN,
-      minJaccard, checkWidths, cacheSig = false)._1
-
-  /** [[dedupAgainstStore]] for a caller that consumes the survivors in
-    * one scope, the streaming ingest loop: the batch's signature frame
-    * is hashed once and cached for the band join and both re-attaches
-    * (the unpersisted twin hashes it once per branch — two or three
-    * times), and the handle releases it. Call the handle after the
-    * last action that reads the survivors. */
-  private[graft] def dedupAgainstStoreReleasable(newDf: DataFrame,
-      idCol: String, textCol: String, store: DataFrame, k: Int,
-      bands: Int, shingleN: Int, minJaccard: Double,
-      checkWidths: Boolean): (DataFrame, () => Unit) =
-    againstStore(newDf, idCol, textCol, store, k, bands, shingleN,
-      minJaccard, checkWidths, cacheSig = true)
-
-  private def againstStore(newDf: DataFrame, idCol: String,
-      textCol: String, store: DataFrame, k: Int, bands: Int,
-      shingleN: Int, minJaccard: Double, checkWidths: Boolean,
-      cacheSig: Boolean): (DataFrame, () => Unit) = {
+      checkWidths: Boolean = true): DataFrame = {
     val newKeyed = newDf
       .select(col(idCol), md5(col(textCol)).as("__ck"))
     val newReps = newKeyed.groupBy(col("__ck"))
       .agg(min(col(idCol)).as("__rep"))
     val newRepDocs = newDf.join(
       newReps.select(col("__rep").as(idCol)), Seq(idCol), "left_semi")
-    val (pairs, release) = pairsFromStore(newRepDocs, idCol, textCol,
-      store, k, bands, shingleN, minJaccard, checkWidths, cacheSig)
+    val pairs = crossCorpusPairsFromStore(newRepDocs, idCol, textCol,
+      store, k, bands, shingleN, minJaccard, checkWidths)
     val matchedRep = pairs.select(col("new_id").as("__rep")).distinct()
     val matchedIds = newKeyed
       .join(newReps.join(matchedRep, "__rep"), "__ck")
       .select(col(idCol))
-    (newDf.join(matchedIds, Seq(idCol), "left_anti"), release)
+    newDf.join(matchedIds, Seq(idCol), "left_anti")
   }
 
   /** ONE step of the continuous-ingest lifecycle: dedup a new batch
@@ -1188,9 +1152,11 @@ object Dedup {
         size(keep).cast("long").as("n_paras_kept"))
   }
 
-  /** The materialized RDD behind an eagerly localCheckpoint'ed frame
-    * (LogicalRDD leaf), for explicit storage release. */
-  private def checkpointRdd(d: DataFrame)
+  /** The materialized RDD behind an eagerly checkpointed frame
+    * (LogicalRDD leaf), for explicit storage release — shared by the
+    * checkpointing loops here, in `Similarity.kCenter` and in
+    * `Hierarchy.resolve`. */
+  private[graft] def checkpointRdd(d: DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =
     d.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd

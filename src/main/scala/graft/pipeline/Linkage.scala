@@ -31,19 +31,14 @@ object Linkage {
     * distance runs on the lowercased names — "Smith"/"smith" are the
     * same entity; the raw names ride along in the output):
     * (id_a, id_b, name_a, name_b, dist). Null/empty names never pair
-    * (no evidence ≠ a match). */
+    * (no evidence ≠ a match).
+    *
+    * The base cache the eager block audit reads stays persisted for
+    * the returned frame and is released by the caller's
+    * `spark.catalog.clearCache()` (the Dsir convention). */
   def linkPairs(df: DataFrame, idCol: String, nameCol: String,
       maxDist: Int = 3, prefixLen: Int = 4, maxBlock: Long = 10000L)
-      : DataFrame =
-    linkPairsReleasable(df, idCol, nameCol, maxDist, prefixLen,
-      maxBlock)._1
-
-  /** [[linkPairs]] plus a release handle for the internal base cache
-    * that the eager block audit reads — call it after the consuming
-    * action. */
-  def linkPairsReleasable(df: DataFrame, idCol: String,
-      nameCol: String, maxDist: Int = 3, prefixLen: Int = 4,
-      maxBlock: Long = 10000L): (DataFrame, () => Unit) = {
+      : DataFrame = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(prefixLen > 0, "prefixLen must be positive")
     // persisted: the hottest-block audit (which warms the cache) and
@@ -68,12 +63,11 @@ object Linkage {
       col("__name").as("name_a"))
     val b = base.select(col("__blk"), col("__id").as("id_b"),
       col("__name").as("name_b"))
-    val out = a.join(b, Seq("__blk"))
+    a.join(b, Seq("__blk"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("dist",
         levenshtein(lower(col("name_a")), lower(col("name_b"))))
       .filter(col("dist") <= maxDist)
       .select("id_a", "id_b", "name_a", "name_b", "dist")
-    (out, () => { base.unpersist(blocking = false); () })
   }
 }

@@ -1045,10 +1045,6 @@ object Similarity {
     def snap(d: DataFrame): DataFrame =
       if (sc.getCheckpointDir.isDefined) d.checkpoint(eager = true)
       else d.localCheckpoint(true)
-    def snapRdd(d: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
     val seed = base.orderBy(col("id")).limit(1)
       .select(col("id"), col("v")).collect()
     require(seed.nonEmpty, "empty corpus")
@@ -1073,12 +1069,12 @@ object Similarity {
             least(col("mind"), distTo(w.getSeq[Double](2).toArray))))
           // release the previous round's snapshot explicitly — `next`
           // was its last reader
-          snapRdd(cur).foreach(_.unpersist(blocking = false))
+          Dedup.checkpointRdd(cur).foreach(_.unpersist(blocking = false))
           cur = next
           r += 1
         }
       }
-    } finally snapRdd(cur).foreach(_.unpersist(blocking = false))
+    } finally Dedup.checkpointRdd(cur).foreach(_.unpersist(blocking = false))
     picks.toSeq.toDF("sel_rank", "id", "radius")
       .select(col("sel_rank"), col("id").as("center_id"), col("radius"))
   }

@@ -100,12 +100,10 @@ object IngestStream {
         // this query's lifetime (it would catch a foreign-k store dir,
         // or a pre-`sz` store mixed with new appends), then skip:
         // every later generation is this loop's own append under the
-        // same k. The batch's signature frame is cached for the band
-        // join and released with the survivors after the two commits
-        val (matched, releaseSig) = Dedup.dedupAgainstStoreReleasable(
-          batch, idCol, textCol, store, k, bands, shingleN, minJaccard,
-          checkWidths = validated.compareAndSet(false, true))
-        val survivors = matched
+        // same k
+        val survivors = Dedup.dedupAgainstStore(batch, idCol, textCol,
+            store, k, bands, shingleN, minJaccard,
+            checkWidths = validated.compareAndSet(false, true))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           outM.append(survivors, batchId)
@@ -122,7 +120,7 @@ object IngestStream {
             if (store.columns.contains("sz")) sigRows
             else sigRows.drop("sz"),
             batchId)
-        } finally { survivors.unpersist(); releaseSig() }
+        } finally survivors.unpersist()
       } finally batch.unpersist()
       ()
     }

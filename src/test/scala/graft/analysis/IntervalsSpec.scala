@@ -1,7 +1,7 @@
 package graft.analysis
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{PrefixSumCheck, SparkSpec}
 
 class IntervalsSpec extends SparkSpec {
   import spark.implicits._
@@ -71,15 +71,35 @@ class IntervalsSpec extends SparkSpec {
     }
     val got = Intervals.concurrency(iv(rows: _*), "s", "e")
       .as[(Double, Long)].collect().sortBy(_._1)
-    // sequential reference: sort all boundary deltas, running-sum them
-    val ref = rows.flatMap { case (_, s, e) => Seq(s -> 1L, e -> -1L) }
+    val ref = sweepReference(rows)
+    assert(got.toSeq == ref)
+    // conservation: final active count is zero
+    assert(got.last._2 == 0L)
+  }
+
+  // sequential reference: sort all boundary deltas, running-sum them
+  private def sweepReference(rows: Seq[(Int, Double, Double)])
+      : Seq[(Double, Long)] =
+    rows.flatMap { case (_, s, e) => Seq(s -> 1L, e -> -1L) }
       .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
       .sortBy(_._1)
       .scanLeft(0.0 -> 0L) { case ((_, acc), (t, d)) => t -> (acc + d) }
       .tail
-    assert(got.toSeq == ref)
-    // conservation: final active count is zero
-    assert(got.last._2 == 0L)
+
+  test("concurrency: two actions, one range shuffle, no cache") {
+    val rnd = new scala.util.Random(3)
+    val rows = (1 to 400).map { i =>
+      val s = rnd.nextInt(2000).toDouble
+      (i, s, s + 1 + rnd.nextInt(300))
+    }
+    val want = sweepReference(rows)
+    PrefixSumCheck(spark)(
+        Intervals.concurrency(iv(rows: _*).repartition(3), "s", "e")) {
+      out =>
+        assert(out.as[(Double, Long)].collect().sortBy(_._1).toSeq == want)
+        assert(out.agg(max("active"), count(lit(1))).as[(Long, Long)]
+          .head() == ((want.map(_._2).max, want.size.toLong)))
+    }
   }
 
   test("concurrencyByKey: independent sweeps per key") {

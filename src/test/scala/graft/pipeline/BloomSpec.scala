@@ -17,14 +17,10 @@ class BloomSpec extends SparkSpec {
         xxhash64(col("g"), lit(1L)).as("h2"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val bits = Bloom.buildBits(hashes, bitsPerKey = 12, numHashes = 5)
-    // every probe runs its release after the action: a destroyed
-    // broadcast on the big path, a noop on the literal path
     def hits(df: org.apache.spark.sql.DataFrame,
-        maxLit: Int = Bloom.literalMaxWords): Long = {
-      val (test, release) = Bloom.mightContainReleasable(df, bits,
-        xxhash64(col("g")), xxhash64(col("g"), lit(1L)), 5, maxLit)
-      try df.filter(test).count() finally release()
-    }
+        maxLit: Int = Bloom.literalMaxWords): Long =
+      df.filter(Bloom.mightContain(df, bits, xxhash64(col("g")),
+        xxhash64(col("g"), lit(1L)), 5, maxLit)).count()
     assert(hits(insDf) == 2000L) // zero false negatives, by construction
     val probe = (1 to 10000).map(i => s"absent key $i").toDF("g")
     val fp = hits(probe)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{PrefixSumCheck, SparkSpec}
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
@@ -494,6 +494,18 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("ppsSystematicSample: two actions, one range shuffle, no cache") {
+    val rows = (1L to 300L).map(i => (i, (i * 7) % 31))
+    val want = ppsReference(rows, 50)
+    PrefixSumCheck(spark)(Curation.ppsSystematicSample(
+        rows.toDF("id", "w").repartition(3), "id", "w", 50)) { out =>
+      assert(out.select("id", "copies").as[(Long, Long)].collect()
+        .toMap == want)
+      assert(out.agg(sum("copies"), count(lit(1))).as[(Long, Long)]
+        .head() == ((50L, want.size.toLong)))
+    }
+  }
+
   test("ppsSystematicSample refuses null and fractional weights " +
       "loudly instead of silently dropping or truncating them") {
     // a null weight would never be selected (silent exclusion)
@@ -633,22 +645,41 @@ class CurationSpec extends SparkSpec {
     val out = Curation.tokenBudgetCut(rows, "id", "tok", budget = 600L)
       .orderBy("id")
       .as[(Long, Long, Long)].collect().toSeq
-    // definitional walk: sort by (md5(id), id), accumulate, cut
-    def h(i: Long) = java.security.MessageDigest.getInstance("MD5")
-      .digest(i.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val want = (1L to 200L)
-      .map(i => (i, if (i % 17 == 0) 0L else 10L + i % 7))
-      .sortBy { case (i, _) => (h(i), i) }
-      .scanLeft((0L, 0L, 0L)) { case ((_, _, cum), (i, n)) =>
-        (i, n, cum + n) }
-      .tail.takeWhile(_._3 <= 600L)
-      .sortBy(_._1)
+    val want = budgetReference((1L to 200L)
+      .map(i => (i, if (i % 17 == 0) 0L else 10L + i % 7)), 600L)
     assert(out == want, s"got ${out.take(5)}… want ${want.take(5)}…")
     val out2 = Curation.tokenBudgetCut(rows.repartition(13), "id",
         "tok", budget = 600L)
       .orderBy("id").as[(Long, Long, Long)].collect().toSeq
     assert(out == out2)
     assert(out.map(_._3).max <= 600L)
+  }
+
+  // tokenBudgetCut's definitional walk: sort by (md5(id), id),
+  // accumulate, cut; (id, n_tokens, cum_tokens) in id order
+  private def budgetReference(rows: Seq[(Long, Long)], budget: Long)
+      : Seq[(Long, Long, Long)] = {
+    def h(i: Long) = java.security.MessageDigest.getInstance("MD5")
+      .digest(i.toString.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    rows.sortBy { case (i, _) => (h(i), i) }
+      .scanLeft((0L, 0L, 0L)) { case ((_, _, cum), (i, n)) =>
+        (i, n, cum + n) }
+      .tail.takeWhile(_._3 <= budget)
+      .sortBy(_._1)
+  }
+
+  test("tokenBudgetCut: two actions, one range shuffle, no cache") {
+    val rows = (1L to 400L).map(i => (i, 5L + i % 11))
+    val want = budgetReference(rows, 2000L)
+    PrefixSumCheck(spark)(Curation.tokenBudgetCut(
+        rows.toDF("id", "tok").repartition(4), "id", "tok", 2000L)) {
+      out =>
+        assert(out.as[(Long, Long, Long)].collect().sortBy(_._1).toSeq ==
+          want)
+        assert(out.agg(max("cum_tokens"), count(lit(1)))
+          .as[(Long, Long)].head() == ((want.map(_._3).max,
+            want.size.toLong)))
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{PrefixSumCheck, SparkSpec}
 
 /** Seeded randomized invariants for the round-6 pipeline operators —
   * each property is checked over many generated cases with a FIXED seed
@@ -10,6 +10,18 @@ import graft.SparkSpec
   * hand-written fixtures can't enumerate. */
 class FuzzInvariantsSpec extends SparkSpec {
   import spark.implicits._
+
+  // sequential ground truth for packSequences: (id, start_off,
+  // sample_id, end_sample_id) walking the docs in id order
+  private def packReference(docs: Seq[(Long, Long)], ctx: Int)
+      : Seq[(Long, Long, Long, Long)] = {
+    var off = 0L
+    docs.sortBy(_._1).map { case (id, tok) =>
+      val r = (id, off, off / ctx, (off + math.max(tok, 1) - 1) / ctx)
+      off += tok
+      r
+    }
+  }
 
   test("packSequences equals the sequential prefix sum for random " +
       "corpora under random partitionings") {
@@ -19,19 +31,29 @@ class FuzzInvariantsSpec extends SparkSpec {
         (i, rnd.nextInt(9).toLong)) // includes zero-token docs
       val ctx = 1 + rnd.nextInt(12)
       val nPart = 1 + rnd.nextInt(7)
-      // sequential ground truth
-      var off = 0L
-      val want = docs.map { case (id, tok) =>
-        val r = (id, off, off / ctx, (off + math.max(tok, 1) - 1) / ctx)
-        off += tok
-        r
-      }
+      val want = packReference(docs, ctx)
       val got = Curation.packSequences(
         docs.toDF("id", "tok").repartition(nPart), "id", "tok", ctx)
         .orderBy("id")
         .select("id", "start_off", "sample_id", "end_sample_id")
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(got == want, s"trial $trial ctx=$ctx parts=$nPart")
+    }
+  }
+
+  test("packSequences: two actions, one range shuffle, no cache") {
+    val rnd = new scala.util.Random(11)
+    val docs = (1L to 400L).map(i => (i, rnd.nextInt(9).toLong))
+    val want = packReference(docs, 7)
+    PrefixSumCheck(spark)(Curation.packSequences(
+        docs.toDF("id", "tok").repartition(5), "id", "tok", 7)) { out =>
+      val got = out.select("id", "start_off", "sample_id", "end_sample_id")
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got == want)
+      val perWindow = out.groupBy("sample_id").count()
+        .as[(Long, Long)].collect().toMap
+      assert(perWindow ==
+        want.groupBy(_._3).map { case (w, ds) => w -> ds.size.toLong })
     }
   }
 
