@@ -23,8 +23,8 @@ object PrefixSumCheck extends AdaptiveSparkPlanHelper {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
       val out = build
-      val parts = out.rdd.getNumPartitions
-      assert(parts > 1, "one partition: the check needs several")
+      assert(out.rdd.getNumPartitions > 1,
+        "one partition: the check needs several")
       actions(out)
       assert(sc.getPersistentRDDs.keySet == before,
         "the operator left a cached frame behind")
